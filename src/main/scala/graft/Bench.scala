@@ -184,6 +184,8 @@ object Bench {
         } catch {
           case e: Throwable =>
             errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+            // a query is listed in `errors` or in `warmup_sec`, never both
+            warmups.remove(name)
             -1.0
         } finally {
           // operator-internal cached intermediates (dedup shingles,

@@ -26,14 +26,41 @@ object Geo {
     while (i < n) {
       val xi = ring(i)(0); val yi = ring(i)(1)
       val xj = ring(j)(0); val yj = ring(j)(1)
-      if ((yi > y) != (yj > y)) {
-        val xCross = (xj - xi) * (y - yi) / (yj - yi) + xi
-        if (x < xCross) inside = !inside
-      }
+      if ((yi > y) != (yj > y) && x < crossX(xi, yi, xj, yj, y)) inside = !inside
       j = i
       i += 1
     }
     inside
+  }
+
+  /** Where edge (xi, yi)–(xj, yj) meets the horizontal line at `y`;
+    * meaningful only when `(yi > y) != (yj > y)`. The one formula both
+    * [[pointInRing]] and [[ringCrossings]] use, so their crossings are
+    * bit-identical. */
+  @inline def crossX(xi: Double, yi: Double, xj: Double, yj: Double, y: Double): Double =
+    (xj - xi) * (y - yi) / (yj - yi) + xi
+
+  /** Scanline form of [[pointInRing]]: writes into `out` the crossing
+    * x of every edge of the ring (vertices `xs(k)`, `ys(k)`) that
+    * straddles the line at `y`, walking the edges in the same order,
+    * and returns how many there are. A point (x, y) is inside the ring
+    * exactly when an odd number of them satisfy `x < xCross`. NaN
+    * crossings are dropped: `x < NaN` never toggles. `out` must hold
+    * `xs.length` values. */
+  def ringCrossings(xs: Array[Double], ys: Array[Double], y: Double, out: Array[Double]): Int = {
+    var count = 0
+    val n = xs.length
+    var i = 0
+    var j = n - 1
+    while (i < n) {
+      if ((ys(i) > y) != (ys(j) > y)) {
+        val c = crossX(xs(i), ys(i), xs(j), ys(j), y)
+        if (!c.isNaN) { out(count) = c; count += 1 }
+      }
+      j = i
+      i += 1
+    }
+    count
   }
 
   /** Multi-polygon containment: inside any ring (disjoint-polygon OR —

@@ -155,9 +155,8 @@ object ImageHash {
   /** Driver-side replay for specs: the same math over Scala
     * collections ([C][H][W]). */
   def pixelDhashSeq(px: Seq[Seq[Seq[Int]]]): Long = {
-    val nch = px.length
-    val h = if (nch == 0) 0 else px.head.length
-    val w = if (h == 0) 0 else px.head.head.length
+    val p = Raster.Planes(px)
+    val (nch, h, w) = (p.ch.length, p.h, p.w)
     require(h >= GridRows && w >= GridCols, s"image ${h}x$w below grid")
     val g = new Array[Long](GridRows * GridCols)
     for (r <- 0 until GridRows; c <- 0 until GridCols) {
@@ -165,7 +164,9 @@ object ImageHash {
       val x0 = c * w / GridCols; val x1 = (c + 1) * w / GridCols
       var sum = 0L; var cnt = 0L
       for (y <- y0 until y1; x <- x0 until x1) {
-        sum += (0 until nch).map(ch => px(ch)(y)(x).toLong).sum / nch
+        var chSum = 0L
+        p.ch.foreach(plane => chSum += plane(y * w + x))
+        sum += chSum / nch
         cnt += 1
       }
       g(r * GridCols + c) = sum / cnt

@@ -27,14 +27,13 @@ object PixelStatsAgg extends Aggregator[Seq[Seq[Seq[Int]]], PixelBuf, CorpusPixe
     var sumG = b.sumG; var cntG = b.cntG
     var sumB = b.sumB; var cntB = b.cntB
     var white = b.white; var inBounds = b.inBounds
-    val h = r.length
-    var i = 0
-    while (i < h) {
-      val rr = r(i); val gr = g(i); val br = bl(i)
-      val w = rr.length
-      var j = 0
-      while (j < w) {
-        val rv = rr(j); val gv = gr(j); val bv = br(j)
+    // iterators only: encoder-built cubes are linked lists, where
+    // `apply(i)` walks i cells
+    val ri = r.iterator; val gi = g.iterator; val bi = bl.iterator
+    while (ri.hasNext) {
+      val rr = ri.next().iterator; val gr = gi.next().iterator; val br = bi.next().iterator
+      while (rr.hasNext) {
+        val rv = rr.next(); val gv = gr.next(); val bv = br.next()
         if (rv != 0) { sumR += rv; cntR += 1 }
         if (gv != 0) { sumG += gv; cntG += 1 }
         if (bv != 0) { sumB += bv; cntB += 1 }
@@ -44,9 +43,7 @@ object PixelStatsAgg extends Aggregator[Seq[Seq[Seq[Int]]], PixelBuf, CorpusPixe
           inBounds += 1
           if (mn >= 153.0 && (mx - mn) <= 25.5) white += 1
         }
-        j += 1
       }
-      i += 1
     }
     PixelBuf(sumR, cntR, sumG, cntG, sumB, cntB, white, inBounds)
   }

@@ -32,8 +32,11 @@ import graft.sinks.Sink
   *
   * Scale posture: water bodies and configs are broadcast-size dims;
   * the catalog and rasters are the big sides and are touched by
-  * exactly one shuffle each (the candidate join); every raster kernel
-  * is a narrow map stage on the joined rows.
+  * exactly one shuffle each (the candidate join). The candidates are
+  * then spread round-robin over `defaultParallelism` partitions, and
+  * `Raster.products` runs once per joined row on primitive planes: one
+  * O(H·W) conversion, the O(H·E + H·W) scanline clip for E polygon
+  * edges, then the three encodes.
   */
 object SatellitePipeline {
 
@@ -110,26 +113,28 @@ object SatellitePipeline {
     * pre-decoded band planes keyed by ee_id (S3/S4 stub point: a live
     * system fetches + decodes here inside mapPartitions). */
   def process(cands: DataFrame, rasters: DataFrame): DataFrame = {
-    val withBands = cands.join(rasters, "ee_id") // S3/S4 stub: pre-staged planes
+    // one round-robin partition per core, so the per-image kernels
+    // below run in defaultParallelism tasks instead of the single
+    // partition the candidate joins leave (an explicit partition count
+    // is not coalesced by AQE)
+    val spread = cands.repartition(cands.sparkSession.sparkContext.defaultParallelism)
+    val withBands = spread.join(rasters, "ee_id") // S3/S4 stub: pre-staged planes
       // F5 band select+rename (main.py:86-90, 399): TCI_* → red/green/blue
       .withColumn("red", col("TCI_R"))
       .withColumn("green", col("TCI_G"))
       .withColumn("blue", col("TCI_B"))
     val cube = Raster.stackBands(col("red"), col("green"), col("blue")) // R1
-    val clipped = Raster.clipUdf( // R2 (main.py:240-243), nodata=0
+    // R2 clip (main.py:240-243, nodata=0), R5 thumbnail (main.py:288-308)
+    // and R6 tiff re-encodes, from one conversion of the cube
+    val products = Raster.productsUdf(
       cube,
       col("footprint_min_lon"), col("footprint_max_lon"),
       col("footprint_min_lat"), col("footprint_max_lat"),
-      col("geometry2d"))
+      col("geometry2d"), lit(ThumbnailFactor))
     val ts = date_format(col("captured_ts"), "yyyyMMddHHmmss")
     withBands
-      .withColumn("clipped", clipped)
-      .withColumn("s", PixelOps.imageStats(col("clipped"))) // R3+R4 single pass
-      .withColumn("thumbnail_png", // R5 (main.py:288-308)
-        graft.functions.Raster.thumbnailPngUdf(col("clipped"), lit(ThumbnailFactor)))
-      .withColumn("clipped_tif", Raster.encodeTiffUdf(col("clipped"))) // R6
-      .withColumn("full_tif", Raster.encodeTiffUdf(Raster.stackBands(
-        col("red"), col("green"), col("blue"))))
+      .withColumn("k", products)
+      .withColumn("s", PixelOps.imageStats(col("k.clipped"))) // R3+R4 single pass
       // P4 filename templating — CORRECTED yyyyMMddHHmmss (the
       // reference's "%Y%M%d%H%m%S" swaps minute/month, main.py:141-148;
       // divergence documented per SURVEY §7.3)
@@ -153,7 +158,8 @@ object SatellitePipeline {
         col("s.green_average").as("green_average"),
         col("s.blue_average").as("blue_average"),
         col("s.white_fraction").as("white_fraction"),
-        col("full_tif"), col("clipped_tif"), col("thumbnail_png"))
+        col("k.fullTif").as("full_tif"), col("k.clippedTif").as("clipped_tif"),
+        col("k.thumbnailPng").as("thumbnail_png"))
   }
 
   /** Full run: S5 artifacts + S6 idempotent upsert. Returns rows

@@ -105,4 +105,24 @@ class GeoSpec extends AnyFunSuite {
     // row i=2 is lat 1.5 (lat = maxLat - (i+0.5)), col j=1 is lon 1.5
     assert(out.head(2)(1) === 9, "the overlap pixel survives (not carved out)")
   }
+
+  test("ringCrossings: odd count right of x ⇔ pointInRing, horizontal edges and vertex rows included") {
+    val rnd = new scala.util.Random(11L)
+    for (_ <- 0 until 300) {
+      // vertices on a coarse grid, so horizontal edges and probes on a
+      // vertex's y are common
+      val n = rnd.nextInt(12)
+      val xs = Array.fill(n)(rnd.nextInt(9).toDouble)
+      val ys = Array.fill(n)(rnd.nextInt(9).toDouble)
+      val ring = xs.indices.map(k => IndexedSeq(xs(k), ys(k)))
+      val out = new Array[Double](n)
+      for (_ <- 0 until 20) {
+        val y = rnd.nextInt(17) / 2.0
+        val x = rnd.nextInt(19) / 2.0 - 0.25
+        val m = Geo.ringCrossings(xs, ys, y, out)
+        val right = (0 until m).count(k => x < out(k))
+        assert((right % 2 == 1) == Geo.pointInRing(x, y, ring), s"($x, $y) in $ring")
+      }
+    }
+  }
 }

@@ -138,4 +138,68 @@ class PipelineSpec extends AnyFunSuite {
     assert(n2 == 0, "replay appends nothing")
     assert(spark.read.parquet(sinkPath).count() == 2)
   }
+
+  test("process spreads the per-image kernels over defaultParallelism tasks") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.execution.ProjectExec
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, ResultQueryStageExec}
+    // eight clear in-window images of body 1: eight candidates, read
+    // from one partition as from a single catalog file
+    val ids = (1 to 8).map(k => s"imgS$k")
+    val cat = ids.zipWithIndex.map { case (ee, k) =>
+      (ee, "S2", ts(s"2024-06-${10 + k} 10:00:00"), 9.0, 11.0, 9.0, 11.0,
+        Map("CLOUDY_PIXEL_PERCENTAGE" -> "5"))
+    }.toDF("ee_id", "dataset", "captured_ts_millis",
+      "footprint_min_lon", "footprint_max_lon", "footprint_min_lat", "footprint_max_lat",
+      "properties").coalesce(1)
+    val ras = ids.zipWithIndex.map { case (ee, k) => (ee, gray(10 + k), gray(20 + k), gray(30 + k)) }
+      .toDF("ee_id", "TCI_R", "TCI_G", "TCI_B")
+    val d = SatellitePipeline.discovery(waterBodies, geometries, existingSink, runDate)
+    val c = SatellitePipeline.candidates(d, cat, configs, existingSink, runDate)
+    assert(c.count() == 8)
+
+    // per job group, the result-stage task count of the last job
+    // started (the query's final stage; query stages start before it)
+    val resultTasks = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val group = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (group != null) resultTasks.put(group, e.stageInfos.maxBy(_.stageId).numTasks)
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val p = SatellitePipeline.process(c, ras)
+    try {
+      sc.setJobGroup("pipeline-spread", "process")
+      assert(p.collect().length == 8)
+      // a marker job: once its start is seen, every earlier event is too
+      sc.setJobGroup("pipeline-spread-marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!resultTasks.containsKey("pipeline-spread-marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    // the kernel projection runs in the result stage: no query stage
+    // (a leaf of the final adaptive plan) sits between it and the root
+    val finalPlan = p.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan match {
+        case r: ResultQueryStageExec => r.plan
+        case other => other
+      }
+      case other => other
+    }
+    val kernel = finalPlan.find {
+      case pr: ProjectExec => pr.projectList.exists(_.exists(_.isInstanceOf[ScalaUDF]))
+      case _ => false
+    }
+    assert(kernel.isDefined, s"kernel projection not in the result stage:\n$finalPlan")
+    assert(resultTasks.get("pipeline-spread") == sc.defaultParallelism,
+      s"kernel stage ran in ${resultTasks.get("pipeline-spread")} tasks, " +
+        s"expected defaultParallelism = ${sc.defaultParallelism}")
+  }
 }

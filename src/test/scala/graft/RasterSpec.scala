@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.Raster
+import graft.functions.{Geo, ImageHash, PixelStatsAgg, Raster}
+import scala.util.Random
 
 /** Golden tests for the raster kernels (FIXTURES.md §B raster_pixels
   * plan; reference main.py:206-308). */
@@ -152,5 +153,163 @@ class RasterSpec extends AnyFunSuite {
       .select("s.*")
     val r = df.head()
     assert(r.getDouble(0) == 200.0 && r.getDouble(3) == 1.0)
+  }
+
+  // ------------------------------------------- scanline clip ≡ ray cast
+
+  type Polys = Seq[Seq[Seq[Double]]]
+
+  /** The per-pixel reference: `Geo.pointInPolygon` at every center. */
+  private def rayCastMask(h: Int, w: Int, minLon: Double, maxLon: Double,
+      minLat: Double, maxLat: Double, polys: Polys): Array[Boolean] =
+    Array.tabulate(h * w) { k =>
+      val (i, j) = (k / w, k % w)
+      val lat = maxLat - (i + 0.5) * (maxLat - minLat) / h
+      val lon = minLon + (j + 0.5) * (maxLon - minLon) / w
+      Geo.pointInPolygon(lon, lat, polys)
+    }
+
+  private def ring(pts: Seq[(Double, Double)]): Seq[Seq[Double]] = pts.map { case (x, y) => Seq(x, y) }
+
+  /** Star-shaped ring around (cx, cy): convex when every radius is r. */
+  private def star(rnd: Random, cx: Double, cy: Double, r: Double, n: Int,
+      convex: Boolean): Seq[Seq[Double]] = {
+    val phase = rnd.nextDouble() * 2 * math.Pi
+    ring((0 until n).map { k =>
+      val a = phase + 2 * math.Pi * k / n
+      val rk = if (convex) r else r * (0.2 + 0.8 * rnd.nextDouble())
+      (cx + rk * math.cos(a), cy + rk * math.sin(a))
+    })
+  }
+
+  /** Rectilinear skyline: every edge horizontal or vertical, with the
+    * horizontal ones on pixel-center latitudes and the vertical ones
+    * on pixel-center longitudes, so vertices sit exactly on centers. */
+  private def skyline(rnd: Random, h: Int, w: Int, minLon: Double, maxLon: Double,
+      minLat: Double, maxLat: Double): Seq[Seq[Double]] = {
+    def lat(i: Int) = maxLat - (i + 0.5) * (maxLat - minLat) / h
+    def lon(j: Int) = minLon + (j + 0.5) * (maxLon - minLon) / w
+    val cols = (0 until w).filter(_ => rnd.nextInt(3) == 0).distinct.sorted
+    val xs = (if (cols.length < 2) Seq(0, w - 1) else cols).map(lon)
+    val base = lat(h - 1 - rnd.nextInt(math.max(1, h / 3)))
+    val tops = xs.indices.init.map(_ => lat(rnd.nextInt(h)))
+    ring(Seq((xs.head, base), (xs.last, base)) ++
+      tops.indices.reverse.flatMap(k => Seq((xs(k + 1), tops(k)), (xs(k), tops(k)))))
+  }
+
+  test("scanline clip mask equals the per-pixel pointInPolygon mask on seeded random shapes") {
+    val rnd = new Random(20261017L)
+    var cases = 0
+    for (round <- 0 until 240) {
+      val h = 1 + rnd.nextInt(40)
+      val w = 1 + rnd.nextInt(40)
+      val (minLon, minLat) = (rnd.nextDouble() * 10 - 5, rnd.nextDouble() * 10 - 5)
+      val (dLon, dLat) = (0.1 + rnd.nextDouble() * 3, 0.1 + rnd.nextDouble() * 3)
+      // some bboxes are given flipped (max < min): centers then run
+      // right-to-left, which the scanline must not assume away
+      val flip = round % 17 == 0
+      val (maxLon, maxLat) = if (flip) (minLon - dLon, minLat - dLat) else (minLon + dLon, minLat + dLat)
+      val (cx, cy) = ((minLon + maxLon) / 2, (minLat + maxLat) / 2)
+      val r = math.min(dLon, dLat) * (0.2 + 0.5 * rnd.nextDouble())
+      val kind = round % 6
+      val polys: Polys = kind match {
+        case 0 => Seq(star(rnd, cx, cy, r, 3 + rnd.nextInt(40), convex = true))
+        case 1 => Seq(star(rnd, cx, cy, r, 5 + rnd.nextInt(130), convex = false))
+        case 2 => // overlapping multi-polygon: the union, not an XOR
+          Seq.fill(2 + rnd.nextInt(2))(star(rnd, cx + (rnd.nextDouble() - 0.5) * r,
+            cy + (rnd.nextDouble() - 0.5) * r, r, 4 + rnd.nextInt(60), convex = rnd.nextBoolean()))
+        case 3 => Seq(skyline(rnd, h, w, minLon, maxLon, minLat, maxLat))
+        case 4 => // degenerate rings beside a real one
+          Seq(Seq.empty, ring(Seq((cx, cy))), ring(Seq((cx - r, cy - r), (cx + r, cy + r))),
+            star(rnd, cx, cy, r, 3 + rnd.nextInt(20), convex = false))
+        case _ => // self-intersecting vertex soup, partly outside the bbox
+          Seq(ring(Seq.fill(3 + rnd.nextInt(30))(
+            (cx + (rnd.nextDouble() - 0.5) * 2 * dLon, cy + (rnd.nextDouble() - 0.5) * 2 * dLat))))
+      }
+      val expect = rayCastMask(h, w, minLon, maxLon, minLat, maxLat, polys)
+      val got = Raster.clipMask(h, w, minLon, maxLon, minLat, maxLat, polys)
+      val bad = expect.indices.filter(k => expect(k) != got(k))
+      assert(bad.isEmpty, s"round $round kind $kind ${h}x$w: ${bad.size} pixels differ, first ${bad.take(5)}")
+      // and through the Seq wrapper: kept pixels are exactly the mask
+      val ones = Seq.fill(2)(Seq.fill(h)(Seq.fill(w)(1)))
+      val clipped = Raster.clip(ones, minLon, maxLon, minLat, maxLat, polys)
+      assert(clipped.forall(_.flatten.map(_ == 1) == expect.toSeq), s"round $round clip")
+      cases += 1
+    }
+    assert(cases == 240)
+  }
+
+  test("clip: rings with fewer than 3 vertices keep nothing; empty or null geometry keeps all") {
+    val cube = Seq.tabulate(3, 5, 6)((c, i, j) => 1 + (c * 7 + i * 3 + j) % 200)
+    val tiny: Polys = Seq(Seq.empty, Seq(Seq(2.0, 2.0)), Seq(Seq(0.0, 0.0), Seq(6.0, 5.0)))
+    assert(Raster.clip(cube, 0, 6, 0, 5, tiny).forall(_.flatten.forall(_ == 0)))
+    assert(rayCastMask(5, 6, 0, 6, 0, 5, tiny).forall(!_))
+    assert(Raster.clip(cube, 0, 6, 0, 5, Seq.empty) == cube, "no geometry → no mask")
+    assert(Raster.clip(cube, 0, 6, 0, 5, null) == cube, "null geometry → no mask")
+    assert(Raster.clip(null, 0, 6, 0, 5, diamond) == null)
+  }
+
+  // ---------------------------------------------- fused kernel ≡ wrappers
+
+  private def noiseCube(rnd: Random, h: Int, w: Int): Seq[Seq[Seq[Int]]] =
+    Seq.fill(3, h, w)(rnd.nextInt(256))
+
+  test("products: clipped cube, clipped TIFF, full TIFF and thumbnail PNG equal the Seq wrappers") {
+    val rnd = new Random(7L)
+    for ((h, w) <- Seq((8, 8), (30, 45), (64, 64), (100, 71))) {
+      val cube = noiseCube(rnd, h, w)
+      val geoms: Seq[Polys] = Seq(
+        Seq(star(rnd, 5.0, 5.0, 3.0, 120, convex = false)),
+        Seq(star(rnd, 4.0, 4.0, 2.5, 30, convex = true), star(rnd, 6.0, 6.0, 2.5, 30, convex = false)),
+        Seq.empty, null)
+      for (polys <- geoms) {
+        val p = Raster.products(cube, 1.0, 9.0, 1.0, 9.0, polys, 7)
+        val clipped = Raster.clip(cube, 1.0, 9.0, 1.0, 9.0, polys)
+        assert(p.clipped == clipped, s"${h}x$w clipped cube")
+        assert(p.clippedTif.sameElements(Raster.encodeTiff(clipped)), s"${h}x$w clipped tif")
+        assert(p.fullTif.sameElements(Raster.encodeTiff(cube)), s"${h}x$w full tif")
+        assert(p.thumbnailPng.sameElements(Raster.encodePng(Raster.thumbnailArray(clipped, 7))),
+          s"${h}x$w thumbnail png")
+      }
+    }
+    assert(Raster.products(null, 0, 1, 0, 1, diamond, 7) == null)
+  }
+
+  test("a 512x512 cube given as nested Lists (the ScalaUDF form) gives identical output " +
+      "through every wrapper") {
+    val (h, w) = (512, 512)
+    def v(c: Int, i: Int, j: Int) = (c * 71 + i * 13 + j * 7 + (i * j) % 29) % 256
+    val asList: Seq[Seq[Seq[Int]]] = List.tabulate(3, h, w)(v)
+    val asIndexed: Seq[Seq[Seq[Int]]] = Vector.tabulate(3, h, w)(v)
+    assert(asList.head.head.isInstanceOf[List[_]])
+    val polys: Polys = Seq(star(new Random(3L), 0.5, 0.5, 0.4, 130, convex = false))
+    def same(what: String)(f: Seq[Seq[Seq[Int]]] => Any): Unit = {
+      def norm(x: Any): Any = x match {
+        case b: Array[Byte] => b.toSeq
+        case p: graft.functions.RasterProducts =>
+          (p.clipped, p.clippedTif.toSeq, p.fullTif.toSeq, p.thumbnailPng.toSeq)
+        case o => o
+      }
+      assert(norm(f(asList)) == norm(f(asIndexed)), what)
+    }
+    same("clip")(Raster.clip(_, 0, 1, 0, 1, polys))
+    same("thumbnailArray")(Raster.thumbnailArray(_, 7))
+    same("encodePng")(Raster.encodePng)
+    same("encodeTiff")(Raster.encodeTiff)
+    same("encodeJpeg")(Raster.encodeJpeg(_, 0.9f))
+    // entry by entry: the archive headers carry the time of the call
+    same("encodeBandZip") { c =>
+      val zin = new java.util.zip.ZipInputStream(
+        new java.io.ByteArrayInputStream(Raster.encodeBandZip(c, Seq("R", "G", "B"))))
+      Iterator.continually(zin.getNextEntry).takeWhile(_ != null)
+        .map(e => e.getName -> zin.readAllBytes().toSeq).toList
+    }
+    same("products")(Raster.products(_, 0, 1, 0, 1, polys, 7))
+    same("PixelStatsAgg.reduce")(PixelStatsAgg.reduce(PixelStatsAgg.zero, _))
+    same("pixelDhashSeq")(ImageHash.pixelDhashSeq)
+    // and the lossless codecs give the cube back
+    assert(Raster.decodeImage(Raster.encodeTiff(asList)) == asIndexed)
+    assert(Raster.decodeBandZip(Raster.encodeBandZip(asList, Seq("R", "G", "B")),
+      Seq("R", "G", "B")) == asIndexed)
   }
 }
