@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
 
@@ -19,14 +18,7 @@ object PlanDump {
     val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.1")
     val tag = args.lift(3).getOrElse("r18")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
     Files.createDirectories(Paths.get(s"plans/$tag"))
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,

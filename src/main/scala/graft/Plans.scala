@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
 
@@ -11,16 +10,9 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.drop(1).headOption.getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(4)
     val sb = new StringBuilder
-    sb.append("# Physical plans (explain formatted, sf0.001, AQE off for stable shapes)\n")
+    sb.append("# Physical plans (explain formatted, sf0.001, local[4], AQE on)\n")
     sb.append("\nRegenerate: `sbt \"runMain graft.Plans\"`.\n")
     (SparkEntry.queries.toSeq ++ SparkEntry.planFrames.toSeq)
       .sortBy(_._1).foreach { case (name, fn) =>

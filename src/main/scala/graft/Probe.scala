@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Optimization-round measurement scratchpad (guide §1): times named
   * sub-frames of expensive queries under the bench contract (noop
@@ -14,14 +14,7 @@ object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
 
     def time(name: String, release: Boolean = true)(fn: => DataFrame): Unit = {
       def once(): Double = {
@@ -214,31 +207,6 @@ object Probe {
           .agg(count(lit(1)).as("inter")))
       CacheRegistry.releaseAll()
       time("q120.full")(SparkEntry.queries("q120_containment_dedup")(spark, sfDir))
-    }
-
-    // --- q157 trained-serve lifecycle decomposition (train/build/serve)
-    if (sys.env.get("GRAFT_PROBE_SET").contains("q157")) {
-      import operators.Similarity
-      def wall[T](name: String)(f: => T): T = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"PROBE $name%-40s ${(System.nanoTime() - t0) / 1e9}%.3f s"); r
-      }
-      val v = Similarity.plantedVectors(spark, sfDir)
-      (1 to 3).foreach { i =>
-        val indexPath =
-          java.nio.file.Files.createTempDirectory("graft-probe-q157").toString
-        val cents = wall(s"q157.train_$i")(
-          Similarity.trainExactPrunedQuantizer(v))
-        wall(s"q157.buildstore_$i")(
-          Similarity.buildExactPrunedIndexWithQuantizer(v, cents, indexPath,
-            cacheKey = Some(s"probe.plantCells:$sfDir")))
-        time(s"q157.serve_$i", release = false)(
-          Similarity.exactPrunedTopKServeOf(v,
-            org.apache.spark.sql.functions.expr("vec_id % 25 = 0"),
-            indexPath, 4, 5,
-            cacheKey = Some(s"probe.plantCells:$sfDir")))
-        CacheRegistry.releaseAll()
-      }
     }
 
     // --- q100 basket lift decomposition

@@ -97,7 +97,7 @@ object ProofSf10 {
     val dir = args.headOption.getOrElse("/tmp/graft_sf10")
     val mode = args.lift(1).getOrElse("all")
     val spark = GraftSession.local()
-    import operators.Similarity
+    import operators.{ExactIndex, Similarity}
 
     def rows(df: DataFrame): Seq[Seq[Any]] =
       df.collect().map(_.toSeq).toSeq.sortBy(_.mkString(""))
@@ -146,20 +146,21 @@ object ProofSf10 {
       val idx157 = java.nio.file.Files.createTempDirectory("graft-sf10-157").toString
       var cents: Seq[(Long, Array[Double], Double)] = null
       val (_, tBuild) = timed {
-        cents = Similarity.buildExactPrunedIndexTrained(planted, idx157,
-          cacheKey = Some("sf10.plantCells"))
+        cents = ExactIndex.train(planted)
+        ExactIndex.save(spark, idx157,
+          ExactIndex.fit(planted, cents, cacheKey = Some("sf10.plantCells")))
       }
       println(f"q157 trained build at sf10 (nlist=${cents.size}%4d)        $tBuild%8.2f s")
       gate("q157 trained serve (sampled queries)",
-        Similarity.exactPrunedTopKServeOf(planted, sampPred, idx157, 4, 5,
+        ExactIndex.topK(planted, sampPred, ExactIndex.load(spark, idx157), 4, 5,
           cacheKey = Some("sf10.plantCells")))
       val idx156 = java.nio.file.Files.createTempDirectory("graft-sf10-156").toString
       val (_, tBuild2) = timed(
-        Similarity.buildExactPruned2LevelIndexWithQuantizer(planted, cents,
-          idx156, cacheKey = Some("sf10.plantCells")))
+        ExactIndex.save(spark, idx156, ExactIndex.fit(planted, cents,
+          Some(Similarity.PlantGroupEvery), cacheKey = Some("sf10.plantCells"))))
       println(f"q156 two-level build at sf10 (trained cells)  $tBuild2%8.2f s")
       gate("q156 two-level serve (sampled queries)",
-        Similarity.exactPruned2LevelServeOf(planted, sampPred, idx156, 4, 5,
+        ExactIndex.topK(planted, sampPred, ExactIndex.load(spark, idx156), 4, 5,
           cacheKey = Some("sf10.plantCells")))
       // the hybrid in the DEPLOYMENT shape (fixed |Q|): the fixture's
       // probe rule (every 25th doc) scales |Q| WITH the corpus, so the
@@ -216,8 +217,8 @@ object ProofSf10 {
       val nCorpus = planted.count()
       if (nCorpus / 7 <= 40000) {
         gate("q155 id-filter pruning (sampled queries)",
-          Similarity.exactPrunedTopKWith(planted, sampPred,
-            expr("vec_id % 7 = 3"), 4, 5))
+          ExactIndex.topK(planted, sampPred, ExactIndex.fit(planted,
+            Similarity.trainIvfQuantizer(planted, expr("vec_id % 7 = 3"))), 4, 5))
       } else {
         println(s"q155 id-filter pruning                  SKIPPED (ncells=n/7=${nCorpus / 7} " +
           "is the quadratic-shaped fixture density — exactness already gated via " +

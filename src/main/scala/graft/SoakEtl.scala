@@ -348,14 +348,17 @@ object SoakAnn {
     // two-level form evaluates per query vs the ncells q155 always
     // pays — the evidence that level 1 prunes the |Q|·ncells term
     locally {
-      val ncells = operators.Similarity.plantedVectors(spark, sfDir)
-        .filter(expr("vec_id % 7 = 3")).count()
-      val acct = operators.Similarity.exactPruned2LevelBoundRows(spark, sfDir).collect()
+      val v = operators.Similarity.plantedVectors(spark, sfDir)
+      val cents = operators.Similarity.trainIvfQuantizer(v, expr("vec_id % 7 = 3"))
+      val ncells = cents.size
+      val acct = operators.ExactIndex.candidates(v, expr("vec_id % 25 = 0"),
+        operators.ExactIndex.fit(v, cents, Some(operators.Similarity.PlantGroupEvery)),
+        4, 5).collect()
       CacheRegistry.releaseAll()
       val mg = acct.map(_.getAs[Long]("n_groups_kept")).sum.toDouble / acct.length
       val mc = acct.map(_.getAs[Long]("n_cell_bounds")).sum.toDouble / acct.length
-      // leader count the way exactPruned2LevelCellBounds picks them:
-      // indices i < ncells with i % 7 == 3, i.e. (ncells + 3) / 7 —
+      // leader count the way ExactIndex.fit picks them: indices
+      // i < ncells with i % 7 == 3, i.e. (ncells + 3) / 7 —
       // ceil(ncells/7) overcounts by one when ncells mod 7 is 1-3
       println(f"q156 bound rows/query: groups kept $mg%6.1f of ${(ncells + 3) / 7}%4d   " +
         f"cell bounds $mc%7.1f of $ncells%5d (q155 pays all $ncells%5d)")
@@ -376,7 +379,9 @@ object SoakAnn {
       operators.Similarity.buildIvfPqIndex(spark, sfDir, s"$idx/composed")
       operators.Similarity.buildSq8Index(spark, sfDir, idx)
       operators.Similarity.buildIvfSq8Index(spark, sfDir, s"$idx/ivfsq8")
-      operators.Similarity.buildExactPrunedIndex(spark, sfDir, s"$idx/exactpruned")
+      val planted = operators.Similarity.plantedVectors(spark, sfDir)
+      operators.ExactIndex.save(spark, s"$idx/exactpruned", operators.ExactIndex.fit(planted,
+        operators.Similarity.trainIvfQuantizer(planted, expr("vec_id % 7 = 3"))))
     }
     println(f"build (train+persist q44+q82+sq8+composed+q155) ${tBuild}%6.2f s  → $idx")
     CacheRegistry.releaseAll() // serve must not inherit the build's cache
@@ -397,22 +402,25 @@ object SoakAnn {
     serveRow("q149 IVF+SQ8 serve (composed)",
       operators.Similarity.ivfSq8TopKServe(serve, sfDir, s"$idx/ivfsq8"))
     serveRow("q155 exact-pruned serve",
-      operators.Similarity.exactPrunedTopKServe(serve, sfDir, s"$idx/exactpruned"))
+      operators.ExactIndex.topK(operators.Similarity.plantedVectors(serve, sfDir),
+        expr("vec_id % 25 = 0"), operators.ExactIndex.load(serve, s"$idx/exactpruned"), 4, 5,
+        cacheKey = Some(s"similarity.plantCells:$sfDir")))
     // q157: the TRAINED √n quantizer's build and serve costs broken
     // out — the r16 verdict's ask: what does the production-sized
     // quantizer's collect/bound work cost at this sf, vs the
     // id-filter contract's ncells ∝ n
     locally {
       val t0 = System.nanoTime()
-      val cents = operators.Similarity.buildExactPrunedIndexTrained(
-        operators.Similarity.plantedVectors(spark, sfDir), s"$idx/trained157")
+      val planted = operators.Similarity.plantedVectors(spark, sfDir)
+      val cents = operators.ExactIndex.train(planted)
+      operators.ExactIndex.save(spark, s"$idx/trained157",
+        operators.ExactIndex.fit(planted, cents))
       val tb = (System.nanoTime() - t0) / 1e9
       CacheRegistry.releaseAll()
       println(f"q157 trained build (nlist=${cents.size}%4d = sqrt-n, 3 Lloyd passes) $tb%6.2f s")
       serveRow("q157 trained-quantizer serve",
-        operators.Similarity.exactPrunedTopKServeOf(
-          operators.Similarity.plantedVectors(serve, sfDir),
-          expr("vec_id % 25 = 0"), s"$idx/trained157", 4, 5))
+        operators.ExactIndex.topK(operators.Similarity.plantedVectors(serve, sfDir),
+          expr("vec_id % 25 = 0"), operators.ExactIndex.load(serve, s"$idx/trained157"), 4, 5))
     }
     spark.stop()
   }
@@ -881,8 +889,8 @@ object SoakDelta {
         .persist()
       base.count()
       val idx = tmpRoot("exact155")
-      operators.Similarity.buildExactPrunedIndexOf(
-        base, expr("vec_id % 7 = 3"), s"$idx/q155")
+      operators.ExactIndex.save(spark, s"$idx/q155", operators.ExactIndex.fit(base,
+        operators.Similarity.trainIvfQuantizer(base, expr("vec_id % 7 = 3"))))
       def arrivalsOf(b: Int): DataFrame = {
         val wobbled = operators.Similarity.plantedVectorsOfIds(
             spark.range(100).select(
@@ -899,7 +907,7 @@ object SoakDelta {
         val arr = arrivalsOf(b).persist()
         arr.count()
         tAdmit += time {
-          operators.Similarity.admitExactPruned(spark, s"$idx/q155", arr).count()
+          operators.ExactIndex.admit(spark, s"$idx/q155", arr).count()
         }
         // materialize the grown corpus BEFORE dropping the previous
         // frame (r16 advice: the old code stacked ~21 persisted corpus
@@ -914,8 +922,8 @@ object SoakDelta {
         val qp = expr("vec_id % 25 = 0")
         var served: Seq[Seq[Any]] = null; var truth: Seq[Seq[Any]] = null
         tGate += time {
-          served = operators.Similarity.exactPrunedTopKServeOf(
-              corpus, qp, s"$idx/q155", 4, 5)
+          served = operators.ExactIndex.topK(
+              corpus, qp, operators.ExactIndex.load(spark, s"$idx/q155"), 4, 5)
             .collect().map(_.toSeq).toSeq.sortBy(_.mkString("\u0001"))
           truth = operators.Similarity.cosineTopKOf(corpus, qp, 5)
             .collect().map(_.toSeq).toSeq.sortBy(_.mkString("\u0001"))
@@ -940,7 +948,7 @@ object SoakDelta {
     // the full production loop end-to-end, hard-gated at every step:
     // TRAIN a √n Lloyd quantizer → STORE the two-level artifacts
     // (quantizer, cell radii, cell→group table, group radii) → SERVE
-    // → 20 admission batches through admitExactPruned2Level (cell AND
+    // → 20 admission batches through ExactIndex.admit (cell AND
     // composed group radii delta-admitted; auto-compaction crosses its
     // knee mid-soak on both radius tables) → RE-TRAIN on the grown
     // corpus in place (the refreshIfStale precedent — atomic
@@ -956,8 +964,8 @@ object SoakDelta {
       val idx = tmpRoot("trained2l")
       val qp = expr("vec_id % 25 = 0")
       def gate(corpus: DataFrame, stage: String): Unit = {
-        val served = operators.Similarity.exactPruned2LevelServeOf(
-            corpus, qp, s"$idx/q157", 4, 5)
+        val served = operators.ExactIndex.topK(
+            corpus, qp, operators.ExactIndex.load(spark, s"$idx/q157"), 4, 5)
           .collect().map(_.toSeq).toSeq.sortBy(_.mkString("\u0001"))
         val truth = operators.Similarity.cosineTopKOf(corpus, qp, 5)
           .collect().map(_.toSeq).toSeq.sortBy(_.mkString("\u0001"))
@@ -969,10 +977,10 @@ object SoakDelta {
       var tTrain = 0.0
       var nlist = 0
       tTrain = time {
-        val cents = operators.Similarity.trainExactPrunedQuantizer(base)
+        val cents = operators.ExactIndex.train(base)
         nlist = cents.size
-        operators.Similarity.buildExactPruned2LevelIndexWithQuantizer(
-          base, cents, s"$idx/q157")
+        operators.ExactIndex.save(spark, s"$idx/q157", operators.ExactIndex.fit(
+          base, cents, Some(operators.Similarity.PlantGroupEvery)))
       }
       gate(base, "initial build")
       def arrivalsOf(b: Int): DataFrame = {
@@ -991,7 +999,7 @@ object SoakDelta {
         val arr = arrivalsOf(b).persist()
         arr.count()
         tAdmit += time {
-          operators.Similarity.admitExactPruned2Level(spark, s"$idx/q157", arr).count()
+          operators.ExactIndex.admit(spark, s"$idx/q157", arr).count()
         }
         val next = corpus.unionByName(arr).persist()
         next.count()
@@ -1010,10 +1018,10 @@ object SoakDelta {
       // generation under every artifact, pinned readers unaffected
       var nlist2 = 0
       val tRetrain = time {
-        val cents2 = operators.Similarity.trainExactPrunedQuantizer(corpus)
+        val cents2 = operators.ExactIndex.train(corpus)
         nlist2 = cents2.size
-        operators.Similarity.buildExactPruned2LevelIndexWithQuantizer(
-          corpus, cents2, s"$idx/q157")
+        operators.ExactIndex.save(spark, s"$idx/q157", operators.ExactIndex.fit(
+          corpus, cents2, Some(operators.Similarity.PlantGroupEvery)))
       }
       gate(corpus, "post-retrain")
       println(f"trained2l_lifecycle      train $tTrain%6.2f s (nlist=$nlist%4d)  " +

@@ -27,14 +27,7 @@ object Verify {
     // (full runs at sf1 would mostly re-prove sf0.1 facts at 10x cost)
     val subset = args.lift(2).map(_.split(',').map(_.trim).toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
     run(spark, sfDir, outDir, subset)
     spark.stop()
   }

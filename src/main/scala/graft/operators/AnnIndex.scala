@@ -208,76 +208,37 @@ object AnnIndex {
     if (FpIndex.tableVersion(path) > 0) rebuildCodes(spark, path, coded)
     else saveCodes(path, coded)
 
-  // ------------------------------------------ exact-pruned cell radii
+  // ------------------------------------ exact-pruned stat tables (q155)
 
-  /** Persist the per-cell radius table of the exact-pruned tier
-    * (q155): rows (cell, rc2) — each cell's chord² radius
-    * max ‖x̃ − c̃‖² over members, the SECOND model-sized artifact the
-    * pruned-exact serve needs next to the quantizer. Quantizer-sized
-    * (one row per cell); doubles round-trip exactly through the
-    * manifest codec, so served bounds are bit-identical to build-time
-    * bounds and the serve keeps the exactness guarantee. */
-  def saveRadii(path: String, radii: DataFrame): Unit =
-    radii.write.format(Format).option("path", path).mode(SaveMode.Append).save()
-
-  /** Retrain-in-place for a live radius table — same atomic
-    * generation-append contract as [[rebuildQuantizer]]. */
-  def rebuildRadii(spark: SparkSession, path: String, radii: DataFrame,
-      buildId: String = java.util.UUID.randomUUID().toString): Unit =
-    FpIndex.rebuildFlat(spark, path, radii, buildId)
-
-  /** See [[saveOrRebuildQuantizer]]. */
-  def saveOrRebuildRadii(spark: SparkSession, path: String, radii: DataFrame): Unit =
-    if (FpIndex.tableVersion(path) > 0) rebuildRadii(spark, path, radii)
-    else saveRadii(path, radii)
-
-  /** Delta-admit a batch's per-cell radii ([[FpIndex.deltaAppendFlat]]
-    * — delta-sized commits, auto-compaction past the manifest knee).
-    * Radii are MAX-MERGEABLE statistics — the third artifact category
-    * (the CMS/KMV precedent): each commit's row upper-bounds ITS
-    * members' chord² to the centroid, so the max over commits
-    * upper-bounds the union, and admission needs no base-table read,
-    * no renormalization, no rebuild. This verb is what keeps the
-    * exact tier EXACT under streaming admission: a new member can LIE
-    * FARTHER from its centroid than any build-time member, and a
-    * serve still holding the build-time radius would under-bound the
-    * cell and prune a true neighbor (AnnIndexSpec plants exactly that
-    * miss and proves this verb repairs it). */
-  def admitRadii(spark: SparkSession, path: String, batchRadii: DataFrame): Unit =
-    FpIndex.deltaAppendFlat(spark, path, batchRadii)
-
-  /** Load a stored radius table back to (cell, rc2) — the MAX-MERGE
-    * over every visible commit (see [[admitRadii]]: radii are
-    * max-mergeable, so duplicate cell rows from deltas are the design,
-    * not corruption, and the merge direction is the SAFE one — a
-    * stale-but-larger radius only costs pruning, never exactness;
-    * stale-smaller is the hazard admission exists to prevent). After
-    * a corpus SHRINK (vacuumed members) the merged radius stays
-    * conservative — still exact, just less cut — until
-    * [[rebuildRadii]] resets the statistic under a new generation. */
-  def loadRadii(spark: SparkSession, path: String, asOf: Option[Int] = None): DataFrame =
+  /** Load a MAX-MERGEABLE stat table back to (key, stat) — the max over
+    * every visible commit. The exact-pruned tier ([[ExactIndex]]) stores
+    * its per-cell radii (cell, rc2) and per-group radii (g_id, rg2) this
+    * way: the initial build and every rebuild go through
+    * [[FpIndex.saveOrRebuildFlat]] (atomic generation-append), arrival
+    * batches through [[FpIndex.deltaAppendFlat]]. Each commit's row
+    * upper-bounds ITS members' chord² to the reference point, so the max
+    * over commits upper-bounds the union — duplicate key rows from
+    * deltas are the design, not corruption — and admission needs no
+    * base-table read. The merge direction is the SAFE one: a stale-but-
+    * larger radius (after members are vacuumed) only costs pruning,
+    * never exactness, until a rebuild resets the statistic under a new
+    * generation; stale-SMALLER is the hazard admission exists to
+    * prevent. Quantizer-sized; doubles round-trip exactly, so served
+    * bounds are bit-identical to build-time ones. */
+  def loadStats(spark: SparkSession, path: String, key: String, stat: String,
+      asOf: Option[Int] = None): DataFrame =
     FpIndex.loadFlat(spark, path, asOf)
-      .groupBy(col("cell"))
-      .agg(max(col("rc2")).as("rc2"))
+      .groupBy(col(key))
+      .agg(max(col(stat)).as(stat))
 
-  // ------------------------------------ two-level group artifacts (q156)
-
-  /** Persist the cell→group assignment of the two-level exact-pruned
-    * tier: rows (cell, g_id, dcg) — each cell's leader and its
-    * unit-chord distance ‖c̃ − g̃‖ to it. STATIC between retrains
-    * (a pure function of the quantizer), which is why the distance is
-    * stored: group-radius admission composes an arrival batch's
-    * per-cell radius to dcg + R_c without touching the quantizer
-    * vectors. Quantizer-sized. */
-  def saveOrRebuildGroups(spark: SparkSession, path: String, groups: DataFrame): Unit =
-    if (FpIndex.tableVersion(path) > 0)
-      FpIndex.rebuildFlat(spark, path, groups, java.util.UUID.randomUUID().toString)
-    else groups.write.format(Format).option("path", path).mode(SaveMode.Append).save()
-
-  /** Load the stored cell→group table back to (cell, g_id, dcg), with
-    * the same rebuild-in-place duplicate guard as [[loadQuantizer]]
-    * (a second save appended over a live table would pair cells with
-    * two leaders silently). */
+  /** Load the stored cell→group table of a two-level exact-pruned index
+    * back to (cell, g_id, dcg) — each cell's leader and its unit-chord
+    * distance ‖c̃ − g̃‖, static between retrains (a pure function of the
+    * quantizer), stored so group-radius admission composes a batch's
+    * cell radius to dcg + R_c without the quantizer vectors. Same
+    * rebuild-in-place duplicate guard as [[loadQuantizer]]: a second
+    * save appended over a live table would pair cells with two leaders
+    * silently. */
   def loadGroups(spark: SparkSession, path: String,
       asOf: Option[Int] = None): Seq[(Long, Long, Double)] = {
     val rows = FpIndex.loadFlat(spark, path, asOf)
@@ -288,35 +249,6 @@ object AnnIndex {
         "over a live index; TRUNCATE the table before retraining")
     rows.toSeq
   }
-
-  /** See [[saveOrRebuildQuantizer]] — the initial save / atomic
-    * rebuild dispatch for the per-GROUP radius table (g_id, rg2). */
-  def saveOrRebuildGroupRadii(spark: SparkSession, path: String, gradii: DataFrame): Unit =
-    if (FpIndex.tableVersion(path) > 0)
-      FpIndex.rebuildFlat(spark, path, gradii, java.util.UUID.randomUUID().toString)
-    else gradii.write.format(Format).option("path", path).mode(SaveMode.Append).save()
-
-  /** Delta-admit a batch's per-GROUP radii — the same max-mergeable
-    * contract as [[admitRadii]], one level up: the group radius
-    * R_g = max over member cells (‖c̃−g̃‖ + R_c) COMPOSES under max
-    * (max over commits of (dcg + R_c_commit) ≥ dcg + max-merged R_c
-    * for every cell in every commit), so admission stays O(batch)
-    * with no base-table read at the group level too. Without this
-    * verb the two-level serve can prune a whole GROUP whose cell
-    * radii were correctly admitted — the level-1 analogue of the
-    * stale-smaller hazard (AnnIndexSpec plants it). */
-  def admitGroupRadii(spark: SparkSession, path: String, batchGradii: DataFrame): Unit =
-    FpIndex.deltaAppendFlat(spark, path, batchGradii)
-
-  /** Load the stored group-radius table back to (g_id, rg2) — the
-    * max-merge over every visible commit (rg2 is a squared chord;
-    * max on rg2 ≡ max on rg, both non-negative). Same conservative
-    * semantics as [[loadRadii]] after a shrink. */
-  def loadGroupRadii(spark: SparkSession, path: String,
-      asOf: Option[Int] = None): DataFrame =
-    FpIndex.loadFlat(spark, path, asOf)
-      .groupBy(col("g_id"))
-      .agg(max(col("rg2")).as("rg2"))
 
   /** Load a stored code table back to (vec_id, cell, codes) — ONE
     * groupBy(vec_id) reassembly; `array_sort` on (j, code) structs

@@ -21,6 +21,12 @@ import graft.functions.VectorOps
   *    5 equi-join lookups, not a wider scan), then exact cosine
   *    reranks candidates. At 100 TB the probe join is an equi-join on
   *    the bucket id — O(5·n/2^bits) candidates per query, not O(n).
+  *  - q155-q165 exact-pruned tier: the query frames and their oracle
+  *    SQL live here; each frame is a few lines composed from the one
+  *    [[ExactIndex]] (train, fit, save, load, admit, topK,
+  *    candidates) — q155/q156 fit + topK in-session (one- and
+  *    two-level), q157/q163 and q160's fixed-|Q| form train → fit →
+  *    save → load → topK, q158/q160/q165 fuse those dense legs.
   *
   * All folds are explicitly left-to-right (`aggregate` in Spark,
   * `list_reduce(list_prepend(0,…))` in DuckDB) — double addition is
@@ -294,7 +300,7 @@ object Similarity {
   /** Quantizer load: bounded by construction (n/31 here, nlist ≈ √n
     * in a real deployment); sorted ascending so NearestCell's strict->
     * scan reproduces the oracle's (sim DESC, c_id ASC) tie-break. */
-  private def collectCentroids(
+  private[operators] def collectCentroids(
       corpus: DataFrame,
       centroidPred: org.apache.spark.sql.Column): Seq[(Long, Array[Double], Double)] = {
     val cents = corpus.filter(centroidPred)
@@ -316,7 +322,7 @@ object Similarity {
     * kernel of the query TWICE per row (filter + project). The
     * non-null coalesce kills the inferred filter; null-vector rows
     * still match nothing. */
-  private def assignCells(
+  private[operators] def assignCells(
       corpus: DataFrame,
       cents: Seq[(Long, Array[Double], Double)]): DataFrame =
     corpus.withColumn("cell",
@@ -358,7 +364,7 @@ object Similarity {
     * the seam the streaming admission gate needs: arrivals are not
     * rows of the corpus, so a predicate over the corpus cannot select
     * them. */
-  private def probeCellsOf(
+  private[operators] def probeCellsOf(
       queries: DataFrame,
       cents: Seq[(Long, Array[Double], Double)],
       nprobe: Int): DataFrame = {
@@ -416,7 +422,7 @@ object Similarity {
     * raw NearestCell assignment — a quantizer-sized literal expression
     * — into a LARGER fused plan poisons the whole fused codegen stage
     * at real quantizer sizes; a materialization point isolates it). */
-  private def ivfRank(assigned: DataFrame, probes: DataFrame, k: Int): DataFrame = {
+  private[operators] def ivfRank(assigned: DataFrame, probes: DataFrame, k: Int): DataFrame = {
     // the probe join: equi-join on the cell id — candidates are the
     // nprobe cells' inverted lists, not the corpus. The similarity is
     // computed in the join stage and the candidate row PROJECTS to
@@ -3204,16 +3210,6 @@ object Similarity {
     * 500, 2000, 20000). */
   private val PlantSeedNprobe = 4
   private val PlantK = 5
-  /** Floating-safety margin added to every pruning upper bound. The
-    * bound chain is exact real-arithmetic mathematics; its DOUBLE
-    * evaluation accumulates ≤ ~10 ulp across the dot (exact integer —
-    * 0 ulp), two sqrts (≤ 1 ulp each, correctly rounded), and the
-    * gap/square/divide tail — ≤ ~1e-14 absolute on values in [0, 2].
-    * 1e-9 dominates that by five orders of magnitude while costing
-    * pruning nothing (planted inter-cluster gaps are ~0.5 in cosine),
-    * so a bound can never round BELOW a true similarity and exactness
-    * is unconditional, not probabilistic. */
-  private val BoundEps = 1e-9
 
   /** Element `j` of the derived clustered vector for a vec_id — one
     * template string both engines evaluate verbatim (only `* % + -`
@@ -3265,388 +3261,81 @@ object Similarity {
        |        [${(0 until PlantDim).map(plantElem).mkString(",\n         ")}] AS e
        |      FROM embeddings)""".stripMargin
 
-  /** Quantizer identity folded into every cell-assignment cache key
-    * (r16 advice): the assignment is a pure function of (corpus,
-    * quantizer), but the raw `plantCells:$dir` key encoded only the
-    * corpus — a serve session whose STORED quantizer diverged from the
-    * in-session id-filter one (e.g. after a Lloyd-refined rebuild)
-    * would have read cells assigned under the WRONG quantizer against
-    * the stored radii, silently voiding the exactness guarantee. Same
-    * centroids → same fingerprint → cache sharing is preserved where
-    * it is actually safe. */
-  private def quantizerFingerprint(cents: Seq[(Long, Array[Double], Double)]): String =
-    java.lang.Integer.toHexString(scala.util.hashing.MurmurHash3.orderedHash(
-      cents.map { case (id, v, nm) => (id, v.toSeq, nm) }))
-
-  private def assignKey(base: String, cents: Seq[(Long, Array[Double], Double)]): String =
-    s"$base#${quantizerFingerprint(cents)}"
-
-  /** Shared prefix of [[exactPrunedTopKWith]] and
-    * [[exactPrunedCandidateCountsWith]]: assign cells (cached —
-    * 3 consumers), compute the per-query KEPT-cell probe frame.
-    * Returns (candidate corpus, keep probes). Parameterized over the
-    * corpus so the spec can run the SAME pruning on the isotropic
-    * fixture geometry (exactness must hold there too — the bound just
-    * stops cutting).
-    *
-    * `candFilter` (q163): restricts the CANDIDATE set — both the seed
-    * lower bound and the returned rerank frame — to vectors
-    * satisfying a metadata predicate, applied ON TOP of the cached
-    * assignment (the cache stays filter-independent). Exactness under
-    * filtering needs exactly two properties, both by construction
-    * here: (1) the seed lb is an ACHIEVED k-th FILTERED similarity
-    * (ranked over filtered candidates only; < k filtered seed
-    * members → no k-th row → lb = −2 keeps every cell, degrading to
-    * the brute filtered scan), so a pruned cell (ub < lb ≤ true
-    * filtered k-th) cannot hold a filtered top-k member; (2) the cell
-    * radii stay the UNFILTERED stored ones — a radius over a superset
-    * upper-bounds the subset's, so the bound only LOOSENS, never
-    * cuts a filtered member's cell. k is therefore re-satisfied after
-    * the filter whenever the filtered corpus has k candidates at all
-    * (SimilaritySpec sweeps selectivity 100% → ~0.2%, where the
-    * filtered corpus itself runs out of rows and both engines return
-    * the same < k). */
-  private def exactPrunedKeepOf(
-      corpus: DataFrame,
-      queryPred: org.apache.spark.sql.Column,
-      cents: Seq[(Long, Array[Double], Double)],
-      seedNprobe: Int,
-      k: Int,
-      cacheKey: Option[String],
-      storedRadii: Option[DataFrame] = None,
-      candFilter: DataFrame => DataFrame = identity): (DataFrame, DataFrame) = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val assignedRaw =
-      assignCells(corpus, cents).select(col("vec_id"), col("e"), col("nrm"), col("cell"))
-    val assignedAll = cacheKey.fold(assignedRaw)(key =>
-      graft.CacheRegistry.getOrCache(spark, assignKey(key, cents))(assignedRaw))
-    val assigned = candFilter(assignedAll)
-    val queries = corpus.filter(queryPred)
-      .select(col("vec_id").as("q_id"), col("e").as("qe"), col("nrm").as("qn"))
-    val centDf = cents.map { case (id, vv, nm) => (id, vv.toSeq, nm) }
-      .toDF("c_id", "ce", "cn")
-    // per-cell radius in chord² form: rc2 = max over members of
-    // (2 − 2·cos(x, centroid)) — ONE pass over the cached assignment,
-    // output is quantizer-sized; a SERVE session loads the stored
-    // table instead (doubles round-trip exactly, so served bounds are
-    // bit-identical — AnnIndexSpec pins it). Always over the FULL
-    // assignment, never the candidate-filtered one, so in-session and
-    // stored-serve bounds agree under any candFilter (a superset
-    // radius stays a valid upper bound for the filtered subset)
-    val cellStats = storedRadii.getOrElse(radiiOf(assignedAll, centDf))
-    // seed scan: each query's PlantSeedNprobe nearest cells, exact
-    // sims, the k-th best = the pruning lower bound (no k-th row →
-    // keep everything: lb = −2)
-    val wq = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))
-    val seedLb = assigned
-      .join(broadcast(probeCellsOf(queries, cents, seedNprobe)),
-        col("cell") === col("probe") && col("vec_id") =!= col("q_id"))
-      .withColumn("sim", VectorOps.dot(col("qe"), col("e")) / (col("qn") * col("nrm")))
-      .select(col("q_id"), col("vec_id"), col("sim"))
-      .withColumn("rk", row_number().over(wq))
-      .filter(col("rk") === k)
-      .select(col("q_id"), col("sim").as("lb"))
-    // the triangle-inequality bound per (query, cell):
-    //   ub = 1 − max(0, ‖q̃−c̃‖ − R_c)²/2 + ε  ≥  max cos(q, x∈cell)
-    // keep cells with ub ≥ lb; every true top-k member's cell survives
-    // (its sim ≥ lb and its cell's ub ≥ its sim)
-    val cellInfo = centDf.join(cellStats, col("c_id") === col("cell"))
-      .select(col("c_id"), col("ce"), col("cn"), col("rc2"))
-    val keep = queries
-      // seedLb is one row per query (|Q|-sized) — broadcast it or the
-      // left join plans a sort-merge with two exchanges on frames that
-      // both fit in a task
-      .join(broadcast(seedLb), Seq("q_id"), "left")
-      .withColumn("lbc", coalesce(col("lb"), lit(-2d)))
-      .crossJoin(broadcast(cellInfo))
-      .withColumn("simqc",
-        VectorOps.dot(col("qe"), col("ce")) / (col("qn") * col("cn")))
-      .withColumn("gap", greatest(lit(0d),
-        sqrt(greatest(lit(0d), lit(2d) - lit(2d) * col("simqc"))) - sqrt(col("rc2"))))
-      .filter(lit(1d) - col("gap") * col("gap") / lit(2d) + lit(BoundEps) >= col("lbc"))
-      .select(col("q_id"), col("qe"), col("qn"), col("c_id").as("probe"))
-    (assigned, keep)
-  }
-
-  /** The per-cell radius aggregate shared by the in-session plan and
-    * [[buildExactPrunedIndex]] — one corpus pass, quantizer-sized
-    * output (cell, rc2). */
-  private def radiiOf(assigned: DataFrame, centDf: DataFrame): DataFrame =
-    assigned.join(broadcast(centDf), col("cell") === col("c_id"))
-      .withColumn("simc",
-        VectorOps.dot(col("e"), col("ce")) / (col("nrm") * col("cn")))
-      .groupBy(col("cell"))
-      .agg(max(greatest(lit(0d), lit(2d) - lit(2d) * col("simc"))).as("rc2"))
+  /** Cache key of the planted corpus's cell assignment (the
+    * fingerprinted quantizer identity is appended by [[ExactIndex]]). */
+  private def plantKey(dir: String): Option[String] = Some(s"similarity.plantCells:$dir")
 
   /** q155: GUARANTEED-EXACT top-k under triangle-inequality cell
     * pruning — exact results at IVF cost on clusterable geometry, the
     * missing tier between the brute-force exactness baseline (q21,
     * |Q|·n pairs always) and the approximate family (q22/q44/q61/q82/
-    * q145/q149, cheap but recall < 1). The FAISS/ball-tree bound
-    * re-expressed as dataflow:
-    *
-    *   1. assign the corpus to id-filtered quantizer cells (q44's
-    *      oracle contract — one cached NearestCell map stage);
-    *   2. one quantizer-sized aggregate: each cell's radius
-    *      R_c = max ‖x̃ − c̃‖ over members;
-    *   3. SEED: scan the [[PlantSeedNprobe]] nearest cells exactly —
-    *      the k-th best similarity is a LOWER bound on the true k-th;
-    *   4. PRUNE: for unit vectors cos(q,x) = 1 − ‖q̃−x̃‖²/2 and
-    *      ‖q̃−x̃‖ ≥ ‖q̃−c̃‖ − R_c, so
-    *      ub(q,c) = 1 − max(0, ‖q̃−c̃‖ − R_c)²/2 upper-bounds every
-    *      member's similarity; drop cells with ub < lb — no member
-    *      can reach the top k (strictly below an ACHIEVED k-th
-    *      value), so dropping is lossless, not approximate;
-    *   5. exact rerank over surviving cells (the shared [[ivfRank]]
-    *      probe join + window).
+    * q145/q149, cheap but recall < 1). [[ExactIndex]] fitted in-session
+    * on the id-filtered quantizer (q44's oracle contract, one cached
+    * NearestCell map stage) and served with [[ExactIndex.topK]]: seed
+    * scan over the [[PlantSeedNprobe]] nearest cells, drop every cell
+    * whose bound falls below the achieved k-th seed similarity, exact
+    * rerank over the survivors.
     *
     * The ORACLE is the brute-force exact scan — no bound appears in
     * the SQL — so the hash gate PROVES the guarantee end-to-end on
-    * real data rather than asserting it: any wrongly-pruned cell
-    * would flip the row hash. Runs on the derived clustered corpus
-    * ([[plantElem]] — the fixture embeddings are isotropic, where
-    * bounds provably cannot cut; see the geometry scaladoc).
+    * real data: any wrongly-pruned cell would flip the row hash. Runs
+    * on the derived clustered corpus ([[plantElem]] — the fixture
+    * embeddings are isotropic, where bounds provably cannot cut).
     *
     * Scale shape: bound rows are |Q|·ncells (the q44 probe-ranking
     * shape, 8-dim dots); the exact work collapses from |Q|·n pairs to
-    * |Q|·(seed + kept-cell members) — measured candidate fraction
-    * 5.5% of the corpus per query at sf0.01 and 0.4% at 40× (the
-    * fraction SHRINKS as cells subdivide clusters more finely, while
-    * lb tightens). At deployment scale the quantizer moves to
-    * nlist ≈ √n Lloyd-refined centroids ([[refineCentroids]]) and the
-    * same two-level split the hier family uses bounds the |Q|·ncells
-    * term; the id-filter density here is the oracle contract, not the
-    * production knob. */
+    * |Q|·(seed + kept-cell members) — measured candidate fraction 5.5%
+    * of the corpus per query at sf0.01 and 0.4% at 40× (the fraction
+    * SHRINKS as cells subdivide clusters more finely). At deployment
+    * scale the quantizer is the √n trained one (q157) and the two-level
+    * grouping (q156) bounds the |Q|·ncells term; the id-filter density
+    * here is the oracle contract, not the production knob. */
   def exactPrunedTopK(spark: SparkSession, dir: String): DataFrame =
-    exactPrunedTopKWith(plantedVectors(spark, dir), expr(QueryFilter),
-      expr(PlantCentroidFilter), PlantSeedNprobe, PlantK,
-      cacheKey = Some(s"similarity.plantCells:$dir"))
+    idFilterTopK(spark, dir, groupEvery = None)
 
-  /** Parameterized exact-pruned core — q155's plan over an arbitrary
-    * corpus (vec_id, e[double], nrm). Exactness holds for ANY corpus
-    * geometry (the bound is the triangle inequality, not a data
-    * assumption); geometry only decides how much the prune CUTS —
-    * SimilaritySpec runs it on the isotropic fixture embeddings and
-    * measures the honest ~no-cut alongside the planted corpus's
-    * 5%-and-shrinking. */
-  def exactPrunedTopKWith(
-      corpus: DataFrame,
-      queryPred: org.apache.spark.sql.Column,
-      centroidPred: org.apache.spark.sql.Column,
-      seedNprobe: Int,
-      k: Int,
-      cacheKey: Option[String] = None): DataFrame = {
-    val (assigned, keep) = exactPrunedKeepOf(corpus, queryPred,
-      collectCentroids(corpus, centroidPred), seedNprobe, k, cacheKey)
-    ivfRank(assigned, keep, k)
+  /** q155/q156 in-session: fit on the id-filter quantizer, serve. */
+  private def idFilterTopK(spark: SparkSession, dir: String,
+      groupEvery: Option[Int]): DataFrame = {
+    val v = plantedVectors(spark, dir)
+    val model = ExactIndex.fit(v, collectCentroids(v, expr(PlantCentroidFilter)),
+      groupEvery, plantKey(dir))
+    ExactIndex.topK(v, expr(QueryFilter), model, PlantSeedNprobe, PlantK,
+      cacheKey = plantKey(dir))
   }
 
-  /** [[exactPrunedTopKWith]] against a PRE-TRAINED quantizer — the
-    * production knob the q155 scaladoc names: the guarantee is the
-    * triangle inequality, valid for ANY centroid set, so a
-    * Lloyd-refined quantizer ([[refineCentroids]]) only changes how
-    * much the bound CUTS (tighter cells → smaller radii → more
-    * pruning), never what it returns. SimilaritySpec proves both
-    * halves: refined-quantizer results stay ≡ brute force, and the
-    * refined cut is at least as deep as the id-filtered one. */
-  def exactPrunedTopKWithQuantizer(
-      corpus: DataFrame,
-      queryPred: org.apache.spark.sql.Column,
-      cents: Seq[(Long, Array[Double], Double)],
-      seedNprobe: Int,
-      k: Int,
-      cacheKey: Option[String] = None): DataFrame = {
-    val (assigned, keep) =
-      exactPrunedKeepOf(corpus, queryPred, cents, seedNprobe, k, cacheKey)
-    ivfRank(assigned, keep, k)
-  }
-
-  /** Per-query surviving-candidate count — the shrinkage evidence
-    * SimilaritySpec asserts and PERF records (kept-cell members per
-    * query, to compare against the corpus size the brute-force scan
-    * pays). */
-  def exactPrunedCandidateCounts(spark: SparkSession, dir: String): DataFrame =
-    exactPrunedCandidateCountsWith(plantedVectors(spark, dir), expr(QueryFilter),
-      expr(PlantCentroidFilter), PlantSeedNprobe, PlantK,
-      cacheKey = Some(s"similarity.plantCells:$dir"))
-
-  /** [[exactPrunedCandidateCounts]] over an arbitrary corpus. */
-  def exactPrunedCandidateCountsWith(
-      corpus: DataFrame,
-      queryPred: org.apache.spark.sql.Column,
-      centroidPred: org.apache.spark.sql.Column,
-      seedNprobe: Int,
-      k: Int,
-      cacheKey: Option[String] = None): DataFrame =
-    exactPrunedCandidateCountsWithQuantizer(corpus, queryPred,
-      collectCentroids(corpus, centroidPred), seedNprobe, k, cacheKey)
-
-  /** [[exactPrunedCandidateCountsWith]] against a pre-trained
-    * quantizer — the measurement half of
-    * [[exactPrunedTopKWithQuantizer]]. */
-  def exactPrunedCandidateCountsWithQuantizer(
-      corpus: DataFrame,
-      queryPred: org.apache.spark.sql.Column,
-      cents: Seq[(Long, Array[Double], Double)],
-      seedNprobe: Int,
-      k: Int,
-      cacheKey: Option[String] = None): DataFrame = {
-    val (assigned, keep) =
-      exactPrunedKeepOf(corpus, queryPred, cents, seedNprobe, k, cacheKey)
-    assigned.join(broadcast(keep.select(col("q_id"), col("probe"))),
-        col("cell") === col("probe") && col("vec_id") =!= col("q_id"))
-      .groupBy(col("q_id")).agg(count(lit(1)).as("n_candidates"))
-  }
-
-  /** Train-once half of the q155 lifecycle: persist the quantizer AND
-    * the per-cell radius table — the two model-sized artifacts the
-    * pruned-exact serve needs. The radii are the one BUILD-time corpus
-    * pass; a serve session then pays assignment + seed + kept-cell
-    * rerank only, and its bounds are bit-identical to build-time
-    * (stored doubles round-trip exactly), so the served results keep
-    * the exactness guarantee — the same build/serve symmetry as
-    * q44/q82/q145/q149. */
-  def buildExactPrunedIndex(spark: SparkSession, dir: String, indexPath: String): Unit =
-    buildExactPrunedIndexOf(plantedVectors(spark, dir), expr(PlantCentroidFilter),
-      indexPath, cacheKey = Some(s"similarity.plantCells:$dir"))
-
-  /** [[buildExactPrunedIndex]] over an arbitrary corpus (vec_id,
-    * e[double], nrm). */
-  def buildExactPrunedIndexOf(
-      corpus: DataFrame,
-      centroidPred: org.apache.spark.sql.Column,
-      indexPath: String,
-      cacheKey: Option[String] = None): Unit =
-    buildExactPrunedIndexWithQuantizer(corpus,
-      collectCentroids(corpus, centroidPred), indexPath, cacheKey)
-
-  /** Persist the exact-pruned artifacts (quantizer + per-cell radii)
-    * for an ARBITRARY centroid set — the seam [[buildExactPrunedIndexOf]]
-    * (id-filter oracle contract) and [[buildExactPrunedIndexTrained]]
-    * (Lloyd-trained √n production quantizer) share. */
-  def buildExactPrunedIndexWithQuantizer(
-      corpus: DataFrame,
-      cents: Seq[(Long, Array[Double], Double)],
-      indexPath: String,
-      cacheKey: Option[String] = None): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    AnnIndex.saveOrRebuildQuantizer(spark, s"$indexPath/quantizer", cents)
-    val assignedRaw =
-      assignCells(corpus, cents).select(col("vec_id"), col("e"), col("nrm"), col("cell"))
-    val assigned = cacheKey.fold(assignedRaw)(key =>
-      graft.CacheRegistry.getOrCache(spark, assignKey(key, cents))(assignedRaw))
-    val centDf = cents.map { case (id, vv, nm) => (id, vv.toSeq, nm) }
-      .toDF("c_id", "ce", "cn")
-    AnnIndex.saveOrRebuildRadii(spark, s"$indexPath/radii", radiiOf(assigned, centDf))
+  /** q157/q163/q165/q160's fixed-|Q| form: the stored production
+    * lifecycle inside one oracled row — [[ExactIndex.train]] (nlist ≈ √n
+    * seeds, Lloyd) → [[ExactIndex.fit]] → [[ExactIndex.save]] →
+    * [[ExactIndex.load]] → [[ExactIndex.topK]] over the stored artifacts
+    * (no in-session radius aggregate at serve time). */
+  private def trainedTopK(spark: SparkSession, dir: String,
+      queryPred: Column, candFilter: DataFrame => DataFrame = identity): DataFrame = {
+    val v = plantedVectors(spark, dir)
+    val indexPath = java.nio.file.Files.createTempDirectory("graft-exact-idx").toString
+    ExactIndex.save(spark, indexPath,
+      ExactIndex.fit(v, ExactIndex.train(v), cacheKey = plantKey(dir)))
+    ExactIndex.topK(v, queryPred, ExactIndex.load(spark, indexPath),
+      PlantSeedNprobe, PlantK, candFilter, plantKey(dir))
   }
 
   // ------------------------------------------------------------- q157
 
-  /** Lloyd iterations for the trained production quantizer — enough
-    * for the centers to settle into the planted clusters (IvfSpec's
-    * monotone-improvement contract); exactness never depends on it. */
-  val TrainedLloydIters = 3
-
-  /** Train the PRODUCTION quantizer for the exact-pruned tier:
-    * nlist ≈ √n seed centroids picked by a deterministic id stride,
-    * then [[refineCentroids]] (Lloyd). This retires the oracle
-    * fixture's `vec_id % 7` density contract (ncells ∝ n — the one
-    * linear-in-n driver-side structure the r16 verdict flagged): the
-    * quantizer collect, the radius table, and q155's per-(query, cell)
-    * bound term are all √n-sized under this trainer, which is the
-    * published IVF sizing rule. The trained centroids are NOT
-    * deterministic across runs (float mean accumulation follows
-    * Spark's partition merge order) and do not need to be: the q155
-    * guarantee is the triangle inequality, exact for ANY centroid set
-    * — centroids only change which cells prune, never the result — so
-    * the brute-force oracle hash-gates the served rows regardless of
-    * what the trainer emitted. */
-  def trainExactPrunedQuantizer(
-      corpus: DataFrame,
-      iters: Int = TrainedLloydIters): Seq[(Long, Array[Double], Double)] = {
-    val n = corpus.count()
-    require(n > 0, "cannot train a quantizer on an empty corpus")
-    val nlist = math.max(4L, math.round(math.sqrt(n.toDouble)))
-    val stride = math.max(1L, n / nlist)
-    val seed = collectCentroids(corpus, expr(s"vec_id % $stride = 0"))
-    refineCentroids(corpus, seed, iters)
-  }
-
-  /** Train-and-persist half of the q157 lifecycle: √n Lloyd-trained
-    * quantizer + its per-cell radii, stored through the same
-    * [[AnnIndex]] artifacts as the id-filter build. Returns the
-    * trained quantizer (callers that go straight to serve reuse it
-    * for the fingerprinted cache key). */
-  def buildExactPrunedIndexTrained(
-      corpus: DataFrame,
-      indexPath: String,
-      iters: Int = TrainedLloydIters,
-      cacheKey: Option[String] = None): Seq[(Long, Array[Double], Double)] = {
-    val cents = trainExactPrunedQuantizer(corpus, iters)
-    buildExactPrunedIndexWithQuantizer(corpus, cents, indexPath, cacheKey)
-    cents
-  }
-
   /** q157: the exact-pruned top-k SERVED FROM A TRAINED √n QUANTIZER —
-    * the full production lifecycle in one oracled query: train
-    * (nlist ≈ √n seeds, [[TrainedLloydIters]] Lloyd passes) → store
-    * ([[AnnIndex.saveOrRebuildQuantizer]] + radii) → load back → serve
-    * ([[exactPrunedTopKServeOf]] — the stored-artifact path, no
-    * in-session radius aggregate). The r16 verdict's #1 ask: every
-    * previous cell-pruned CORRECTNESS row served from the fixture's
-    * `vec_id % 7` id-filter quantizer, whose density (ncells ∝ n) made
-    * the quantizer collect and the per-query bound term linear in the
-    * corpus; this row proves the √n-sized trained path end-to-end on
-    * data. The ORACLE is q155's boundless brute-force scan — exactness
-    * is quantizer-independent (the triangle-inequality guarantee), so
-    * the nondeterministic trainer needs no determinism contract: any
-    * centroids it emits must still hash-match the brute scan, and the
-    * gate proves exactly that at sf0.01 and sf1. */
-  def exactPrunedTopKTrained(spark: SparkSession, dir: String): DataFrame = {
-    val v = plantedVectors(spark, dir)
-    val indexPath = java.nio.file.Files.createTempDirectory("graft-q157-idx").toString
-    buildExactPrunedIndexTrained(v, indexPath,
-      cacheKey = Some(s"similarity.plantCells:$dir"))
-    exactPrunedTopKServeOf(v, expr(QueryFilter), indexPath,
-      PlantSeedNprobe, PlantK, cacheKey = Some(s"similarity.plantCells:$dir"))
-  }
+    * train → store → load → serve in one oracled query. The id-filter
+    * quantizer's density (ncells ∝ n) makes the quantizer collect and
+    * the per-query bound term linear in the corpus; the trained path is
+    * √n-sized throughout. The ORACLE is q155's boundless brute-force
+    * scan — exactness is quantizer-independent, so the nondeterministic
+    * trainer needs no determinism contract: any centroids it emits must
+    * still hash-match the brute scan, and the gate proves exactly that
+    * at sf0.01 and sf1. */
+  def exactPrunedTopKTrained(spark: SparkSession, dir: String): DataFrame =
+    trainedTopK(spark, dir, expr(QueryFilter))
 
-  /** q157's oracle IS q155's: the trained quantizer claims the same
-    * exact result set, so the same brute-force SQL hash-proves the
-    * train → store → serve lifecycle independently. (A `def`:
-    * `exactPrunedTopKSql` is declared later in the object and a `val`
-    * here would capture null during initialization.) */
+  /** q157's oracle IS q155's. (A `def`: `exactPrunedTopKSql` is declared
+    * later in the object and a `val` here would capture null during
+    * initialization.) */
   def exactPrunedTopKTrainedSql: String = exactPrunedTopKSql
-
-  /** Serve half: the q155 plan against the STORED quantizer + radius
-    * table — no radius aggregate over the corpus at serve time.
-    * Byte-identical to in-session pruning (AnnIndexSpec pins it on a
-    * fresh session). */
-  def exactPrunedTopKServe(spark: SparkSession, dir: String, indexPath: String): DataFrame =
-    exactPrunedTopKServeOf(plantedVectors(spark, dir), expr(QueryFilter),
-      indexPath, PlantSeedNprobe, PlantK,
-      cacheKey = Some(s"similarity.plantCells:$dir"))
-
-  /** [[exactPrunedTopKServe]] over an arbitrary corpus. The radius
-    * table is loaded MAX-MERGED ([[AnnIndex.loadRadii]]), so a corpus
-    * that has grown since the build serves exactly PROVIDED each
-    * arrival batch went through [[admitExactPruned]]. */
-  def exactPrunedTopKServeOf(
-      corpus: DataFrame,
-      queryPred: org.apache.spark.sql.Column,
-      indexPath: String,
-      seedNprobe: Int,
-      k: Int,
-      cacheKey: Option[String] = None): DataFrame = {
-    val spark = corpus.sparkSession
-    val cents = AnnIndex.loadQuantizer(spark, s"$indexPath/quantizer")
-    val radii = AnnIndex.loadRadii(spark, s"$indexPath/radii")
-    val (assigned, keep) = exactPrunedKeepOf(corpus, queryPred, cents,
-      seedNprobe, k, cacheKey, storedRadii = Some(radii))
-    ivfRank(assigned, keep, k)
-  }
 
   // ------------------------------------------------------------- q163
 
@@ -3657,368 +3346,47 @@ object Similarity {
     * ~15% of the corpus at every sf. */
   private[graft] val Q163Lang = "zh"
 
-  /** [[exactPrunedTopKServeOf]] with a CANDIDATE filter — filtered
-    * vector search against the stored trained index. The serve-path
-    * twin of [[exactPrunedTopKFilteredTrained]]; see
-    * [[exactPrunedKeepOf]] for the two-property exactness argument
-    * (filtered seed lb + superset radii). `candFilter` composes with
-    * the cached assignment, so a metadata semi-join or a pushed
-    * column predicate both ride BELOW the candidate probe join. */
-  def exactPrunedTopKServeFilteredOf(
-      corpus: DataFrame,
-      queryPred: org.apache.spark.sql.Column,
-      candFilter: DataFrame => DataFrame,
-      indexPath: String,
-      seedNprobe: Int,
-      k: Int,
-      cacheKey: Option[String] = None): DataFrame = {
-    val spark = corpus.sparkSession
-    val cents = AnnIndex.loadQuantizer(spark, s"$indexPath/quantizer")
-    val radii = AnnIndex.loadRadii(spark, s"$indexPath/radii")
-    val (cands, keep) = exactPrunedKeepOf(corpus, queryPred, cents,
-      seedNprobe, k, cacheKey, storedRadii = Some(radii), candFilter = candFilter)
-    ivfRank(cands, keep, k)
-  }
-
   /** q163: FILTERED vector search on the TRAINED exact-pruned serve —
-    * the production retrieval shape every deployment actually runs
-    * ("top-k among vectors satisfying P"), composed from the q157
-    * lifecycle: train the √n Lloyd quantizer → store quantizer +
-    * radii → serve with the metadata predicate (documents.lang,
-    * joined id-to-id and applied as a semi-join UNDER the candidate
-    * probe join). The subtle part — the reason this needs its own
-    * hash gate rather than following from q157's — is k
-    * RE-SATISFACTION after the filter: a pruning lower bound computed
-    * over UNFILTERED seed candidates would be too tight (it could
-    * prune a cell whose filtered member is a true filtered top-k
-    * row), and a serve that filters AFTER rank would return < k. Here
-    * the seed ranks filtered candidates only and the rerank window
-    * runs over filtered candidates of kept cells, so the row is the
-    * exact filtered top-k whenever k filtered candidates exist — and
-    * exactly the filtered-corpus size when they don't (both engines
-    * agree; SimilaritySpec sweeps selectivity to the starved case).
-    * The ORACLE is the brute-force filtered scan — no bound, no
-    * quantizer — so the gate proves the composition end-to-end. */
-  def exactPrunedTopKFilteredTrained(spark: SparkSession, dir: String): DataFrame = {
-    val v = plantedVectors(spark, dir)
-    val indexPath = java.nio.file.Files.createTempDirectory("graft-q163-idx").toString
-    buildExactPrunedIndexTrained(v, indexPath,
-      cacheKey = Some(s"similarity.plantCells:$dir"))
-    val allowed = Tables.documents(spark, dir)
-      .filter(col("lang") === Q163Lang).select(col("doc_id").as("vec_id"))
-    exactPrunedTopKServeFilteredOf(v, expr(QueryFilter),
-      df => df.join(allowed, Seq("vec_id"), "semi"),
-      indexPath, PlantSeedNprobe, PlantK,
-      cacheKey = Some(s"similarity.plantCells:$dir"))
-  }
+    * "top-k among vectors satisfying P", with P = documents.lang joined
+    * id-to-id and applied as a semi-join UNDER the candidate probe join
+    * ([[ExactIndex.topK]]'s `candFilter`). It needs its own hash gate
+    * because of k RE-SATISFACTION after the filter: a lower bound over
+    * UNFILTERED seed candidates would be too tight, and a serve that
+    * filters AFTER rank would return < k. The ORACLE is the brute-force
+    * filtered scan — no bound, no quantizer. */
+  def exactPrunedTopKFilteredTrained(spark: SparkSession, dir: String): DataFrame =
+    filteredTrainedTopK(spark, dir, allowedDocs(spark, dir))
 
-  /** Admission half of the q155 lifecycle: assign an arrival batch
-    * (vec_id, e[double], nrm) with the STORED quantizer and delta-admit
-    * its per-cell radii — O(batch) work, no base-corpus read. This is
-    * the verb that keeps the served tier EXACT as the corpus grows: an
-    * arrival farther from its centroid than any build-time member
-    * would otherwise leave the stored radius under-bounding its cell,
-    * and a later serve could prune the cell while the arrival is a
-    * true top-k neighbor (AnnIndexSpec constructs that miss
-    * geometrically and proves this verb repairs it). Returns the
-    * cell-assigned arrivals for the caller's corpus append. */
-  def admitExactPruned(spark: SparkSession, indexPath: String,
-      arrivals: DataFrame): DataFrame = {
-    import spark.implicits._
-    val cents = AnnIndex.loadQuantizer(spark, s"$indexPath/quantizer")
-    val asg = assignCells(arrivals, cents)
-      .select(col("vec_id"), col("e"), col("nrm"), col("cell"))
-    val centDf = cents.map { case (id, vv, nm) => (id, vv.toSeq, nm) }
-      .toDF("c_id", "ce", "cn")
-    AnnIndex.admitRadii(spark, s"$indexPath/radii", radiiOf(asg, centDf))
-    asg
-  }
+  /** The doc ids satisfying q163's predicate — (doc_id). */
+  private def allowedDocs(spark: SparkSession, dir: String): DataFrame =
+    Tables.documents(spark, dir).filter(col("lang") === Q163Lang).select(col("doc_id"))
+
+  private def filteredTrainedTopK(spark: SparkSession, dir: String,
+      allowed: DataFrame): DataFrame =
+    trainedTopK(spark, dir, expr(QueryFilter),
+      _.join(allowed.select(col("doc_id").as("vec_id")), Seq("vec_id"), "semi"))
 
   // ------------------------------------------------------------- q156
 
   /** Cell-group density for the two-level bound: every 7th centroid
     * leads a group — ngroups = ncells/7 ≈ n/49, the same ladder ratio
     * the hier clustering family uses. */
-  private val PlantGroupEvery = 7
+  private[graft] val PlantGroupEvery = 7
 
   /** q156: the TWO-LEVEL exact bound — q155 with the |Q|·ncells
-    * bound-row term itself pruned. q155's per-(query, cell) bound is
-    * the q44 probe-ranking shape: linear in ncells per query, and with
-    * quantizer density ∝ n (the oracle contract) that term is the
-    * next thing to grow at 100×. The triangle inequality COMPOSES:
-    * group cells under group leaders (every [[PlantGroupEvery]]th
-    * centroid), give each group the radius
-    * R_g = max over member cells (‖c̃ − g̃‖ + R_c) ≥ max over member
-    * VECTORS ‖x̃ − g̃‖, and prune whole groups with the same bound
-    * before any per-cell work:
-    *
-    *   ub(q, g) = 1 − max(0, ‖q̃−g̃‖ − R_g)²/2 + ε ≥ max cos(q, x∈g)
-    *
-    * Per-query bound rows fall from ncells to
-    * ngroups + cells-in-surviving-groups (measured in the spec); the
-    * result is STILL EXACT — a dropped vector sits under a dropped
-    * group or a dropped cell, both strictly below an achieved k-th
-    * value — and the ORACLE is the same brute-force scan as q155's,
-    * so the composed bound carries its own hash proof at sf0.01 and
-    * sf1. Group assignment and radii are driver-side folds over the
-    * COLLECTED quantizer and cell stats (both model-sized — the
-    * collectCentroids precedent); the corpus sees exactly the same
-    * passes as q155: one assignment, one radius aggregate (collected),
-    * the seed scan, and the kept-cell rerank. */
-  def exactPruned2Level(spark: SparkSession, dir: String): DataFrame = {
-    val (assigned, cellBounds) = exactPruned2LevelCellBounds(spark, dir)
-    val keep = cellBounds
-      .filter(lit(1d) - col("gap") * col("gap") / lit(2d) + lit(BoundEps) >= col("lbc"))
-      .select(col("q_id"), col("qe"), col("qn"), col("c_id").as("probe"))
-    ivfRank(assigned, keep, PlantK)
-  }
-
-  /** Per-query bound-row accounting for the two levels — the spec's
-    * evidence that level 1 cuts the |Q|·ncells term: (q_id,
-    * n_groups_kept, n_cell_bounds). q155 evaluates ncells cell bounds
-    * per query unconditionally; q156 evaluates them only under
-    * surviving groups. */
-  def exactPruned2LevelBoundRows(spark: SparkSession, dir: String): DataFrame = {
-    val (_, cellBounds) = exactPruned2LevelCellBounds(spark, dir)
-    cellBounds.groupBy(col("q_id"))
-      .agg(countDistinct(col("g_id")).as("n_groups_kept"),
-        count(lit(1)).as("n_cell_bounds"))
-  }
-
-  /** Unit-chord distance between two (id, vector, norm) rows — the
-    * driver-side fold primitive of the two-level model. */
-  private def unitChordDist(
-      a: (Long, Array[Double], Double), b: (Long, Array[Double], Double)): Double = {
-    var dot = 0.0; var i = 0
-    while (i < a._2.length) { dot += a._2(i) * b._2(i); i += 1 }
-    math.sqrt(math.max(0.0, 2.0 - 2.0 * (dot / (a._3 * b._3))))
-  }
-
-  /** The two-level MODEL: leaders (every `groupEvery`-th centroid,
-    * middle offset — cents is ascending by id), each cell's nearest
-    * leader with its unit-chord distance dcg, and the composed group
-    * radius R_g² where R_g = max over member cells (dcg + R_c). All
-    * driver-side folds over model-sized tables (the collectCentroids
-    * precedent) — zero corpus passes. Returns (leader rows,
-    * cell → (g_id, dcg), g_id → rg2). */
-  private def twoLevelModel(
-      cents: Seq[(Long, Array[Double], Double)],
-      rc2ByCell: Map[Long, Double],
-      groupEvery: Int): (Seq[(Long, Array[Double], Double)],
-        Map[Long, (Long, Double)], Map[Long, Double]) = {
-    val leaders = cents.zipWithIndex
-      .collect { case (c, i) if i % groupEvery == groupEvery / 2 => c }
-    val groups = if (leaders.nonEmpty) leaders else cents.take(1)
-    // nearest leader per cell (lowest id on ties — the NearestCell
-    // contract), keeping the distance for group-radius composition
-    val cellGroup: Map[Long, (Long, Double)] = cents.map { c =>
-      val g = groups.minBy(g => (unitChordDist(c, g), g._1))
-      c._1 -> (g._1, unitChordDist(c, g))
-    }.toMap
-    val rg2ByGroup: Map[Long, Double] = cents
-      .groupBy(c => cellGroup(c._1)._1)
-      .map { case (gid, cs) =>
-        val rg = cs.map(c => cellGroup(c._1)._2 + math.sqrt(
-          math.max(0.0, rc2ByCell.getOrElse(c._1, 0.0)))).max
-        gid -> rg * rg
-      }
-    (groups, cellGroup, rg2ByGroup)
-  }
-
-  /** Shared core of the two-level plans — in-session ([[exactPruned2Level]],
-    * [[exactPruned2LevelBoundRows]]) and served
-    * ([[exactPruned2LevelServeOf]]): given the assigned corpus, the
-    * query frame and the MODEL tables (quantizer, per-cell radii,
-    * cell→group map, per-group radii — in-session folds or stored
-    * artifacts, both model-sized), produce (assigned, the level-2
-    * bound rows — one per (query, cell-under-surviving-group) with
-    * `gap`/`lbc` ready for the final filter). */
-  private def exactPruned2LevelCellBoundsOf(
-      assigned: DataFrame,
-      queries: DataFrame,
-      cents: Seq[(Long, Array[Double], Double)],
-      rc2ByCell: Map[Long, Double],
-      groups: Seq[(Long, Array[Double], Double)],
-      cellGroup: Map[Long, (Long, Double)],
-      rg2ByGroup: Map[Long, Double],
-      seedNprobe: Int,
-      k: Int): (DataFrame, DataFrame) = {
-    val spark = assigned.sparkSession
-    import spark.implicits._
-    // seed lower bound: identical to q155's (nearest cells, exact sims)
-    val wq = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))
-    val seedLb = assigned
-      .join(broadcast(probeCellsOf(queries, cents, seedNprobe)),
-        col("cell") === col("probe") && col("vec_id") =!= col("q_id"))
-      .withColumn("sim", VectorOps.dot(col("qe"), col("e")) / (col("qn") * col("nrm")))
-      .select(col("q_id"), col("vec_id"), col("sim"))
-      .withColumn("rk", row_number().over(wq))
-      .filter(col("rk") === k)
-      .select(col("q_id"), col("sim").as("lb"))
-    val qlb = queries.join(broadcast(seedLb), Seq("q_id"), "left")
-      .withColumn("lbc", coalesce(col("lb"), lit(-2d)))
-    // LEVEL 1: queries × groups (|Q|·ngroups rows — ncells/groupEvery
-    // of q155's level)
-    val groupDf = groups.map { case (id, vv, nm) =>
-      (id, vv.toSeq, nm, rg2ByGroup.getOrElse(id, 4.0)) }
-      .toDF("g_id", "ge", "gn", "rg2")
-    val keptGroups = qlb.crossJoin(broadcast(groupDf))
-      .withColumn("simqg",
-        VectorOps.dot(col("qe"), col("ge")) / (col("qn") * col("gn")))
-      .withColumn("gapg", greatest(lit(0d),
-        sqrt(greatest(lit(0d), lit(2d) - lit(2d) * col("simqg"))) - sqrt(col("rg2"))))
-      .filter(lit(1d) - col("gapg") * col("gapg") / lit(2d) + lit(BoundEps) >= col("lbc"))
-      .select(col("q_id"), col("qe"), col("qn"), col("lbc"), col("g_id"))
-    // LEVEL 2: per-cell bound rows exist ONLY under surviving groups
-    val cellInfo = cents.map { case (id, vv, nm) =>
-      (id, vv.toSeq, nm, rc2ByCell.getOrElse(id, 0.0), cellGroup(id)._1) }
-      .toDF("c_id", "ce", "cn", "rc2", "g_id")
-    val cellBounds = keptGroups.join(broadcast(cellInfo), Seq("g_id"))
-      .withColumn("simqc",
-        VectorOps.dot(col("qe"), col("ce")) / (col("qn") * col("cn")))
-      .withColumn("gap", greatest(lit(0d),
-        sqrt(greatest(lit(0d), lit(2d) - lit(2d) * col("simqc"))) - sqrt(col("rc2"))))
-    (assigned, cellBounds)
-  }
-
-  /** In-session wiring of [[exactPruned2LevelCellBoundsOf]] for the
-    * q156 entry: id-filter quantizer, cached assignment, per-cell
-    * radii COLLECTED (ncells rows — model-sized) so the group radii
-    * compose on the driver with zero extra corpus passes. */
-  private def exactPruned2LevelCellBounds(
-      spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val v = plantedVectors(spark, dir)
-    val cents = collectCentroids(v, expr(PlantCentroidFilter))
-    val assigned = graft.CacheRegistry.getOrCache(spark,
-        assignKey(s"similarity.plantCells:$dir", cents))(
-      assignCells(v, cents).select(col("vec_id"), col("e"), col("nrm"), col("cell")))
-    val queries = v.filter(expr(QueryFilter))
-      .select(col("vec_id").as("q_id"), col("e").as("qe"), col("nrm").as("qn"))
-    val centDf = cents.map { case (id, vv, nm) => (id, vv.toSeq, nm) }
-      .toDF("c_id", "ce", "cn")
-    val rc2ByCell = radiiOf(assigned, centDf).collect()
-      .map(r => r.getLong(0) -> r.getAs[Double]("rc2")).toMap
-    val (groups, cellGroup, rg2ByGroup) =
-      twoLevelModel(cents, rc2ByCell, PlantGroupEvery)
-    exactPruned2LevelCellBoundsOf(assigned, queries, cents, rc2ByCell,
-      groups, cellGroup, rg2ByGroup, PlantSeedNprobe, PlantK)
-  }
-
-  /** Train-and-persist half of the TWO-LEVEL lifecycle: the q155
-    * artifacts (quantizer + per-cell radii) plus the two group-level
-    * ones — the static cell→group table (cell, g_id, dcg) and the
-    * max-mergeable per-group radius table (g_id, rg2). Both
-    * quantizer-sized; the only corpus pass is the shared radius
-    * aggregate. */
-  def buildExactPruned2LevelIndexOf(
-      corpus: DataFrame,
-      centroidPred: org.apache.spark.sql.Column,
-      indexPath: String,
-      groupEvery: Int = PlantGroupEvery,
-      cacheKey: Option[String] = None): Unit =
-    buildExactPruned2LevelIndexWithQuantizer(corpus,
-      collectCentroids(corpus, centroidPred), indexPath, groupEvery, cacheKey)
-
-  /** [[buildExactPruned2LevelIndexOf]] for an arbitrary (e.g. Lloyd-
-    * trained) quantizer — the seam the trained-lifecycle soak uses. */
-  def buildExactPruned2LevelIndexWithQuantizer(
-      corpus: DataFrame,
-      cents: Seq[(Long, Array[Double], Double)],
-      indexPath: String,
-      groupEvery: Int = PlantGroupEvery,
-      cacheKey: Option[String] = None): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    buildExactPrunedIndexWithQuantizer(corpus, cents, indexPath, cacheKey)
-    // the just-persisted radii are the model input for the group folds
-    // (model-sized collect — no second corpus pass)
-    val rc2ByCell = AnnIndex.loadRadii(spark, s"$indexPath/radii").collect()
-      .map(r => r.getLong(0) -> r.getAs[Double]("rc2")).toMap
-    val (_, cellGroup, rg2ByGroup) = twoLevelModel(cents, rc2ByCell, groupEvery)
-    AnnIndex.saveOrRebuildGroups(spark, s"$indexPath/groups",
-      cellGroup.toSeq.map { case (c, (g, d)) => (c, g, d) }
-        .sortBy(_._1).toDF("cell", "g_id", "dcg"))
-    AnnIndex.saveOrRebuildGroupRadii(spark, s"$indexPath/gradii",
-      rg2ByGroup.toSeq.sortBy(_._1).toDF("g_id", "rg2"))
-  }
-
-  /** Serve half of the two-level lifecycle: the q156 plan against the
-    * STORED quantizer, cell radii, cell→group table and group radii —
-    * every model table max-merged/loaded, no corpus aggregate at serve
-    * time. Exact PROVIDED each arrival batch went through
-    * [[admitExactPruned2Level]] (the group level has its own
-    * stale-smaller hazard — AnnIndexSpec plants an arrival whose CELL
-    * radius is admitted but whose GROUP radius is not, and the level-1
-    * bound prunes the whole group). */
-  def exactPruned2LevelServeOf(
-      corpus: DataFrame,
-      queryPred: org.apache.spark.sql.Column,
-      indexPath: String,
-      seedNprobe: Int,
-      k: Int,
-      cacheKey: Option[String] = None): DataFrame = {
-    val spark = corpus.sparkSession
-    val cents = AnnIndex.loadQuantizer(spark, s"$indexPath/quantizer")
-    val rc2ByCell = AnnIndex.loadRadii(spark, s"$indexPath/radii").collect()
-      .map(r => r.getLong(0) -> r.getAs[Double]("rc2")).toMap
-    val cellGroup = AnnIndex.loadGroups(spark, s"$indexPath/groups")
-      .map { case (c, g, d) => c -> (g, d) }.toMap
-    val rg2ByGroup = AnnIndex.loadGroupRadii(spark, s"$indexPath/gradii").collect()
-      .map(r => r.getLong(0) -> r.getAs[Double]("rg2")).toMap
-    // leaders = the distinct stored g_ids, vectors from the quantizer
-    // (every leader is its own group's member cell, so the stored
-    // table always carries it)
-    val leaderIds = cellGroup.values.map(_._1).toSet
-    val groups = cents.filter(c => leaderIds(c._1))
-    val assignedRaw =
-      assignCells(corpus, cents).select(col("vec_id"), col("e"), col("nrm"), col("cell"))
-    val assigned = cacheKey.fold(assignedRaw)(key =>
-      graft.CacheRegistry.getOrCache(spark, assignKey(key, cents))(assignedRaw))
-    val queries = corpus.filter(queryPred)
-      .select(col("vec_id").as("q_id"), col("e").as("qe"), col("nrm").as("qn"))
-    val (asg, cellBounds) = exactPruned2LevelCellBoundsOf(assigned, queries,
-      cents, rc2ByCell, groups, cellGroup, rg2ByGroup, seedNprobe, k)
-    val keep = cellBounds
-      .filter(lit(1d) - col("gap") * col("gap") / lit(2d) + lit(BoundEps) >= col("lbc"))
-      .select(col("q_id"), col("qe"), col("qn"), col("c_id").as("probe"))
-    ivfRank(asg, keep, k)
-  }
-
-  /** Admission half of the two-level lifecycle: assign the batch with
-    * the stored quantizer, delta-admit its per-CELL radii (the q155
-    * verb) AND the composed per-GROUP radii — rg_batch(g) = max over
-    * batch cells in g of (dcg + √rc2_batch), max-mergeable one level
-    * up (see [[AnnIndex.admitGroupRadii]]). O(batch) work plus
-    * model-sized collects; no base-corpus read. */
-  def admitExactPruned2Level(spark: SparkSession, indexPath: String,
-      arrivals: DataFrame): DataFrame = {
-    import spark.implicits._
-    val cents = AnnIndex.loadQuantizer(spark, s"$indexPath/quantizer")
-    val asg = assignCells(arrivals, cents)
-      .select(col("vec_id"), col("e"), col("nrm"), col("cell"))
-    val centDf = cents.map { case (id, vv, nm) => (id, vv.toSeq, nm) }
-      .toDF("c_id", "ce", "cn")
-    // ONE pass over the batch; the (cell, rc2) rows are quantizer-
-    // bounded, so collecting feeds both admissions without a second
-    // batch scan
-    val batchRadii = radiiOf(asg, centDf).collect()
-      .map(r => (r.getLong(0), r.getAs[Double]("rc2"))).toSeq
-    AnnIndex.admitRadii(spark, s"$indexPath/radii",
-      batchRadii.toDF("cell", "rc2"))
-    val cellGroup = AnnIndex.loadGroups(spark, s"$indexPath/groups")
-      .map { case (c, g, d) => c -> (g, d) }.toMap
-    val batchGradii = batchRadii
-      .map { case (cell, rc2) =>
-        val (g, dcg) = cellGroup(cell)
-        val rg = dcg + math.sqrt(math.max(0.0, rc2))
-        g -> rg * rg
-      }
-      .groupBy(_._1).map { case (g, xs) => (g, xs.map(_._2).max) }.toSeq
-    AnnIndex.admitGroupRadii(spark, s"$indexPath/gradii",
-      batchGradii.toDF("g_id", "rg2"))
-    asg
-  }
+    * bound-row term itself pruned: [[ExactIndex.fit]] with
+    * `groupEvery = Some(`[[PlantGroupEvery]]`)` groups cells under
+    * leaders with R_g = max over member cells (‖c̃ − g̃‖ + R_c), and
+    * [[ExactIndex.topK]] prunes whole groups with the same bound before
+    * any per-cell work. Per-query bound rows fall from ncells to
+    * ngroups + cells-in-surviving-groups; the result is STILL EXACT, and
+    * the ORACLE is q155's brute-force scan, so the composed bound carries
+    * its own hash proof at sf0.01 and sf1. The corpus sees the same
+    * passes as q155 (assignment, one collected radius aggregate, seed,
+    * kept-cell rerank); the group folds are driver-side over model-sized
+    * tables. */
+  def exactPruned2Level(spark: SparkSession, dir: String): DataFrame =
+    idFilterTopK(spark, dir, Some(PlantGroupEvery))
 
   /** The brute-force oracle: exact top-k over the derived corpus,
     * no pruning anywhere — hash equality with the Spark plan is the
@@ -4133,7 +3501,7 @@ object Similarity {
 
   /** q160: the DEPLOYMENT-DEFAULT hybrid — q158's guaranteed-exact
     * fusion with the dense leg served from q157's TRAINED √n stored
-    * quantizer (train → [[AnnIndex]] store → serve) instead of the
+    * quantizer (train → [[ExactIndex]] store → serve) instead of the
     * id-filter oracle contract. This is the row that closes the loop
     * the sf10 capture opened: q152's superlinear second-decade growth
     * sits entirely in its fixture-contract IVF leg (ncells ∝ n makes
@@ -4185,14 +3553,7 @@ object Similarity {
     * is shared, so the parameterization cannot drift). */
   def hybridTopKExactPrunedTrainedOf(spark: SparkSession, dir: String,
       queryIds: Seq[Long]): DataFrame = {
-    val v = plantedVectors(spark, dir)
-    val indexPath =
-      java.nio.file.Files.createTempDirectory("graft-q160-fixedq-idx").toString
-    buildExactPrunedIndexTrained(v, indexPath,
-      cacheKey = Some(s"similarity.plantCells:$dir"))
-    val dense = exactPrunedTopKServeOf(v, col("vec_id").isin(queryIds: _*),
-        indexPath, PlantSeedNprobe, PlantK,
-        cacheKey = Some(s"similarity.plantCells:$dir"))
+    val dense = trainedTopK(spark, dir, col("vec_id").isin(queryIds: _*))
       .select(col("q_id").as("query_id"), col("neighbor_id").as("doc_id"),
         expr("1048576 div (60 + rank)").as("c"))
     hybridFuse(spark, dir, dense,
@@ -4227,17 +3588,8 @@ object Similarity {
     * cells, filtered rerank) + q152's sparse shape over a SMALLER
     * corpus (the allowed subset) + a |Q|·k fusion aggregate. */
   def hybridTopKFilteredTrained(spark: SparkSession, dir: String): DataFrame = {
-    val v = plantedVectors(spark, dir)
-    val indexPath =
-      java.nio.file.Files.createTempDirectory("graft-q165-idx").toString
-    buildExactPrunedIndexTrained(v, indexPath,
-      cacheKey = Some(s"similarity.plantCells:$dir"))
-    val allowed = Tables.documents(spark, dir)
-      .filter(col("lang") === Q163Lang).select(col("doc_id"))
-    val dense = exactPrunedTopKServeFilteredOf(v, expr(QueryFilter),
-        _.join(allowed.select(col("doc_id").as("vec_id")), Seq("vec_id"), "semi"),
-        indexPath, PlantSeedNprobe, PlantK,
-        cacheKey = Some(s"similarity.plantCells:$dir"))
+    val allowed = allowedDocs(spark, dir)
+    val dense = filteredTrainedTopK(spark, dir, allowed)
       .select(col("q_id").as("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
     // probes from the UNFILTERED query docs (the standing %25 rule);
     // the sparse CORPUS is the allowed subset — zipf text derives from

@@ -159,7 +159,7 @@ object ShardExport {
 
   /** The per-source tails, MAX-MERGED over every visible commit —
     * both columns are monotone under admission, so duplicate source
-    * rows from deltas merge safely (the loadRadii rule). */
+    * rows from deltas merge safely (the [[graft.operators.AnnIndex.loadStats]] rule). */
   def loadTails(spark: SparkSession, indexPath: String): DataFrame =
     FpIndex.loadFlat(spark, s"$indexPath/tails")
       .groupBy(col("source"))

@@ -3,12 +3,33 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Similarity
+import graft.operators.{ExactIndex, Similarity}
 
 /** Similarity-search invariants on sf0.001 (500 vectors, 64-dim). */
 class SimilaritySpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
   val sf = "/root/testdata/sf0.001"
+
+  /** Independent brute-force top-5 over `corpus`: every
+    * `queryPred` row against every candidate of `cands(corpus)` — no
+    * pruning code in the loop. */
+  private def bruteTopK(corpus: org.apache.spark.sql.DataFrame,
+      queryPred: org.apache.spark.sql.Column,
+      cands: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = identity)
+      : Seq[Seq[Any]] = {
+    val q = corpus.filter(queryPred)
+      .select(col("vec_id").as("q_id"), col("e").as("qe"), col("nrm").as("qn"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))
+    cands(corpus).join(broadcast(q), col("vec_id") =!= col("q_id"))
+      .withColumn("sim",
+        graft.functions.VectorOps.dot(col("qe"), col("e")) / (col("qn") * col("nrm")))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= 5)
+      .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"),
+        round(col("sim"), 6).as("sim"))
+      .collect().map(_.toSeq).toSeq.sortBy(_.mkString(" "))
+  }
 
   test("cosine top-k: 5 ranked neighbors per query, sims in [-1,1] descending") {
     val rows = Similarity.cosineTopK(spark, sf).collect()
@@ -775,34 +796,73 @@ class SimilaritySpec extends AnyFunSuite {
   test("q155 exact pruned top-k: equals the unpruned brute-force scan " +
       "row-for-row on the planted corpus (the triangle-inequality " +
       "guarantee, spec-proven at two sfs on top of the sf0.01 oracle)") {
-    def brute(dir: String): Seq[Seq[Any]] = {
-      // independent brute force over the SAME derived corpus — built
-      // here from the public pieces, no pruning code in the loop
-      val n = Similarity.plantedVectors(spark, dir)
-      val q = n.filter(expr("vec_id % 25 = 0"))
-        .select(col("vec_id").as("q_id"), col("e").as("qe"), col("nrm").as("qn"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))
-      n.join(broadcast(q), col("vec_id") =!= col("q_id"))
-        .withColumn("sim",
-          graft.functions.VectorOps.dot(col("qe"), col("e")) / (col("qn") * col("nrm")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"),
-          round(col("sim"), 6).as("sim"))
-        .collect().map(_.toSeq).toSeq.sortBy(_.mkString(" "))
-    }
+    // …and on the sf0.01 planted corpus every ExactIndex form —
+    // {one-level, two-level} × {in-session, stored} × {unfiltered,
+    // lang filter} — serves ≡ the brute scan
     def pruned(dir: String): Seq[Seq[Any]] = {
       val r = Similarity.exactPrunedTopK(spark, dir)
         .collect().map(_.toSeq).toSeq.sortBy(_.mkString(" "))
       CacheRegistry.releaseAll()
       r
     }
+    val qPred = expr("vec_id % 25 = 0")
     Seq(sf, "/root/testdata/sf0.01").foreach { dir =>
-      val b = brute(dir)
+      val b = bruteTopK(Similarity.plantedVectors(spark, dir), qPred)
       val p = pruned(dir)
       assert(b.nonEmpty && b == p, s"pruned != brute force at $dir")
     }
+    val dir = "/root/testdata/sf0.01"
+    val v = Similarity.plantedVectors(spark, dir)
+    val cents = Similarity.trainIvfQuantizer(v, expr("vec_id % 7 = 3"))
+    val allowed = Tables.documents(spark, dir)
+      .filter(col("lang") === Similarity.Q163Lang).select(col("doc_id").as("vec_id"))
+    val filters = Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      ("unfiltered", df => df), ("lang", _.join(allowed, Seq("vec_id"), "semi")))
+    val truth = filters.map { case (name, f) => name -> bruteTopK(v, qPred, f) }.toMap
+    assert(truth("unfiltered") == Similarity.cosineTopKOf(v, qPred, 5)
+      .collect().map(_.toSeq).toSeq.sortBy(_.mkString(" ")), "brute reference drifted from q21's plan")
+    assert(truth("lang").nonEmpty && truth("lang") != truth("unfiltered"))
+    for {
+      groupEvery <- Seq(None, Some(Similarity.PlantGroupEvery))
+      stored <- Seq(false, true)
+      (fname, f) <- filters
+    } {
+      val fitted = ExactIndex.fit(v, cents, groupEvery)
+      val model = if (!stored) fitted else {
+        val path = java.nio.file.Files.createTempDirectory("graft-exact-combo").toString
+        ExactIndex.save(spark, path, fitted)
+        ExactIndex.load(spark, path)
+      }
+      assert(model.groups.isDefined == groupEvery.isDefined)
+      val got = ExactIndex.topK(v, qPred, model, 4, 5, f)
+        .collect().map(_.toSeq).toSeq.sortBy(_.mkString(" "))
+      CacheRegistry.releaseAll()
+      assert(got == truth(fname),
+        s"topK != brute (groupEvery=$groupEvery, stored=$stored, filter=$fname)")
+    }
+  }
+
+  test("trainer seeds by id VALUE yet always seeds: a dense-id corpus keeps " +
+      "the vec_id % stride = 0 seeds, an odd-id corpus (no id on the stride) " +
+      "still trains, and its served top-k ≡ the brute scan") {
+    val dense = Similarity.plantedVectors(spark, "/root/testdata/sf0.01")
+    val nDense = dense.count()
+    val strideDense = nDense / math.round(math.sqrt(nDense.toDouble))
+    assert(ExactIndex.train(dense).map(_._1).forall(_ % strideDense == 0),
+      "dense ids must keep today's residue-0 seeds")
+    // 100 vectors with odd ids 1..199: nlist = 10, stride = 10, and no
+    // id is a multiple of 10
+    val odd = Similarity.plantedVectorsOfIds(
+      spark.range(100).select((col("id") * 2 + 1).as("vec_id")))
+    val cents = ExactIndex.train(odd)
+    assert(cents.nonEmpty && cents.map(_._1).forall(_ % 10 == 1),
+      s"odd ids must seed on the smallest id's residue: ${cents.map(_._1)}")
+    val qPred = expr("vec_id % 25 = 1")
+    val got = ExactIndex.topK(odd, qPred, ExactIndex.fit(odd, cents), 4, 5)
+      .collect().map(_.toSeq).toSeq.sortBy(_.mkString(" "))
+    val want = Similarity.cosineTopKOf(odd, qPred, 5)
+      .collect().map(_.toSeq).toSeq.sortBy(_.mkString(" "))
+    assert(want.nonEmpty && got == want, "odd-id trained serve != brute force")
   }
 
   test("q155 pruning cuts on clustered geometry and honestly cannot on " +
@@ -811,8 +871,11 @@ class SimilaritySpec extends AnyFunSuite {
     // planted (clustered) corpus: the bound keeps a small fraction of
     // the corpus per query (measured 5.5% mean at n=500; assert with
     // headroom), and it never degenerates to a full scan
-    val n = Similarity.plantedVectors(spark, dir).count()
-    val cand = Similarity.exactPrunedCandidateCounts(spark, dir).collect()
+    val planted = Similarity.plantedVectors(spark, dir)
+    val n = planted.count()
+    val cand = ExactIndex.candidates(planted, expr("vec_id % 25 = 0"),
+        ExactIndex.fit(planted, Similarity.trainIvfQuantizer(planted, expr("vec_id % 7 = 3"))),
+        4, 5).collect()
       .map(_.getAs[Long]("n_candidates"))
     CacheRegistry.releaseAll()
     assert(cand.nonEmpty)
@@ -828,12 +891,11 @@ class SimilaritySpec extends AnyFunSuite {
     val v = Similarity.vectorsForSpec(spark, dir)
     val exact = Similarity.cosineTopK(spark, dir)
       .collect().map(_.toSeq).toSeq.sortBy(_.mkString(" "))
-    val prunedIso = Similarity.exactPrunedTopKWith(v, expr("vec_id % 25 = 0"),
-        expr("vec_id % 7 = 3"), 4, 5)
+    val isoModel = ExactIndex.fit(v, Similarity.trainIvfQuantizer(v, expr("vec_id % 7 = 3")))
+    val prunedIso = ExactIndex.topK(v, expr("vec_id % 25 = 0"), isoModel, 4, 5)
       .collect().map(_.toSeq).toSeq.sortBy(_.mkString(" "))
     assert(exact == prunedIso, "pruned scan must stay exact on isotropic geometry")
-    val isoCand = Similarity.exactPrunedCandidateCountsWith(v, expr("vec_id % 25 = 0"),
-        expr("vec_id % 7 = 3"), 4, 5).collect()
+    val isoCand = ExactIndex.candidates(v, expr("vec_id % 25 = 0"), isoModel, 4, 5).collect()
       .map(_.getAs[Long]("n_candidates"))
     val isoMean = isoCand.sum.toDouble / isoCand.length / n
     assert(isoMean > 0.5,
@@ -856,10 +918,10 @@ class SimilaritySpec extends AnyFunSuite {
     }
     val truth = rows(Similarity.cosineTopKOf(v, qPred, 5))
     val prunedRefined = rows(
-      Similarity.exactPrunedTopKWithQuantizer(v, qPred, refined, 4, 5))
+      ExactIndex.topK(v, qPred, ExactIndex.fit(v, refined), 4, 5))
     assert(prunedRefined == truth, "refined-quantizer pruning must stay exact")
     def meanCand(cents: Seq[(Long, Array[Double], Double)]): Double = {
-      val c = Similarity.exactPrunedCandidateCountsWithQuantizer(v, qPred, cents, 4, 5)
+      val c = ExactIndex.candidates(v, qPred, ExactIndex.fit(v, cents), 4, 5)
         .collect().map(_.getAs[Long]("n_candidates"))
       CacheRegistry.releaseAll()
       c.sum.toDouble / c.length
@@ -879,41 +941,27 @@ class SimilaritySpec extends AnyFunSuite {
     val qPred = expr("vec_id % 25 = 0")
     val indexPath =
       java.nio.file.Files.createTempDirectory("graft-q163-spec").toString
-    Similarity.buildExactPrunedIndexTrained(v, indexPath,
-      cacheKey = Some("similarity.q163spec"))
+    ExactIndex.save(spark, indexPath,
+      ExactIndex.fit(v, ExactIndex.train(v), cacheKey = Some("similarity.q163spec")))
+    val model = ExactIndex.load(spark, indexPath)
     def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
       df.collect().map(_.toSeq).toSeq.sortBy(_.mkString(" "))
-    def bruteFiltered(pred: String): Seq[Seq[Any]] = {
-      val q = v.filter(qPred)
-        .select(col("vec_id").as("q_id"), col("e").as("qe"), col("nrm").as("qn"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))
-      rows(v.filter(expr(pred))
-        .join(broadcast(q), col("vec_id") =!= col("q_id"))
-        .withColumn("sim",
-          graft.functions.VectorOps.dot(col("qe"), col("e")) / (col("qn") * col("nrm")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"),
-          round(col("sim"), 6).as("sim")))
-    }
+    def bruteFiltered(pred: String): Seq[Seq[Any]] = bruteTopK(v, qPred, _.filter(expr(pred)))
     // the sweep the r17 verdict asked for: a pruned serve that filters
     // AFTER ranking, or seeds its lower bound on unfiltered
     // candidates, fails one of these — returning < k rows (or wrong
     // ones) as selectivity drops
     Seq("vec_id >= 0", "vec_id % 10 = 3", "vec_id % 250 = 7").foreach { pred =>
-      val got = rows(Similarity.exactPrunedTopKServeFilteredOf(
-        v, qPred, d => d.filter(expr(pred)), indexPath, 4, 5,
-        cacheKey = Some("similarity.q163spec")))
+      val got = rows(ExactIndex.topK(v, qPred, model, 4, 5,
+        d => d.filter(expr(pred)), cacheKey = Some("similarity.q163spec")))
       assert(got.nonEmpty && got == bruteFiltered(pred),
         s"filtered serve != brute filtered scan under '$pred'")
     }
     // starved: 2 candidates in a 500-row corpus — every query must
     // return exactly the filtered candidates (self excluded), not k
     val nCand = v.filter(expr("vec_id % 250 = 7")).count()
-    val starved = Similarity.exactPrunedTopKServeFilteredOf(
-      v, qPred, d => d.filter(expr("vec_id % 250 = 7")), indexPath, 4, 5,
-      cacheKey = Some("similarity.q163spec"))
+    val starved = ExactIndex.topK(v, qPred, model, 4, 5,
+      d => d.filter(expr("vec_id % 250 = 7")), cacheKey = Some("similarity.q163spec"))
       .groupBy(col("q_id")).count().collect()
     CacheRegistry.releaseAll()
     assert(nCand > 0 && nCand < 5, s"fixture drift: starved pred keeps $nCand")
@@ -957,7 +1005,9 @@ class SimilaritySpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.01"
     val v = Similarity.plantedVectors(spark, dir)
     val ncells = v.filter(expr("vec_id % 7 = 3")).count()
-    val acct = Similarity.exactPruned2LevelBoundRows(spark, dir).collect()
+    val acct = ExactIndex.candidates(v, expr("vec_id % 25 = 0"),
+      ExactIndex.fit(v, Similarity.trainIvfQuantizer(v, expr("vec_id % 7 = 3")),
+        Some(Similarity.PlantGroupEvery)), 4, 5).collect()
     CacheRegistry.releaseAll()
     assert(acct.nonEmpty)
     val meanCellBounds = acct.map(_.getAs[Long]("n_cell_bounds")).sum.toDouble / acct.length
