@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Persistent FINGERPRINT-index artifacts — [[AnnIndex]]'s lifecycle
   * (build once → persist via [[graft.sources.ManifestSink]] → later
@@ -251,26 +252,30 @@ object FpIndex {
     * plain rows — every commit serves until the first rebuild widens
     * the schema and supersedes all of them together.
     *
-    * Concurrency contract: delta appends are serialized per index root
-    * (one admission job per corpus — the deployment shape); the OCC
-    * guard catches delta-vs-rebuild races, not two identical deltas
-    * racing each other (which would double-admit, exactly like two
-    * concurrent ON CONFLICT-free inserts).
+    * Concurrency contract: delta appends are serialized per index
+    * table (one admission job per corpus — the deployment shape; that
+    * job may commit DIFFERENT tables side by side); the OCC guard
+    * catches delta-vs-rebuild races, not two identical deltas racing
+    * each other (which would double-admit, exactly like two concurrent
+    * ON CONFLICT-free inserts).
     *
-    * FILE-COUNT contract: the delta frame is COALESCED before the
-    * append — a delta batch is O(delta) by this verb's own contract,
-    * and letting it inherit the session's shuffle partitioning writes
-    * up to `spark.sql.shuffle.partitions` near-empty parquet files PER
+    * ONE-PASS contract: the delta is persisted and computed ONCE. One
+    * count both sizes the file count and decides emptiness; the write
+    * then reads the persisted rows, which are unpersisted on return.
+    * A zero-row delta commits NOTHING (no empty commit pollutes the
+    * version history) and returns 0, so callers need no emptiness
+    * pre-check of their own. Returns the number of rows appended.
+    *
+    * FILE-COUNT contract: the delta is COALESCED to
+    * ⌈rows / [[DeltaRowsPerFile]]⌉ files (capped at 64) — a delta batch
+    * is O(delta) by this verb's own contract, and letting it inherit
+    * the session's shuffle partitioning writes up to
+    * `spark.sql.shuffle.partitions` near-empty parquet files PER
     * COMMIT, so a root admitting N batches pays O(N·partitions)
     * file-opens per serve instead of O(N) (measured: the SoakDelta
     * streaming stage's per-batch cost grew 1.4× over 20 batches from
-    * exactly this). `files` = 0 (the default) SIZES the file count
-    * from the delta's actual row count (one delta-sized count job,
-    * ⌈rows / [[DeltaRowsPerFile]]⌉ capped at 64) — so a genuinely
-    * large delta never funnels its write through a single task while
-    * small admission batches still write one file (round-15 advice:
-    * a fixed default of 1 relied on every caller remembering the
-    * knob). Callers that know better pass `files` explicitly.
+    * exactly this). Small admission batches write one file; a
+    * genuinely large delta never funnels its write through one task.
     * [[compactIndex]] bounds the residual growth — and once the
     * root's VISIBLE manifest count crosses
     * [[AutoCompactManifests]] this verb triggers it itself (see
@@ -278,20 +283,24 @@ object FpIndex {
     * pre-delta pinned snapshots past that horizon pass
     * `autoCompact = false`. */
   def deltaAppendFlat(spark: SparkSession, path: String, df: DataFrame,
-      files: Int = 0, autoCompact: Boolean = true): Unit = {
+      autoCompact: Boolean = true): Long = {
     require(tableVersion(path) > 0,
       s"no index stored at $path — initial builds use saveFlat")
-    val n =
-      if (files > 0) files
-      else {
-        val rows = df.count() // delta-sized by this verb's contract
-        math.min(64L, (rows + DeltaRowsPerFile - 1) / DeltaRowsPerFile).toInt.max(1)
+    // a frame the caller already caches stays the caller's to release
+    val owned = df.storageLevel == StorageLevel.NONE
+    val delta = if (owned) df.persist(StorageLevel.MEMORY_AND_DISK) else df
+    try {
+      val rows = delta.count() // delta-sized by this verb's contract
+      if (rows > 0) {
+        val n = math.min(64L, (rows + DeltaRowsPerFile - 1) / DeltaRowsPerFile).toInt
+        winningBuildAt(spark, path, tableVersion(path)) match {
+          case None => saveFlat(path, delta.coalesce(n))
+          case Some((g, b)) => deltaAppendFlatAt(spark, path, delta.coalesce(n), g, b)
+        }
+        if (autoCompact) maybeAutoCompact(spark, path)
       }
-    winningBuildAt(spark, path, tableVersion(path)) match {
-      case None => saveFlat(path, df.coalesce(n))
-      case Some((g, b)) => deltaAppendFlatAt(spark, path, df.coalesce(n), g, b)
-    }
-    if (autoCompact) maybeAutoCompact(spark, path)
+      rows
+    } finally if (owned) delta.unpersist(blocking = true)
   }
 
   /** Auto-sizing grain for [[deltaAppendFlat]]'s file count: flat
@@ -344,7 +353,7 @@ object FpIndex {
     * form encoding. The caller must have replay-rejected `sh` against
     * the stored doc_ids first: [[loadShingles]] raises on a doc whose
     * set was appended twice (the doubled-set Jaccard hazard). */
-  def deltaAppendShingles(spark: SparkSession, path: String, sh: DataFrame): Unit =
+  def deltaAppendShingles(spark: SparkSession, path: String, sh: DataFrame): Long =
     deltaAppendFlat(spark, path, shingleRows(sh))
 
   /** VACUUM superseded rows — the maintenance verb the rebuild

@@ -1111,9 +1111,8 @@ object Similarity {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = coded.count()
-      if (n > 0)
-        graft.operators.FpIndex.deltaAppendFlat(spark, s"$indexPath/codes",
-          AnnIndex.codeRows(coded))
+      graft.operators.FpIndex.deltaAppendFlat(spark, s"$indexPath/codes",
+        AnnIndex.codeRows(coded))
       n
     } finally coded.unpersist(blocking = false)
   }
@@ -1602,8 +1601,7 @@ object Similarity {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = fresh.select(col("vec_id")).distinct().count()
-      if (n > 0)
-        FpIndex.deltaAppendFlat(spark, s"$indexPath/sq8_codes", fresh)
+      FpIndex.deltaAppendFlat(spark, s"$indexPath/sq8_codes", fresh)
       n
     } finally fresh.unpersist(blocking = false)
   }
@@ -2009,9 +2007,8 @@ object Similarity {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = coded.count()
-      if (n > 0)
-        FpIndex.deltaAppendFlat(spark, s"$indexPath/codes",
-          AnnIndex.codeRows(coded))
+      FpIndex.deltaAppendFlat(spark, s"$indexPath/codes",
+        AnnIndex.codeRows(coded))
       n
     } finally coded.unpersist(blocking = false)
   }

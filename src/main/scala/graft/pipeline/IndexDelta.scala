@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.operators.{Clustering, Dedup, FpIndex}
 import graft.streaming.Incremental
@@ -72,19 +73,35 @@ object IndexDelta {
     *
     * Idempotent under replay: a re-sent batch re-gates, every document
     * rejects as an exact dup (its content hash is now stored), nothing
-    * appends — the ON CONFLICT DO NOTHING contract at batch grain.
-    * Returns the gate verdict frame (persisted for the duration of the
-    * appends; released by the caller's CacheRegistry scope). The CMS
-    * sketch delta-MERGES (cell-wise additive, summed on load);
-    * postings/volume stay nightly-rebuild artifacts (normalized
-    * stats — see the object scaladoc). */
+    * appends — the ON CONFLICT DO NOTHING contract at batch grain. The
+    * same holds for a retry under the SAME `batchId`: the verdict cache
+    * key carries the stored versions the gate read, so a retry after a
+    * commit re-gates against the new state.
+    *
+    * Cost: the admitted shingle table is persisted and materialized by
+    * ONE action (which also materializes the verdict frame); then the
+    * three independent commit chains — keys → CMS, shingles → bands,
+    * novelty — run side by side (see [[commitSideBySide]]), each
+    * [[FpIndex.deltaAppendFlat]] computing its delta once and
+    * committing nothing when it is empty. A crash between the chains
+    * can leave keys committed without shingles (or the reverse), as a
+    * crash between serial commits could: a retry then rejects those
+    * documents as exact dups and does not repair the missing rows —
+    * the nightly rebuild from the corpus of record does.
+    *
+    * Returns the gate verdict frame (persisted; released by the
+    * caller's CacheRegistry scope). The CMS sketch delta-MERGES
+    * (cell-wise additive, summed on load); postings/volume stay
+    * nightly-rebuild artifacts (normalized stats — see the object
+    * scaladoc). */
   def admitDocs(spark: SparkSession, root: String, arrivals: DataFrame,
       batchId: String = java.util.UUID.randomUUID().toString): DataFrame = {
-    val keys = FpIndex.loadFlat(spark, s"$root/$KeysT")
-    val bands = FpIndex.loadFlat(spark, s"$root/$BandsT")
-    val shingles = FpIndex.loadShingles(spark, s"$root/$ShinglesT")
+    val pins = pinsOf(root, KeysT, BandsT, ShinglesT)
+    val keys = FpIndex.loadFlat(spark, s"$root/$KeysT", pins.get(KeysT))
+    val bands = FpIndex.loadFlat(spark, s"$root/$BandsT", pins.get(BandsT))
+    val shingles = FpIndex.loadShingles(spark, s"$root/$ShinglesT", pins.get(ShinglesT))
     val verdicts = graft.CacheRegistry.getOrCache(spark,
-      s"indexdelta.docs:$root:$batchId")(
+      verdictKey("docs", root, batchId, pins))(
       Incremental.curationGateStream(arrivals, keys, bands, shingles)
         // id-conflict re-verdict: a doc_id with stored shingle rows is
         // only re-admittable as an exact replay (which the gate already
@@ -101,33 +118,69 @@ object IndexDelta {
       verdicts.filter(col("admitted")).select(col("doc_id")), Seq("doc_id"))
     // admitted ids never hold stored shingle rows (the id-conflict rule
     // above), so the shingle append can never double a stored set
-    val sh = Dedup.shingleTable(admitted)
-    val newKeys = Incremental.corpusKeySet(admitted)
-      .join(keys, Seq("content_hash"), "left_anti")
-    val novelty = FpIndex.loadFlat(spark, s"$root/$NoveltyT")
-    val newShingleHashes = sh.select(explode(col("hh")).as("h")).distinct()
-      .join(novelty, Seq("h"), "left_anti")
-    // fully-rejected (or replayed) batches append nothing — no empty
-    // commits polluting the version history (the isEmpty checks are
-    // delta-sized actions)
-    val anyAdmitted = !newKeys.isEmpty
-    if (anyAdmitted) {
-      FpIndex.deltaAppendFlat(spark, s"$root/$KeysT", newKeys)
-      // CMS: the admitted batch's partial sketch MERGES by append —
-      // the loader sums cells (cmsMerge's rule), so estimates over the
-      // stored sketch count corpus ∪ admissions exactly. Roots without
-      // a CMS artifact (partial/older roots) skip it.
-      if (FpIndex.tableVersion(s"$root/$CmsT") > 0)
-        FpIndex.deltaAppendFlat(spark, s"$root/$CmsT",
-          graft.operators.TextAnalysis.cmsSketchOf(admitted))
-    }
-    if (!sh.isEmpty) {
-      FpIndex.deltaAppendFlat(spark, s"$root/$BandsT", Dedup.bandTable(sh))
-      FpIndex.deltaAppendShingles(spark, s"$root/$ShinglesT", sh)
-    }
-    if (!newShingleHashes.isEmpty)
-      FpIndex.deltaAppendFlat(spark, s"$root/$NoveltyT", newShingleHashes)
+    val sh = Dedup.shingleTable(admitted).persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      sh.count() // the one action: materializes the verdicts and sh
+      val newKeys = Incremental.corpusKeySet(admitted)
+        .join(keys, Seq("content_hash"), "left_anti")
+      val newShingleHashes = sh.select(explode(col("hh")).as("h")).distinct()
+        .join(FpIndex.loadFlat(spark, s"$root/$NoveltyT"), Seq("h"), "left_anti")
+      commitSideBySide(
+        () =>
+          // CMS: the admitted batch's partial sketch MERGES by append —
+          // the loader sums cells (cmsMerge's rule), so estimates over
+          // the stored sketch count corpus ∪ admissions exactly. Roots
+          // without a CMS artifact (partial/older roots) skip it.
+          if (FpIndex.deltaAppendFlat(spark, s"$root/$KeysT", newKeys) > 0 &&
+              FpIndex.tableVersion(s"$root/$CmsT") > 0)
+            FpIndex.deltaAppendFlat(spark, s"$root/$CmsT",
+              graft.operators.TextAnalysis.cmsSketchOf(admitted)),
+        () => {
+          FpIndex.deltaAppendShingles(spark, s"$root/$ShinglesT", sh)
+          FpIndex.deltaAppendFlat(spark, s"$root/$BandsT", Dedup.bandTable(sh))
+        },
+        () => FpIndex.deltaAppendFlat(spark, s"$root/$NoveltyT", newShingleHashes))
+    } finally sh.unpersist(blocking = true)
     verdicts
+  }
+
+  /** The stored versions of the gate's input tables, read once: the
+    * gate loads pin to them and [[verdictKey]] carries them. */
+  private def pinsOf(root: String, tables: String*): Map[String, Int] =
+    tables.map(t => t -> FpIndex.tableVersion(s"$root/$t")).toMap
+
+  /** Verdict cache key: the batch id AND the stored versions its gate
+    * read. A same-id retry after a commit misses the pre-commit entry
+    * and re-gates against the committed state (admitting nothing it
+    * already admitted); a retry with nothing committed reuses it. */
+  private def verdictKey(kind: String, root: String, batchId: String,
+      pins: Map[String, Int]): String =
+    s"indexdelta.$kind:$root:$batchId@" +
+      pins.toSeq.sorted.map { case (t, v) => s"$t=$v" }.mkString(",")
+
+  /** Run independent commit chains side by side on threads created for
+    * this call — new threads inherit the caller's Spark local
+    * properties (job group, scheduler pool, tags), which reused pool
+    * threads would not. Waits for EVERY chain, then rethrows the first
+    * failure in chain order (later ones attached as suppressed), so no
+    * commit is still running when the caller sees the error. */
+  private def commitSideBySide(chains: (() => Any)*): Unit = {
+    val failures = new Array[Throwable](chains.size)
+    val threads = chains.zipWithIndex.map { case (chain, i) =>
+      val t = new Thread(() =>
+        try chain() catch { case e: Throwable => failures(i) = e },
+        s"indexdelta-commit-$i")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    threads.foreach(_.join())
+    failures.filter(_ != null) match {
+      case Array() => ()
+      case Array(first, rest @ _*) =>
+        rest.foreach(first.addSuppressed)
+        throw first
+    }
   }
 
   /** Admit a vector batch into the stored FLAT vector index: assign
@@ -151,15 +204,16 @@ object IndexDelta {
     * delta-sized append. */
   def admitVectors(spark: SparkSession, root: String, arrivals: DataFrame,
       batchId: String = java.util.UUID.randomUUID().toString): DataFrame = {
-    val cents = Clustering.loadCentroids(spark, s"$root/$CentroidsT")
-    val probe = Clustering.loadAssignedCorpus(spark, s"$root/$AssignedT")
-    val capped = Clustering.loadCappedCells(spark, s"$root/$CappedT")
+    val pins = pinsOf(root, CentroidsT, AssignedT, CappedT)
+    val cents = Clustering.loadCentroids(spark, s"$root/$CentroidsT", pins.get(CentroidsT))
+    val probe = Clustering.loadAssignedCorpus(spark, s"$root/$AssignedT", pins.get(AssignedT))
+    val capped = Clustering.loadCappedCells(spark, s"$root/$CappedT", pins.get(CappedT))
     val asg = Clustering.assignWith(
         arrivals.select(col("vec_id"), Clustering.quantize(col("embedding")).as("x")),
         cents)
       .select(col("vec_id"), col("x"), col("cluster"), col("dist"))
     admitAssigned(spark, s"$root/$AssignedT", asg, probe, capped,
-      s"indexdelta.vec:$root:$batchId")
+      verdictKey("vec", root, batchId, pins))
   }
 
   /** [[admitVectors]] under the stored TWO-LEVEL model — the at-scale
@@ -169,15 +223,17 @@ object IndexDelta {
     * and append against the hier-assigned artifacts. */
   def admitVectorsHier(spark: SparkSession, root: String, arrivals: DataFrame,
       batchId: String = java.util.UUID.randomUUID().toString): DataFrame = {
-    val hm = Clustering.loadHierModelFrames(spark, s"$root/$HierModelT")
-    val probe = Clustering.loadAssignedCorpus(spark, s"$root/$AssignedHierT")
-    val capped = Clustering.loadCappedCells(spark, s"$root/$CappedHierT")
+    val pins = pinsOf(root, HierModelT, AssignedHierT, CappedHierT)
+    val hm = Clustering.loadHierModelFrames(spark, s"$root/$HierModelT", pins.get(HierModelT))
+    val probe = Clustering.loadAssignedCorpus(spark, s"$root/$AssignedHierT",
+      pins.get(AssignedHierT))
+    val capped = Clustering.loadCappedCells(spark, s"$root/$CappedHierT", pins.get(CappedHierT))
     val asg = Clustering.assignHier(
         arrivals.select(col("vec_id"), Clustering.quantize(col("embedding")).as("x")),
         hm)
       .select(col("vec_id"), col("x"), col("cluster"), col("dist"))
     admitAssigned(spark, s"$root/$AssignedHierT", asg, probe, capped,
-      s"indexdelta.hier:$root:$batchId")
+      verdictKey("hier", root, batchId, pins))
   }
 
   /** Shared verdict+append tail of both vector admission paths. */
@@ -193,8 +249,7 @@ object IndexDelta {
       .join(asg, Seq("vec_id"))
       .select(col("vec_id").as("corpus_id"), col("cluster"), posexplode(col("x")))
       .toDF("corpus_id", "cluster", "pos", "v")
-    if (!toAppend.isEmpty) // replayed/rejected batches commit nothing
-      FpIndex.deltaAppendFlat(spark, assignedPath, toAppend)
+    FpIndex.deltaAppendFlat(spark, assignedPath, toAppend) // empty: no commit
     verd
   }
 

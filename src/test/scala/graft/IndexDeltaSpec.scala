@@ -55,6 +55,36 @@ class IndexDeltaSpec extends AnyFunSuite {
       "a rebuild recomputes from the corpus of record — base AND delta rows retire")
   }
 
+  test("deltaAppendFlat computes the delta ONCE and returns the appended row " +
+      "count; a zero-row delta returns 0 and commits nothing") {
+    import spark.implicits._
+    val path = tmp("onepass")
+    FpIndex.saveFlat(path, Seq((1L, 10L)).toDF("k", "v"))
+    FpIndex.rebuildFlat(spark, path, Seq((1L, 11L)).toDF("k", "v"))
+    // a filter nothing prunes, counting every row it evaluates
+    val seen = spark.sparkContext.longAccumulator("delta-rows")
+    val tick = udf { (_: Long) => seen.add(1L); true }.asNondeterministic()
+    val delta = spark.range(100, 105, 1, 3).filter(tick(col("id")))
+      .select(col("id").as("k"), (col("id") * 10).as("v"))
+    val v0 = FpIndex.tableVersion(path)
+    assert(FpIndex.deltaAppendFlat(spark, path, delta) == 5L,
+      "the verb returns the number of rows appended")
+    assert(seen.value == 5L,
+      s"the delta's lineage must be evaluated once: ${seen.value} row evaluations for 5 rows")
+    assert(FpIndex.tableVersion(path) == v0 + 1, "one delta, one commit")
+    assert(sortedRows(FpIndex.loadFlat(spark, path)) ==
+      (Seq[Any](1L, 11L) +: (100L until 105L).map(k => Seq[Any](k, k * 10)))
+        .sortBy(_.mkString("\u0000")))
+    // zero rows commit nothing — on a stamped and on a never-rebuilt table
+    val plain = tmp("onepass-plain")
+    FpIndex.saveFlat(plain, Seq((1L, 10L)).toDF("k", "v"))
+    for (p <- Seq(path, plain)) {
+      val v = FpIndex.tableVersion(p)
+      assert(FpIndex.deltaAppendFlat(spark, p, delta.filter(col("k") < 0)) == 0L)
+      assert(FpIndex.tableVersion(p) == v, s"an empty delta must not commit at $p")
+    }
+  }
+
   test("delta-vs-rebuild race: a delta stamped with a superseded build raises " +
       "ConcurrentModificationException and its rows are inert") {
     import spark.implicits._
@@ -486,12 +516,10 @@ class IndexDeltaSpec extends AnyFunSuite {
     CacheRegistry.releaseAll()
   }
 
-  test("admitVectorsHier runs the same verdict core against the hier " +
-      "artifacts (frame-model assignment, hot-cell invariant preserved)") {
-    import spark.implicits._
-    CacheRegistry.releaseAll()
+  /** A real two-level model over the fixture corpus, stored like the
+    * nightly build (no capped cells). */
+  private def buildHierRoot(): String = {
     val root = tmp("hierroot")
-    // a real two-level model over the fixture corpus, stored like the nightly build
     val fixed = Clustering.fixedPoint(spark, sf)
     val hm = Clustering.trainHierarchicalFrames(fixed, 4)
     Clustering.saveHierModelDf(spark, s"$root/${IndexBuild.HierModelT}", hm)
@@ -500,6 +528,14 @@ class IndexDeltaSpec extends AnyFunSuite {
     Clustering.saveAssignedCorpus(spark, s"$root/${IndexBuild.AssignedHierT}", assignedH)
     Clustering.saveCappedCells(spark, s"$root/${IndexBuild.CappedHierT}",
       spark.emptyDataFrame.select(lit(0).as("cluster"), lit(0L).as("cell_n")).limit(0))
+    root
+  }
+
+  test("admitVectorsHier runs the same verdict core against the hier " +
+      "artifacts (frame-model assignment, hot-cell invariant preserved)") {
+    import spark.implicits._
+    CacheRegistry.releaseAll()
+    val root = buildHierRoot()
     // arrivals: one replay (an existing vec_id), one fresh copy of an
     // existing vector under a new id (near-dup), one admitted fresh vector
     val emb = Tables.embeddings(spark, sf)
@@ -553,6 +589,131 @@ class IndexDeltaSpec extends AnyFunSuite {
     assert(Clustering.loadAssignedCorpus(spark, assignedPath, Some(pin))
         .select(col("corpus_id")).collect().map(_.getLong(0)).toSet == pinnedIds,
       "the pre-rebuild pin still serves base ∪ delta")
+    CacheRegistry.releaseAll()
+  }
+
+  // ------------------------------------------- retries + forked commits
+
+  private def versionsOf(root: String, tables: Seq[String]): Seq[Int] =
+    tables.map(t => FpIndex.tableVersion(s"$root/$t"))
+
+  test("a same-batchId retry in the same session (no releaseAll) re-gates " +
+      "against the committed state: docs, vectors and hier admit 0, every " +
+      "table version stays put, and the stored shingle sets still load") {
+    import spark.implicits._
+    import IndexBuild._
+    CacheRegistry.releaseAll()
+    val docRoot = buildDocRoot(Seq((1L, wordsB)).toDF("doc_id", "text"))
+    val docTables = Seq(KeysT, BandsT, ShinglesT, NoveltyT)
+    val docs = Seq((12L, wordsA), (13L, wordsC)).toDF("doc_id", "text")
+    def docsAdmitted(): Long = IndexDelta.admitDocs(spark, docRoot, docs, batchId = "b0")
+      .filter(col("admitted")).count()
+    assert(docsAdmitted() == 2L)
+    val docV = versionsOf(docRoot, docTables)
+    assert(docsAdmitted() == 0L, "a same-id retry must not re-admit the committed docs")
+    assert(versionsOf(docRoot, docTables) == docV, "a same-id doc retry must commit nothing")
+    assert(FpIndex.loadShingles(spark, s"$docRoot/$ShinglesT").collect().length == 3)
+
+    val (vecRoot, _) = buildVecRoot()
+    val vecTables = Seq(CentroidsT, AssignedT, CappedT)
+    val vecs = Seq((42L, vec(0.245f))).toDF("vec_id", "embedding")
+    def vecsAdmitted(): Long = IndexDelta.admitVectors(spark, vecRoot, vecs, batchId = "v0")
+      .filter(col("admitted") === 1).count()
+    assert(vecsAdmitted() == 1L)
+    val vecV = versionsOf(vecRoot, vecTables)
+    assert(vecsAdmitted() == 0L, "a same-id retry must not re-admit the committed vector")
+    assert(versionsOf(vecRoot, vecTables) == vecV, "a same-id vector retry must commit nothing")
+
+    val hierRoot = buildHierRoot()
+    val hierTables = Seq(HierModelT, AssignedHierT, CappedHierT)
+    val fresh = Seq((900002L, vec(0.31f))).toDF("vec_id", "embedding")
+    def hierAdmitted(): Long = IndexDelta.admitVectorsHier(spark, hierRoot, fresh,
+      batchId = "h0").filter(col("admitted") === 1).count()
+    assert(hierAdmitted() == 1L)
+    val hierV = versionsOf(hierRoot, hierTables)
+    assert(hierAdmitted() == 0L, "a same-id retry must not re-admit the committed hier vector")
+    assert(versionsOf(hierRoot, hierTables) == hierV, "a same-id hier retry must commit nothing")
+    CacheRegistry.releaseAll()
+  }
+
+  test("admitDocs' side-by-side commits run on threads that inherit the " +
+      "caller's local properties: every job the call fires carries them") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    CacheRegistry.releaseAll()
+    val root = buildDocRoot(Seq((1L, wordsB)).toDF("doc_id", "text"))
+    val batch = Seq((12L, wordsA), (13L, wordsC)).toDF("doc_id", "text")
+    def prop(e: SparkListenerJobStart, k: String): String =
+      Option(e.properties).map(_.getProperty(k)).orNull
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.add((prop(e, "spark.jobGroup.id"), prop(e, "graft.test.caller")))
+    }
+    val sc = spark.sparkContext
+    // a marker job: once its start is seen, every earlier event is too
+    def marker(group: String): Unit = {
+      sc.setJobGroup(group, group)
+      sc.parallelize(Seq(1), 1).count()
+      sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("admit-before")
+      sc.setJobGroup("admit-forked", "admitDocs")
+      sc.setLocalProperty("graft.test.caller", "admit")
+      try IndexDelta.admitDocs(spark, root, batch, batchId = "props")
+      finally {
+        sc.clearJobGroup()
+        sc.setLocalProperty("graft.test.caller", null)
+      }
+      marker("admit-after")
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!starts.asScala.exists(_._1 == "admit-after") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally sc.removeSparkListener(listener)
+    val during = starts.asScala.toSeq.dropWhile(_._1 != "admit-before").drop(1)
+      .takeWhile(_._1 != "admit-after")
+    // the shingle materialization plus four non-empty commits (count + write each)
+    assert(during.size >= 9, s"expected the admission's jobs, saw ${during.size}")
+    assert(during.forall(_ == (("admit-forked", "admit"))),
+      s"every admission job must carry the caller's job group and property: $during")
+    CacheRegistry.releaseAll()
+  }
+
+  test("a failing commit chain propagates out of admitDocs only after every " +
+      "chain has finished, with no commit thread left alive") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    import IndexBuild._
+    CacheRegistry.releaseAll()
+    val root = buildDocRoot(Seq((1L, wordsB)).toDF("doc_id", "text"))
+    // a CMS table no sketch can append to: the keys → CMS chain fails
+    // after its keys commit, while the other two chains commit
+    FpIndex.saveFlat(s"$root/$CmsT", Seq("x").toDF("not_a_sketch"))
+    // and the novelty chain is the slow one: its commit crosses the
+    // auto-compaction threshold, whose swap waits 3 s
+    (1 to FpIndex.AutoCompactManifests - 2).foreach(i => FpIndex.deltaAppendFlat(
+      spark, s"$root/$NoveltyT", Seq(-i.toLong).toDF("h"), autoCompact = false))
+    val tables = Seq(KeysT, ShinglesT, BandsT, CmsT)
+    val before = versionsOf(root, tables)
+    graft.sources.ManifestSink.beforeSwapHook = () => Thread.sleep(3000)
+    val e = try intercept[Exception] {
+      IndexDelta.admitDocs(spark, root, Seq((12L, wordsA)).toDF("doc_id", "text"),
+        batchId = "fails")
+    } finally graft.sources.ManifestSink.beforeSwapHook = () => ()
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("not_a_sketch")),
+      s"the CMS commit's failure must surface: $e")
+    val alive = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith("indexdelta-commit"))
+    assert(alive.isEmpty, s"commit threads left alive: $alive")
+    assert(versionsOf(root, tables) == Seq(before(0) + 1, before(1) + 1, before(2) + 1, before(3)),
+      "keys, shingles and bands commit; the failed CMS commit does not")
+    assert(graft.sources.ManifestSink.sortedManifests(
+        new java.io.File(s"$root/$NoveltyT")).size < FpIndex.AutoCompactManifests,
+      "the slow novelty chain must have finished its compaction before the failure surfaced")
     CacheRegistry.releaseAll()
   }
 
