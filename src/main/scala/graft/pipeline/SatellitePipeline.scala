@@ -30,10 +30,15 @@ import graft.sinks.Sink
   * `HttpFetch.fetchColumn(cands, "band_url", "raw")` +
   * `Raster.decodeImageUdf` at the marked point below.
   *
-  * Scale posture: water bodies and configs are broadcast-size dims;
-  * the catalog and rasters are the big sides and are touched by
-  * exactly one shuffle each (the candidate join). The candidates are
-  * then spread round-robin over `defaultParallelism` partitions, and
+  * Scale posture: water bodies and configs are broadcast-size dims.
+  * Neither big side is shuffled: the catalog is scanned once and probes
+  * the broadcast (body × config) rows in a BroadcastHashJoin on the
+  * dataset, with the F1-F3 residuals; the F4 anti-join broadcasts the
+  * sink keys. The rasters join is a BroadcastHashJoin too, and it
+  * broadcasts the WHOLE `rasters` table, every plane of every image, on
+  * each run: fine for pre-staged bench tables, not for production-size
+  * rasters (ROADMAP). The one shuffle is the round-robin spread of the
+  * candidates over `defaultParallelism` partitions, after which
   * `Raster.products` runs once per joined row on primitive planes: one
   * O(H·W) conversion, the O(H·E + H·W) scanline clip for E polygon
   * edges, then the three encodes.
@@ -69,17 +74,18 @@ object SatellitePipeline {
       .filter(col("areasqkm") < AreaLimit) // Q6 (main.py:482)
       .orderBy(col("areasqkm").desc, col("id")) // Q7 top-K (main.py:483-484)
       .limit(WaterbodyLimit)
-      // P7: drop z from every [lon, lat, z] vertex (main.py:374-377)
-      .withColumn("geometry2d",
-        expr("transform(geometry, ring -> transform(ring, p -> slice(p, 1, 2)))"))
-      // P8: bbox-derived fields (main.py:379-384)
-      .withColumn("width_degrees", abs(col("max_longitude") - col("min_longitude")))
-      .withColumn("height_degrees", abs(col("max_latitude") - col("min_latitude")))
+      .select(col("*"),
+        // P7: drop z from every [lon, lat, z] vertex (main.py:374-377)
+        expr("transform(geometry, ring -> transform(ring, p -> slice(p, 1, 2)))")
+          .as("geometry2d"),
+        // P8: bbox-derived fields (main.py:379-384)
+        abs(col("max_longitude") - col("min_longitude")).as("width_degrees"),
+        abs(col("max_latitude") - col("min_latitude")).as("height_degrees"))
   }
 
-  /** P2 + S2 + F1-F4 + P3 (main.py:393-440). The catalog join is the
-    * one real shuffle; its key is the dataset plus the containment/
-    * window residuals. */
+  /** P2 + S2 + F1-F4 + P3 (main.py:393-440). The catalog probes the
+    * broadcast (body × config) rows on the dataset, with the
+    * containment/window/cloud residuals. */
   def candidates(
       discovered: DataFrame,
       catalog: DataFrame,
@@ -118,12 +124,8 @@ object SatellitePipeline {
     // partition the candidate joins leave (an explicit partition count
     // is not coalesced by AQE)
     val spread = cands.repartition(cands.sparkSession.sparkContext.defaultParallelism)
-    val withBands = spread.join(rasters, "ee_id") // S3/S4 stub: pre-staged planes
-      // F5 band select+rename (main.py:86-90, 399): TCI_* → red/green/blue
-      .withColumn("red", col("TCI_R"))
-      .withColumn("green", col("TCI_G"))
-      .withColumn("blue", col("TCI_B"))
-    val cube = Raster.stackBands(col("red"), col("green"), col("blue")) // R1
+    // F5 band select (main.py:86-90, 399): TCI_R/G/B are red/green/blue
+    val cube = Raster.stackBands(col("TCI_R"), col("TCI_G"), col("TCI_B")) // R1
     // R2 clip (main.py:240-243, nodata=0), R5 thumbnail (main.py:288-308)
     // and R6 tiff re-encodes, from one conversion of the cube
     val products = Raster.productsUdf(
@@ -131,19 +133,20 @@ object SatellitePipeline {
       col("footprint_min_lon"), col("footprint_max_lon"),
       col("footprint_min_lat"), col("footprint_max_lat"),
       col("geometry2d"), lit(ThumbnailFactor))
+    // P4 filename templating — CORRECTED yyyyMMddHHmmss (the
+    // reference's "%Y%M%d%H%m%S" swaps minute/month, main.py:141-148;
+    // divergence documented per SURVEY §7.3)
     val ts = date_format(col("captured_ts"), "yyyyMMddHHmmss")
-    withBands
-      .withColumn("k", products)
-      .withColumn("s", PixelOps.imageStats(col("k.clipped"))) // R3+R4 single pass
-      // P4 filename templating — CORRECTED yyyyMMddHHmmss (the
-      // reference's "%Y%M%d%H%m%S" swaps minute/month, main.py:141-148;
-      // divergence documented per SURVEY §7.3)
-      .withColumn("filename", concat(col("ee_id"), lit("/"),
-        col("id").cast("string"), lit("_"), ts, lit(".tif")))
-      .withColumn("thumbnail_filename", concat(col("ee_id"), lit("/"),
-        col("id").cast("string"), lit("_"), ts, lit("_thumbnail.png")))
-      .withColumn("clipped_filename", concat(col("ee_id"), lit("/"),
-        col("id").cast("string"), lit("_"), ts, lit("_clipped.tif")))
+    def artifactName(suffix: String): Column =
+      concat(col("ee_id"), lit("/"), col("id").cast("string"), lit("_"), ts, lit(suffix))
+    spread.join(rasters, "ee_id") // S3/S4 stub: pre-staged planes
+      .select(col("id"), col("captured_ts"), col("ee_id"), col("dataset_name"),
+        col("properties"), products.as("k"),
+        artifactName(".tif").as("filename"),
+        artifactName("_thumbnail.png").as("thumbnail_filename"),
+        artifactName("_clipped.tif").as("clipped_filename"))
+      // R3+R4 single pass over the clipped cube
+      .select(col("*"), PixelOps.imageStats(col("k.clipped")).as("s"))
       // P6 sink-record assembly (main.py:328-342) + P5 to_json (main.py:335)
       .select(
         col("id").as("waterbody_id"),
@@ -162,8 +165,12 @@ object SatellitePipeline {
         col("k.thumbnailPng").as("thumbnail_png"))
   }
 
-  /** Full run: S5 artifacts + S6 idempotent upsert. Returns rows
-    * actually appended (0 on replay — idempotence). */
+  /** Full run: S5 artifacts + S6 idempotent upsert. Reads the sink
+    * once, with its known schema, and hands that frame to discovery,
+    * the F4 anti-join and the upsert; one artifact pass over the
+    * processed rows, then one observed append, skipped when no row was
+    * processed. Returns rows actually appended (0 on replay —
+    * idempotence). */
   def run(
       waterBodies: DataFrame, geometries: DataFrame, catalog: DataFrame,
       configs: DataFrame, rasters: DataFrame,
@@ -171,7 +178,7 @@ object SatellitePipeline {
     val spark = waterBodies.sparkSession
     val sink0 =
       if (java.nio.file.Files.exists(java.nio.file.Paths.get(sinkPath)))
-        spark.read.parquet(sinkPath)
+        spark.read.schema(SinkSchema.schema).parquet(sinkPath)
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], SinkSchema.schema)
     val disc = discovery(waterBodies, geometries, sink0, runDate)
@@ -179,13 +186,15 @@ object SatellitePipeline {
     val processed = process(cand, rasters).cache()
     try {
       // S5: 3 artifacts per image (main.py:313-317), executor-side
-      Sink.writeArtifacts(processed.select(col("filename"), col("full_tif")), artifactDir)
-      Sink.writeArtifacts(processed.select(col("clipped_filename"), col("clipped_tif")), artifactDir)
-      Sink.writeArtifacts(processed.select(col("thumbnail_filename"), col("thumbnail_png")), artifactDir)
+      val seen = Sink.writeArtifacts(processed.select(
+        col("filename"), col("full_tif"),
+        col("clipped_filename"), col("clipped_tif"),
+        col("thumbnail_filename"), col("thumbnail_png")), artifactDir)
       // S6: upsert on the composite PK (main.py:106-107)
-      Sink.upsertAppend(
+      if (seen == 0) 0L
+      else Sink.upsertAppend(
         processed.drop("full_tif", "clipped_tif", "thumbnail_png", "clipped_filename"),
-        sinkPath, Seq("waterbody_id", "captured_ts"))
+        sink0, sinkPath, Seq("waterbody_id", "captured_ts"))
     } finally processed.unpersist()
   }
 }

@@ -139,6 +139,99 @@ class PipelineSpec extends AnyFunSuite {
     assert(spark.read.parquet(sinkPath).count() == 2)
   }
 
+  /** A fresh sink directory holding `rows` (SinkSchema-shaped). */
+  def sinkAt(rows: DataFrame): (String, String) = {
+    val tmp = Files.createTempDirectory("graft_pipe").toString
+    rows.coalesce(1).write.parquet(s"$tmp/sink")
+    (s"$tmp/sink", s"$tmp/artifacts")
+  }
+
+  def parquetFiles(path: String): Set[String] =
+    new java.io.File(path).listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet
+
+  test("run: a row whose key is already in the sink under another ee_id is not " +
+    "appended, but its three artifacts are written") {
+    // body 1 already holds imgA's capture time under another image: the
+    // reference uploads before its ON CONFLICT DO NOTHING (main.py:311-325)
+    val (sinkPath, artDir) = sinkAt(existingSink.union(Seq(
+      (1L, new Timestamp(ts("2024-06-20 10:00:00")), "imgOld", "S2", "{}", "f", "t", 1.0, 1.0, 1.0, 0.0)
+    ).toDF(existingSink.columns.toIndexedSeq: _*)))
+    val n = SatellitePipeline.run(waterBodies, geometries, catalog, configs, rasters,
+      sinkPath, artDir, runDate)
+    assert(n == 1, "only imgF is new")
+    for (f <- Seq("1_20240620100000.tif", "1_20240620100000_clipped.tif",
+        "1_20240620100000_thumbnail.png"))
+      assert(Files.exists(Paths.get(artDir, "imgA", f)), f)
+    val sink = spark.read.parquet(sinkPath)
+    assert(sink.count() == 3, "the returned count equals the rows appended")
+    assert(sink.filter(col("ee_id") === "imgA").count() == 0)
+    assert(sink.filter(col("ee_id") === "imgOld").count() == 1)
+  }
+
+  test("run: one sink read, one artifact pass, one observed append — job budget, " +
+    "replay commits nothing, reader schema pinned to the written one") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import graft.pipeline.SinkSchema
+    val (sinkPath, artDir) = sinkAt(existingSink)
+    // per job group, each job's call sites: its stages' and, for jobs
+    // submitted off the calling thread (broadcasts, adaptive query
+    // stages), the SQL execution's
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, java.util.List[String]]()
+    val executions = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => executions.put(x.executionId.toString, x.details)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        prop("spark.jobGroup.id").foreach(group => jobs.computeIfAbsent(group,
+          _ => java.util.Collections.synchronizedList(new java.util.ArrayList[String]()))
+          .add((e.stageInfos.map(_.details) ++
+            prop("spark.sql.execution.id").flatMap(x => Option(executions.get(x)))).mkString("\n")))
+      }
+    }
+    val sc = spark.sparkContext
+    def within[T](group: String)(body: => T): T = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    val (n, r, filesAfterRun, filesAfterReplay) =
+      try {
+        val n = within("budget-run")(SatellitePipeline.run(waterBodies, geometries, catalog,
+          configs, rasters, sinkPath, artDir, runDate))
+        val filesAfterRun = parquetFiles(sinkPath)
+        val r = within("budget-replay")(SatellitePipeline.run(waterBodies, geometries, catalog,
+          configs, rasters, sinkPath, artDir, runDate))
+        val filesAfterReplay = parquetFiles(sinkPath)
+        // a marker job: once its start is seen, every earlier event is too
+        within("budget-marker")(sc.parallelize(Seq(1), 1).count())
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (!jobs.containsKey("budget-marker") && System.nanoTime() < deadline)
+          Thread.sleep(20)
+        (n, r, filesAfterRun, filesAfterReplay)
+      } finally sc.removeSparkListener(listener)
+    assert(n == 2 && r == 0)
+    assert(filesAfterRun.size == 2, s"seed file + one appended file: $filesAfterRun")
+    assert(filesAfterReplay == filesAfterRun, "a replay commits no parquet file")
+    val runJobs = jobs.get("budget-run").toArray.map(_.toString)
+    val replayJobs = jobs.get("budget-replay").toArray.map(_.toString)
+    // three artifact passes, a schema-inferring sink re-read and a
+    // cache → count → write upsert fired 18 jobs here, 15 on the replay
+    assert(runJobs.length <= 11, s"${runJobs.length} jobs for one run")
+    assert(replayJobs.length <= 8, s"${replayJobs.length} jobs for its replay")
+    // the artifact pass and the append are Dataset actions, so their
+    // jobs name the sink's methods as call site
+    assert(runJobs.exists(_.contains("graft.sinks.Sink$.writeArtifacts")))
+    assert(runJobs.exists(_.contains("graft.sinks.Sink$.upsertAppend")))
+    assert(!replayJobs.exists(_.contains("graft.sinks.Sink$.upsertAppend")),
+      "a replay processes no row and skips the upsert")
+    assert(spark.read.parquet(sinkPath).schema == SinkSchema.schema,
+      "the pinned reader schema is the schema the pipeline writes")
+  }
+
   test("process spreads the per-image kernels over defaultParallelism tasks") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.catalyst.expressions.ScalaUDF
