@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.{GraftSession, Tables}
 import graft.operators.{Clustering, Dedup, Extended, FpIndex, Pca, Similarity, TextAnalysis}
@@ -21,6 +22,8 @@ import graft.streaming.Incremental
   *    the band and shingle tables through the operators' existing
   *    CacheRegistry materialization points, and nothing here collects
   *    beyond the model-sized ANN artifacts (quantizer ≈ √n, codebook).
+  *    The text, flat-vector and hierarchical table families commit
+  *    side by side, each shared input computed once (see [[buildAll]]).
   *    Re-runs rebuild IN PLACE through the generation-append path
   *    ([[FpIndex.rebuildFlat]]): atomic cutover, pinned readers
   *    unaffected, racing builds abort cleanly.
@@ -65,42 +68,82 @@ object IndexBuild {
   /** Persist every serving artifact for `dir` under `root` — the
     * nightly build job. Safe to re-run against a live index root:
     * each table cuts over atomically via the generation-append
-    * rebuild. */
+    * rebuild.
+    *
+    * The tables fall into three families that never read one
+    * another's tables, committed side by side as three chains through
+    * [[SideBySide.commit]] (threads `indexbuild-commit-<i>`; every
+    * chain finishes before the first failure, in chain order, is
+    * rethrown):
+    *
+    *  - TEXT: keys → text_meta → cms → bands → shingles → novelty →
+    *    postings → volstats. Bands and shingles share one shingle
+    *    pipeline through Dedup's cache entries, so they stay in one
+    *    chain.
+    *  - FLAT VECTOR: the ANN ivf/pq/sq8 tables, then the flat unit
+    *    ([[buildFlatVectorArtifacts]]: centroids, assigned, capped,
+    *    radii), then PCA.
+    *  - HIERARCHICAL: the two-level unit ([[buildHierVectorArtifacts]]:
+    *    hier_model, assigned_hier, assigned_hier_capped,
+    *    cell_radii_hier).
+    *
+    * Each shared input is computed once: the vector corpus is counted
+    * once for both vector units; each unit assigns the corpus once and
+    * derives its assigned, capped and radius tables from that one
+    * assignment; the two-level model's fine frame is evaluated once;
+    * text_meta's `n_keys` is the row count the keys commit recorded in
+    * its manifest entries (no second key-set pass). */
   def buildAll(spark: SparkSession, dir: String, root: String): Unit = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    // exact-dup key set, band index, shingle sets — the curation gate's
-    // and delta-dedup's stored sides (band/shingle share one shingle
-    // pipeline through Dedup's cache entries)
-    FpIndex.saveOrRebuildFlat(spark, s"$root/$KeysT", Incremental.corpusKeySet(docs))
-    FpIndex.saveOrRebuildFlat(spark, s"$root/$BandsT", Dedup.bandIndexOf(spark, dir))
-    FpIndex.saveOrRebuildShingles(spark, s"$root/$ShinglesT", Dedup.shingleIndexOf(spark, dir))
-    // BM25 posting index — the retrieval probe's stored side
-    FpIndex.saveOrRebuildFlat(spark, s"$root/$PostingsT", Incremental.postingTable(docs))
-    buildTextMeta(spark, docs, root)
-    // CMS sketch + novelty shingle set — the monitoring gates' stored sides
-    FpIndex.saveOrRebuildFlat(spark, s"$root/$CmsT", TextAnalysis.cmsSketchOf(docs))
-    FpIndex.saveOrRebuildFlat(spark, s"$root/$NoveltyT", Incremental.corpusShingleSet(docs))
-    // volume baseline — sufficient statistics, model-sized, mergeable
-    val typed = Tables.events(spark, dir)
-      .selectExpr("event_type", s"${Tables.epochSecSql} div 86400 AS day_no")
-    FpIndex.saveOrRebuildFlat(spark, s"$root/$VolStatsT",
-      Extended.volumeStatsOf(typed).withColumn("s2", col("s2").cast("string")))
-    // ANN artifacts: IVF quantizer + flat-PQ codebook/codes + the SQ8
-    // codebook/codes (the q44/q82/q145 serving tiers; the composed
-    // IVF+PQ tier builds its own root)
-    Similarity.buildIvfIndex(spark, dir, s"$root/$AnnT")
-    Similarity.buildPqIndex(spark, dir, s"$root/$AnnT")
-    Similarity.buildSq8Index(spark, dir, s"$root/$AnnT")
-    // k-means centroid model + the semantic gate's stored side — also
-    // the REFRESH unit IndexDelta.refreshIfStale re-runs when the
-    // staleness monitor trips between nightly builds
     val fixed = Clustering.fixedPoint(spark, dir)
-    val nVecs = buildFlatVectorArtifacts(spark, fixed, root)
-    // PCA basis — the dim-reduction serve side (projected arrivals,
-    // cheaper projected-IVF ANN); fit shares the centroid build's
-    // cached fixed-point corpus and the q126 Gram pass's dimStats
-    Pca.saveModel(spark, s"$root/$PcaT", Pca.fit(spark, dir))
-    buildHierVectorArtifacts(spark, fixed, root, Some(nVecs))
+    val nVecs = fixed.count() // the one corpus count both vector units size from
+    SideBySide.commit("indexbuild-commit")(
+      () => {
+        // exact-dup key set, band index, shingle sets — the curation
+        // gate's and delta-dedup's stored sides
+        FpIndex.saveOrRebuildFlat(spark, s"$root/$KeysT", Incremental.corpusKeySet(docs))
+        writeTextMeta(spark, root, docs.count(), FpIndex.lastCommitRows(s"$root/$KeysT"))
+        // CMS sketch + novelty shingle set — the monitoring gates' stored sides
+        FpIndex.saveOrRebuildFlat(spark, s"$root/$CmsT", TextAnalysis.cmsSketchOf(docs))
+        FpIndex.saveOrRebuildFlat(spark, s"$root/$BandsT", Dedup.bandIndexOf(spark, dir))
+        FpIndex.saveOrRebuildShingles(spark, s"$root/$ShinglesT", Dedup.shingleIndexOf(spark, dir))
+        FpIndex.saveOrRebuildFlat(spark, s"$root/$NoveltyT", Incremental.corpusShingleSet(docs))
+        // BM25 posting index — the retrieval probe's stored side
+        FpIndex.saveOrRebuildFlat(spark, s"$root/$PostingsT", Incremental.postingTable(docs))
+        // volume baseline — sufficient statistics, model-sized, mergeable
+        val typed = Tables.events(spark, dir)
+          .selectExpr("event_type", s"${Tables.epochSecSql} div 86400 AS day_no")
+        FpIndex.saveOrRebuildFlat(spark, s"$root/$VolStatsT",
+          Extended.volumeStatsOf(typed).withColumn("s2", col("s2").cast("string")))
+      },
+      () => {
+        // ANN artifacts: IVF quantizer + flat-PQ codebook/codes + the SQ8
+        // codebook/codes (the q44/q82/q145 serving tiers; the composed
+        // IVF+PQ tier builds its own root)
+        Similarity.buildIvfIndex(spark, dir, s"$root/$AnnT")
+        Similarity.buildPqIndex(spark, dir, s"$root/$AnnT")
+        Similarity.buildSq8Index(spark, dir, s"$root/$AnnT")
+        // k-means centroid model + the semantic gate's stored side — also
+        // the REFRESH unit IndexDelta.refreshIfStale re-runs when the
+        // staleness monitor trips between nightly builds
+        flatVectorUnit(spark, fixed, root, Some(nVecs))
+        // PCA basis — the dim-reduction serve side (projected arrivals,
+        // cheaper projected-IVF ANN); fit shares the q126 Gram pass's
+        // cached dimStats
+        Pca.saveModel(spark, s"$root/$PcaT", Pca.fit(spark, dir))
+      },
+      () => buildHierVectorArtifacts(spark, fixed, root, Some(nVecs)))
+    // Finished queries keep their broadcast hash relations (one
+    // Tungsten page each: 16 MB for a string key) in the block manager
+    // until Spark's ContextCleaner learns from a collection that their
+    // plans are gone. Chains run side by side leave those
+    // plans in the old generation, which only a full collection scans,
+    // so without one they stayed through the next admissions
+    // (measured: up to 4.2k pending cleanup entries, 21 live page
+    // tables and +85 MB at the next heap sample). One collection after
+    // the last commit hands them to the cleaner, as Spark's periodic
+    // cleaner collection would.
+    System.gc()
   }
 
   /** The TWO-LEVEL vector serving artifacts as one rebuildable unit —
@@ -114,24 +157,27 @@ object IndexBuild {
     * [[buildFlatVectorArtifacts]] precedent) so
     * [[IndexDelta.refreshIfStaleHier]] can retrain JUST this unit when
     * the hier staleness monitor trips mid-cycle; each table cuts over
-    * atomically via the generation-append rebuild. */
+    * atomically via the generation-append rebuild.
+    *
+    * One pass each: the trained fine frame is an unmaterialized
+    * lineage (coarse assignment → window seeds → fine-Lloyd join and
+    * aggregates), so it is persisted and evaluated once for the model
+    * save and the assignment's model collect; the corpus is assigned
+    * once, and the assigned, capped and radius tables all read that
+    * one persisted assignment. */
   def buildHierVectorArtifacts(spark: SparkSession, fixed: DataFrame,
       root: String, nVecsKnown: Option[Long] = None): Long = {
     val nVecs = nVecsKnown.getOrElse(fixed.count())
     val hk = math.max(4, Clustering.kForCorpus(nVecs))
-    val hm = Clustering.trainHierarchicalFrames(fixed, hk)
-    Clustering.saveHierModelDf(spark, s"$root/$HierModelT", hm)
-    val assignedH = Clustering.assignHier(fixed, hm)
-      .select(col("vec_id").as("corpus_id"), col("x"), col("cluster"))
-    val (probeH, cappedH) = Clustering.capAssignedCorpus(
-      assignedH, Clustering.buildCapOf(nVecs, hm.kTotal))
-    Clustering.saveAssignedCorpus(spark, s"$root/$AssignedHierT", probeH)
-    Clustering.saveCappedCells(spark, s"$root/$CappedHierT", cappedH)
-    // hier staleness radii — the flat unit's RadiiT twin (one window
-    // pass over the two-level assignment, k rows)
-    FpIndex.saveOrRebuildFlat(spark, s"$root/$RadiiHierT",
-      Clustering.cellRadiiOf(Clustering.assignHier(fixed, hm)
-        .select(col("cluster"), col("vec_id"), col("dist"))))
+    val trained = Clustering.trainHierarchicalFrames(fixed, hk)
+    val hm = trained.copy(fine = trained.fine.persist(StorageLevel.MEMORY_AND_DISK))
+    try {
+      Clustering.saveHierModelDf(spark, s"$root/$HierModelT", hm)
+      withAssignment(Clustering.assignHier(fixed, hm)) { asg =>
+        saveAssignedUnit(spark, asg, Clustering.buildCapOf(nVecs, hm.kTotal),
+          s"$root/$AssignedHierT", s"$root/$CappedHierT", s"$root/$RadiiHierT")
+      }
+    } finally hm.fine.unpersist(blocking = true)
     nVecs
   }
 
@@ -140,39 +186,67 @@ object IndexBuild {
     * HOT-CELL-CAPPED at build time (q134's corpus-relative 9n/8k cap,
     * the videoFrameIndex hub-cap precedent — members of over-cap
     * cells never enter the probe table, so a degenerate mega-cell
-    * costs an arrival ZERO probe rows), and the k-row capped-cells
-    * side table the gate flags verdicts from. Extracted from
-    * [[buildAll]] so [[IndexDelta.refreshIfStale]] can retrain JUST
-    * this unit when the staleness monitor trips mid-cycle; each table
-    * cuts over atomically via the generation-append rebuild. Returns
-    * the corpus vector count (the one pass it already pays). */
+    * costs an arrival ZERO probe rows), the k-row capped-cells side
+    * table the gate flags verdicts from, and the per-cell p95
+    * staleness radii. Extracted from [[buildAll]] so
+    * [[IndexDelta.refreshIfStale]] can retrain JUST this unit when the
+    * staleness monitor trips mid-cycle; each table cuts over
+    * atomically via the generation-append rebuild. The corpus is
+    * assigned once; that one persisted assignment gives the count,
+    * the probe table, the capped cells and the radii. Returns the
+    * corpus vector count. */
   def buildFlatVectorArtifacts(spark: SparkSession, fixed: DataFrame,
-      root: String): Long = {
+      root: String): Long =
+    flatVectorUnit(spark, fixed, root, None)
+
+  /** [[buildFlatVectorArtifacts]] with the corpus count known to the
+    * caller ([[buildAll]] counts once for both vector units). */
+  private def flatVectorUnit(spark: SparkSession, fixed: DataFrame,
+      root: String, nVecsKnown: Option[Long]): Long = {
     val cents = Clustering.trainCentroids(fixed)
     Clustering.saveCentroids(spark, s"$root/$CentroidsT", cents)
-    val assigned = Clustering.assignedCorpus(fixed, cents)
-    val nVecs = assigned.count() // one pass — build-job budget
-    val (probeCorpus, cappedCells) = Clustering.capAssignedCorpus(
-      assigned, Clustering.buildCapOf(nVecs, cents.length))
-    Clustering.saveAssignedCorpus(spark, s"$root/$AssignedT", probeCorpus)
-    Clustering.saveCappedCells(spark, s"$root/$CappedT", cappedCells)
-    // per-cell p95 staleness radii (q143's stored side): k rows derived
-    // from the FULL assignment in one window pass — the per-batch
-    // staleness monitor then never re-scans the probe corpus
-    FpIndex.saveOrRebuildFlat(spark, s"$root/$RadiiT", Clustering.cellRadiiOf(
-      Clustering.assignWith(fixed, cents)
-        .select(col("cluster"), col("vec_id"), col("dist"))))
-    nVecs
+    withAssignment(Clustering.assignWith(fixed, cents)) { asg =>
+      val nVecs = nVecsKnown.getOrElse(asg.count())
+      saveAssignedUnit(spark, asg, Clustering.buildCapOf(nVecs, cents.length),
+        s"$root/$AssignedT", s"$root/$CappedT", s"$root/$RadiiT")
+      nVecs
+    }
   }
 
-  /** Write the 1-row [[TextMetaT]] build stamp — counted over the same
-    * `docs` frame the text artifacts were built from (two tiny aggs on
-    * the build budget). Factored so [[IndexDelta.refreshTextIfStale]]
-    * re-stamps it after a selective text rebuild. */
-  def buildTextMeta(spark: SparkSession, docs: DataFrame, root: String): Unit = {
+  /** Persist a corpus assignment (vec_id, x, cluster, dist) for the
+    * duration of `body`, then release it with `blocking = true`. */
+  private def withAssignment[T](assigned: DataFrame)(body: DataFrame => T): T = {
+    val asg = assigned.select(col("vec_id"), col("x"), col("cluster"), col("dist"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try body(asg) finally asg.unpersist(blocking = true)
+  }
+
+  /** The three tables a vector unit derives from its one corpus
+    * assignment: the probe corpus with over-`cap` cells left out, the
+    * capped-cells side table, and the per-cell p95 radii — k rows from
+    * the FULL assignment in one window pass, so the per-batch
+    * staleness monitor never re-scans the probe corpus (q143's stored
+    * side). */
+  private def saveAssignedUnit(spark: SparkSession, asg: DataFrame, cap: Long,
+      assignedPath: String, cappedPath: String, radiiPath: String): Unit = {
+    val (probe, capped) = Clustering.capAssignedCorpus(
+      asg.select(col("vec_id").as("corpus_id"), col("x"), col("cluster")), cap)
+    Clustering.saveAssignedCorpus(spark, assignedPath, probe)
+    Clustering.saveCappedCells(spark, cappedPath, capped)
+    FpIndex.saveOrRebuildFlat(spark, radiiPath,
+      Clustering.cellRadiiOf(asg.select(col("cluster"), col("vec_id"), col("dist"))))
+  }
+
+  /** Write the 1-row [[TextMetaT]] build stamp — counted over `docs`
+    * (two tiny aggs). [[IndexDelta.refreshTextIfStale]] re-stamps it
+    * after a selective text rebuild; [[buildAll]] takes `n_keys` from
+    * its own keys commit instead. */
+  def buildTextMeta(spark: SparkSession, docs: DataFrame, root: String): Unit =
+    writeTextMeta(spark, root, docs.count(), Incremental.corpusKeySet(docs).count())
+
+  private def writeTextMeta(spark: SparkSession, root: String,
+      nDocs: Long, nKeys: Long): Unit = {
     import spark.implicits._
-    val nDocs = docs.count()
-    val nKeys = Incremental.corpusKeySet(docs).count()
     FpIndex.saveOrRebuildFlat(spark, s"$root/$TextMetaT",
       Seq((nDocs, nKeys)).toDF("n_docs", "n_keys").repartition(1))
   }

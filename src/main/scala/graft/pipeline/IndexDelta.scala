@@ -81,7 +81,7 @@ object IndexDelta {
     * Cost: the admitted shingle table is persisted and materialized by
     * ONE action (which also materializes the verdict frame); then the
     * three independent commit chains — keys → CMS, shingles → bands,
-    * novelty — run side by side (see [[commitSideBySide]]), each
+    * novelty — run side by side (see [[SideBySide.commit]]), each
     * [[FpIndex.deltaAppendFlat]] computing its delta once and
     * committing nothing when it is empty. A crash between the chains
     * can leave keys committed without shingles (or the reverse), as a
@@ -125,7 +125,7 @@ object IndexDelta {
         .join(keys, Seq("content_hash"), "left_anti")
       val newShingleHashes = sh.select(explode(col("hh")).as("h")).distinct()
         .join(FpIndex.loadFlat(spark, s"$root/$NoveltyT"), Seq("h"), "left_anti")
-      commitSideBySide(
+      SideBySide.commit("indexdelta-commit")(
         () =>
           // CMS: the admitted batch's partial sketch MERGES by append —
           // the loader sums cells (cmsMerge's rule), so estimates over
@@ -157,31 +157,6 @@ object IndexDelta {
       pins: Map[String, Int]): String =
     s"indexdelta.$kind:$root:$batchId@" +
       pins.toSeq.sorted.map { case (t, v) => s"$t=$v" }.mkString(",")
-
-  /** Run independent commit chains side by side on threads created for
-    * this call — new threads inherit the caller's Spark local
-    * properties (job group, scheduler pool, tags), which reused pool
-    * threads would not. Waits for EVERY chain, then rethrows the first
-    * failure in chain order (later ones attached as suppressed), so no
-    * commit is still running when the caller sees the error. */
-  private def commitSideBySide(chains: (() => Any)*): Unit = {
-    val failures = new Array[Throwable](chains.size)
-    val threads = chains.zipWithIndex.map { case (chain, i) =>
-      val t = new Thread(() =>
-        try chain() catch { case e: Throwable => failures(i) = e },
-        s"indexdelta-commit-$i")
-      t.setDaemon(true)
-      t.start()
-      t
-    }
-    threads.foreach(_.join())
-    failures.filter(_ != null) match {
-      case Array() => ()
-      case Array(first, rest @ _*) =>
-        rest.foreach(first.addSuppressed)
-        throw first
-    }
-  }
 
   /** Admit a vector batch into the stored FLAT vector index: assign
     * under the FROZEN stored model, decide per arrival with the q142

@@ -67,6 +67,7 @@ class ManifestSink extends TableProvider {
 object ManifestSink {
   val SchemaFile = "_schema.ddl"
   private val ManifestPrefix = "_manifest-"
+  private val ClaimPrefix = "_claim-"
 
   /** Name of the per-row file-identity metadata column. */
   val FileCol = "_file"
@@ -191,32 +192,60 @@ object ManifestSink {
 
   /** Atomically publish a manifest under the next free sequence
     * number: content goes to a temp file first, then an atomic rename
-    * claims `_manifest-<seq>-<tag>` — readers never see partial
-    * content. Concurrent committers race for the sequence slot; the
-    * ATOMIC_MOVE is the arbiter (exists-check alone is TOCTOU), and a
-    * loser simply claims the NEXT slot — both commits land, ordered by
-    * whoever won each rename. Bounded retries: exhausting them means
-    * something is renaming faster than the filesystem can arbitrate. */
+    * publishes `_manifest-<seq>-<tag>` — readers never see partial
+    * content.
+    *
+    * ONE CLAIM PER SEQUENCE NUMBER: the slot is the seq itself, not
+    * the full name. Before the rename the committer claims the seq
+    * ([[claimSeq]]: a `_claim-<seq>` file created with CREATE_NEW,
+    * which exactly one committer can create); a loser claims the NEXT
+    * seq, so both commits land, ordered by their claims. (Arbitrating
+    * on the tagged name let two commits with different tags — an
+    * append and a `-ckpt-` checkpoint — share one seq, and the
+    * checkpoint then hid the append.) The claim file is removed once
+    * the manifest is published; a committer that dies in between
+    * leaves a claim that only makes later committers skip that seq.
+    * Two in-flight commits may become visible in the other order than
+    * their seqs for the width of one rename; a reader listing inside
+    * that window sees the higher seq first. Bounded retries:
+    * exhausting them means something is claiming faster than the
+    * filesystem can arbitrate. */
   def writeManifest(root: File, tag: String, files: Seq[String]): File = {
     val tmp = Files.createTempFile(root.toPath, "_inflight-", ".manifest")
     Files.write(tmp, files.mkString("\n").getBytes(StandardCharsets.UTF_8))
     var seq = sortedManifests(root).lastOption.map(seqOf(_) + 1).getOrElse(0)
     var attempts = 0
     while (attempts < 1000) {
-      val target = new File(root, f"$ManifestPrefix$seq%09d-$tag")
-      if (!target.exists()) {
+      if (claimSeq(root, seq)) {
         try {
+          beforeRenameHook(tag)
+          val target = new File(root, f"$ManifestPrefix$seq%09d-$tag")
           Files.move(tmp, target.toPath, StandardCopyOption.ATOMIC_MOVE)
           return target
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => // lost the race; next slot
-        }
+        } finally claimFile(root, seq).delete()
       }
       seq += 1
       attempts += 1
     }
     throw new IllegalStateException(
       s"could not claim a manifest sequence slot in $root after 1000 attempts")
+  }
+
+  private def claimFile(root: File, seq: Int): File =
+    new File(root, f"$ClaimPrefix$seq%09d")
+
+  /** Claim `seq` for one commit. CREATE_NEW is the arbiter: exactly
+    * one committer creates the claim file. The claim then stands only
+    * if no manifest holds the seq yet — one published by a committer
+    * that has already released its claim, or a compaction checkpoint,
+    * which reuses the seq of the last manifest it absorbs. */
+  private def claimSeq(root: File, seq: Int): Boolean = {
+    val claim = claimFile(root, seq)
+    try Files.createFile(claim.toPath)
+    catch { case _: java.nio.file.FileAlreadyExistsException => return false }
+    val taken = rawManifests(root).exists(f => seqOf(f) == seq)
+    if (taken) claim.delete()
+    !taken
   }
 
   /** Compact the current manifest list into ONE checkpoint manifest
@@ -288,6 +317,12 @@ object ManifestSink {
     * so specs can interleave a concurrent commit deterministically. */
   private[graft] var beforeSwapHook: () => Unit = () => ()
 
+  /** Test seam: runs inside [[writeManifest]] after the sequence slot
+    * is chosen and claimed but BEFORE the rename publishes the
+    * manifest; receives the commit's tag. A commit landing here must
+    * take a different seq. */
+  private[graft] var beforeRenameHook: String => Unit = _ => ()
+
   /** Test seam: runs AFTER the optimistic pre-check but BEFORE the
     * checkpoint claims its slot — the residual window the post-claim
     * validation exists for. */
@@ -326,9 +361,10 @@ object ManifestSink {
     * checkpoint is rolled back (deleted along with the adopted files)
     * and the conflict surfaces. A commit landing after our rename
     * claims a HIGHER seq than the checkpoint and stays visible, so the
-    * validation only inspects seqs BELOW the checkpoint's — exactly
-    * the range it hides — and a post-claim commit is never a spurious
-    * conflict.
+    * validation only inspects seqs AT OR BELOW the checkpoint's —
+    * exactly the range it hides — and a post-claim commit is never a
+    * spurious conflict. A commit racing the checkpoint's own claim
+    * cannot share its seq ([[writeManifest]] claims the seq itself).
     *
     * Two tolerated artifacts of crashes/races, both bounded:
     *  - CRASH RESIDUE: a previous writer that died between publishing
@@ -375,10 +411,12 @@ object ManifestSink {
     val (residue, current) = raw.partition(f =>
       !expectedNames(f.getName) && seqOf(f) <= residueCutoff)
     residue.foreach(_.delete())
-    // our checkpoint hides exactly seq < its own; that range must be
-    // precisely the history the rewrite read. Higher seqs are commits
-    // that landed after the claim — still visible, not conflicts.
-    val hidden = current.filter(f => seqOf(f) < seqOf(ckpt))
+    // our checkpoint hides every seq <= its own; that range must be
+    // precisely the history the rewrite read (its own seq included:
+    // the claim keeps other commits off it, and anything found there
+    // would be hidden). Higher seqs are commits that landed after the
+    // claim — still visible, not conflicts.
+    val hidden = current.filter(f => seqOf(f) <= seqOf(ckpt))
     if (hidden.map(_.getName).sorted != expected.map(_.getName).sorted) {
       ckpt.delete() // roll back the claim — the hidden commit wins
       abort(hidden.size)
@@ -390,11 +428,25 @@ object ManifestSink {
     entriesOf(manifests).map(nameOf)
 
   /** Full manifest ENTRIES — file name plus the optional column-stats
-    * cells — de-duplicated by file name (first occurrence wins). */
+    * cells — de-duplicated by file name (first occurrence wins). A
+    * listed manifest that is gone by the time it is read was absorbed
+    * by a concurrent copy-on-write swap (which deletes what its
+    * checkpoint hides): the listing is stale, so this raises the same
+    * ConcurrentModificationException as any other lost race, and the
+    * caller re-reads or retries against the new history. */
   def entriesOf(manifests: Seq[File]): Seq[String] = {
     val seen = scala.collection.mutable.LinkedHashMap[String, String]()
-    manifests.flatMap(m => new String(
-      Files.readAllBytes(m.toPath), StandardCharsets.UTF_8).split("\n"))
+    def read(m: File): String =
+      try new String(Files.readAllBytes(m.toPath), StandardCharsets.UTF_8)
+      catch {
+        case e: java.nio.file.NoSuchFileException =>
+          val cme = new java.util.ConcurrentModificationException(
+            s"manifest ${m.getName} of ${m.getParent} was absorbed by a concurrent " +
+              "rewrite while being read — retry against the new history")
+          cme.initCause(e)
+          throw cme
+      }
+    manifests.flatMap(m => read(m).split("\n"))
       .filter(_.nonEmpty)
       .foreach(l => seen.getOrElseUpdate(nameOf(l), l))
     seen.values.toSeq

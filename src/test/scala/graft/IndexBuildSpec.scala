@@ -229,4 +229,106 @@ class IndexBuildSpec extends AnyFunSuite {
     val v = graft.operators.FpIndex.tableVersion(s"$r/${IndexBuild.KeysT}")
     assert(v > pinnedIdx.pins(IndexBuild.KeysT), "rebuild must append a new generation")
   }
+
+  // ------------------------------------------ side-by-side nightly build
+
+  private def tmpRoot(tag: String): String =
+    java.nio.file.Files.createTempDirectory(s"graft-build-$tag").toString
+
+  private def version(root: String, t: String): Int =
+    graft.operators.FpIndex.tableVersion(s"$root/$t")
+
+  test("a failing build chain surfaces only after the other chains have " +
+      "finished: their tables are committed and no commit thread is left alive") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    import IndexBuild._
+    CacheRegistry.releaseAll()
+    val r = tmpRoot("fails")
+    // a keys table no key set can be rebuilt into: the text chain fails
+    // at its first commit, long before the vector chains are done
+    graft.operators.FpIndex.saveFlat(s"$r/$KeysT", Seq("x").toDF("not_a_key"))
+    val e = intercept[Exception](IndexBuild.buildAll(spark, sf, r))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("incompatible schema evolution")),
+      s"the keys commit's failure must surface: $e")
+    val alive = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith("indexbuild-commit"))
+    assert(alive.isEmpty, s"commit threads left alive: $alive")
+    val vectorTables = Seq(CentroidsT, AssignedT, CappedT, RadiiT, PcaT,
+      HierModelT, AssignedHierT, CappedHierT, RadiiHierT)
+    assert(vectorTables.forall(version(r, _) == 1),
+      "both vector chains commit every table before the failure surfaces: " +
+        vectorTables.map(t => t -> version(r, t)).mkString(", "))
+    assert(Seq("quantizer", "codebook", "codes", "sq8_codes", "sq8_stats")
+      .forall(t => version(r, s"$AnnT/$t") == 1), "the ANN tables commit")
+    assert(version(r, KeysT) == 1, "the failed keys rebuild commits nothing")
+    assert(Seq(TextMetaT, CmsT, BandsT, ShinglesT, NoveltyT, PostingsT, VolStatsT)
+      .forall(version(r, _) == 0), "the text chain stops at its failed commit")
+    CacheRegistry.releaseAll()
+  }
+
+  test("the two-level unit evaluates the fine-frame lineage once and assigns " +
+      "the corpus once") {
+    import graft.operators.Clustering
+    CacheRegistry.releaseAll()
+    // a filter nothing prunes, counting every corpus row it evaluates
+    val seen = spark.sparkContext.longAccumulator("hier-corpus-rows")
+    val tick = udf { (_: Long) => seen.add(1L); true }.asNondeterministic()
+    val fixed = Clustering.fixedPoint(spark, sf).filter(tick(col("vec_id")))
+    val n = fixed.count()
+    def passes(body: => Unit): Long = {
+      val s0 = seen.value
+      body
+      val rows = seen.value - s0
+      assert(rows % n == 0, s"$rows row evaluations is not a whole number of passes over $n")
+      rows / n
+    }
+    val hk = math.max(4, Clustering.kForCorpus(n))
+    // the reference: training plus ONE full evaluation of the fine frame
+    val reference = passes {
+      Clustering.trainHierarchicalFrames(fixed, hk).fine
+        .write.format("noop").mode("overwrite").save()
+    }
+    val unit = passes(IndexBuild.buildHierVectorArtifacts(spark, fixed, tmpRoot("hier"), Some(n)))
+    assert(unit == reference + 1,
+      s"training + one fine-frame evaluation ($reference passes) + one corpus " +
+        s"assignment, got $unit passes")
+    CacheRegistry.releaseAll()
+  }
+
+  test("buildAll fires at most its job budget on the fixture") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    CacheRegistry.releaseAll()
+    ModelRegistry.clear()
+    val r = tmpRoot("budget")
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("budget-build", "buildAll")
+      try IndexBuild.buildAll(spark, sf, r) finally sc.clearJobGroup()
+      // a marker job: once its start is seen, every earlier one is too
+      sc.setJobGroup("budget-after", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!starts.asScala.exists(_ == "budget-after") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally sc.removeSparkListener(listener)
+    // every chain thread inherits the caller's job group
+    val jobs = starts.asScala.count(_ == "budget-build")
+    assert(jobs <= BuildJobBudget, s"buildAll fired $jobs jobs, over its budget of $BuildJobBudget")
+    CacheRegistry.releaseAll()
+  }
+
+  /** buildAll's jobs on the sf0.001 fixture into a fresh root: 99 with
+    * each shared input computed once (124 when text_meta re-derived
+    * the key set, the flat unit assigned the corpus twice and the
+    * two-level unit evaluated its fine frame three times). */
+  private val BuildJobBudget = 105
 }

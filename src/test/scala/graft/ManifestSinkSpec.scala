@@ -197,6 +197,55 @@ class ManifestSinkSpec extends AnyFunSuite {
       "both the swap and the post-claim commit must survive")
   }
 
+  test("one claim per sequence number: an append landing between a checkpoint's " +
+      "slot listing and its rename takes another seq and stays visible") {
+    import spark.implicits._
+    val dir = tmpDir()
+    Seq((1L, "a"), (2L, "b")).toDF("id", "s")
+      .write.format(fmt).option("path", dir).mode(SaveMode.Append).save()
+    // the append lists the same last seq the checkpoint listed; with the
+    // slot arbitrated on the tagged name both took that seq and the
+    // checkpoint hid the append
+    var raced = false
+    graft.sources.ManifestSink.beforeRenameHook = tag =>
+      if (tag.startsWith("ckpt-") && !raced) {
+        raced = true
+        Seq((99L, "racer")).toDF("id", "s")
+          .write.format(fmt).option("path", dir).mode(SaveMode.Append).save()
+      }
+    try graft.sources.ManifestUpsert.upsert(dir, Seq((2L, "B2")).toDF("id", "s"), Seq("id"))
+    finally graft.sources.ManifestSink.beforeRenameHook = _ => ()
+    assert(raced, "the seam must have run the racing append")
+    val rows = spark.read.format(fmt).option("path", dir).load()
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(rows === Map(1L -> "a", 2L -> "B2", 99L -> "racer"),
+      "the racing append must survive the checkpoint")
+    val names = new File(dir).list().toSeq
+    val seqs = names.filter(_.startsWith("_manifest-"))
+      .map(_.stripPrefix("_manifest-").takeWhile(_.isDigit))
+    assert(seqs.distinct.size == seqs.size, s"two manifests share a seq: $names")
+    assert(!names.exists(_.startsWith("_claim-")), s"claims must be released: $names")
+  }
+
+  test("a listed manifest absorbed by a concurrent rewrite before it is read " +
+      "raises ConcurrentModificationException, the retry signal") {
+    import spark.implicits._
+    val dir = tmpDir()
+    (0 until 2).foreach { i =>
+      Seq((i.toLong, s"v$i")).toDF("id", "s")
+        .write.format(fmt).option("path", dir).mode(SaveMode.Append).save()
+    }
+    val root = new File(dir)
+    val listed = graft.sources.ManifestSink.sortedManifests(root)
+    graft.sources.ManifestSink.compact(dir) // deletes what its checkpoint hides
+    val err = intercept[java.util.ConcurrentModificationException](
+      graft.sources.ManifestSink.entriesOf(listed))
+    assert(err.getMessage.contains("retry"))
+    assert(graft.sources.ManifestSink.filesOf(
+      graft.sources.ManifestSink.sortedManifests(root)).size == 2,
+      "a fresh listing reads the checkpoint")
+  }
+
   test("batch commit re-keys data-file mtime to publish time, so vacuum's grace " +
       "window cannot reclaim a straggler task's just-published files") {
     val dir = tmpDir()
