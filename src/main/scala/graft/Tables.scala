@@ -64,6 +64,9 @@ object Tables {
   * session time zone for oracle parity.
   */
 object GraftSession {
+  /** Finished SQL executions Spark's status store keeps. */
+  val RetainedExecutions = 50
+
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
@@ -74,6 +77,14 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // the status listeners run with the UI off too: by default the
+      // store keeps 1000 executions (plan description + SQLPlanMetrics
+      // each) and 1000 jobs and stages, which nothing here reads, so a
+      // long-lived session's heap grew ~8 MB per admission batch.
+      // Executions, stages and jobs are the caps that moved it.
+      .config("spark.sql.ui.retainedExecutions", RetainedExecutions.toString)
+      .config("spark.ui.retainedStages", "100")
+      .config("spark.ui.retainedJobs", "100")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

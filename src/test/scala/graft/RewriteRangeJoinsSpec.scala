@@ -16,6 +16,9 @@ class RewriteRangeJoinsSpec extends AnyFunSuite {
   // one extensions-enabled session for the whole suite, sharing the
   // SparkContext; active/default are restored after each use
   private def withExtSession[A](f: SparkSession => A): A = {
+    // the shared SparkContext comes from GraftSession, with its
+    // session-wide defaults, even when this suite runs first
+    plain
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     val s = SparkSession.builder()

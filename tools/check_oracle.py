@@ -24,7 +24,7 @@ def main(sf_dir, out_dir):
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         # driver fixtures are single files; Spark-written fixtures
-        # (e.g. the MakeSf1 overflow corpus) are directories of parts
+        # (e.g. the `Soak make-sf1` overflow corpus) are directories of parts
         src = f"{p}/*.parquet" if os.path.isdir(p) else p
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
     with open(f"{out_dir}/oracle_sql.json") as f:

@@ -12,7 +12,7 @@
 #    bottleneck rule): q157 trained serve and q156 two-level serve
 #    against ONE distributed brute parent on the 32-query
 #    deterministic sample — 32 x 2M candidate pairs, feasible at any
-#    decade because the sample is fixed-|Q|. ProofSf10 prints the
+#    decade because the sample is fixed-|Q|. Soak proof-sf10 prints the
 #    q155 id-filter SKIP line with the measured reason (286k cells).
 #  - DuckDB hash gate for q159 (|Q|-bounded oracle: 32 x n exact leg).
 #    q154's oracle embeds tier builds over fixture densities — out by
@@ -21,8 +21,8 @@
 #    the fixture probe rule makes |Q| proportional to n, so the
 #    full-|Q| q160 was quadratic BY FIXTURE CONSTRUCTION past sf10
 #    (measured: its posting-join sort spilled past 79 GB free before
-#    ENOSPC) — a defect of the rule, not the operator. MakeSf10 now
-#    writes a 32-row queries table and ProofSf10 runs the FULL q160
+#    ENOSPC) — a defect of the rule, not the operator. Soak make-sf10 now
+#    writes a 32-row queries table and Soak proof-sf10 runs the FULL q160
 #    composition (in-query train -> store -> trained exact-pruned
 #    dense serve -> df-pruned sparse -> rrfFuse) through the public
 #    parameterized verb under it, gated == the brute-dense fusion.
@@ -39,16 +39,16 @@ DUCK_QUERIES="q159_hub_audit_sampled"
 
 if [ ! -f "$SF100_DIR/embeddings.parquet/_SUCCESS" ] || [ "${REBUILD_SF100:-0}" = 1 ]; then
   echo "== building sf100 fixture at $SF100_DIR"
-  sbt -batch "runMain graft.MakeSf10 $SF100_DIR 1000"
+  sbt -batch "runMain graft.Soak make-sf10 $SF100_DIR 1000"
 fi
 
-echo "== Spark exactness gates + third-decade timings (ProofSf10 at sf100)"
+echo "== Spark exactness gates + third-decade timings (Soak proof-sf10 at sf100)"
 # r17 advice: capture to a file and check sbt's own exit status BEFORE
 # grep-filtering — `sbt | grep || true` swallowed a failed exactness
 # require and the regenerated report silently omitted the failed rows.
 PROOF_LOG=$(mktemp)
-sbt -batch "runMain graft.ProofSf10 $SF100_DIR all q159_hub_audit_sampled" > "$PROOF_LOG" 2>&1 || {
-  echo "ProofSf10 FAILED (exit $?) — full log follows, report NOT regenerated" >&2
+sbt -batch "runMain graft.Soak proof-sf10 $SF100_DIR all q159_hub_audit_sampled" > "$PROOF_LOG" 2>&1 || {
+  echo "Soak proof-sf10 FAILED (exit $?) — full log follows, report NOT regenerated" >&2
   cat "$PROOF_LOG" >&2
   exit 1
 }
@@ -72,7 +72,7 @@ cat > CORRECTNESS_SF100.md <<EOF
 Regenerated by \`tools/run_sf100_proofs.sh\` — do not hand-edit.
 
 1000x the sf0.1 \`documents\`/\`embeddings\` tables (5M docs, 2M
-vectors — MakeSf10 at mult=1000, ids under the 2^21 stride so every
+vectors — Soak make-sf10 at mult=1000, ids under the 2^21 stride so every
 derived template stays inside its documented < 2^31 id domain). The
 second decade (CORRECTNESS_SF10.md) measured why the trained sqrt-n
 path must exist; this capture is the decade where the fixture-density

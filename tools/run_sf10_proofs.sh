@@ -8,7 +8,7 @@
 #    (q152 — posting join capped at frac*N per term).
 #  - Spark =-to-parent gates where the oracle itself is the
 #    bottleneck (the verdict's stated rule): q155/q156/q157/q158
-#    against ONE distributed brute-force parent pass (ProofSf10) —
+#    against ONE distributed brute-force parent pass (Soak proof-sf10) —
 #    the same exactness the DuckDB hash gate proves at sf0.01/sf1.
 #
 # q149 gets a timing row only here (approximate tier — no exactness
@@ -26,21 +26,21 @@ OUT_DIR=${OUT_DIR:-/tmp/verify_sf10}
 # assignment leg is n x ncells x 64-dim list arithmetic in DuckDB
 # (8e10 ops at sf10 — the oracle itself is the bottleneck, the r16
 # verdict's stated proviso). Their hash gates live at sf0.01 + sf1;
-# here they carry second-decade TIMING rows from ProofSf10.
+# here they carry second-decade TIMING rows from Soak proof-sf10.
 DUCK_QUERIES="q154_agreement_sampled,q159_hub_audit_sampled"
 
 if [ ! -f "$SF10_DIR/embeddings.parquet/_SUCCESS" ] || [ "${REBUILD_SF10:-0}" = 1 ]; then
   echo "== building sf10 fixture at $SF10_DIR"
-  sbt -batch "runMain graft.MakeSf10 $SF10_DIR 100"
+  sbt -batch "runMain graft.Soak make-sf10 $SF10_DIR 100"
 fi
 
-echo "== Spark exactness gates + timings (ProofSf10)"
+echo "== Spark exactness gates + timings (Soak proof-sf10)"
 # r17 advice: capture to a file and check sbt's own exit status BEFORE
 # grep-filtering — `sbt | grep || true` swallowed a failed exactness
 # require and the regenerated report silently omitted the failed rows.
 PROOF_LOG=$(mktemp)
-sbt -batch "runMain graft.ProofSf10 $SF10_DIR all" > "$PROOF_LOG" 2>&1 || {
-  echo "ProofSf10 FAILED (exit $?) — full log follows, report NOT regenerated" >&2
+sbt -batch "runMain graft.Soak proof-sf10 $SF10_DIR all" > "$PROOF_LOG" 2>&1 || {
+  echo "Soak proof-sf10 FAILED (exit $?) — full log follows, report NOT regenerated" >&2
   cat "$PROOF_LOG" >&2
   exit 1
 }
@@ -66,7 +66,7 @@ Regenerated by \`tools/run_sf10_proofs.sh\` — do not hand-edit.
 The production twins' growth classes are proven at one decade
 (sf0.1 → sf1, CORRECTNESS_SF1.md); this capture adds the second:
 100× the sf0.1 \`documents\`/\`embeddings\` tables (500k docs, 200k
-vectors — MakeSf10, the MakeSf1 offset rule). Gates follow the r16
+vectors — Soak make-sf10, the Soak make-sf1 offset rule). Gates follow the r16
 verdict's rule: DuckDB hash gates where the oracle stays feasible
 (the |Q|-bounded sampled twins + the df-capped hybrid), Spark
 ≡-to-parent gates where the brute-force oracle is itself the

@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # Regenerate the sf1 hash-proof capture at HEAD (round-15 verdict ask
 # #7: CORRECTNESS_SF1.md was hand-run prose; this folds
-# MakeSf1 → Verify → check_oracle into one committed entrypoint so the
+# Soak make-sf1 → Verify → check_oracle into one committed entrypoint so the
 # sf1 proofs regenerate at every round close).
 #
 #   tools/run_sf1_proofs.sh              # reuse /tmp/graft_sf1 if present
@@ -35,7 +35,7 @@ q164_shard_manifest,q165_filtered_hybrid,q166_tokenizer_drift,q167_retracted_man
 
 if [ ! -f "$SF1_DIR/lineitem.parquet/_SUCCESS" ] || [ "${REBUILD_SF1:-0}" = 1 ]; then
   echo "== building sf1 fixture at $SF1_DIR"
-  sbt -batch "runMain graft.MakeSf1 $SF1_DIR 10"
+  sbt -batch "runMain graft.Soak make-sf1 $SF1_DIR 10"
 fi
 
 echo "== dumping Spark results for the sf1-proven set"
@@ -73,10 +73,10 @@ scale and carries the hash gate here.
 ## How it was produced (reproducible)
 
 \`\`\`bash
-tools/run_sf1_proofs.sh          # MakeSf1 (if absent) -> Verify -> check_oracle
+tools/run_sf1_proofs.sh          # Soak make-sf1 (if absent) -> Verify -> check_oracle
 \`\`\`
 
-\`MakeSf1\` replicates the fact tables 10× with offset primary keys
+\`Soak make-sf1\` replicates the fact tables 10× with offset primary keys
 and unchanged foreign keys (dimensions copied at 1×), reading/writing
 raw parquet so both engines face identical physical types. The
 comparison is the driver's own contract (columns sorted by name, rows
