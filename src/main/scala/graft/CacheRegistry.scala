@@ -139,12 +139,12 @@ object CacheRegistry {
 }
 
 /** [[CacheRegistry]]'s sibling for DRIVER-SIDE models (k-means
-  * centroid seqs, two-level [[graft.operators.Clustering.HierModel]]s)
+  * centroid seqs, two-level [[graft.operators.Clustering.CellModel]]s)
   * — the model-sized artifacts whose TRAINING runs Spark jobs but
   * whose value lives on the driver, so `persist` cannot memoize them.
   * Before this registry, every clustering query re-ran the same
   * 2-iteration Lloyd training per invocation (q130–q141 each trained
-  * the identical HierModel from the identical cached corpus —
+  * the identical two-level model from the identical cached corpus —
   * 8 redundant trainings per suite pass, and Bench re-trained on
   * every rep because only frames survive between reps).
   *

@@ -56,6 +56,15 @@ object Soak {
     run(args.toSeq.drop(1))
   }
 
+  /** Every line the harness prints goes through this one UTF-8 stream:
+    * the JVM's default charset follows the locale (ASCII under POSIX on
+    * OpenJDK 17), which printed "—" and "≡" as "?". The JVM-wide
+    * `file.encoding` stays as it is — other code encodes bytes with the
+    * default charset. */
+  private val out = new java.io.PrintStream(
+    new java.io.FileOutputStream(java.io.FileDescriptor.out), true, "UTF-8")
+  private def println(line: Any): Unit = out.println(line)
+
   private def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
   private def intArg(args: Seq[String], i: Int, default: Int): Int =
     args.lift(i).map(_.toInt).getOrElse(default)
@@ -231,11 +240,10 @@ object Soak {
       // q115: one (type, day) count aggregate is the only corpus-
       // sized stage — the soak checks the corpus pass is the cost
       "q115_volume_anomaly" -> volumeAnomaly _)
-    println(f"## ETL soak: sf0.1 events x$n (users x$n, same per-user density)")
+    println(f"## ETL soak: $sfDir events x$n (users x$n, same per-user density)")
     ops.foreach { case (name, fn) =>
-      def row(dir: String) = (timed(noop(fn(spark, dir)))._2, fn(spark, dir).count())
-      val (t1, c1) = row(sfDir)
-      val (tn, cn) = row(soakDir)
+      val ((_, t1), (_, tn)) = growth(noop(fn(spark, sfDir)), noop(fn(spark, soakDir)))
+      val (c1, cn) = (fn(spark, sfDir).count(), fn(spark, soakDir).count())
       println(f"$name%-24s 1x: $t1%6.2f s ($c1%9d rows)   ${n}x: $tn%6.2f s ($cn%10d rows)   growth ${tn / t1}%4.1fx")
     }
   }
@@ -594,7 +602,7 @@ object Soak {
     // each one pays the full cell probe + exact verify.
     CacheRegistry.withCaches {
       val v = Clustering.fixedPoint(spark, sfDir)
-      val cents = Clustering.trainCentroids(v)
+      val cents = Clustering.CellModel.Flat(Clustering.trainCentroids(v))
       val stored = Clustering.assignedCorpus(v, cents).persist()
       stored.count() // materialize the stored side outside the timings
       def arrivals(dir: String) = Tables.embeddings(spark, dir)
@@ -701,7 +709,7 @@ object Soak {
     CacheRegistry.withCaches {
       val v = fresh(100000L).persist(); v.count()
       val m = Clustering.trainHierarchical(v, 64)
-      val exact = Clustering.assignWith(v.select(col("vec_id"), col("x")), m.fine.flatten)
+      val exact = Clustering.assignWith(v.select(col("vec_id"), col("x")), m.fines.flatten)
         .select(col("vec_id"), col("dist").as("tdist")).persist()
       exact.count()
       Seq(1, 2, 4, 8).foreach { np =>
@@ -801,7 +809,8 @@ object Soak {
     // ---------------- vector side ----------------
     def buildVecRoot(): String = {
       val root = tmpRoot("graft-soak-delta-vecs")
-      IndexBuild.buildFlatVectorArtifacts(spark, Clustering.fixedPoint(spark, sfDir), root)
+      IndexBuild.buildVectorUnit(spark, Clustering.fixedPoint(spark, sfDir), root,
+        IndexBuild.FlatUnit)
       root
     }
     def freshVecs(m: Long, offset: Long): DataFrame =
@@ -1374,10 +1383,9 @@ object Soak {
           "q159_hub_audit_sampled", "q160_hybrid_exact_trained"))
       val todo = if (mode.startsWith("q1")) all.filter(_.startsWith(mode)) else all
       todo.foreach { name =>
-        Console.out.println(s"[sf10] starting $name"); Console.out.flush()
+        println(s"[sf10] starting $name")
         val (_, t) = CacheRegistry.withCaches(timed(noop(SparkEntry.queries(name)(spark, dir))))
         println(f"$name%-44s $t%8.2f s  (cold)")
-        Console.out.flush()
       }
     }
   }

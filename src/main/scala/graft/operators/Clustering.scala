@@ -187,7 +187,7 @@ object Clustering {
   /** [[trainHierarchical]] over the dir-cached corpus, memoized like
     * [[centroidsFor]] — q130–q141 all train this identical model. */
   def hierModelFor(spark: SparkSession, dir: String,
-      k: Int = HierK, iters: Int = Iters): HierModel = {
+      k: Int = HierK, iters: Int = Iters): CellModel.TwoLevel = {
     val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
       fixedPoint(spark, dir))
     graft.ModelRegistry.getOrCompute(spark, s"clustering.hier:$dir:$k:$iters")(
@@ -774,14 +774,6 @@ object Clustering {
   private def d2(x: Column, cv: Column): Column =
     graft.functions.FixedPointOps.sqDistL2(x, cv)
 
-  /** Two-level k-means model: kc ≈ √k coarse centroids, and per
-    * coarse cell up to `kf` fine centroids trained on that cell's
-    * members alone. Global cell id = ccl · kf + fcl. */
-  final case class HierModel(
-      coarse: Seq[Array[Long]],
-      fine: Seq[Seq[Array[Long]]],
-      kf: Int)
-
   /** TWO-LEVEL Lloyd — the assignment-stage scale path when k grows
     * with the corpus. Flat nearest-centroid assignment costs O(n·k·d)
     * per pass; at the SemDeDup operating point (k ≈ n / cell) that is
@@ -804,7 +796,8 @@ object Clustering {
     * of bounded cell size, not the Lloyd optimum. Everything stays
     * fixed-point integer, so the model is as portable and the
     * assignment as deterministic as the flat path's. */
-  def trainHierarchical(v: DataFrame, k: Int = K, iters: Int = Iters): HierModel = {
+  private[graft] def trainHierarchical(v: DataFrame, k: Int = K,
+      iters: Int = Iters): CellModel.TwoLevel = {
     val kc = math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
     val kf = math.max(1, math.ceil(k.toDouble / kc).toInt)
     val coarse = trainCentroids(v, kc, iters)
@@ -825,7 +818,7 @@ object Clustering {
       if (s.nonEmpty) s else Seq(coarse(c))
     }
     val fine = (1 until iters).foldLeft(fine0) { (f, _) => updateFine(asgC, f) }
-    HierModel(coarse, fine, kf)
+    literalTwoLevel(v.sparkSession, coarse, fine, kf, k)
   }
 
   /** One distributed fine-Lloyd round over every coarse cell at once:
@@ -857,14 +850,15 @@ object Clustering {
     }
   }
 
-  /** Coarse-then-fine assignment: 2√k distances per vector (vs k for
-    * flat), one projection, zero shuffle — the model rides the plan
-    * as two literals. Output matches [[assignWith]]'s shape so every
-    * blocking consumer ([[semdedupPruneOf]], the gate's assigned
-    * corpus) takes it unchanged. */
-  def assignHierarchical(v: DataFrame, m: HierModel): DataFrame = {
+  /** Coarse-then-fine assignment, the LITERAL kernel: 2√k distances
+    * per vector (vs k for flat), one projection, zero shuffle — the
+    * model rides the plan as two literals. Output matches
+    * [[assignWith]]'s shape so every blocking consumer
+    * ([[semdedupPruneOf]], the gate's assigned corpus) takes it
+    * unchanged. */
+  private[graft] def assignHierarchical(v: DataFrame, m: CellModel.TwoLevel): DataFrame = {
     val coarseLit = typedLit(m.coarse.map(_.toSeq))
-    val finesLit = typedLit(m.fine.map(_.map(_.toSeq)))
+    val finesLit = typedLit(m.fines.map(_.map(_.toSeq)))
     v.withColumn("casg",
         graft.functions.FixedPointOps.nearestOfL2(col("x"), coarseLit))
       .withColumn("ccl", col("casg.cid"))
@@ -884,7 +878,7 @@ object Clustering {
   /** Ceiling for the fine table travelling as a PLAN LITERAL / driver
     * collect: k·d longs. 2²¹ longs = 16 MB — comfortably inside task
     * serialization. Beyond it the fine table is DATA
-    * ([[HierModelDf]]): at the library's own operating point
+    * ([[CellModel.TwoLevel]]'s joined kernels): at the library's own operating point
     * (k = kForCorpus(n) ∝ n) a 10¹⁰-vector corpus makes k·d ≈ 6.4e8
     * longs ≈ 5 GB — a literal that size dies in task serialization
     * long before the compute does, which is why the joined path
@@ -901,43 +895,189 @@ object Clustering {
     * corpus. */
   val FineBroadcastMaxRows: Long = 1L << 20
 
-  /** Two-level model with the FINE half as a DataFrame — one row per
-    * fine centroid, keyed on the coarse cell: (ccl INT, fcl INT,
-    * fv ARRAY<BIGINT>). `kTotal` is the requested k (bounds the fine
-    * row count; drives the literal-vs-joined dispatch). The coarse
-    * table remains driver-resident ([[FineLiteralMaxEntries]]'s
-    * scaladoc: √k·d is model-sized at any scale this library
-    * targets). */
-  final case class HierModelDf(
-      coarse: Seq[Array[Long]],
-      fine: DataFrame,
-      kf: Int,
-      kTotal: Int)
+  /** ONE CELL MODEL in two forms — flat centroids ([[CellModel.Flat]])
+    * and the two-level model ([[CellModel.TwoLevel]]). Every
+    * cell-blocked consumer (the semantic gate, delta admission, the
+    * staleness monitor, streaming drift, the nightly build) takes a
+    * model and calls these verbs; the model picks its own kernel, and
+    * the output shapes are the same in both forms — cells are cells,
+    * whichever model produced them. */
+  sealed trait CellModel extends Product with Serializable {
+    /** The cell count the build's cap rule divides by: the centroid
+      * count of a flat model, the requested k of a two-level one. */
+    def k: Int
 
-  /** The fine table of a driver-resident model as a frame — interop
-    * seam (spec-pins joined ≡ literal on the same model; serve paths
-    * that loaded a literal model can switch to the joined probe). */
-  def fineFrameOf(spark: SparkSession, m: HierModel): DataFrame = {
-    import spark.implicits._
-    m.fine.indices.flatMap(c =>
-        m.fine(c).indices.map(f => (c, f, m.fine(c)(f).toSeq)))
-      .toDF("ccl", "fcl", "fv")
+    /** Nearest-cell assignment: `v`'s columns plus (cluster, dist). */
+    def assign(v: DataFrame): DataFrame
+
+    /** The cells a cell-equi-join consumer probes. nprobe 1: the
+      * assignment as (vec_id, x, cluster). nprobe 2: each vector
+      * exploded to (vec_id, x, probe, cluster) rows — probe 1 the
+      * GREEDY cell, probe 2 the second-nearest — so the consumer
+      * searches BOTH sides of the vector's cell boundary. The two cells
+      * are always DISTINCT and a corpus vector lives in exactly one
+      * cell, so each (vec_id, corpus) pair downstream of the join
+      * occurs at most once — no dedup aggregation needed, append-mode
+      * stays legal. */
+    def probeCells(v: DataFrame, nprobe: Int): DataFrame
+
+    /** The best of the two probes with its audit flag, (vec_id,
+      * cluster, dist, improved): improved = 1 where the second probe
+      * found a STRICTLY smaller distance than the greedy cell's best
+      * (q136). The literal kernels also carry `v`'s other columns. */
+    def improved(v: DataFrame): DataFrame
+
+    /** Persist as a [[FpIndex]] flat table of 1NF longs — bit-exact
+      * round-trip, and the generation-append rebuild/pinned-reader
+      * contract applies unchanged. [[loadCentroids]] reads either
+      * layout back. */
+    def save(spark: SparkSession, path: String): Unit
   }
 
-  /** Collect a (bounded) frame model back to the literal form — the
-    * threshold dispatch's small-k branch. Callers guard on
-    * [[FineLiteralMaxEntries]]; the collect is k·d by construction. */
-  def collectHierModel(m: HierModelDf): HierModel = {
-    val rows = m.fine.select(col("ccl"), col("fcl"), col("fv")).collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toArray))
-    val byC = rows.groupBy(_._1)
-    val fine = m.coarse.indices.map { c =>
-      byC.get(c) match {
-        case Some(sub) => sub.sortBy(_._2).map(_._3).toSeq
-        case None => Seq(m.coarse(c)) // mirror trainHierarchical's fallback
+  object CellModel {
+
+    /** Flat centroids: k·d longs riding every plan as one literal (the
+      * driver-resident-quantizer pattern of [[Similarity]]'s IVF
+      * tier). */
+    final case class Flat(cents: Seq[Array[Long]]) extends CellModel {
+      override def k: Int = cents.length
+
+      override def assign(v: DataFrame): DataFrame = assignWith(v, cents)
+
+      /** At nprobe 2 the top-2 nearest centroids ARE the two probe
+        * cells (one codegen'd pass over the k·d literal — no second
+        * scan). */
+      override def probeCells(v: DataFrame, nprobe: Int): DataFrame =
+        if (probesOne(nprobe)) greedyCells(assign(v))
+        else {
+          require(cents.size >= 2, "nprobe=2 needs >= 2 cells")
+          val cc = typedLit(cents.map(_.toSeq))
+          v.withColumn("p", graft.functions.FixedPointOps.nearest2OfL2(col("x"), cc))
+            .select(col("vec_id"), col("x"),
+              explode(array(
+                struct(lit(1).as("probe"), col("p.cid1").as("cluster")),
+                struct(lit(2).as("probe"), col("p.cid2").as("cluster")))).as("pb"))
+            .select(col("vec_id"), col("x"),
+              col("pb.probe").as("probe"), col("pb.cluster").as("cluster"))
+        }
+
+      /** A flat model's nearest centroid is the exact argmin, so no
+        * second probe can improve on it. */
+      override def improved(v: DataFrame): DataFrame = assign(v).withColumn("improved", lit(0))
+
+      /** (cid, pos, v) rows — k·d, model-sized like the IVF quantizer. */
+      override def save(spark: SparkSession, path: String): Unit = {
+        import spark.implicits._
+        val rows = cents.zipWithIndex.flatMap { case (cv, cid) =>
+          cv.zipWithIndex.map { case (v, pos) => (cid, pos, v) }
+        }
+        FpIndex.saveOrRebuildFlat(spark, path,
+          rows.toDF("cid", "pos", "v").repartition(1))
       }
     }
-    HierModel(m.coarse, fine, m.kf)
+
+    /** Two-level k-means model: kc ≈ √k coarse centroids, and per
+      * coarse cell up to `kf` fine centroids trained on that cell's
+      * members alone. Global cell id = ccl · kf + fcl. The coarse
+      * table (√k·d) stays driver-resident ([[FineLiteralMaxEntries]]'s
+      * scaladoc); the FINE table is held once, as the frame `fine` —
+      * one row per fine centroid keyed on the coarse cell: (ccl INT,
+      * fcl INT, fv ARRAY<BIGINT>). `k` is the requested k: it bounds
+      * the fine row count and picks the kernel. While k·[[Dim]] fits
+      * [[FineLiteralMaxEntries]] the fine table is collected once, on
+      * first use, and every verb runs the LITERAL kernel (zero shuffle,
+      * legal in a stream); past it every verb runs the JOINED kernel,
+      * which equi-joins the fine frame on the coarse cell and
+      * aggregates — batch-only, so a streaming caller runs the same call
+      * on each micro-batch through `writeStream.foreachBatch` (the
+      * streaming MERGE precedent). */
+    final case class TwoLevel(coarse: Seq[Array[Long]], fine: DataFrame, kf: Int, k: Int)
+        extends CellModel {
+
+      /** Whether the fine table travels as a plan literal. */
+      private[graft] def literal: Boolean = k.toLong * Dim <= FineLiteralMaxEntries
+
+      /** The fine table as driver arrays, per coarse cell in fcl order
+        * — collected at most once, k·d longs under the [[literal]]
+        * guard. A coarse cell without fine rows falls back to the
+        * coarse centroid, mirroring [[trainHierarchical]]. */
+      private[graft] lazy val fines: Seq[Seq[Array[Long]]] = {
+        val byC = fine.select(col("ccl"), col("fcl"), col("fv")).collect()
+          .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toArray))
+          .groupBy(_._1)
+        coarse.indices.map { c =>
+          byC.get(c) match {
+            case Some(sub) => sub.sortBy(_._2).map(_._3).toSeq
+            case None => Seq(coarse(c))
+          }
+        }
+      }
+
+      /** The joined kernels aggregate, which a stream cannot. */
+      private def batchOnly(v: DataFrame): DataFrame = {
+        require(!v.isStreaming,
+          s"a two-level model with k=$k is past FineLiteralMaxEntries, and its joined " +
+            "kernel aggregates, which a stream cannot: run this call on each micro-batch " +
+            "through writeStream.foreachBatch")
+        v
+      }
+
+      override def assign(v: DataFrame): DataFrame =
+        if (literal) assignHierarchical(v, this)
+        else assignHierarchicalJoined(batchOnly(v), this)
+
+      override def probeCells(v: DataFrame, nprobe: Int): DataFrame =
+        if (probesOne(nprobe)) greedyCells(assign(v))
+        else if (literal) multiProbeCells(v, this)
+        else multiProbeCellsJoined(batchOnly(v), this)
+
+      override def improved(v: DataFrame): DataFrame =
+        if (literal) multiProbeAssign(v, this)
+        else multiProbeAssignJoined(batchOnly(v), this)
+
+      /** (kind, ccl, fcl, pos, v) rows: kind 0 = meta (kf in `v`, the
+        * requested k in `pos`), kind 1 = coarse (ccl, pos), kind 2 =
+        * fine (ccl, fcl, pos) — ~2·k·d rows. The fine frame explodes to
+        * its rows DISTRIBUTED, never collected, so the save is legal at
+        * any k. */
+      override def save(spark: SparkSession, path: String): Unit = {
+        import spark.implicits._
+        val metaCoarse =
+          (Seq((0, 0, 0, k, kf.toLong)) ++
+            coarse.indices.flatMap(c =>
+              coarse(c).indices.map(p => (1, c, 0, p, coarse(c)(p)))))
+            .toDF("kind", "ccl", "fcl", "pos", "v")
+        val fineRows = fine
+          .select(col("ccl"), col("fcl"), posexplode(col("fv")))
+          .select(lit(2).as("kind"), col("ccl"), col("fcl"),
+            col("pos"), col("col").as("v"))
+        FpIndex.saveOrRebuildFlat(spark, path, metaCoarse.unionByName(fineRows))
+      }
+    }
+  }
+
+  /** Probe cells come in two widths; [[multiProbeAssignN]] tunes wider
+    * assignment. */
+  private def probesOne(nprobe: Int): Boolean = {
+    require(nprobe == 1 || nprobe == 2, s"nprobe $nprobe: probe cells are nprobe 1 or 2")
+    nprobe == 1
+  }
+
+  /** The nprobe-1 probe cells: the assignment's (vec_id, x, cluster). */
+  private def greedyCells(asg: DataFrame): DataFrame =
+    asg.select(col("vec_id"), col("x"), col("cluster"))
+
+  /** A two-level model whose fine table is already on the driver
+    * (literal training, planted geometry): the frame is a local
+    * relation, so [[CellModel.TwoLevel.fines]] reads it back without a
+    * job. */
+  private[graft] def literalTwoLevel(spark: SparkSession, coarse: Seq[Array[Long]],
+      fines: Seq[Seq[Array[Long]]], kf: Int, k: Int): CellModel.TwoLevel = {
+    import spark.implicits._
+    CellModel.TwoLevel(coarse,
+      fines.indices.flatMap(c => fines(c).indices.map(f => (c, f, fines(c)(f).toSeq)))
+        .toDF("ccl", "fcl", "fv"),
+      kf, k)
   }
 
   /** Coarse-then-fine assignment with the fine model as DATA — the
@@ -956,12 +1096,12 @@ object Clustering {
     * path unchanged. Cost per vector: √k coarse distances map-side +
     * kf candidate rows through one map-side-combined aggregate —
     * O(√k) work and O(√k) shuffled rows, with NO k·d task literal. */
-  def assignHierarchicalJoined(v: DataFrame, m: HierModelDf): DataFrame = {
+  private[graft] def assignHierarchicalJoined(v: DataFrame, m: CellModel.TwoLevel): DataFrame = {
     val carry = v.columns.filterNot(_ == "vec_id")
     val coarseLit = typedLit(m.coarse.map(_.toSeq))
     val asgC = v.withColumn("ccl",
       graft.functions.FixedPointOps.nearestOfL2(col("x"), coarseLit).getField("cid"))
-    val f = if (m.kTotal.toLong <= FineBroadcastMaxRows) broadcast(m.fine) else m.fine
+    val f = if (m.k.toLong <= FineBroadcastMaxRows) broadcast(m.fine) else m.fine
     asgC.join(f, Seq("ccl"))
       .withColumn("fdist", d2(col("x"), col("fv")))
       .groupBy(col("vec_id"))
@@ -971,14 +1111,6 @@ object Clustering {
         (col("m.ccl") * lit(m.kf) + col("m.fcl")).as("cluster") :+
         col("m.fdist").as("dist"): _*)
   }
-
-  /** Threshold-dispatched assignment over a frame model: collect to
-    * the zero-shuffle literal path while k·d fits task serialization,
-    * the joined path beyond. */
-  def assignHier(v: DataFrame, m: HierModelDf): DataFrame =
-    if (m.kTotal.toLong * Dim <= FineLiteralMaxEntries)
-      assignHierarchical(v, collectHierModel(m))
-    else assignHierarchicalJoined(v, m)
 
   /** TWO-LEVEL Lloyd with the fine model as FRAMES end to end — the
     * training counterpart of [[assignHierarchicalJoined]]: no k·d
@@ -996,7 +1128,8 @@ object Clustering {
     * frame; at the default iters=2 that is one update. Deployments
     * running many rounds should materialize the frame per round
     * (persist/checkpoint) — the frame is k rows, cheap to pin. */
-  def trainHierarchicalFrames(v: DataFrame, k: Int = K, iters: Int = Iters): HierModelDf = {
+  def trainHierarchicalFrames(v: DataFrame, k: Int = K,
+      iters: Int = Iters): CellModel.TwoLevel = {
     val spark = v.sparkSession
     import spark.implicits._
     val kc = math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
@@ -1018,7 +1151,7 @@ object Clustering {
       .select(col("ccl"), lit(0).as("fcl"), col("fv"))
     val fine0 = seeds.unionByName(missing)
     val fine = (1 until iters).foldLeft(fine0) { (f, _) => updateFineFrame(asgC, f) }
-    HierModelDf(coarse, fine, kf, k)
+    CellModel.TwoLevel(coarse, fine, kf, k)
   }
 
   /** One fine-Lloyd round, frames end to end: equi-join fine
@@ -1070,7 +1203,7 @@ object Clustering {
   def hierAssign(spark: SparkSession, dir: String): DataFrame = {
     val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
       fixedPoint(spark, dir))
-    assignHierarchical(v, hierModelFor(spark, dir))
+    hierModelFor(spark, dir).assign(v)
       .select(col("vec_id"), col("cluster"), col("dist"))
   }
 
@@ -1137,7 +1270,7 @@ object Clustering {
     val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
       fixedPoint(spark, dir))
     semdedupPruneOf(
-      assignHierarchical(v, hierModelFor(spark, dir))
+      hierModelFor(spark, dir).assign(v)
         .select(col("vec_id"), col("x"), col("cluster")))
   }
 
@@ -1174,8 +1307,9 @@ object Clustering {
     * Scale shape: the top-2 coarse step is ONE codegen'd pass over
     * the √k·d literal ([[graft.functions.FixedPointOps.nearest2OfL2]]
     * — no second scan, no shuffle); both fine probes index the same
-    * nested literal map-side. Past [[FineLiteralMaxEntries]] the
-    * joined twin ([[multiProbeAssignJoined]]) explodes each vector to
+    * nested literal map-side. Past [[FineLiteralMaxEntries]]
+    * [[CellModel.improved]] runs the joined kernel
+    * ([[multiProbeAssignJoined]]), which explodes each vector to
     * its two probe rows, equi-joins the fine FRAME on `ccl` (2·kf
     * candidate rows per vector) and takes both the global and the
     * greedy argmin in ONE aggregate — the q130 joined-path shape at
@@ -1183,16 +1317,16 @@ object Clustering {
   def hierAssignMultiProbe(spark: SparkSession, dir: String): DataFrame = {
     val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
       fixedPoint(spark, dir))
-    multiProbeAssign(v, hierModelFor(spark, dir))
+    hierModelFor(spark, dir).improved(v)
       .select(col("vec_id"), col("cluster"), col("dist"), col("improved"))
   }
 
   /** Literal-model multi-probe: requires ≥ 2 coarse cells (the
     * top-2 kernel is null on a one-cell model — a model with no
     * second list has no second probe). */
-  def multiProbeAssign(v: DataFrame, m: HierModel): DataFrame = {
+  private[graft] def multiProbeAssign(v: DataFrame, m: CellModel.TwoLevel): DataFrame = {
     val coarseLit = typedLit(m.coarse.map(_.toSeq))
-    val finesLit = typedLit(m.fine.map(_.map(_.toSeq)))
+    val finesLit = typedLit(m.fines.map(_.map(_.toSeq)))
     v.withColumn("p",
         graft.functions.FixedPointOps.nearest2OfL2(col("x"), coarseLit))
       .withColumn("f1", graft.functions.FixedPointOps.nearestOfL2(
@@ -1220,7 +1354,7 @@ object Clustering {
     * and the greedy argmin (the same min filtered to probe rank 1 —
     * `min(when(...))` ignores the rank-2 nulls). Spec-pinned
     * bit-exact against the literal path. */
-  def multiProbeAssignJoined(v: DataFrame, m: HierModelDf): DataFrame = {
+  private[graft] def multiProbeAssignJoined(v: DataFrame, m: CellModel.TwoLevel): DataFrame = {
     val coarseLit = typedLit(m.coarse.map(_.toSeq))
     val probes = v.withColumn("p",
         graft.functions.FixedPointOps.nearest2OfL2(col("x"), coarseLit))
@@ -1230,7 +1364,7 @@ object Clustering {
           struct(lit(2).as("pr"), col("p.cid2").as("ccl")))).as("pb"))
       .select(col("vec_id"), col("x"),
         col("pb.pr").as("pr"), col("pb.ccl").as("ccl"))
-    val f = if (m.kTotal.toLong <= FineBroadcastMaxRows) broadcast(m.fine)
+    val f = if (m.k.toLong <= FineBroadcastMaxRows) broadcast(m.fine)
             else m.fine
     probes.join(f, Seq("ccl"))
       .withColumn("fdist", d2(col("x"), col("fv")))
@@ -1245,22 +1379,17 @@ object Clustering {
           .otherwise(lit(0)).as("improved"))
   }
 
-  /** The nprobe=2 PROBE CELLS of each vector, exploded one row per
-    * probe: (vec_id, x, probe, cluster) — probe 1 is the GREEDY cell
-    * (fine argmin inside the nearest coarse cell, q130's assignment),
-    * probe 2 the fine argmin inside the SECOND-nearest coarse cell.
-    * This is the BLOCKING form of [[multiProbeAssign]]: instead of
-    * reducing the two candidates to one argmin, both cells are kept
-    * as probe targets, so a cell-equi-join consumer (the streaming
-    * semantic gate) searches BOTH sides of the arrival's coarse
-    * boundary. The two cells are always DISTINCT (different coarse
-    * prefix), and a corpus vector lives in exactly one cell, so each
-    * (vec_id, corpus) pair downstream of the join occurs at most
-    * once — no dedup aggregation needed, append-mode stays legal. */
-  def multiProbeCells(v: DataFrame, m: HierModel): DataFrame = {
+  /** The nprobe=2 PROBE CELLS of a two-level model, the literal kernel
+    * of [[CellModel.probeCells]]: probe 1 is the GREEDY cell (fine
+    * argmin inside the nearest coarse cell, q130's assignment), probe
+    * 2 the fine argmin inside the SECOND-nearest coarse cell. This is
+    * the BLOCKING form of [[multiProbeAssign]]: instead of reducing the
+    * two candidates to one argmin, both cells are kept as probe
+    * targets. The two cells always differ in their coarse prefix. */
+  private[graft] def multiProbeCells(v: DataFrame, m: CellModel.TwoLevel): DataFrame = {
     require(m.coarse.size >= 2, "nprobe=2 needs >= 2 coarse cells")
     val coarseLit = typedLit(m.coarse.map(_.toSeq))
-    val finesLit = typedLit(m.fine.map(_.map(_.toSeq)))
+    val finesLit = typedLit(m.fines.map(_.map(_.toSeq)))
     v.withColumn("p",
         graft.functions.FixedPointOps.nearest2OfL2(col("x"), coarseLit))
       .withColumn("f1", graft.functions.FixedPointOps.nearestOfL2(
@@ -1273,22 +1402,6 @@ object Clustering {
             (col("p.cid1") * lit(m.kf) + col("f1.cid")).as("cluster")),
           struct(lit(2).as("probe"),
             (col("p.cid2") * lit(m.kf) + col("f2.cid")).as("cluster")))).as("pb"))
-      .select(col("vec_id"), col("x"),
-        col("pb.probe").as("probe"), col("pb.cluster").as("cluster"))
-  }
-
-  /** [[multiProbeCells]] for a FLAT centroid model: the top-2 nearest
-    * centroids ARE the two probe cells (one codegen'd pass over the
-    * k·d literal — no second scan). Same output shape and uniqueness
-    * contract. */
-  def multiProbeCellsFlat(v: DataFrame, cents: Seq[Array[Long]]): DataFrame = {
-    require(cents.size >= 2, "nprobe=2 needs >= 2 cells")
-    val cc = typedLit(cents.map(_.toSeq))
-    v.withColumn("p", graft.functions.FixedPointOps.nearest2OfL2(col("x"), cc))
-      .select(col("vec_id"), col("x"),
-        explode(array(
-          struct(lit(1).as("probe"), col("p.cid1").as("cluster")),
-          struct(lit(2).as("probe"), col("p.cid2").as("cluster")))).as("pb"))
       .select(col("vec_id"), col("x"),
         col("pb.probe").as("probe"), col("pb.cluster").as("cluster"))
   }
@@ -1307,11 +1420,12 @@ object Clustering {
     * ([[graft.functions.FixedPointOps.nearest2OfL2]]) stays the hot
     * path for the production nprobe=2 point; this form is for
     * frontier measurement and nprobe>2 tuning. */
-  def multiProbeAssignN(v: DataFrame, m: HierModel, nprobe: Int): DataFrame = {
+  private[graft] def multiProbeAssignN(v: DataFrame, m: CellModel.TwoLevel,
+      nprobe: Int): DataFrame = {
     require(nprobe >= 1 && nprobe <= m.coarse.size,
       s"nprobe $nprobe out of range 1..${m.coarse.size}")
     val coarseLit = typedLit(m.coarse.map(_.toSeq))
-    val finesLit = typedLit(m.fine.map(_.map(_.toSeq)))
+    val finesLit = typedLit(m.fines.map(_.map(_.toSeq)))
     val ranked = slice(sort_array(
       transform(coarseLit, (c, i) => struct(
         graft.functions.FixedPointOps.sqDistL2(col("x"), c).as("d"),
@@ -1327,16 +1441,16 @@ object Clustering {
       .drop("best")
   }
 
-  /** [[multiProbeCells]] over a FRAME model — the probe-cells path
+  /** [[multiProbeCells]] over the fine FRAME — the probe-cells path
     * past [[FineLiteralMaxEntries]]: explode each vector to its two
     * coarse probes (the coarse table stays a √k·d literal), equi-join
     * the fine FRAME on `ccl`, one min-struct argmin per (vector,
     * probe), then re-attach `x` by key. BATCH-only (the argmin is an
-    * aggregation) — this is what the streaming gate's `foreachBatch`
-    * form calls per micro-batch when the fine model outgrows the
-    * plan-literal ceiling. Spec-pinned row-equal to the literal
+    * aggregation) — this is what the streaming gate runs per
+    * micro-batch through `foreachBatch` when the fine model outgrows
+    * the plan-literal ceiling. Spec-pinned row-equal to the literal
     * [[multiProbeCells]]. */
-  def multiProbeCellsJoined(v: DataFrame, m: HierModelDf): DataFrame = {
+  private[graft] def multiProbeCellsJoined(v: DataFrame, m: CellModel.TwoLevel): DataFrame = {
     val coarseLit = typedLit(m.coarse.map(_.toSeq))
     val probes = v.withColumn("p",
         graft.functions.FixedPointOps.nearest2OfL2(col("x"), coarseLit))
@@ -1347,7 +1461,7 @@ object Clustering {
         col("x"))
       .select(col("vec_id"), col("x"),
         col("pb.probe").as("probe"), col("pb.ccl").as("ccl"))
-    val f = if (m.kTotal.toLong <= FineBroadcastMaxRows) broadcast(m.fine)
+    val f = if (m.k.toLong <= FineBroadcastMaxRows) broadcast(m.fine)
             else m.fine
     probes.join(f, Seq("ccl"))
       .withColumn("fdist", d2(col("x"), col("fv")))
@@ -1358,14 +1472,6 @@ object Clustering {
       .join(v.select(col("vec_id"), col("x")), Seq("vec_id"))
       .select(col("vec_id"), col("x"), col("probe"), col("cluster"))
   }
-
-  /** Threshold-dispatched multi-probe over a frame model —
-    * [[assignHier]]'s twin at nprobe = 2: the zero-shuffle literal
-    * path while k·d fits task serialization, the joined path beyond. */
-  def multiProbeHier(v: DataFrame, m: HierModelDf): DataFrame =
-    if (m.kTotal.toLong * Dim <= FineLiteralMaxEntries)
-      multiProbeAssign(v, collectHierModel(m))
-    else multiProbeAssignJoined(v, m)
 
   val hierMultiProbeSql: String =
     s"""WITH $hierCte,
@@ -1414,11 +1520,11 @@ object Clustering {
       fixedPoint(spark, dir))
     val m = hierModelFor(spark, dir)
     val base = v.select(col("vec_id"), col("x"))
-    val t = assignWith(base, m.fine.flatten)
+    val t = assignWith(base, m.fines.flatten)
       .select(col("vec_id"), col("x"), col("dist").as("tdist"))
-    val g = assignHierarchical(t, m)
+    val g = m.assign(t)
       .select(col("vec_id"), col("x"), col("tdist"), col("dist").as("gdist"))
-    val p = multiProbeAssign(g, m)
+    val p = m.improved(g)
       .select(col("vec_id"), col("tdist"), col("gdist"), col("dist").as("pdist"))
     p.agg(
         count(lit(1)).as("n"),
@@ -1468,7 +1574,7 @@ object Clustering {
     * trade, worst exactly where q137 measures the assignment error).
     * This operator probes each vector's SECOND cell — the fine argmin
     * inside its second-nearest coarse partition
-    * ([[multiProbeCells]]' probe-2 leg) — against the assigned
+    * ([[CellModel.probeCells]]' probe-2 leg) — against the assigned
     * corpus, emitting (vec_id, other_id, dist) for every cross-cell
     * pair under the prune threshold. Strictly additive to the
     * within-cell prune: probe-2 cells differ from the vector's own
@@ -1486,9 +1592,9 @@ object Clustering {
     val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
       fixedPoint(spark, dir))
     val m = hierModelFor(spark, dir)
-    val asg = assignHierarchical(v, m)
+    val asg = m.assign(v)
       .select(col("vec_id").as("other_id"), col("x").as("ox"), col("cluster"))
-    multiProbeCells(v.select(col("vec_id"), col("x")), m)
+    m.probeCells(v.select(col("vec_id"), col("x")), 2)
       .filter(col("probe") === 2)
       .join(asg, Seq("cluster"))
       .withColumn("dist", graft.functions.FixedPointOps.sqDistL2(col("x"), col("ox")))
@@ -1540,14 +1646,13 @@ object Clustering {
     // survivor pass rides this identical frame, so running q139 then
     // q140 assigns the corpus once, not twice
     val asg = graft.CacheRegistry.getOrCache(spark, s"clustering.hierAsgD:$dir")(
-      assignHierarchical(v, m)
-        .select(col("vec_id"), col("x"), col("cluster"), col("dist")))
+      m.assign(v).select(col("vec_id"), col("x"), col("cluster"), col("dist")))
     // the group table (edge generators + CC contraction) is the
     // expensive shared intermediate between q139 and q140 — memoized
     // like every other shared materialization point
     graft.CacheRegistry.getOrCache(spark, s"clustering.semGroups:$dir")(
       semanticDedupGroupsOf(asg.select(col("vec_id"), col("x"), col("cluster")),
-        multiProbeCells(v.select(col("vec_id"), col("x")), m)
+        m.probeCells(v.select(col("vec_id"), col("x")), 2)
           .filter(col("probe") === 2)))
   }
 
@@ -1642,8 +1747,7 @@ object Clustering {
       fixedPoint(spark, dir))
     val m = hierModelFor(spark, dir)
     val asg = graft.CacheRegistry.getOrCache(spark, s"clustering.hierAsgD:$dir")(
-      assignHierarchical(v, m)
-        .select(col("vec_id"), col("x"), col("cluster"), col("dist")))
+      m.assign(v).select(col("vec_id"), col("x"), col("cluster"), col("dist")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("rep")).orderBy(col("dist").desc, col("vec_id"))
     groups.join(asg.select(col("vec_id"), col("dist")), Seq("vec_id"))
@@ -1683,8 +1787,8 @@ object Clustering {
     * arrival side is one map-only assignment + a k-key count. The
     * share totals come from a window over the k-ROW frame (no 1-row
     * scalar cross join, no corpus-sized second pass). Serving twin:
-    * the same arithmetic over [[loadAssignedCorpus]] counts +
-    * [[assignStored]] arrivals — model-sized everything. */
+    * the same arithmetic over [[loadAssignedCorpus]] counts + arrivals
+    * assigned by the [[loadCentroids]] model — model-sized everything. */
   def clusterDrift(spark: SparkSession, dir: String): DataFrame = {
     val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
       fixedPoint(spark, dir))
@@ -1762,7 +1866,7 @@ object Clustering {
   def clusterDriftHier(spark: SparkSession, dir: String): DataFrame = {
     val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
       fixedPoint(spark, dir))
-    val asg = assignHierarchical(v, hierModelFor(spark, dir))
+    val asg = hierModelFor(spark, dir).assign(v)
       .select(col("vec_id"), col("cluster"))
     clusterDriftOf(
       asg.groupBy(col("cluster")).agg(count(lit(1)).as("n_base")),
@@ -2077,8 +2181,7 @@ object Clustering {
       fixedPoint(spark, dir))
     val m = hierModelFor(spark, dir)
     val asg = graft.CacheRegistry.getOrCache(spark, s"clustering.hierAsgD:$dir")(
-      assignHierarchical(v, m)
-        .select(col("vec_id"), col("x"), col("cluster"), col("dist")))
+      m.assign(v).select(col("vec_id"), col("x"), col("cluster"), col("dist")))
     modelStalenessOf(
       asg.filter(col("vec_id") % DriftMod =!= DriftRes)
         .select(col("cluster"), col("vec_id"), col("dist")),
@@ -2118,7 +2221,8 @@ object Clustering {
 
   /** q147: DELTA ADMISSION UNDER THE TWO-LEVEL MODEL, oracled — the
     * q142 verdict core over the hierarchical cells (the at-scale
-    * admission [[graft.pipeline.IndexDelta.admitVectorsHier]] runs),
+    * admission [[graft.pipeline.IndexDelta.admitVectors]] runs on the
+    * two-level unit),
     * with the corpus-relative cap taken over the hier cell population
     * (k = 16 cells on the fixture). Same seam, same four-branch
     * semantics — the hash gate now pins the admission decision on
@@ -2128,8 +2232,7 @@ object Clustering {
       fixedPoint(spark, dir))
     val m = hierModelFor(spark, dir)
     val asg = graft.CacheRegistry.getOrCache(spark, s"clustering.hierAsgD:$dir")(
-      assignHierarchical(v, m)
-        .select(col("vec_id"), col("x"), col("cluster"), col("dist")))
+      m.assign(v).select(col("vec_id"), col("x"), col("cluster"), col("dist")))
     graft.CacheRegistry.getOrCache(spark, s"clustering.hierAdmitVerd:$dir") {
       val arr = asg.filter(
         col("vec_id") % DriftMod === DriftRes ||
@@ -2276,156 +2379,48 @@ object Clustering {
 
   // ------------------------------------------------- stored lifecycle
 
-  /** Persist the trained centroid model as a [[FpIndex]] flat table
-    * (cid, pos, v) — 1NF longs, so the round-trip is bit-exact and
-    * the generation-append rebuild/pinned-reader contract applies
-    * unchanged. k·d rows: model-sized, like the IVF quantizer. */
-  def saveCentroids(spark: SparkSession, path: String, cents: Seq[Array[Long]]): Unit = {
-    import spark.implicits._
-    val rows = cents.zipWithIndex.flatMap { case (cv, cid) =>
-      cv.zipWithIndex.map { case (v, pos) => (cid, pos, v) }
-    }
-    FpIndex.saveOrRebuildFlat(spark, path,
-      rows.toDF("cid", "pos", "v").repartition(1))
-  }
-
-  /** Reload the centroid model (optionally pinned `asOf` a manifest
-    * version). Reassembled in (cid, pos) order — exactly the arrays
-    * [[saveCentroids]] wrote. */
+  /** Reload a stored cell model (optionally pinned `asOf` a manifest
+    * version), either layout [[CellModel.save]] writes. A flat (cid,
+    * pos, v) table reassembles in (cid, pos) order — exactly the
+    * arrays it saved. A two-level (kind, ccl, fcl, pos, v) table
+    * collects only the meta row and the coarse table (√k·d); the fine
+    * table is reassembled distributed, so the loader is legal past
+    * [[FineLiteralMaxEntries]]. Serving then costs one model-sized
+    * collect plus O(delta) assignment — the nightly
+    * [[graft.pipeline.IndexBuild]] job paid the training pass. */
   def loadCentroids(spark: SparkSession, path: String,
-      asOf: Option[Int] = None): Seq[Array[Long]] = {
-    val rows = FpIndex.loadFlat(spark, path, asOf)
-      .select(col("cid"), col("pos"), col("v")).collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-    require(rows.nonEmpty, s"no centroids stored at $path")
-    rows.groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (_, dims) => dims.sortBy(_._2).map(_._3) }
+      asOf: Option[Int] = None): CellModel = {
+    val stored = FpIndex.loadFlat(spark, path, asOf)
+    if (!stored.columns.contains("kind")) {
+      val rows = stored.select(col("cid"), col("pos"), col("v")).collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
+      require(rows.nonEmpty, s"no centroids stored at $path")
+      CellModel.Flat(rows.groupBy(_._1).toSeq.sortBy(_._1)
+        .map { case (_, dims) => dims.sortBy(_._2).map(_._3) })
+    } else {
+      val metaCoarse = stored.filter(col("kind") < 2)
+        .select(col("kind"), col("ccl"), col("pos"), col("v")).collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3)))
+      require(metaCoarse.nonEmpty, s"no hierarchical model stored at $path")
+      val meta = metaCoarse.find(_._1 == 0)
+        .getOrElse(sys.error(s"stored model at $path has no kf meta row"))
+      require(meta._3 > 0, s"the two-level model at $path predates its stored k — " +
+        "re-run IndexBuild.buildAll to rewrite it")
+      val coarse = metaCoarse.filter(_._1 == 1).groupBy(_._2).toSeq.sortBy(_._1)
+        .map { case (_, sub) => sub.sortBy(_._3).map(_._4) }
+      val fine = stored.filter(col("kind") === 2)
+        .groupBy(col("ccl"), col("fcl"))
+        .agg(expr("transform(array_sort(collect_list(struct(pos, v))), t -> t.v)")
+          .as("fv"))
+      CellModel.TwoLevel(coarse, fine, meta._4.toInt, meta._3)
+    }
   }
-
-  /** Serve-side assignment: quantize the ARRIVAL batch and assign it
-    * against the stored model — zero corpus-sized work (the nightly
-    * [[graft.pipeline.IndexBuild]] job paid the training pass). The
-    * per-arrival cost is one map-only k·d dot-distance argmin, the
-    * same O(delta) contract as the curation-gate probes. */
-  def assignStored(spark: SparkSession, path: String, arrivals: DataFrame,
-      asOf: Option[Int] = None): DataFrame = {
-    val v = arrivals.select(col("vec_id"), quantize(col("embedding")).as("x"))
-    assignWith(v, loadCentroids(spark, path, asOf))
-      .select(col("vec_id"), col("cluster"), col("dist"))
-  }
-
-  /** Persist a two-level model as a [[FpIndex]] flat table — the same
-    * manifest/generation/pinned-reader contract as the flat centroid
-    * table. 1NF longs (kind, ccl, fcl, pos, v): kind 0 = kf meta,
-    * kind 1 = coarse (ccl, pos), kind 2 = fine (ccl, fcl, pos).
-    * ~2·k·d rows: model-sized. */
-  def saveHierModel(spark: SparkSession, path: String, m: HierModel): Unit = {
-    import spark.implicits._
-    val rows =
-      Seq((0, 0, 0, 0, m.kf.toLong)) ++
-      m.coarse.indices.flatMap(c =>
-        m.coarse(c).indices.map(p => (1, c, 0, p, m.coarse(c)(p)))) ++
-      m.fine.indices.flatMap(c =>
-        m.fine(c).indices.flatMap(f =>
-          m.fine(c)(f).indices.map(p => (2, c, f, p, m.fine(c)(f)(p)))))
-    FpIndex.saveOrRebuildFlat(spark, path,
-      rows.toDF("kind", "ccl", "fcl", "pos", "v").repartition(1))
-  }
-
-  /** Reload the stored two-level model (optionally pinned `asOf`). */
-  def loadHierModel(spark: SparkSession, path: String,
-      asOf: Option[Int] = None): HierModel = {
-    val rows = FpIndex.loadFlat(spark, path, asOf)
-      .select(col("kind"), col("ccl"), col("fcl"), col("pos"), col("v")).collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getLong(4)))
-    require(rows.nonEmpty, s"no hierarchical model stored at $path")
-    val kf = rows.find(_._1 == 0).map(_._5.toInt)
-      .getOrElse(sys.error(s"stored model at $path has no kf meta row"))
-    def vecsOf(sub: Array[(Int, Int, Int, Int, Long)]): Array[Long] =
-      sub.sortBy(_._4).map(_._5)
-    val coarse = rows.filter(_._1 == 1).groupBy(_._2).toSeq.sortBy(_._1)
-      .map { case (_, sub) => vecsOf(sub) }
-    val fine = rows.filter(_._1 == 2).groupBy(_._2).toSeq.sortBy(_._1)
-      .map { case (_, byC) =>
-        byC.groupBy(_._3).toSeq.sortBy(_._1).map { case (_, sub) => vecsOf(sub) }
-      }
-    HierModel(coarse, fine, kf)
-  }
-
-  /** Serve-side two-level assignment against the stored model — the
-    * O(√k)-per-arrival counterpart of [[assignStored]]. */
-  def assignStoredHier(spark: SparkSession, path: String, arrivals: DataFrame,
-      asOf: Option[Int] = None): DataFrame =
-    assignHierarchical(
-        arrivals.select(col("vec_id"), quantize(col("embedding")).as("x")),
-        loadHierModel(spark, path, asOf))
-      .select(col("vec_id"), col("cluster"), col("dist"))
-
-  /** Persist a FRAME model under [[saveHierModel]]'s exact 1NF layout
-    * (kind 0 = kf meta + the requested k in `pos`, kind 1 = coarse,
-    * kind 2 = fine) — the fine frame explodes to its (ccl, fcl, pos,
-    * v) rows DISTRIBUTED, never collected, so the save is legal at
-    * any k. A literal-saved model loads through
-    * [[loadHierModelFrames]] and vice versa (the meta row's k falls
-    * back to counting fine rows for models saved before r13). */
-  def saveHierModelDf(spark: SparkSession, path: String, m: HierModelDf): Unit = {
-    import spark.implicits._
-    val metaCoarse =
-      (Seq((0, 0, 0, m.kTotal, m.kf.toLong)) ++
-        m.coarse.indices.flatMap(c =>
-          m.coarse(c).indices.map(p => (1, c, 0, p, m.coarse(c)(p)))))
-        .toDF("kind", "ccl", "fcl", "pos", "v")
-    val fineRows = m.fine
-      .select(col("ccl"), col("fcl"), posexplode(col("fv")))
-      .select(lit(2).as("kind"), col("ccl"), col("fcl"),
-        col("pos"), col("col").as("v"))
-    FpIndex.saveOrRebuildFlat(spark, path, metaCoarse.unionByName(fineRows))
-  }
-
-  /** Reload a stored two-level model with the fine half as a FRAME —
-    * the serve-side loader past [[FineLiteralMaxEntries]]: only the
-    * meta row and the coarse table (√k·d) are collected; the fine
-    * table is reassembled distributed, pinned `asOf` like every
-    * stored reader. Works on models written by either save path. */
-  def loadHierModelFrames(spark: SparkSession, path: String,
-      asOf: Option[Int] = None): HierModelDf = {
-    val flat = FpIndex.loadFlat(spark, path, asOf)
-    val metaCoarse = flat.filter(col("kind") < 2)
-      .select(col("kind"), col("ccl"), col("pos"), col("v")).collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3)))
-    require(metaCoarse.nonEmpty, s"no hierarchical model stored at $path")
-    val meta = metaCoarse.find(_._1 == 0)
-      .getOrElse(sys.error(s"stored model at $path has no kf meta row"))
-    val kf = meta._4.toInt
-    val coarse = metaCoarse.filter(_._1 == 1).groupBy(_._2).toSeq.sortBy(_._1)
-      .map { case (_, sub) => sub.sortBy(_._3).map(_._4) }
-    val fine = flat.filter(col("kind") === 2)
-      .groupBy(col("ccl"), col("fcl"))
-      .agg(expr("transform(array_sort(collect_list(struct(pos, v))), t -> t.v)")
-        .as("fv"))
-    // pre-r13 literal saves carry no k in the meta row (pos 0): fall
-    // back to the fine-row count — one model-sized aggregate
-    val kTotal = if (meta._3 > 0) meta._3
-      else fine.count().toInt
-    HierModelDf(coarse, fine, kf, kTotal)
-  }
-
-  /** Serve-side two-level assignment with the stored fine model as
-    * DATA — [[assignStoredHier]]'s scale twin: arrivals equi-join the
-    * stored fine table instead of receiving it as a task literal. */
-  def assignStoredHierJoined(spark: SparkSession, path: String, arrivals: DataFrame,
-      asOf: Option[Int] = None): DataFrame =
-    assignHierarchicalJoined(
-        arrivals.select(col("vec_id"), quantize(col("embedding")).as("x")),
-        loadHierModelFrames(spark, path, asOf))
-      .select(col("vec_id"), col("cluster"), col("dist"))
 
   /** The semantic gate's stored corpus side: (corpus_id, x, cluster) —
     * every corpus vector pre-assigned to its cell, so an arriving
     * vector probes ONE cell by equi-join instead of the corpus. */
-  def assignedCorpus(v: DataFrame, cents: Seq[Array[Long]]): DataFrame =
-    assignWith(v, cents)
-      .select(col("vec_id").as("corpus_id"), col("x"), col("cluster"))
+  def assignedCorpus(v: DataFrame, model: CellModel): DataFrame =
+    model.assign(v).select(col("vec_id").as("corpus_id"), col("x"), col("cluster"))
 
   /** Persist the assigned corpus in 1NF (corpus_id, cluster, pos, v) —
     * component ORDER matters for vectors (unlike the shingle sets),

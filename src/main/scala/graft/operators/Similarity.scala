@@ -1948,7 +1948,7 @@ object Similarity {
     // multi-probe path pays (measured at 2000 arrivals × 645 cells:
     // kernel ≈ the flat gate's per-arrival cost; the cross form ran
     // ~2×). nprobe ≥ 2 buys cell-boundary recall at that documented
-    // cross cost — the semanticNearDupGate2 trade, caller's choice.
+    // cross cost — the nprobe-2 semanticNearDupGate trade, caller's choice.
     val queries = fresh.select(col("vec_id").as("q_id"), col("e").as("qe"),
       col("nrm").as("qn"))
     val probeT = (if (nprobe == 1)

@@ -53,44 +53,35 @@ object EmbedPipeline {
   /** Runs the embedding curation funnel; publishes the curated vector
     * set (vec_id, cluster, dist, rank) to `outDir` via the
     * manifest-committed sink and returns the per-stage report —
-    * spec-pinned stage-by-stage ≡ the oracled q133 audit table. */
+    * spec-pinned stage-by-stage ≡ the oracled q133 audit table.
+    *
+    * `train` builds the cell model from the cached quantized corpus:
+    * flat Lloyd at [[Clustering.K]] by default. The AT-SCALE funnel
+    * passes the TWO-LEVEL frame-model ladder
+    * (`v => Clustering.trainHierarchicalFrames(v, k)` — training
+    * O(n·√k) with the fine model as frames end to end, no k·d literal
+    * or driver collect; assignment picks its kernel from k·d). That is
+    * the model a deployment trains at k = kForCorpus(n), where flat
+    * Lloyd is O(n·k) = n²/cell and its centroid literal is the
+    * r12-graded transport ceiling. The prune seam takes either model's
+    * cells unchanged (q131's proof: cells are cells). */
   def run(spark: SparkSession, dir: String, outDir: String,
-      k: Int = Clustering.K, m: Int = Clustering.SampleM,
+      train: DataFrame => Clustering.CellModel =
+        v => Clustering.CellModel.Flat(Clustering.trainCentroids(v)),
+      m: Int = Clustering.SampleM,
       pruneT: Long = Clustering.PruneT): Seq[VecStage] = {
     val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
       Clustering.fixedPoint(spark, dir))
-    val cents = Clustering.trainCentroids(v, k)
+    val model = train(v)
     // shared materialization point: the observed input branch AND the
     // prune's self-join both read this one in-memory assignment
-    val asg = graft.CacheRegistry.getOrCache(spark, s"pipeline.embedAsg:$dir:$k")(
-      Clustering.assignWith(v, cents)
-        .select(col("vec_id"), col("x"), col("cluster"), col("dist")))
+    val asg = graft.CacheRegistry.getOrCache(spark,
+      s"pipeline.embedAsg:$dir:${model.productPrefix}:${model.k}")(
+      model.assign(v).select(col("vec_id"), col("x"), col("cluster"), col("dist")))
     runStages(asg, outDir, m, pruneT)
   }
 
-  /** The AT-SCALE funnel: same stages, same observe seams, but the
-    * clustering is the TWO-LEVEL frame-model ladder — training
-    * O(n·√k) with the fine model as frames end to end
-    * ([[graft.operators.Clustering.trainHierarchicalFrames]], no k·d
-    * literal or driver collect), assignment threshold-dispatched
-    * ([[graft.operators.Clustering.assignHier]]). This is the entry
-    * point a deployment calls at k = kForCorpus(n), where [[run]]'s
-    * flat Lloyd is O(n·k) = n²/cell and its centroid literal is the
-    * r12-graded transport ceiling. The prune seam takes the
-    * hierarchical cells unchanged (q131's proof: cells are cells). */
-  def runHier(spark: SparkSession, dir: String, outDir: String,
-      k: Int = Clustering.HierK, m: Int = Clustering.SampleM,
-      pruneT: Long = Clustering.PruneT): Seq[VecStage] = {
-    val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
-      Clustering.fixedPoint(spark, dir))
-    val hm = Clustering.trainHierarchicalFrames(v, k)
-    val asg = graft.CacheRegistry.getOrCache(spark, s"pipeline.embedAsgHier:$dir:$k")(
-      Clustering.assignHier(v, hm)
-        .select(col("vec_id"), col("x"), col("cluster"), col("dist")))
-    runStages(asg, outDir, m, pruneT)
-  }
-
-  /** Shared funnel core over a cached (vec_id, x, cluster, dist)
+  /** The funnel core over a cached (vec_id, x, cluster, dist)
     * assignment: observe input mass, SemDeDup prune, per-cell
     * diversity quota, manifest publish, 3-row stage report. */
   private def runStages(asg: DataFrame, outDir: String, m: Int,
@@ -124,9 +115,9 @@ object EmbedPipeline {
       stageOf("diversity_quota", oQuota))
   }
 
-  /** Build-and-publish timing harness (the PERF.md row): one [[run]]
-    * over `SPARK_GRAFT_SF_DIR`, printing the stage report and the
-    * wall clock as one JSON line. */
+  /** Build-and-publish timing harness (the PERF.md row): one flat and
+    * one two-level [[run]] over `SPARK_GRAFT_SF_DIR`, printing the
+    * stage reports and the wall clocks as one JSON line. */
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val out = args.headOption.getOrElse(
@@ -136,7 +127,8 @@ object EmbedPipeline {
     val stages = run(spark, dir, out)
     val sec = (System.nanoTime() - t0) / 1e9
     val t1 = System.nanoTime()
-    val stagesHier = runHier(spark, dir, s"$out-hier")
+    val stagesHier = run(spark, dir, s"$out-hier",
+      v => Clustering.trainHierarchicalFrames(v, Clustering.HierK))
     val hierSec = (System.nanoTime() - t1) / 1e9
     def json(ss: Seq[VecStage]) = ss.map(s =>
       s""""${s.stage}": {"n_vecs": ${s.nVecs}, "inertia": "${s.inertia}"}""")

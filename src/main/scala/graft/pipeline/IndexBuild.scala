@@ -65,6 +65,30 @@ object IndexBuild {
     * Written by the build only; admissions never touch it. */
   val TextMetaT = "text_meta"
 
+  /** A VECTOR SERVING UNIT: the cell-model table and the three tables
+    * derived from one corpus assignment under that model — the
+    * hot-cell-capped probe corpus, the capped-cells side table and the
+    * per-cell p95 radii — plus the rule that trains the model from the
+    * corpus and its vector count. The nightly build, delta admission,
+    * the staleness monitor and the refresh policy all take a unit, so
+    * each verb exists once for both model forms. */
+  final case class VectorUnit(model: String, assigned: String, capped: String,
+      radii: String, train: (DataFrame, Long) => Clustering.CellModel)
+
+  /** The FLAT unit: the q124-rule centroid model (k = [[Clustering.K]],
+    * id-seeded). */
+  val FlatUnit: VectorUnit = VectorUnit(CentroidsT, AssignedT, CappedT, RadiiT,
+    (fixed, _) => Clustering.CellModel.Flat(Clustering.trainCentroids(fixed)))
+
+  /** The TWO-LEVEL unit — the at-scale gate's stored side: the
+    * two-level FRAME model at the kForCorpus operating point (floored
+    * at 4 so kc >= 2 — the multi-probe gate needs a second coarse
+    * cell). Training and save never carry the fine table as a literal
+    * or driver collect (the r12-closed transport posture). */
+  val TwoLevelUnit: VectorUnit = VectorUnit(HierModelT, AssignedHierT, CappedHierT,
+    RadiiHierT,
+    (fixed, n) => Clustering.trainHierarchicalFrames(fixed, math.max(4, Clustering.kForCorpus(n))))
+
   /** Persist every serving artifact for `dir` under `root` — the
     * nightly build job. Safe to re-run against a live index root:
     * each table cuts over atomically via the generation-append
@@ -81,11 +105,11 @@ object IndexBuild {
     *    pipeline through Dedup's cache entries, so they stay in one
     *    chain.
     *  - FLAT VECTOR: the ANN ivf/pq/sq8 tables, then the flat unit
-    *    ([[buildFlatVectorArtifacts]]: centroids, assigned, capped,
-    *    radii), then PCA.
-    *  - HIERARCHICAL: the two-level unit ([[buildHierVectorArtifacts]]:
-    *    hier_model, assigned_hier, assigned_hier_capped,
-    *    cell_radii_hier).
+    *    ([[buildVectorUnit]] of [[FlatUnit]]: centroids, assigned,
+    *    capped, radii), then PCA.
+    *  - HIERARCHICAL: the two-level unit ([[buildVectorUnit]] of
+    *    [[TwoLevelUnit]]: hier_model, assigned_hier,
+    *    assigned_hier_capped, cell_radii_hier).
     *
     * Each shared input is computed once: the vector corpus is counted
     * once for both vector units; each unit assigns the corpus once and
@@ -126,13 +150,13 @@ object IndexBuild {
         // k-means centroid model + the semantic gate's stored side — also
         // the REFRESH unit IndexDelta.refreshIfStale re-runs when the
         // staleness monitor trips between nightly builds
-        flatVectorUnit(spark, fixed, root, Some(nVecs))
+        buildVectorUnit(spark, fixed, root, FlatUnit, Some(nVecs))
         // PCA basis — the dim-reduction serve side (projected arrivals,
         // cheaper projected-IVF ANN); fit shares the q126 Gram pass's
         // cached dimStats
         Pca.saveModel(spark, s"$root/$PcaT", Pca.fit(spark, dir))
       },
-      () => buildHierVectorArtifacts(spark, fixed, root, Some(nVecs)))
+      () => buildVectorUnit(spark, fixed, root, TwoLevelUnit, Some(nVecs)))
     // Finished queries keep their broadcast hash relations (one
     // Tungsten page each: 16 MB for a string key) in the block manager
     // until Spark's ContextCleaner learns from a collection that their
@@ -146,95 +170,53 @@ object IndexBuild {
     System.gc()
   }
 
-  /** The TWO-LEVEL vector serving artifacts as one rebuildable unit —
-    * the at-scale gate's stored side: the two-level FRAME model at the
-    * kForCorpus operating point (floored at 4 so kc >= 2 — the
-    * multi-probe gate needs a second coarse cell), the corpus assigned
-    * by it hot-cell-capped by the same 9n/8k rule, and the k-row hier
-    * radius table. The training and save paths never carry the fine
-    * table as a literal or driver collect (the r12-closed transport
-    * posture). Extracted from [[buildAll]] (the
-    * [[buildFlatVectorArtifacts]] precedent) so
-    * [[IndexDelta.refreshIfStaleHier]] can retrain JUST this unit when
-    * the hier staleness monitor trips mid-cycle; each table cuts over
-    * atomically via the generation-append rebuild.
+  /** Build one vector serving unit from the corpus `fixed` (vec_id, x)
+    * under `root`: train its model, save it, assign the corpus ONCE and
+    * derive the unit's other three tables from that one persisted
+    * assignment — the probe corpus HOT-CELL-CAPPED at build time
+    * (q134's corpus-relative 9n/8k cap, the videoFrameIndex hub-cap
+    * precedent — members of over-cap cells never enter the probe
+    * table, so a degenerate mega-cell costs an arrival ZERO probe
+    * rows), the k-row capped-cells side table the gate flags verdicts
+    * from, and the per-cell p95 staleness radii. Extracted from
+    * [[buildAll]] so [[IndexDelta.refreshIfStale]] can retrain JUST
+    * this unit when the staleness monitor trips mid-cycle; each table
+    * cuts over atomically via the generation-append rebuild, and
+    * readers pinned before it keep serving the old unit.
     *
-    * One pass each: the trained fine frame is an unmaterialized
-    * lineage (coarse assignment → window seeds → fine-Lloyd join and
+    * A two-level model's fine frame is an unmaterialized lineage
+    * (coarse assignment → window seeds → fine-Lloyd join and
     * aggregates), so it is persisted and evaluated once for the model
-    * save and the assignment's model collect; the corpus is assigned
-    * once, and the assigned, capped and radius tables all read that
-    * one persisted assignment. */
-  def buildHierVectorArtifacts(spark: SparkSession, fixed: DataFrame,
-      root: String, nVecsKnown: Option[Long] = None): Long = {
+    * save and the assignment's model collect. `nVecsKnown` is the
+    * corpus count when the caller has it ([[buildAll]] counts once for
+    * both units). Returns the corpus vector count. */
+  def buildVectorUnit(spark: SparkSession, fixed: DataFrame, root: String,
+      unit: VectorUnit, nVecsKnown: Option[Long] = None): Long = {
     val nVecs = nVecsKnown.getOrElse(fixed.count())
-    val hk = math.max(4, Clustering.kForCorpus(nVecs))
-    val trained = Clustering.trainHierarchicalFrames(fixed, hk)
-    val hm = trained.copy(fine = trained.fine.persist(StorageLevel.MEMORY_AND_DISK))
-    try {
-      Clustering.saveHierModelDf(spark, s"$root/$HierModelT", hm)
-      withAssignment(Clustering.assignHier(fixed, hm)) { asg =>
-        saveAssignedUnit(spark, asg, Clustering.buildCapOf(nVecs, hm.kTotal),
-          s"$root/$AssignedHierT", s"$root/$CappedHierT", s"$root/$RadiiHierT")
-      }
-    } finally hm.fine.unpersist(blocking = true)
-    nVecs
-  }
-
-  /** The FLAT vector serving artifacts as one rebuildable unit: the
-    * q124-rule centroid model, the corpus pre-assigned to its cells
-    * HOT-CELL-CAPPED at build time (q134's corpus-relative 9n/8k cap,
-    * the videoFrameIndex hub-cap precedent — members of over-cap
-    * cells never enter the probe table, so a degenerate mega-cell
-    * costs an arrival ZERO probe rows), the k-row capped-cells side
-    * table the gate flags verdicts from, and the per-cell p95
-    * staleness radii. Extracted from [[buildAll]] so
-    * [[IndexDelta.refreshIfStale]] can retrain JUST this unit when the
-    * staleness monitor trips mid-cycle; each table cuts over
-    * atomically via the generation-append rebuild. The corpus is
-    * assigned once; that one persisted assignment gives the count,
-    * the probe table, the capped cells and the radii. Returns the
-    * corpus vector count. */
-  def buildFlatVectorArtifacts(spark: SparkSession, fixed: DataFrame,
-      root: String): Long =
-    flatVectorUnit(spark, fixed, root, None)
-
-  /** [[buildFlatVectorArtifacts]] with the corpus count known to the
-    * caller ([[buildAll]] counts once for both vector units). */
-  private def flatVectorUnit(spark: SparkSession, fixed: DataFrame,
-      root: String, nVecsKnown: Option[Long]): Long = {
-    val cents = Clustering.trainCentroids(fixed)
-    Clustering.saveCentroids(spark, s"$root/$CentroidsT", cents)
-    withAssignment(Clustering.assignWith(fixed, cents)) { asg =>
-      val nVecs = nVecsKnown.getOrElse(asg.count())
-      saveAssignedUnit(spark, asg, Clustering.buildCapOf(nVecs, cents.length),
-        s"$root/$AssignedT", s"$root/$CappedT", s"$root/$RadiiT")
-      nVecs
+    val model = unit.train(fixed, nVecs)
+    val pinned = model match {
+      case m: Clustering.CellModel.TwoLevel => Some(m.fine.persist(StorageLevel.MEMORY_AND_DISK))
+      case _ => None
     }
-  }
-
-  /** Persist a corpus assignment (vec_id, x, cluster, dist) for the
-    * duration of `body`, then release it with `blocking = true`. */
-  private def withAssignment[T](assigned: DataFrame)(body: DataFrame => T): T = {
-    val asg = assigned.select(col("vec_id"), col("x"), col("cluster"), col("dist"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try body(asg) finally asg.unpersist(blocking = true)
-  }
-
-  /** The three tables a vector unit derives from its one corpus
-    * assignment: the probe corpus with over-`cap` cells left out, the
-    * capped-cells side table, and the per-cell p95 radii — k rows from
-    * the FULL assignment in one window pass, so the per-batch
-    * staleness monitor never re-scans the probe corpus (q143's stored
-    * side). */
-  private def saveAssignedUnit(spark: SparkSession, asg: DataFrame, cap: Long,
-      assignedPath: String, cappedPath: String, radiiPath: String): Unit = {
-    val (probe, capped) = Clustering.capAssignedCorpus(
-      asg.select(col("vec_id").as("corpus_id"), col("x"), col("cluster")), cap)
-    Clustering.saveAssignedCorpus(spark, assignedPath, probe)
-    Clustering.saveCappedCells(spark, cappedPath, capped)
-    FpIndex.saveOrRebuildFlat(spark, radiiPath,
-      Clustering.cellRadiiOf(asg.select(col("cluster"), col("vec_id"), col("dist"))))
+    try {
+      model.save(spark, s"$root/${unit.model}")
+      val asg = model.assign(fixed)
+        .select(col("vec_id"), col("x"), col("cluster"), col("dist"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val (probe, capped) = Clustering.capAssignedCorpus(
+          asg.select(col("vec_id").as("corpus_id"), col("x"), col("cluster")),
+          Clustering.buildCapOf(nVecs, model.k))
+        Clustering.saveAssignedCorpus(spark, s"$root/${unit.assigned}", probe)
+        Clustering.saveCappedCells(spark, s"$root/${unit.capped}", capped)
+        // k rows from the FULL assignment in one window pass, so the
+        // per-batch staleness monitor never re-scans the probe corpus
+        // (q143's stored side)
+        FpIndex.saveOrRebuildFlat(spark, s"$root/${unit.radii}",
+          Clustering.cellRadiiOf(asg.select(col("cluster"), col("vec_id"), col("dist"))))
+      } finally asg.unpersist(blocking = true)
+    } finally pinned.foreach(_.unpersist(blocking = true))
+    nVecs
   }
 
   /** Write the 1-row [[TextMetaT]] build stamp — counted over `docs`
@@ -349,42 +331,30 @@ object IndexBuild {
         .write.format("noop").mode("overwrite").save()
     }
     val clusterSec = timed(
-      Clustering.assignStored(serve, idx.centroidsPath,
-          Tables.embeddings(serve, dir).filter(col("vec_id") % 25 === 0),
-          idx.pins.get(CentroidsT))
+      Clustering.loadCentroids(serve, idx.centroidsPath, idx.pins.get(CentroidsT))
+        .assign(Tables.embeddings(serve, dir).filter(col("vec_id") % 25 === 0)
+          .select(col("vec_id"), Clustering.quantize(col("embedding")).as("x")))
+        .select(col("vec_id"), col("cluster"), col("dist"))
         .write.format("noop").mode("overwrite").save())
     val pcaSec = timed(
       Pca.projectStored(serve, idx.pcaPath,
           Tables.embeddings(serve, dir).filter(col("vec_id") % 25 === 0),
           8, idx.pins.get(PcaT))
         .write.format("noop").mode("overwrite").save())
-    val semGateSec = timed {
-      val storedCents = Clustering.loadCentroids(
-        serve, idx.centroidsPath, idx.pins.get(CentroidsT))
+    def semGate(modelPath: String, pin: Option[Int], probe: DataFrame,
+        capped: DataFrame, nprobe: Int): Double = timed {
       Incremental.semanticNearDupGate(
           Tables.embeddings(serve, dir).filter(col("vec_id") % 25 === 0)
             .withColumn("vec_id", col("vec_id") + lit(900000000L)),
-          storedCents, idx.assignedCorpus, idx.cappedCells)
+          Clustering.loadCentroids(serve, modelPath, pin), probe, capped, nprobe)
         .write.format("noop").mode("overwrite").save()
     }
-    val semGate2Sec = timed {
-      val storedCents = Clustering.loadCentroids(
-        serve, idx.centroidsPath, idx.pins.get(CentroidsT))
-      Incremental.semanticNearDupGate2(
-          Tables.embeddings(serve, dir).filter(col("vec_id") % 25 === 0)
-            .withColumn("vec_id", col("vec_id") + lit(900000000L)),
-          storedCents, idx.assignedCorpus, idx.cappedCells)
-        .write.format("noop").mode("overwrite").save()
-    }
-    val semGateHier2Sec = timed {
-      val hm = Clustering.collectHierModel(Clustering.loadHierModelFrames(
-        serve, idx.hierModelPath, idx.pins.get(HierModelT)))
-      Incremental.semanticNearDupGateHier2(
-          Tables.embeddings(serve, dir).filter(col("vec_id") % 25 === 0)
-            .withColumn("vec_id", col("vec_id") + lit(900000000L)),
-          hm, idx.assignedHierCorpus, idx.cappedHierCells)
-        .write.format("noop").mode("overwrite").save()
-    }
+    val semGateSec = semGate(idx.centroidsPath, idx.pins.get(CentroidsT),
+      idx.assignedCorpus, idx.cappedCells, 1)
+    val semGate2Sec = semGate(idx.centroidsPath, idx.pins.get(CentroidsT),
+      idx.assignedCorpus, idx.cappedCells, 2)
+    val semGateHier2Sec = semGate(idx.hierModelPath, idx.pins.get(HierModelT),
+      idx.assignedHierCorpus, idx.cappedHierCells, 2)
     // the round-14 ingest-batch half: admit a doc batch and a vector
     // batch into the stored root, then run the staleness monitor from
     // the stored k-row radius table — the full deployment loop

@@ -158,13 +158,16 @@ object IndexDelta {
     s"indexdelta.$kind:$root:$batchId@" +
       pins.toSeq.sorted.map { case (t, v) => s"$t=$v" }.mkString(",")
 
-  /** Admit a vector batch into the stored FLAT vector index: assign
-    * under the FROZEN stored model, decide per arrival with the q142
-    * verdict core ([[Clustering.admitVerdictsOf]] — replay reject,
+  /** Admit a vector batch into a stored vector serving `unit`
+    * ([[IndexBuild.FlatUnit]] by default, or [[IndexBuild.TwoLevelUnit]]
+    * — the at-scale form): assign under the FROZEN stored model (a
+    * two-level model past the literal ceiling assigns through its
+    * joined kernel, no k·d task literal), decide per arrival with the
+    * q142 verdict core ([[Clustering.admitVerdictsOf]] — replay reject,
     * capped-cell flag, same-cell near-dup reject), and append the
-    * admitted NON-capped arrivals to the assigned probe corpus in one
-    * delta commit. Capped-cell arrivals are admitted-but-flagged and
-    * NEVER appended — over-cap cells' members don't enter the probe
+    * admitted NON-capped arrivals to the unit's assigned probe corpus
+    * in one delta commit. Capped-cell arrivals are admitted-but-flagged
+    * and NEVER appended — over-cap cells' members don't enter the probe
     * table (the build-time invariant; it also makes their replay
     * verdict stable: re-sent capped arrivals re-flag, never duplicate).
     * Returns the per-arrival verdict frame.
@@ -178,44 +181,19 @@ object IndexDelta {
     * assignment, one id anti-probe, one cell-blocked probe join, one
     * delta-sized append. */
   def admitVectors(spark: SparkSession, root: String, arrivals: DataFrame,
-      batchId: String = java.util.UUID.randomUUID().toString): DataFrame = {
-    val pins = pinsOf(root, CentroidsT, AssignedT, CappedT)
-    val cents = Clustering.loadCentroids(spark, s"$root/$CentroidsT", pins.get(CentroidsT))
-    val probe = Clustering.loadAssignedCorpus(spark, s"$root/$AssignedT", pins.get(AssignedT))
-    val capped = Clustering.loadCappedCells(spark, s"$root/$CappedT", pins.get(CappedT))
-    val asg = Clustering.assignWith(
-        arrivals.select(col("vec_id"), Clustering.quantize(col("embedding")).as("x")),
-        cents)
+      batchId: String = java.util.UUID.randomUUID().toString,
+      unit: VectorUnit = FlatUnit): DataFrame = {
+    val pins = pinsOf(root, unit.model, unit.assigned, unit.capped)
+    val model = Clustering.loadCentroids(spark, s"$root/${unit.model}", pins.get(unit.model))
+    val probe = Clustering.loadAssignedCorpus(spark, s"$root/${unit.assigned}",
+      pins.get(unit.assigned))
+    val capped = Clustering.loadCappedCells(spark, s"$root/${unit.capped}",
+      pins.get(unit.capped))
+    val asg = model.assign(
+        arrivals.select(col("vec_id"), Clustering.quantize(col("embedding")).as("x")))
       .select(col("vec_id"), col("x"), col("cluster"), col("dist"))
-    admitAssigned(spark, s"$root/$AssignedT", asg, probe, capped,
-      verdictKey("vec", root, batchId, pins))
-  }
-
-  /** [[admitVectors]] under the stored TWO-LEVEL model — the at-scale
-    * form: arrivals assign through the FRAME-model dispatch
-    * ([[Clustering.assignHier]] — fine table as data past the literal
-    * ceiling, no k·d task literal), then the identical verdict core
-    * and append against the hier-assigned artifacts. */
-  def admitVectorsHier(spark: SparkSession, root: String, arrivals: DataFrame,
-      batchId: String = java.util.UUID.randomUUID().toString): DataFrame = {
-    val pins = pinsOf(root, HierModelT, AssignedHierT, CappedHierT)
-    val hm = Clustering.loadHierModelFrames(spark, s"$root/$HierModelT", pins.get(HierModelT))
-    val probe = Clustering.loadAssignedCorpus(spark, s"$root/$AssignedHierT",
-      pins.get(AssignedHierT))
-    val capped = Clustering.loadCappedCells(spark, s"$root/$CappedHierT", pins.get(CappedHierT))
-    val asg = Clustering.assignHier(
-        arrivals.select(col("vec_id"), Clustering.quantize(col("embedding")).as("x")),
-        hm)
-      .select(col("vec_id"), col("x"), col("cluster"), col("dist"))
-    admitAssigned(spark, s"$root/$AssignedHierT", asg, probe, capped,
-      verdictKey("hier", root, batchId, pins))
-  }
-
-  /** Shared verdict+append tail of both vector admission paths. */
-  private def admitAssigned(spark: SparkSession, assignedPath: String,
-      asg: DataFrame, probe: DataFrame, capped: DataFrame,
-      cacheKey: String): DataFrame = {
-    val verd = graft.CacheRegistry.getOrCache(spark, cacheKey)(
+    val verd = graft.CacheRegistry.getOrCache(spark,
+      verdictKey(unit.model, root, batchId, pins))(
       Clustering.admitVerdictsOf(asg,
         probe.select(col("corpus_id"), col("x"), col("cluster")), capped))
     val toAppend = verd
@@ -224,102 +202,53 @@ object IndexDelta {
       .join(asg, Seq("vec_id"))
       .select(col("vec_id").as("corpus_id"), col("cluster"), posexplode(col("x")))
       .toDF("corpus_id", "cluster", "pos", "v")
-    FpIndex.deltaAppendFlat(spark, assignedPath, toAppend) // empty: no commit
+    FpIndex.deltaAppendFlat(spark, s"$root/${unit.assigned}", toAppend) // empty: no commit
     verd
   }
 
-  /** The q143 staleness monitor over the STORED artifacts — the
-    * serving twin. Preferred path: the nightly build's k-row
-    * [[IndexBuild.RadiiT]] radius table joins the assigned arrivals
-    * directly — O(delta) per monitoring batch, no corpus-sized work.
-    * Roots built before the radii artifact existed fall back to
-    * recomputing corpus distances map-only against the stored centroid
-    * literal (one probe-table pass per batch — correct, just not the
-    * serving shape; and it cannot score arrivals landing in capped
-    * cells, whose members never entered the probe table — the stored
-    * radii, derived from the FULL assignment, can). Per-cell rows;
-    * feeds [[refreshIfStale]]. */
-  def storedStaleness(spark: SparkSession, root: String,
-      arrivals: DataFrame): DataFrame = {
-    val cents = Clustering.loadCentroids(spark, s"$root/$CentroidsT")
-    val arr = Clustering.assignWith(
-        arrivals.select(col("vec_id"), Clustering.quantize(col("embedding")).as("x")),
-        cents)
+  /** The q143 staleness monitor over a stored vector serving `unit` —
+    * the serving twin: arrivals assign under the stored model and join
+    * the nightly build's k-row radius table directly — O(delta) per
+    * monitoring batch, no corpus-sized work. The radii derive from the
+    * FULL assignment, so arrivals landing in capped cells (whose
+    * members never entered the probe table) are scored too. Per-cell
+    * rows; feeds [[refreshIfStale]]. A root without the radius table
+    * predates it, like a root without text_meta in [[textStaleness]]:
+    * re-run [[IndexBuild.buildAll]]. */
+  def storedStaleness(spark: SparkSession, root: String, arrivals: DataFrame,
+      unit: VectorUnit = FlatUnit): DataFrame = {
+    require(FpIndex.tableVersion(s"$root/${unit.radii}") > 0,
+      s"no ${unit.radii} stored under $root — the root predates the radius table; " +
+        "re-run IndexBuild.buildAll to stamp it")
+    val arr = Clustering.loadCentroids(spark, s"$root/${unit.model}")
+      .assign(arrivals.select(col("vec_id"), Clustering.quantize(col("embedding")).as("x")))
       .select(col("cluster"), col("vec_id"), col("dist"))
-    if (FpIndex.tableVersion(s"$root/${IndexBuild.RadiiT}") > 0)
-      Clustering.stalenessAgainstRadii(
-        FpIndex.loadFlat(spark, s"$root/${IndexBuild.RadiiT}"), arr)
-    else {
-      val cl = typedLit(cents.map(_.toSeq))
-      val corp = Clustering.loadAssignedCorpus(spark, s"$root/$AssignedT")
-        .select(col("cluster"), col("corpus_id").as("vec_id"),
-          graft.functions.FixedPointOps.sqDistL2(col("x"),
-            element_at(cl, col("cluster") + 1)).as("dist"))
-      Clustering.modelStalenessOf(corp, arr)
-    }
-  }
-
-  /** [[storedStaleness]] under the stored TWO-LEVEL model: arrivals
-    * assign through the frame-model dispatch and join the hier radius
-    * artifact ([[IndexBuild.RadiiHierT]]) — the same O(delta) shape
-    * per monitoring batch over the two-level cells. */
-  def storedStalenessHier(spark: SparkSession, root: String,
-      arrivals: DataFrame): DataFrame = {
-    val hm = Clustering.loadHierModelFrames(spark, s"$root/$HierModelT")
-    val arr = Clustering.assignHier(
-        arrivals.select(col("vec_id"), Clustering.quantize(col("embedding")).as("x")),
-        hm)
-      .select(col("cluster"), col("vec_id"), col("dist"))
-    Clustering.stalenessAgainstRadii(
-      FpIndex.loadFlat(spark, s"$root/${IndexBuild.RadiiHierT}"), arr)
+    Clustering.stalenessAgainstRadii(FpIndex.loadFlat(spark, s"$root/${unit.radii}"), arr)
   }
 
   /** REFRESH POLICY: when the arriving batch's overall staleness
-    * (10⁶ · stale / arrivals, the q143 arithmetic totaled) exceeds
-    * `maxStalePpm`, retrain the flat vector serving unit from the
-    * corpus of record ([[IndexBuild.buildFlatVectorArtifacts]] —
-    * atomic generation-append cutover, pinned readers untouched) and
-    * return true; below threshold, change nothing and return false.
-    * A fresh model strands ~5% of arrivals past its p95 radii by
-    * construction, so thresholds live well above 50000 ppm; the
-    * default trips when stale coverage triples. */
+    * (10⁶ · stale / arrivals, the q143 arithmetic totaled over
+    * [[storedStaleness]]) exceeds `maxStalePpm`, retrain the whole
+    * vector serving `unit` — model, hot-cell-capped assigned corpus,
+    * capped-cells table, radii — from the corpus of record
+    * ([[IndexBuild.buildVectorUnit]]'s generation-append cutovers:
+    * atomic per table; readers pinned before the refresh keep serving
+    * the old model bit-for-bit, IndexDeltaSpec pins it) and return
+    * true; below threshold, change nothing and return false. A fresh
+    * model strands ~5% of arrivals past its p95 radii by construction,
+    * so thresholds live well above 50000 ppm; the default trips when
+    * stale coverage triples. */
   def refreshIfStale(spark: SparkSession, dir: String, root: String,
-      arrivals: DataFrame, maxStalePpm: Long = 150000L): Boolean = {
-    val t = storedStaleness(spark, root, arrivals)
+      arrivals: DataFrame, maxStalePpm: Long = 150000L,
+      unit: VectorUnit = FlatUnit): Boolean = {
+    val t = storedStaleness(spark, root, arrivals, unit)
       .agg(sum(col("n_new")).as("n"), sum(col("n_stale")).as("s"))
       .head()
     val n = if (t.isNullAt(0)) 0L else t.getLong(0)
     val stale = if (t.isNullAt(1)) 0L else t.getLong(1)
     val ppm = if (n == 0) 0L else 1000000L * stale / n
     if (ppm > maxStalePpm) {
-      IndexBuild.buildFlatVectorArtifacts(spark,
-        Clustering.fixedPoint(spark, dir), root)
-      true
-    } else false
-  }
-
-  /** [[refreshIfStale]] for the TWO-LEVEL serving unit (round-14
-    * verdict ask #2a): when the hier staleness monitor
-    * ([[storedStalenessHier]], totaled to ppm) trips, retrain the
-    * whole hier unit — frame model, hot-cell-capped assigned corpus,
-    * capped-cells table, hier radii — from the corpus of record
-    * through [[IndexBuild.buildHierVectorArtifacts]]'s
-    * generation-append cutovers (atomic per table; readers pinned
-    * before the refresh keep serving the old model bit-for-bit,
-    * IndexDeltaSpec pins it). Same threshold reasoning as the flat
-    * unit: a fresh model strands ~5% of arrivals past its p95 radii
-    * by construction. */
-  def refreshIfStaleHier(spark: SparkSession, dir: String, root: String,
-      arrivals: DataFrame, maxStalePpm: Long = 150000L): Boolean = {
-    val t = storedStalenessHier(spark, root, arrivals)
-      .agg(sum(col("n_new")).as("n"), sum(col("n_stale")).as("s"))
-      .head()
-    val n = if (t.isNullAt(0)) 0L else t.getLong(0)
-    val stale = if (t.isNullAt(1)) 0L else t.getLong(1)
-    val ppm = if (n == 0) 0L else 1000000L * stale / n
-    if (ppm > maxStalePpm) {
-      IndexBuild.buildHierVectorArtifacts(spark,
-        Clustering.fixedPoint(spark, dir), root)
+      IndexBuild.buildVectorUnit(spark, Clustering.fixedPoint(spark, dir), root, unit)
       true
     } else false
   }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -305,9 +305,9 @@ object Incremental {
   /** Streaming SEMANTIC near-dup ingest — q125's continuous twin,
     * the EMBEDDING modality's gate (the fifth leg: text minhash,
     * image/audio/video fingerprints, now semantic vectors): each
-    * arriving vector is fixed-point-quantized and centroid-assigned
-    * in one pure map ([[graft.operators.Clustering.assignWith]] —
-    * the stored k·d model rides the plan as a literal, stream-legal),
+    * arriving vector is fixed-point-quantized and assigned to its cell
+    * in one pure map ([[graft.operators.Clustering.CellModel.assign]] —
+    * the stored model rides the plan as a literal, stream-legal),
     * then equi-probes the STATIC pre-assigned corpus table
     * ([[graft.operators.Clustering.assignedCorpus]], persistable via
     * saveAssignedCorpus) on its CLUSTER id — the SemDeDup blocking
@@ -320,38 +320,23 @@ object Incremental {
     * exactly one cell, so each (arrival, corpus) pair can occur at
     * most once. Recall contract: an arrival whose nearest corpus
     * near-dup lands in a DIFFERENT cell is missed (the SemDeDup
-    * trade, same as batch); StreamingSpec plants both cases. */
+    * trade, same as batch); StreamingSpec plants both cases.
+    *
+    * Under a TWO-LEVEL model — the at-scale form: when k grows with
+    * the corpus (kForCorpus), flat arrival assignment costs k
+    * distances per arrival; the hierarchical probe costs 2·√k — the
+    * stored corpus side must be assigned by the SAME model, which the
+    * probe half then equi-joins identically: cells are cells, whichever
+    * ladder produced them. */
   def semanticNearDupStream(
       arrivals: DataFrame,
-      cents: Seq[Array[Long]],
+      model: graft.operators.Clustering.CellModel,
       corpusAssigned: DataFrame,
       pruneT: Long = graft.operators.Clustering.PruneT): DataFrame = {
     import graft.operators.Clustering
     semanticNearDupProbe(
-      Clustering.assignWith(
-          arrivals.select(col("vec_id"), Clustering.quantize(col("embedding")).as("x")),
-          cents)
-        .select(col("vec_id"), col("x"), col("cluster")),
-      corpusAssigned, pruneT)
-  }
-
-  /** The gate under a TWO-LEVEL model — the at-scale variant: when k
-    * grows with the corpus (kForCorpus), flat arrival assignment costs
-    * k distances per arrival; the hierarchical probe costs 2·√k. The
-    * stored corpus side must be assigned by the SAME model
-    * (`assignHierarchical` ids), which the probe half then equi-joins
-    * identically — cells are cells, whichever ladder produced them. */
-  def semanticNearDupStreamHier(
-      arrivals: DataFrame,
-      hm: graft.operators.Clustering.HierModel,
-      corpusAssigned: DataFrame,
-      pruneT: Long = graft.operators.Clustering.PruneT): DataFrame = {
-    import graft.operators.Clustering
-    semanticNearDupProbe(
-      Clustering.assignHierarchical(
-          arrivals.select(col("vec_id"), Clustering.quantize(col("embedding")).as("x")),
-          hm)
-        .select(col("vec_id"), col("x"), col("cluster")),
+      model.probeCells(
+        arrivals.select(col("vec_id"), Clustering.quantize(col("embedding")).as("x")), 1),
       corpusAssigned, pruneT)
   }
 
@@ -366,165 +351,78 @@ object Incremental {
     * in bounded cells probe exactly as [[semanticNearDupStream]] —
     * pair rows with `cell_capped` 0. The capped-cell side is a k-row
     * broadcast; both legs are stream-static joins (no aggregation),
-    * so the union stays append-legal. */
+    * so the union stays append-legal. The stored probe/capped tables
+    * must be built from the SAME model's cells.
+    *
+    * `nprobe` = 2 is the MULTI-PROBE gate — it closes half of the
+    * single-probe gate's recall hole: nprobe 1 misses an arrival whose
+    * nearest corpus near-dup lives in a DIFFERENT cell (the SemDeDup
+    * blocking trade, worst exactly at cell boundaries). Each arrival
+    * then probes its TWO cells
+    * ([[graft.operators.Clustering.CellModel.probeCells]] — for a flat
+    * model the top-2 step is ONE codegen'd scan of the centroid
+    * literal; for a two-level model the fine argmin inside each of the
+    * top-2 COARSE cells, 3·√k distances, the IVF nprobe=2 remedy), so a
+    * boundary arrival searches both sides of its boundary at 2·|cell|
+    * bounded probe cost. Verdicts add a `probe` rank column (1 =
+    * greedy cell, 2 = second probe): rows stay unique — the two probe
+    * cells are distinct and a corpus vector lives in exactly one cell
+    * — so there is still no aggregation and append mode stays legal.
+    * Cap semantics are PER PROBE LEG: an arrival whose second-nearest
+    * cell is capped gets one flagged (probe 2) verdict while its greedy
+    * leg probes normally — the escalation signal stays attributable to
+    * the leg that hit the hot cell.
+    *
+    * Model transport: a two-level model past
+    * [[graft.operators.Clustering.FineLiteralMaxEntries]] runs its
+    * joined kernel, which aggregates — a streaming `arrivals` then
+    * fails a `require`; run the same call on each micro-batch through
+    * `foreachBatch` (the streaming MERGE precedent):
+    * `arrivals.writeStream.foreachBatch((b, _) =>
+    * semanticNearDupGate(b, m, probe, capped, 2).write...)`. */
   def semanticNearDupGate(
       arrivals: DataFrame,
-      cents: Seq[Array[Long]],
+      model: graft.operators.Clustering.CellModel,
       probeCorpus: DataFrame,
       cappedCells: DataFrame,
+      nprobe: Int = 1,
       pruneT: Long = graft.operators.Clustering.PruneT): DataFrame = {
     import graft.operators.Clustering
     semanticGateVerdicts(
-      Clustering.assignWith(
-          arrivals.select(col("vec_id"), Clustering.quantize(col("embedding")).as("x")),
-          cents)
-        .select(col("vec_id"), col("x"), col("cluster")),
+      model.probeCells(
+        arrivals.select(col("vec_id"), Clustering.quantize(col("embedding")).as("x")), nprobe),
       probeCorpus, cappedCells, pruneT)
   }
 
-  /** The capped gate under a TWO-LEVEL model — [[semanticNearDupGate]]
-    * with the O(√k)-per-arrival hierarchical assignment; the stored
-    * probe/capped tables must be built from the SAME model's cells. */
-  def semanticNearDupGateHier(
-      arrivals: DataFrame,
-      hm: graft.operators.Clustering.HierModel,
-      probeCorpus: DataFrame,
-      cappedCells: DataFrame,
-      pruneT: Long = graft.operators.Clustering.PruneT): DataFrame = {
-    import graft.operators.Clustering
-    semanticGateVerdicts(
-      Clustering.assignHierarchical(
-          arrivals.select(col("vec_id"), Clustering.quantize(col("embedding")).as("x")),
-          hm)
-        .select(col("vec_id"), col("x"), col("cluster")),
-      probeCorpus, cappedCells, pruneT)
-  }
-
-  /** MULTI-PROBE capped gate (nprobe = 2, flat model) — closes half
-    * of the single-probe gate's recall hole: [[semanticNearDupGate]]
-    * misses an arrival whose nearest corpus near-dup lives in a
-    * DIFFERENT cell (the SemDeDup blocking trade, worst exactly at
-    * cell boundaries). Here each arrival probes its TOP-2 cells
-    * ([[graft.operators.Clustering.multiProbeCellsFlat]] — the top-2
-    * step is ONE codegen'd scan of the centroid literal), so a
-    * boundary arrival searches both sides of its boundary at 2·|cell|
-    * bounded probe cost. Verdict shape adds a `probe` rank column
-    * (1 = greedy cell, 2 = second probe): rows stay unique — the two
-    * probe cells are distinct and a corpus vector lives in exactly
-    * one cell — so there is still no aggregation and append mode
-    * stays legal. Cap semantics are PER PROBE LEG: an arrival whose
-    * second-nearest cell is capped gets one flagged (probe 2) verdict
-    * while its greedy leg probes normally — the escalation signal
-    * stays attributable to the leg that hit the hot cell. */
-  def semanticNearDupGate2(
-      arrivals: DataFrame,
-      cents: Seq[Array[Long]],
-      probeCorpus: DataFrame,
-      cappedCells: DataFrame,
-      pruneT: Long = graft.operators.Clustering.PruneT): DataFrame = {
-    import graft.operators.Clustering
-    semanticGateVerdicts2(
-      Clustering.multiProbeCellsFlat(
-        arrivals.select(col("vec_id"), Clustering.quantize(col("embedding")).as("x")),
-        cents),
-      probeCorpus, cappedCells, pruneT)
-  }
-
-  /** [[semanticNearDupGate2]] under a TWO-LEVEL model: probe cells are
-    * the fine argmin inside each of the top-2 COARSE cells (3·√k
-    * distances per arrival — one top-2 coarse scan + two fine scans),
-    * the IVF nprobe=2 recall remedy at the gate's ingest seam. The
-    * stored probe/capped tables must be built from the SAME model.
-    *
-    * Model-transport note: the fine table rides the plan as a literal
-    * here (stream-legal, map-only) — fine while k·d is under
-    * [[graft.operators.Clustering.FineLiteralMaxEntries]]. Past it,
-    * run [[semanticGateHier2Batch]] per micro-batch via `foreachBatch`
-    * (the streaming MERGE precedent) — the frame-model probe cells
-    * plus the same verdict core, StreamingSpec-proven equal to this
-    * literal form. */
-  def semanticNearDupGateHier2(
-      arrivals: DataFrame,
-      hm: graft.operators.Clustering.HierModel,
-      probeCorpus: DataFrame,
-      cappedCells: DataFrame,
-      pruneT: Long = graft.operators.Clustering.PruneT): DataFrame = {
-    import graft.operators.Clustering
-    semanticGateVerdicts2(
-      Clustering.multiProbeCells(
-        arrivals.select(col("vec_id"), Clustering.quantize(col("embedding")).as("x")),
-        hm),
-      probeCorpus, cappedCells, pruneT)
-  }
-
-  /** The multi-probe gate's `foreachBatch` form — the FRAME-model
-    * path past the fine-literal ceiling: probe cells come from
-    * [[graft.operators.Clustering.multiProbeCellsJoined]] (coarse
-    * literal stays √k·d; the fine table is DATA, equi-joined on the
-    * coarse cell with one argmin aggregate — batch-legal inside
-    * foreachBatch), then the SAME verdict core. Use as
-    * `arrivals.writeStream.foreachBatch((b, _) =>
-    * semanticGateHier2Batch(b, m, probe, capped).write...)`. */
-  def semanticGateHier2Batch(
-      batch: DataFrame,
-      m: graft.operators.Clustering.HierModelDf,
-      probeCorpus: DataFrame,
-      cappedCells: DataFrame,
-      pruneT: Long = graft.operators.Clustering.PruneT): DataFrame = {
-    import graft.operators.Clustering
-    semanticGateVerdicts2(
-      Clustering.multiProbeCellsJoined(
-        batch.select(col("vec_id"), Clustering.quantize(col("embedding")).as("x")),
-        m),
-      probeCorpus, cappedCells, pruneT)
-  }
-
-  /** Verdict core of the multi-probe gates: per-LEG cap flagging and
-    * probing over the exploded (vec_id, x, probe, cluster) rows. */
-  private def semanticGateVerdicts2(
-      asg: DataFrame, probeCorpus: DataFrame, cappedCells: DataFrame,
-      pruneT: Long): DataFrame = {
-    val flagged = asg.join(
-      broadcast(cappedCells.select(col("cluster")).withColumn("capflag", lit(1))),
-      Seq("cluster"), "left")
-    val probed = flagged.filter(col("capflag").isNull)
-      .join(probeCorpus.select(col("corpus_id"), col("x").as("cx"), col("cluster")),
-        Seq("cluster")) // stream-static equi-probe, one leg per probe cell
-      .filter(col("vec_id") =!= col("corpus_id"))
-      .withColumn("dist",
-        graft.functions.FixedPointOps.sqDistL2(col("x"), col("cx")))
-      .filter(col("dist") < pruneT)
-      .select(col("vec_id"), col("probe"), col("corpus_id"), col("dist"),
-        lit(0).as("cell_capped"))
-    val inCapped = flagged.filter(col("capflag") === 1)
-      .select(col("vec_id"), col("probe"),
-        lit(null).cast("long").as("corpus_id"),
-        lit(null).cast("long").as("dist"), lit(1).as("cell_capped"))
-    probed.unionByName(inCapped)
-  }
-
-  /** Shared verdict core of the capped gates: flag arrivals whose
-    * cell is in the capped table (broadcast, k rows), probe the rest. */
+  /** Verdict core of the capped gate: flag arrivals (per probe leg, when
+    * the rows carry one) whose cell is in the capped table (broadcast,
+    * k rows), probe the rest. */
   private def semanticGateVerdicts(
       asg: DataFrame, probeCorpus: DataFrame, cappedCells: DataFrame,
       pruneT: Long): DataFrame = {
+    val leg = probeLeg(asg)
     val flagged = asg.join(
       broadcast(cappedCells.select(col("cluster")).withColumn("capflag", lit(1))),
       Seq("cluster"), "left")
     val probed = semanticNearDupProbe(
         flagged.filter(col("capflag").isNull)
-          .select(col("vec_id"), col("x"), col("cluster")),
+          .select(col("vec_id") +: leg :+ col("x") :+ col("cluster"): _*),
         probeCorpus, pruneT)
       .withColumn("cell_capped", lit(0))
     val inCapped = flagged.filter(col("capflag") === 1)
-      .select(col("vec_id"), lit(null).cast("long").as("corpus_id"),
-        lit(null).cast("long").as("dist"), lit(1).as("cell_capped"))
+      .select(col("vec_id") +: leg :+ lit(null).cast("long").as("corpus_id") :+
+        lit(null).cast("long").as("dist") :+ lit(1).as("cell_capped"): _*)
     probed.unionByName(inCapped)
   }
 
-  /** The probe half both gates share: stream-static equi-join on the
+  /** The `probe` rank column of nprobe-2 probe cells, if present. */
+  private def probeLeg(asg: DataFrame): Seq[Column] =
+    if (asg.columns.contains("probe")) Seq(col("probe")) else Nil
+
+  /** The probe half the gates share: stream-static equi-join on the
     * cell id (an arrival compares against ITS cell's members, never
-    * the corpus), exact integer verify, verdict rows. */
+    * the corpus; one leg per probe cell), exact integer verify,
+    * verdict rows. */
   private def semanticNearDupProbe(
       asg: DataFrame, corpusAssigned: DataFrame, pruneT: Long): DataFrame =
     asg
@@ -534,15 +432,18 @@ object Incremental {
       .withColumn("dist",
         graft.functions.FixedPointOps.sqDistL2(col("x"), col("cx")))
       .filter(col("dist") < pruneT)
-      .select(col("vec_id"), col("corpus_id"), col("dist"))
+      .select(col("vec_id") +: probeLeg(asg) :+ col("corpus_id") :+ col("dist"): _*)
 
   /** Streaming DRIFT counts — q132/q141's continuous twin: arriving
-    * vectors are quantized + centroid-assigned in one pure map (the
-    * stored model rides the plan as a literal, stream-legal), then
-    * counted per (event-time window, cell) with the watermark closing
-    * windows — append-legal, state bounded by k·open-windows. The
-    * drift VERDICT (ppm shares vs the stored baseline) attaches per
-    * micro-batch via `foreachBatch` +
+    * vectors are quantized + assigned to their cell in one pure map
+    * (the stored model rides the plan as a literal, stream-legal),
+    * then counted per (event-time window, cell) with the watermark
+    * closing windows — append-legal, state bounded by k·open-windows.
+    * The baseline counts must come from the SAME model's cells (for a
+    * two-level model, the nightly build's hier-assigned corpus; the
+    * arrivals then cost 2·√k distances each). The drift VERDICT (ppm
+    * shares vs the stored baseline) attaches per micro-batch via
+    * `foreachBatch` +
     * [[graft.operators.Clustering.clusterDriftWindowed]]: the
     * per-window TOTAL is a second aggregation over the streamed one
     * (not stream-legal inline), and every row of a window closes in
@@ -550,37 +451,17 @@ object Incremental {
     * StreamingSpec pins the streamed verdicts bit-equal to batch
     * [[graft.operators.Clustering.clusterDriftOf]] on each window's
     * slice. Use:
-    * `clusterDriftCountsStream(a, cents).writeStream.foreachBatch(
+    * `clusterDriftCountsStream(a, model).writeStream.foreachBatch(
     *   (b, _) => Clustering.clusterDriftWindowed(base, b).write...)`. */
   def clusterDriftCountsStream(
       arrivals: DataFrame,
-      cents: Seq[Array[Long]],
+      model: graft.operators.Clustering.CellModel,
       windowLen: String = "1 hour",
       delay: String = "1 hour"): DataFrame = {
     import graft.operators.Clustering
-    Clustering.assignWith(
+    model.assign(
         arrivals.select(col("vec_id"),
-          Clustering.quantize(col("embedding")).as("x"), col("event_ts")),
-        cents)
-      .withWatermark("event_ts", delay)
-      .groupBy(window(col("event_ts"), windowLen), col("cluster"))
-      .agg(count(lit(1)).as("n_new"))
-  }
-
-  /** [[clusterDriftCountsStream]] under a TWO-LEVEL model — the
-    * at-scale drift gate (2·√k distances per arrival); the baseline
-    * counts must come from the SAME model's cells (the nightly
-    * build's hier-assigned corpus). Same foreachBatch verdict seam. */
-  def clusterDriftCountsStreamHier(
-      arrivals: DataFrame,
-      hm: graft.operators.Clustering.HierModel,
-      windowLen: String = "1 hour",
-      delay: String = "1 hour"): DataFrame = {
-    import graft.operators.Clustering
-    Clustering.assignHierarchical(
-        arrivals.select(col("vec_id"),
-          Clustering.quantize(col("embedding")).as("x"), col("event_ts")),
-        hm)
+          Clustering.quantize(col("embedding")).as("x"), col("event_ts")))
       .withWatermark("event_ts", delay)
       .groupBy(window(col("event_ts"), windowLen), col("cluster"))
       .agg(count(lit(1)).as("n_new"))

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Clustering, Pca}
+import graft.operators.{Clustering, FpIndex, Pca}
+import graft.operators.Clustering.CellModel
 
 /** Clustering + PCA invariants (q124–q126): Lloyd mechanics
   * (coverage, monotone inertia, partition invariance), the SemDeDup
@@ -162,26 +163,41 @@ class ClusteringSpec extends AnyFunSuite {
     }
   }
 
+  /** The stored arrays of a cell model, form and shape included. */
+  private def bitsOf(m: CellModel): Seq[Any] = m match {
+    case CellModel.Flat(cents) => "flat" +: cents.map(_.toSeq)
+    case t: CellModel.TwoLevel =>
+      Seq("two-level", t.kf, t.k) ++ t.coarse.map(_.toSeq) ++ t.fines.map(_.map(_.toSeq))
+  }
+
+  /** Arrivals as the serve paths see them: (vec_id, x). */
+  private def quantized(df: org.apache.spark.sql.DataFrame) =
+    df.select(col("vec_id"), Clustering.quantize(col("embedding")).as("x"))
+
   test("stored centroids: bit-exact round-trip and fresh-session serve equality") {
-    val root = java.nio.file.Files.createTempDirectory("graft-cent").toString
+    CacheRegistry.releaseAll()
     val v = Clustering.fixedPoint(spark, sf01)
-    val cents = Clustering.trainCentroids(v)
-    Clustering.saveCentroids(spark, root, cents)
-    val back = Clustering.loadCentroids(spark, root)
-    assert(back.length == cents.length)
-    cents.zip(back).foreach { case (a, b) => assert(a.sameElements(b), "centroid bits") }
-    // a fresh session serves assignments equal to the in-session model,
-    // touching only the stored table + the arrival batch
-    val serve = spark.newSession()
-    val arrivals = Tables.embeddings(serve, sf01).filter(col("vec_id") % 25 === 0)
-    val served = Clustering.assignStored(serve, root, arrivals)
-    val plan = served.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"serve assignment must be map-only:\n$plan")
-    val want = Clustering.assignWith(
-        Clustering.fixedPoint(spark, sf01).filter(col("vec_id") % 25 === 0), cents)
-      .select("vec_id", "cluster", "dist").collect().map(_.toSeq).sortBy(_.toString)
-    val got = served.collect().map(_.toSeq).sortBy(_.toString)
-    assert(got.sameElements(want), "served == in-session")
+    // both model forms share one save, one loader and one serve verb
+    for (model <- Seq(CellModel.Flat(Clustering.trainCentroids(v)),
+        Clustering.trainHierarchical(v, 16))) {
+      val form = model.productPrefix
+      val root = java.nio.file.Files.createTempDirectory("graft-cent").toString
+      model.save(spark, root)
+      assert(bitsOf(Clustering.loadCentroids(spark, root)) == bitsOf(model), s"$form bits")
+      // a fresh session serves assignments equal to the in-session model,
+      // touching only the stored table + the arrival batch
+      val serve = spark.newSession()
+      val arrivals = Tables.embeddings(serve, sf01).filter(col("vec_id") % 25 === 0)
+      val served = Clustering.loadCentroids(serve, root).assign(quantized(arrivals))
+        .select("vec_id", "cluster", "dist")
+      val plan = served.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"), s"$form serve assignment must be map-only:\n$plan")
+      val want = model.assign(
+          Clustering.fixedPoint(spark, sf01).filter(col("vec_id") % 25 === 0))
+        .select("vec_id", "cluster", "dist").collect().map(_.toSeq).sortBy(_.toString)
+      val got = served.collect().map(_.toSeq).sortBy(_.toString)
+      assert(got.sameElements(want), s"$form served == in-session")
+    }
   }
 
   test("gram matrix: upper triangle only, Cauchy-Schwarz diag, exact spot cell") {
@@ -364,8 +380,8 @@ class ClusteringSpec extends AnyFunSuite {
     val m = Clustering.trainHierarchical(v, 16)
     val kc = m.coarse.length
     assert(kc == 4 && m.kf == 4, "k=16 -> 4 coarse x 4 fine")
-    m.fine.foreach(f => assert(f.nonEmpty && f.length <= m.kf, "fine cells bounded"))
-    val got = Clustering.assignHierarchical(v, m)
+    m.fines.foreach(f => assert(f.nonEmpty && f.length <= m.kf, "fine cells bounded"))
+    val got = m.assign(v)
       .select("vec_id", "cluster", "dist").collect()
       .map(r => r.getLong(0) -> (r.getInt(1), r.getLong(2))).toMap
     val vecs = v.select("vec_id", "x").collect()
@@ -377,14 +393,14 @@ class ClusteringSpec extends AnyFunSuite {
       a.indices.map(i => (a(i) - b(i)) * (a(i) - b(i))).sum
     vecs.foreach { case (id, x) =>
       val ccl = m.coarse.zipWithIndex.map { case (cv, ci) => (d2(x, cv), ci) }.min._2
-      val (fd, fcl) = m.fine(ccl).zipWithIndex.map { case (fv, fi) => (d2(x, fv), fi) }.min
+      val (fd, fcl) = m.fines(ccl).zipWithIndex.map { case (fv, fi) => (d2(x, fv), fi) }.min
       assert(got(id) == ((ccl * m.kf + fcl, fd)), s"replay of vec $id")
     }
     // the fine split genuinely refines: more distinct cells than coarse
     assert(got.values.map(_._1).toSet.size > kc, "fine level adds granularity")
     // and the blocking consumer takes the hierarchical frame unchanged
     val pruned = Clustering.semdedupPruneOf(
-      Clustering.assignHierarchical(v, m).select(col("vec_id"), col("x"), col("cluster")))
+      m.assign(v).select(col("vec_id"), col("x"), col("cluster")))
     assert(pruned.count() == vecs.size, "verdict per vector")
   }
 
@@ -404,7 +420,7 @@ class ClusteringSpec extends AnyFunSuite {
       val viaQuery = Clustering.hierAssign(spark, dir).collect()
         .map(_.toSeq).sortBy(_.toString)
       val m = Clustering.trainHierarchical(v, Clustering.HierK)
-      val viaModel = Clustering.assignHierarchical(v, m)
+      val viaModel = m.assign(v)
         .select("vec_id", "cluster", "dist").collect().map(_.toSeq).sortBy(_.toString)
       assert(viaQuery.sameElements(viaModel), s"$dir: q130 ≡ model-path assignment")
     }
@@ -418,9 +434,9 @@ class ClusteringSpec extends AnyFunSuite {
     // the serve path: counts from the stored assigned corpus, arrivals
     // assigned against the stored centroid model — model-sized math only
     val v = Clustering.fixedPoint(spark, sf)
-    val cents = Clustering.trainCentroids(v)
+    val cents = CellModel.Flat(Clustering.trainCentroids(v))
     val root = java.nio.file.Files.createTempDirectory("graft-drift").toString
-    Clustering.saveCentroids(spark, s"$root/cents", cents)
+    cents.save(spark, s"$root/cents")
     Clustering.saveAssignedCorpus(spark, s"$root/asg",
       Clustering.assignedCorpus(v, cents))
     val serve = spark.newSession()
@@ -428,7 +444,7 @@ class ClusteringSpec extends AnyFunSuite {
       .groupBy(col("cluster")).agg(count(lit(1)).as("n_base"))
     val arrivals = Tables.embeddings(serve, sf)
       .filter(col("vec_id") % Clustering.DriftMod === Clustering.DriftRes)
-    val fresh = Clustering.assignStored(serve, s"$root/cents", arrivals)
+    val fresh = Clustering.loadCentroids(serve, s"$root/cents").assign(quantized(arrivals))
       .groupBy(col("cluster")).agg(count(lit(1)).as("n_new"))
     val got = Clustering.clusterDriftOf(base, fresh).collect()
       .map(_.toSeq).sortBy(_.toString)
@@ -452,36 +468,6 @@ class ClusteringSpec extends AnyFunSuite {
     val kept = Clustering.semdedupPrune(spark, sf)
       .filter(col("kept") === 1).count()
     assert(sd._2 == kept, "semdedup stage == q125 kept verdicts")
-  }
-
-  test("stored two-level model: bit-exact round-trip and fresh-session serve equality") {
-    CacheRegistry.releaseAll()
-    val v = Clustering.fixedPoint(spark, sf01)
-    val hm = Clustering.trainHierarchical(v, 16)
-    val root = java.nio.file.Files.createTempDirectory("graft-hier").toString
-    Clustering.saveHierModel(spark, root, hm)
-    val back = Clustering.loadHierModel(spark, root)
-    assert(back.kf == hm.kf)
-    assert(back.coarse.length == hm.coarse.length)
-    back.coarse.zip(hm.coarse).foreach { case (a, b) =>
-      assert(a.sameElements(b), "coarse bits") }
-    assert(back.fine.length == hm.fine.length)
-    back.fine.zip(hm.fine).foreach { case (fa, fb) =>
-      assert(fa.length == fb.length)
-      fa.zip(fb).foreach { case (a, b) => assert(a.sameElements(b), "fine bits") }
-    }
-    // a fresh session serves two-level assignments equal to the
-    // in-session model, map-only
-    val serve = spark.newSession()
-    val served = Clustering.assignStoredHier(serve, root,
-      Tables.embeddings(serve, sf01).filter(col("vec_id") % 25 === 0))
-    val plan = served.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"hier serve must be map-only:\n$plan")
-    val want = Clustering.assignHierarchical(
-        Clustering.fixedPoint(spark, sf01).filter(col("vec_id") % 25 === 0), hm)
-      .select("vec_id", "cluster", "dist").collect().map(_.toSeq).sortBy(_.toString)
-    val got = served.collect().map(_.toSeq).sortBy(_.toString)
-    assert(got.sameElements(want), "served == in-session")
   }
 
   test("k-means|| seeding: deterministic, partition-invariant, and the trained " +
@@ -516,31 +502,29 @@ class ClusteringSpec extends AnyFunSuite {
     val v = Clustering.fixedPoint(spark, sf)
     val lit = Clustering.trainHierarchical(v, 16)
     val frames = Clustering.trainHierarchicalFrames(v, 16)
-    assert(frames.kf == lit.kf && frames.kTotal == 16)
+    assert(frames.kf == lit.kf && frames.k == 16)
     assert(frames.coarse.length == lit.coarse.length)
     frames.coarse.zip(lit.coarse).foreach { case (a, b) =>
       assert(a.sameElements(b), "coarse bits") }
     // the fine FRAME holds exactly the literal model's centroids
     val fineRows = frames.fine.collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Long](2).toArray).toMap
-    val want = lit.fine.indices.flatMap(c =>
-      lit.fine(c).indices.map(f => (c, f) -> lit.fine(c)(f))).toMap
+    val want = lit.fines.indices.flatMap(c =>
+      lit.fines(c).indices.map(f => (c, f) -> lit.fines(c)(f))).toMap
     assert(fineRows.keySet == want.keySet, "same fine cells")
     want.foreach { case (k, w) =>
       assert(fineRows(k).sameElements(w), s"fine cell $k bits") }
     // joined assignment ≡ literal assignment, three ways: the frames
-    // model, the interop seam (frame FROM the literal model), and the
-    // threshold dispatch (collects back to literal at this k)
+    // model, the literal-trained model's fine frame, and the model's
+    // own dispatch (collects back to literal at this k)
     val viaLit = Clustering.assignHierarchical(v, lit)
       .select("vec_id", "cluster", "dist").collect().map(_.toSeq).sortBy(_.toString)
-    def joined(m: Clustering.HierModelDf) =
+    def joined(m: CellModel.TwoLevel) =
       Clustering.assignHierarchicalJoined(v, m)
         .select("vec_id", "cluster", "dist").collect().map(_.toSeq).sortBy(_.toString)
     assert(joined(frames).sameElements(viaLit), "frames-trained joined ≡ literal")
-    assert(joined(Clustering.HierModelDf(
-        lit.coarse, Clustering.fineFrameOf(spark, lit), lit.kf, 16))
-      .sameElements(viaLit), "interop seam ≡ literal")
-    val viaAuto = Clustering.assignHier(v, frames)
+    assert(joined(lit).sameElements(viaLit), "literal-trained fine frame ≡ literal")
+    val viaAuto = frames.assign(v)
       .select("vec_id", "cluster", "dist").collect().map(_.toSeq).sortBy(_.toString)
     assert(viaAuto.sameElements(viaLit), "dispatch ≡ literal")
     // the carried columns survive the joined argmin untouched
@@ -557,13 +541,11 @@ class ClusteringSpec extends AnyFunSuite {
       .select("vec_id", "cluster", "dist", "improved").collect()
       .map(r => (r.getLong(0), (r.getInt(1), r.getLong(2), r.getInt(3)))).toMap
     // joined twin bit-exact on the same model
-    val mpJ = Clustering.multiProbeAssignJoined(v, Clustering.HierModelDf(
-        m.coarse, Clustering.fineFrameOf(spark, m), m.kf, 16))
+    val mpJ = Clustering.multiProbeAssignJoined(v, m)
       .select("vec_id", "cluster", "dist", "improved").collect()
       .map(r => (r.getLong(0), (r.getInt(1), r.getLong(2), r.getInt(3)))).toMap
     assert(mp == mpJ, "joined multi-probe ≡ literal multi-probe")
-    val mpD = Clustering.multiProbeHier(v, Clustering.HierModelDf(
-        m.coarse, Clustering.fineFrameOf(spark, m), m.kf, 16))
+    val mpD = m.improved(v)
       .select("vec_id", "cluster", "dist", "improved").collect()
       .map(r => (r.getLong(0), (r.getInt(1), r.getLong(2), r.getInt(3)))).toMap
     assert(mp == mpD, "threshold dispatch ≡ literal multi-probe")
@@ -572,15 +554,18 @@ class ClusteringSpec extends AnyFunSuite {
     val pcLit = Clustering.multiProbeCells(v.select(col("vec_id"), col("x")), m)
       .select("vec_id", "probe", "cluster").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
-    val pcJ = Clustering.multiProbeCellsJoined(v.select(col("vec_id"), col("x")),
-        Clustering.HierModelDf(m.coarse, Clustering.fineFrameOf(spark, m), m.kf, 16))
+    val pcJ = Clustering.multiProbeCellsJoined(v.select(col("vec_id"), col("x")), m)
       .select("vec_id", "probe", "cluster").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
     assert(pcLit == pcJ, "joined probe cells ≡ literal probe cells")
+    val pcD = m.probeCells(v.select(col("vec_id"), col("x")), 2)
+      .select("vec_id", "probe", "cluster").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
+    assert(pcLit == pcD, "the model's nprobe-2 probe cells ≡ literal probe cells")
     // vs the greedy (nprobe=1) assignment: never worse, improved is
     // exactly the strict wins, and non-improved rows keep the greedy
     // distance (cluster may differ only on a cross-cell distance tie)
-    val greedy = Clustering.assignHierarchical(v, m)
+    val greedy = m.assign(v)
       .select("vec_id", "cluster", "dist").collect()
       .map(r => (r.getLong(0), (r.getInt(1), r.getLong(2)))).toMap
     assert(mp.keySet == greedy.keySet)
@@ -599,17 +584,17 @@ class ClusteringSpec extends AnyFunSuite {
     // true nearest fine centroid lives in cell 1 — nprobe=1 misses it,
     // nprobe=2 recovers the exact flat argmin
     import spark.implicits._
-    val pm = Clustering.HierModel(
+    val pm = Clustering.literalTwoLevel(spark,
       coarse = Seq(Array(0L, 0L), Array(100L, 0L)),
-      fine = Seq(Seq(Array(0L, 0L), Array(40L, 0L)),
-                 Seq(Array(45L, 0L), Array(150L, 0L))),
-      kf = 2)
+      fines = Seq(Seq(Array(0L, 0L), Array(40L, 0L)),
+                  Seq(Array(45L, 0L), Array(150L, 0L))),
+      kf = 2, k = 4)
     val pv = Seq((1L, Seq(44L, 0L))).toDF("vec_id", "x")
-    val got = Clustering.multiProbeAssign(pv, pm)
+    val got = pm.improved(pv)
       .select("vec_id", "cluster", "dist", "improved").collect().head
     assert(got.getInt(1) == 2 && got.getLong(2) == 1L && got.getInt(3) == 1,
       s"planted boundary vector: $got")
-    val flat = Clustering.assignWith(pv, pm.fine.flatten)
+    val flat = Clustering.assignWith(pv, pm.fines.flatten)
       .select("cluster").collect().head.getInt(0)
     assert(got.getInt(1) == flat, "multi-probe recovers the flat argmin here")
   }
@@ -619,13 +604,13 @@ class ClusteringSpec extends AnyFunSuite {
     CacheRegistry.releaseAll()
     val v = Clustering.fixedPoint(spark, sf01)
     val m = Clustering.trainHierarchical(v, 16)
-    val t = Clustering.assignWith(v.select(col("vec_id"), col("x")), m.fine.flatten)
+    val t = Clustering.assignWith(v.select(col("vec_id"), col("x")), m.fines.flatten)
       .select(col("vec_id"), col("dist").as("tdist"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val g = Clustering.assignHierarchical(v, m)
+    val g = m.assign(v)
       .select(col("vec_id"), col("dist")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val p = Clustering.multiProbeAssign(v, m)
+    val p = m.improved(v)
       .select(col("vec_id"), col("dist")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     t.keySet.foreach { id =>
@@ -654,14 +639,14 @@ class ClusteringSpec extends AnyFunSuite {
       df.select("vec_id", "cluster", "dist").collect()
         .map(r => r.getLong(0) -> ((r.getInt(1), r.getLong(2)))).toMap
     val n1 = distsOf(Clustering.multiProbeAssignN(v, m, 1))
-    val greedy = distsOf(Clustering.assignHierarchical(v, m))
+    val greedy = distsOf(m.assign(v))
     assert(n1 == greedy, "nprobe=1 ≡ greedy coarse-then-fine")
     val n2 = distsOf(Clustering.multiProbeAssignN(v, m, 2))
-    val kern = distsOf(Clustering.multiProbeAssign(v, m)
+    val kern = distsOf(m.improved(v)
       .select(col("vec_id"), col("cluster"), col("dist")))
     assert(n2 == kern, "nprobe=2 ≡ the top-2 kernel path")
     val nAll = distsOf(Clustering.multiProbeAssignN(v, m, kc))
-    val flat = Clustering.assignWith(v.select(col("vec_id"), col("x")), m.fine.flatten)
+    val flat = Clustering.assignWith(v.select(col("vec_id"), col("x")), m.fines.flatten)
       .select("vec_id", "dist").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     nAll.foreach { case (id, (_, d)) =>
@@ -680,10 +665,10 @@ class ClusteringSpec extends AnyFunSuite {
     CacheRegistry.releaseAll()
     val v = Clustering.fixedPoint(spark, sf01)
     val m = Clustering.trainHierarchical(v, 16)
-    val cells = Clustering.assignHierarchical(v, m)
+    val cells = m.assign(v)
       .select("vec_id", "cluster").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val p2 = Clustering.multiProbeCells(v.select(col("vec_id"), col("x")), m)
+    val p2 = m.probeCells(v.select(col("vec_id"), col("x")), 2)
       .filter(col("probe") === 2).select("vec_id", "cluster").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     val xs = v.select("vec_id", "x").collect()
@@ -714,16 +699,16 @@ class ClusteringSpec extends AnyFunSuite {
     // (d=64); C=(60,0) lives in cell 2 with B~C d=144 found ONLY via
     // B's probe-2 cell; A~C d=400 is NOT an edge — the group exists
     // through transitivity alone
-    val pm = Clustering.HierModel(
+    val pm = Clustering.literalTwoLevel(spark,
       coarse = Seq(Array(0L, 0L), Array(100L, 0L)),
-      fine = Seq(Seq(Array(0L, 0L), Array(40L, 0L)),
-                 Seq(Array(45L, 0L), Array(150L, 0L))),
-      kf = 2)
+      fines = Seq(Seq(Array(0L, 0L), Array(40L, 0L)),
+                  Seq(Array(45L, 0L), Array(150L, 0L))),
+      kf = 2, k = 4)
     val pv = Seq((1L, Seq(40L, 0L)), (2L, Seq(48L, 0L)), (3L, Seq(60L, 0L)),
       (4L, Seq(150L, 0L))).toDF("vec_id", "x")
-    val asg = Clustering.assignHierarchical(pv, pm)
+    val asg = pm.assign(pv)
       .select(col("vec_id"), col("x"), col("cluster"))
-    val p2 = Clustering.multiProbeCells(pv, pm).filter(col("probe") === 2)
+    val p2 = pm.probeCells(pv, 2).filter(col("probe") === 2)
     val groups = Clustering.semanticDedupGroupsOf(asg, p2, pruneT = 300L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(groups == Set((1L, 1L, 3L), (2L, 1L, 3L), (3L, 1L, 3L)),
@@ -750,7 +735,7 @@ class ClusteringSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     CacheRegistry.releaseAll()
     val v = Clustering.fixedPoint(spark, sf01)
-    val dists = Clustering.assignHierarchical(v, Clustering.trainHierarchical(v, 16))
+    val dists = Clustering.trainHierarchical(v, 16).assign(v)
       .select("vec_id", "dist").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     CacheRegistry.releaseAll()
@@ -795,32 +780,48 @@ class ClusteringSpec extends AnyFunSuite {
     val v = Clustering.fixedPoint(spark, sf01)
     val frames = Clustering.trainHierarchicalFrames(v, 16)
     val root = java.nio.file.Files.createTempDirectory("graft-hierdf").toString
-    Clustering.saveHierModelDf(spark, s"$root/m", frames)
+    frames.save(spark, s"$root/m")
     val serve = spark.newSession()
-    val arrivals = Tables.embeddings(serve, sf01).filter(col("vec_id") % 25 === 0)
-    val got = Clustering.assignStoredHierJoined(serve, s"$root/m", arrivals)
-      .collect().map(_.toSeq).sortBy(_.toString)
-    // the literal loader reads the frame save (cross-path): serve both
-    // ways, same verdicts
-    val wantLit = Clustering.assignStoredHier(serve, s"$root/m", arrivals)
-      .collect().map(_.toSeq).sortBy(_.toString)
-    assert(got.sameElements(wantLit), "joined serve ≡ literal serve on the frame save")
-    // and a literal save loads as frames with k recovered from fine rows
+    val arrivals = quantized(
+      Tables.embeddings(serve, sf01).filter(col("vec_id") % 25 === 0))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("vec_id", "cluster", "dist").collect().map(_.toSeq).sortBy(_.toString)
+    def loaded(path: String) =
+      Clustering.loadCentroids(serve, path).asInstanceOf[CellModel.TwoLevel]
+    val back = loaded(s"$root/m")
+    assert(back.k == 16 && back.kf == frames.kf, "meta row round-trip")
+    val got = rows(Clustering.assignHierarchicalJoined(arrivals, back))
+    // the same stored model served through the literal kernel (its own
+    // dispatch at this k): same verdicts
+    assert(got.sameElements(rows(back.assign(arrivals))),
+      "joined serve ≡ literal serve on the frame save")
+    // and a literal-trained model's save serves through the joined path
     val lit = Clustering.trainHierarchical(v, 16)
-    Clustering.saveHierModel(spark, s"$root/lit", lit)
-    val back = Clustering.loadHierModelFrames(serve, s"$root/lit")
-    assert(back.kf == lit.kf)
-    back.coarse.zip(lit.coarse).foreach { case (a, b) =>
-      assert(a.sameElements(b), "coarse bits via frames loader") }
-    assert(back.kTotal == lit.fine.map(_.length).sum,
-      "pre-r13 meta row: k falls back to the fine-row count")
-    val gotLitSave = Clustering.assignHierarchicalJoined(
-        Clustering.fixedPoint(serve, sf01).filter(col("vec_id") % 25 === 0), back)
-      .select("vec_id", "cluster", "dist").collect().map(_.toSeq).sortBy(_.toString)
-    val wantModel = Clustering.assignHierarchical(
-        Clustering.fixedPoint(spark, sf01).filter(col("vec_id") % 25 === 0), lit)
-      .select("vec_id", "cluster", "dist").collect().map(_.toSeq).sortBy(_.toString)
-    assert(gotLitSave.sameElements(wantModel), "literal save served via joined path")
+    lit.save(spark, s"$root/lit")
+    val litBack = loaded(s"$root/lit")
+    assert(litBack.kf == lit.kf && litBack.k == 16)
+    litBack.coarse.zip(lit.coarse).foreach { case (a, b) =>
+      assert(a.sameElements(b), "coarse bits via the frames loader") }
+    val wantModel = rows(lit.assign(
+      Clustering.fixedPoint(spark, sf01).filter(col("vec_id") % 25 === 0)))
+    assert(rows(Clustering.assignHierarchicalJoined(arrivals, litBack))
+      .sameElements(wantModel), "literal save served via joined path")
+    // a model stored before the meta row carried k (pos 0) is refused
+    // with the rebuild instruction, as textStaleness refuses a root
+    // without text_meta
+    import spark.implicits._
+    val legacy =
+      Seq((0, 0, 0, 0, lit.kf.toLong)) ++
+      lit.coarse.indices.flatMap(c =>
+        lit.coarse(c).indices.map(p => (1, c, 0, p, lit.coarse(c)(p)))) ++
+      lit.fines.indices.flatMap(c =>
+        lit.fines(c).indices.flatMap(f =>
+          lit.fines(c)(f).indices.map(p => (2, c, f, p, lit.fines(c)(f)(p)))))
+    FpIndex.saveOrRebuildFlat(spark, s"$root/legacy",
+      legacy.toDF("kind", "ccl", "fcl", "pos", "v").repartition(1))
+    val e = intercept[IllegalArgumentException](loaded(s"$root/legacy"))
+    assert(e.getMessage.contains("predates its stored k") &&
+      e.getMessage.contains("re-run IndexBuild.buildAll"), e.getMessage)
   }
 
   test("stored pca model: bit-exact round-trip and fresh-session served projection") {

@@ -48,20 +48,20 @@ class EmbedPipelineSpec extends AnyFunSuite {
     assert(pubInertia == stages(2).inertia, "published inertia == reported")
   }
 
-  test("runHier (the at-scale two-level funnel): report ≡ recomputing the same " +
+  test("run on a two-level model (the at-scale funnel): report ≡ recomputing the same " +
       "stages over the literal hierarchical assignment; published == quota stage") {
     CacheRegistry.releaseAll()
     val out = java.nio.file.Files.createTempDirectory("graft-embedhier").toString
     val k = Clustering.HierK
-    val stages = EmbedPipeline.runHier(spark, sf, out, k)
+    val stages = EmbedPipeline.run(spark, sf, out, v => Clustering.trainHierarchicalFrames(v, k))
     assert(stages.map(_.stage) == Seq("input", "semdedup", "diversity_quota"))
-    // expected masses from the LITERAL two-level path (assignHier
-    // dispatches to it at this k, and frames-training is spec-pinned
+    // expected masses from the LITERAL two-level path (the model's
+    // own dispatch picks it at this k, and frames-training is spec-pinned
     // bit-exact to literal training) — an independent recomputation,
     // not the pipeline's own frames
     CacheRegistry.releaseAll()
     val v = Clustering.fixedPoint(spark, sf)
-    val asg = Clustering.assignHierarchical(v, Clustering.trainHierarchical(v, k))
+    val asg = Clustering.trainHierarchical(v, k).assign(v)
       .select(col("vec_id"), col("x"), col("cluster"), col("dist")).persist()
     def mass(df: org.apache.spark.sql.DataFrame): (Long, BigInt) = {
       val r = df.agg(count(lit(1)), coalesce(
@@ -81,7 +81,7 @@ class EmbedPipelineSpec extends AnyFunSuite {
       "diversity_quota" -> mass(quota))
     stages.foreach { s =>
       assert((s.nVecs, s.inertia) == want(s.stage),
-        s"stage ${s.stage}: runHier=${(s.nVecs, s.inertia)} expected=${want(s.stage)}")
+        s"stage ${s.stage}: run=${(s.nVecs, s.inertia)} expected=${want(s.stage)}")
     }
     val pub = spark.read.format("graft.sources.ManifestSink")
       .option("path", out).load()

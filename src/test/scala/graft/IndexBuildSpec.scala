@@ -137,14 +137,14 @@ class IndexBuildSpec extends AnyFunSuite {
     CacheRegistry.releaseAll()
     import graft.operators.Clustering
     val v = Clustering.fixedPoint(spark, sf)
-    val cents = Clustering.trainCentroids(v)
+    val cents = Clustering.CellModel.Flat(Clustering.trainCentroids(v))
     val arrivals = Tables.embeddings(spark, sf).filter(col("vec_id") % 25 === 0)
       .withColumn("vec_id", col("vec_id") + lit(900000000L))
     // in-session twin of the nightly build: the same corpus-relative
     // cap applied to the same assigned corpus, gated the same way
     val assigned = Clustering.assignedCorpus(v, cents)
     val (probe, capped) = Clustering.capAssignedCorpus(
-      assigned, Clustering.buildCapOf(assigned.count(), cents.length))
+      assigned, Clustering.buildCapOf(assigned.count(), cents.k))
     val want = sortedRows(graft.streaming.Incremental.semanticNearDupGate(
       arrivals, cents, probe, capped).collect())
     assert(want.nonEmpty, "replayed corpus vectors must produce verdicts")
@@ -161,8 +161,8 @@ class IndexBuildSpec extends AnyFunSuite {
     // the MULTI-PROBE gate serves from the SAME stored artifacts: its
     // probe-1 (greedy) leg must reproduce the single-probe gate's
     // verdicts exactly — pairs and per-leg cap flags alike
-    val served2 = graft.streaming.Incremental.semanticNearDupGate2(
-      servedArrivals, storedCents, idx.assignedCorpus, idx.cappedCells)
+    val served2 = graft.streaming.Incremental.semanticNearDupGate(
+      servedArrivals, storedCents, idx.assignedCorpus, idx.cappedCells, 2)
     val leg1 = served2.collect().filter(_.getInt(1) == 1)
       .map(r => (r.getLong(0),
         if (r.isNullAt(2)) null else r.getLong(2),
@@ -187,24 +187,23 @@ class IndexBuildSpec extends AnyFunSuite {
     // in-session twin of the nightly hier leg (same deterministic
     // id-seeded training, same cap rule)
     val hm = Clustering.trainHierarchicalFrames(v, hk)
-    val assigned = Clustering.assignHier(v, hm)
-      .select(col("vec_id").as("corpus_id"), col("x"), col("cluster"))
+    val assigned = Clustering.assignedCorpus(v, hm)
     val (probe, capped) = Clustering.capAssignedCorpus(
-      assigned, Clustering.buildCapOf(n, hm.kTotal))
+      assigned, Clustering.buildCapOf(n, hm.k))
     val arrivals = Tables.embeddings(spark, sf).filter(col("vec_id") % 25 === 0)
       .withColumn("vec_id", col("vec_id") + lit(900000000L))
-    val want = sortedRows(Incremental.semanticNearDupGateHier2(
-      arrivals, Clustering.collectHierModel(hm), probe, capped).collect())
+    val want = sortedRows(Incremental.semanticNearDupGate(
+      arrivals, hm, probe, capped, 2).collect())
     assert(want.nonEmpty, "replayed corpus vectors must produce verdicts")
     CacheRegistry.releaseAll()
     val serve = spark.newSession()
     val idx = IndexBuild.loadAll(serve, r)
-    val shm = Clustering.collectHierModel(Clustering.loadHierModelFrames(
-      serve, idx.hierModelPath, idx.pins.get(IndexBuild.HierModelT)))
+    val shm = Clustering.loadCentroids(
+      serve, idx.hierModelPath, idx.pins.get(IndexBuild.HierModelT))
     val servedArrivals = Tables.embeddings(serve, sf).filter(col("vec_id") % 25 === 0)
       .withColumn("vec_id", col("vec_id") + lit(900000000L))
-    val served = Incremental.semanticNearDupGateHier2(
-      servedArrivals, shm, idx.assignedHierCorpus, idx.cappedHierCells)
+    val served = Incremental.semanticNearDupGate(
+      servedArrivals, shm, idx.assignedHierCorpus, idx.cappedHierCells, 2)
     assert(sortedRows(served.collect()) == want,
       "served two-level multi-probe gate == in-session twin")
     CacheRegistry.releaseAll()
@@ -290,7 +289,8 @@ class IndexBuildSpec extends AnyFunSuite {
       Clustering.trainHierarchicalFrames(fixed, hk).fine
         .write.format("noop").mode("overwrite").save()
     }
-    val unit = passes(IndexBuild.buildHierVectorArtifacts(spark, fixed, tmpRoot("hier"), Some(n)))
+    val unit = passes(IndexBuild.buildVectorUnit(spark, fixed, tmpRoot("hier"),
+      IndexBuild.TwoLevelUnit, Some(n)))
     assert(unit == reference + 1,
       s"training + one fine-frame evaluation ($reference passes) + one corpus " +
         s"assignment, got $unit passes")

@@ -438,22 +438,27 @@ class IndexDeltaSpec extends AnyFunSuite {
   private def cent(base: Double): Array[Long] =
     Array.fill(Dim)(math.floor(base * Clustering.Scale).toLong)
 
+  /** Arrivals as the serve paths see them: (vec_id, x). */
+  private def quantized(df: DataFrame): DataFrame =
+    df.select(col("vec_id"), Clustering.quantize(col("embedding")).as("x"))
+
   /** Planted vector root: centroids at 0.1 and 0.4; probe corpus v1/v2
-    * in cell 0; cell 1 is build-capped (its member v3 excluded). */
+    * in cell 0; cell 1 is build-capped (its member v3 excluded); the
+    * radius table over the planted corpus, as every build writes it. */
   private def buildVecRoot(): (String, DataFrame) = {
     import spark.implicits._
     val root = tmp("vecroot")
-    val cents = Seq(cent(0.1), cent(0.4))
-    Clustering.saveCentroids(spark, s"$root/${IndexBuild.CentroidsT}", cents)
+    val cents = Clustering.CellModel.Flat(Seq(cent(0.1), cent(0.4)))
+    cents.save(spark, s"$root/${IndexBuild.CentroidsT}")
     val corpus = Seq((1L, vec(0.1f)), (2L, vec(0.105f)))
       .toDF("vec_id", "embedding")
-    val probe = Clustering.assignWith(
-        corpus.select(col("vec_id"), Clustering.quantize(col("embedding")).as("x")),
-        cents)
-      .select(col("vec_id").as("corpus_id"), col("x"), col("cluster"))
+    val asg = cents.assign(quantized(corpus))
+    val probe = asg.select(col("vec_id").as("corpus_id"), col("x"), col("cluster"))
     Clustering.saveAssignedCorpus(spark, s"$root/${IndexBuild.AssignedT}", probe)
     Clustering.saveCappedCells(spark, s"$root/${IndexBuild.CappedT}",
       Seq((1, 5L)).toDF("cluster", "cell_n"))
+    FpIndex.saveFlat(s"$root/${IndexBuild.RadiiT}",
+      Clustering.cellRadiiOf(asg.select(col("cluster"), col("vec_id"), col("dist"))))
     (root, probe)
   }
 
@@ -522,17 +527,16 @@ class IndexDeltaSpec extends AnyFunSuite {
     val root = tmp("hierroot")
     val fixed = Clustering.fixedPoint(spark, sf)
     val hm = Clustering.trainHierarchicalFrames(fixed, 4)
-    Clustering.saveHierModelDf(spark, s"$root/${IndexBuild.HierModelT}", hm)
-    val assignedH = Clustering.assignHier(fixed, hm)
-      .select(col("vec_id").as("corpus_id"), col("x"), col("cluster"))
-    Clustering.saveAssignedCorpus(spark, s"$root/${IndexBuild.AssignedHierT}", assignedH)
+    hm.save(spark, s"$root/${IndexBuild.HierModelT}")
+    Clustering.saveAssignedCorpus(spark, s"$root/${IndexBuild.AssignedHierT}",
+      Clustering.assignedCorpus(fixed, hm))
     Clustering.saveCappedCells(spark, s"$root/${IndexBuild.CappedHierT}",
       spark.emptyDataFrame.select(lit(0).as("cluster"), lit(0L).as("cell_n")).limit(0))
     root
   }
 
-  test("admitVectorsHier runs the same verdict core against the hier " +
-      "artifacts (frame-model assignment, hot-cell invariant preserved)") {
+  test("admitVectors on the two-level unit runs the same verdict core against " +
+      "the hier artifacts (frame-model assignment, hot-cell invariant preserved)") {
     import spark.implicits._
     CacheRegistry.releaseAll()
     val root = buildHierRoot()
@@ -548,7 +552,8 @@ class IndexDeltaSpec extends AnyFunSuite {
       (900001L, firstEmb),        // same vector, new id → near-dup
       (900002L, vec(0.31f))       // fresh
     ).toDF("vec_id", "embedding")
-    val v = IndexDelta.admitVectorsHier(spark, root, arrivals, batchId = "hb1")
+    val v = IndexDelta.admitVectors(spark, root, arrivals, batchId = "hb1",
+        unit = IndexBuild.TwoLevelUnit)
       .select(col("vec_id"), col("replay"), col("n_close"), col("admitted"))
       .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getLong(2), r.getInt(3)))).toMap
     assert(v(firstId)._1 == 1 && v(firstId)._3 == 0, s"hier replay: $v")
@@ -581,7 +586,7 @@ class IndexDeltaSpec extends AnyFunSuite {
       .toDF("vec_id", "embedding").unionByName(b1)
     val fixed = corpusOfRecord
       .select(col("vec_id"), Clustering.quantize(col("embedding")).as("x"))
-    IndexBuild.buildFlatVectorArtifacts(spark, fixed, root)
+    IndexBuild.buildVectorUnit(spark, fixed, root, IndexBuild.FlatUnit)
     val rebuilt = Clustering.loadAssignedCorpus(spark, assignedPath)
       .select(col("corpus_id")).collect().map(_.getLong(0)).toSet
     assert(rebuilt.contains(42L),
@@ -627,14 +632,75 @@ class IndexDeltaSpec extends AnyFunSuite {
     val hierRoot = buildHierRoot()
     val hierTables = Seq(HierModelT, AssignedHierT, CappedHierT)
     val fresh = Seq((900002L, vec(0.31f))).toDF("vec_id", "embedding")
-    def hierAdmitted(): Long = IndexDelta.admitVectorsHier(spark, hierRoot, fresh,
-      batchId = "h0").filter(col("admitted") === 1).count()
+    def hierAdmitted(): Long = IndexDelta.admitVectors(spark, hierRoot, fresh,
+      batchId = "h0", unit = TwoLevelUnit).filter(col("admitted") === 1).count()
     assert(hierAdmitted() == 1L)
     val hierV = versionsOf(hierRoot, hierTables)
     assert(hierAdmitted() == 0L, "a same-id retry must not re-admit the committed hier vector")
     assert(versionsOf(hierRoot, hierTables) == hierV, "a same-id hier retry must commit nothing")
     CacheRegistry.releaseAll()
   }
+
+  /** Spark jobs `body` fires: its jobs carry a job group of their own,
+    * and a marker job after it bounds the listener's view (once the
+    * marker's start is seen, every earlier event is too). */
+  private def jobsOf(body: => Unit): Int = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("budget-body", "measured")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup("budget-after", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!starts.asScala.exists(_ == "budget-after") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally sc.removeSparkListener(listener)
+    starts.asScala.count(_ == "budget-body")
+  }
+
+  test("the vector serve path fires at most its job budget: flat admission, " +
+      "the flat nprobe-1 gate, and two-level admission") {
+    import spark.implicits._
+    CacheRegistry.releaseAll()
+    val (root, _) = buildVecRoot()
+    val batch = Seq((40L, vec(0.106f)), (41L, vec(0.4f)), (42L, vec(0.245f)))
+      .toDF("vec_id", "embedding")
+    val flatAdmit = jobsOf(IndexDelta.admitVectors(spark, root, batch, batchId = "jb1")
+      .select("vec_id", "admitted").collect())
+    assert(flatAdmit <= FlatAdmitJobs, s"flat admitVectors fired $flatAdmit jobs")
+    CacheRegistry.releaseAll()
+    val gate = jobsOf(Incremental.semanticNearDupGate(batch,
+        Clustering.loadCentroids(spark, s"$root/${IndexBuild.CentroidsT}"),
+        Clustering.loadAssignedCorpus(spark, s"$root/${IndexBuild.AssignedT}"),
+        Clustering.loadCappedCells(spark, s"$root/${IndexBuild.CappedT}"))
+      .select("vec_id", "corpus_id").collect())
+    assert(gate <= FlatGateJobs, s"flat nprobe-1 gate fired $gate jobs")
+    CacheRegistry.releaseAll()
+    val hierRoot = buildHierRoot()
+    val fresh = Seq((900002L, vec(0.31f)), (900003L, vec(0.32f))).toDF("vec_id", "embedding")
+    val hierAdmit = jobsOf(IndexDelta.admitVectors(spark, hierRoot, fresh, batchId = "jh1",
+        unit = IndexBuild.TwoLevelUnit)
+      .select("vec_id", "admitted").collect())
+    assert(hierAdmit <= TwoLevelAdmitJobs, s"two-level admitVectors fired $hierAdmit jobs")
+    CacheRegistry.releaseAll()
+  }
+
+  /** The vector serve path's jobs on the planted roots above: 19, 6
+    * and 20 when the flat and two-level paths were separate verbs (the
+    * two-level admission loaded its frame model, then collected the
+    * fine frame through a separate dispatch). One model type must not
+    * fire more. */
+  private val FlatAdmitJobs = 19
+  private val FlatGateJobs = 6
+  private val TwoLevelAdmitJobs = 20
 
   test("admitDocs' side-by-side commits run on threads that inherit the " +
       "caller's local properties: every job the call fires carries them") {
@@ -934,54 +1000,35 @@ class IndexDeltaSpec extends AnyFunSuite {
   test("a nightly-built root serves staleness from the stored k-row radius " +
       "table, row-equal to recomputing the q143 arithmetic over the full " +
       "assignment") {
-    import spark.implicits._
     CacheRegistry.releaseAll()
-    val root = tmp("radroot")
     val fixed = Clustering.fixedPoint(spark, sf)
-    IndexBuild.buildFlatVectorArtifacts(spark, fixed, root)
-    assert(FpIndex.tableVersion(s"$root/${IndexBuild.RadiiT}") > 0,
-      "the build must persist the radius artifact")
     val arrivals = Tables.embeddings(spark, sf)
       .filter(col("vec_id") % 13 === 2)
       .select(col("vec_id"), col("embedding"))
-    val got = sortedRows(IndexDelta.storedStaleness(spark, root, arrivals))
-    // independent recomputation: full assignment under the same model
-    val cents = Clustering.loadCentroids(spark, s"$root/${IndexBuild.CentroidsT}")
-    val corp = Clustering.assignWith(fixed, cents)
-      .select(col("cluster"), col("vec_id"), col("dist"))
-    val arr = Clustering.assignWith(
-        arrivals.select(col("vec_id"), Clustering.quantize(col("embedding")).as("x")),
-        cents)
-      .select(col("cluster"), col("vec_id"), col("dist"))
-    val want = sortedRows(Clustering.modelStalenessOf(corp, arr))
-    assert(got == want && got.nonEmpty,
-      s"stored-radii staleness must equal the recomputed monitor (${got.size} rows)")
-    CacheRegistry.releaseAll()
-  }
-
-  test("hier staleness serves from the stored two-level radii, row-equal to " +
-      "recomputing over the hier assignment") {
-    CacheRegistry.releaseAll()
-    val root = tmp("hradroot")
-    val fixed = Clustering.fixedPoint(spark, sf)
-    // the nightly hier unit (model + assigned + capped + radii)
-    val hm = Clustering.trainHierarchicalFrames(fixed, 4)
-    Clustering.saveHierModelDf(spark, s"$root/${IndexBuild.HierModelT}", hm)
-    FpIndex.saveFlat(s"$root/${IndexBuild.RadiiHierT}",
-      Clustering.cellRadiiOf(Clustering.assignHier(fixed, hm)
-        .select(col("cluster"), col("vec_id"), col("dist"))))
-    val arrivals = Tables.embeddings(spark, sf).filter(col("vec_id") % 13 === 5)
-      .select(col("vec_id"), col("embedding"))
-    val got = sortedRows(IndexDelta.storedStalenessHier(spark, root, arrivals))
-    val corp = Clustering.assignHier(fixed, hm)
-      .select(col("cluster"), col("vec_id"), col("dist"))
-    val arr = Clustering.assignHier(
-        arrivals.select(col("vec_id"), Clustering.quantize(col("embedding")).as("x")),
-        Clustering.loadHierModelFrames(spark, s"$root/${IndexBuild.HierModelT}"))
-      .select(col("cluster"), col("vec_id"), col("dist"))
-    val want = sortedRows(Clustering.modelStalenessOf(corp, arr))
-    assert(got == want && got.nonEmpty,
-      s"hier stored-radii staleness must equal the recomputed monitor (${got.size})")
+    // both vector units: one build verb, one monitor verb
+    for (unit <- Seq(IndexBuild.FlatUnit, IndexBuild.TwoLevelUnit)) {
+      val root = tmp("radroot")
+      IndexBuild.buildVectorUnit(spark, fixed, root, unit)
+      assert(FpIndex.tableVersion(s"$root/${unit.radii}") > 0,
+        s"the build must persist the ${unit.radii} artifact")
+      val got = sortedRows(IndexDelta.storedStaleness(spark, root, arrivals, unit))
+      // independent recomputation: full assignment under the same model
+      val model = Clustering.loadCentroids(spark, s"$root/${unit.model}")
+      val corp = model.assign(fixed).select(col("cluster"), col("vec_id"), col("dist"))
+      val arr = model.assign(quantized(arrivals))
+        .select(col("cluster"), col("vec_id"), col("dist"))
+      val want = sortedRows(Clustering.modelStalenessOf(corp, arr))
+      assert(got == want && got.nonEmpty,
+        s"${unit.radii} staleness must equal the recomputed monitor (${got.size} rows)")
+    }
+    // a root that predates the radius table is refused with the
+    // rebuild instruction, as textStaleness refuses one without text_meta
+    val bare = tmp("noradii")
+    Clustering.CellModel.Flat(Clustering.trainCentroids(fixed))
+      .save(spark, s"$bare/${IndexBuild.CentroidsT}")
+    val e = intercept[IllegalArgumentException](
+      IndexDelta.storedStaleness(spark, bare, arrivals))
+    assert(e.getMessage.contains("re-run IndexBuild.buildAll"), e.getMessage)
     CacheRegistry.releaseAll()
   }
 
@@ -1007,29 +1054,29 @@ class IndexDeltaSpec extends AnyFunSuite {
     // drifted arrivals: far outside every stored radius → 10⁶ ppm stale
     val farArr = Seq((61L, vec(-0.3f)), (62L, vec(-0.31f)))
       .toDF("vec_id", "embedding")
-    val pinnedCents = Clustering.loadCentroids(
-      spark, s"$root/${IndexBuild.CentroidsT}", Some(centPin))
+    def centsAt(pin: Option[Int]): Seq[Seq[Long]] =
+      Clustering.loadCentroids(spark, s"$root/${IndexBuild.CentroidsT}", pin)
+        .asInstanceOf[Clustering.CellModel.Flat].cents.map(_.toSeq)
+    val pinnedCents = centsAt(Some(centPin))
     assert(IndexDelta.refreshIfStale(spark, sf, root, farArr),
       "drifted arrivals must trip the refresh")
     assert(FpIndex.tableVersion(s"$root/${IndexBuild.CentroidsT}") > centPin,
       "refresh must commit a retrained model")
-    val fresh = Clustering.loadCentroids(spark, s"$root/${IndexBuild.CentroidsT}")
-    assert(fresh.map(_.toSeq) != pinnedCents.map(_.toSeq),
+    assert(centsAt(None) != pinnedCents,
       "the retrained model differs from the planted one")
-    assert(Clustering.loadCentroids(spark, s"$root/${IndexBuild.CentroidsT}",
-        Some(centPin)).map(_.toSeq) == pinnedCents.map(_.toSeq),
+    assert(centsAt(Some(centPin)) == pinnedCents,
       "a reader pinned before the refresh still serves the planted model")
     CacheRegistry.releaseAll()
   }
 
-  test("refreshIfStaleHier closes the two-level loop (round-14 ask #2a): " +
+  test("refreshIfStale closes the two-level loop (round-14 ask #2a): " +
       "below threshold nothing commits; planted drift retrains the hier unit " +
       "through generation-append cutovers and pinned readers keep serving", Slow) {
     import spark.implicits._
     CacheRegistry.releaseAll()
     val root = tmp("hrefresh")
     val fixed = Clustering.fixedPoint(spark, sf)
-    IndexBuild.buildHierVectorArtifacts(spark, fixed, root)
+    IndexBuild.buildVectorUnit(spark, fixed, root, IndexBuild.TwoLevelUnit)
     val modelPath = s"$root/${IndexBuild.HierModelT}"
     val radiiPath = s"$root/${IndexBuild.RadiiHierT}"
     val pinModel = FpIndex.tableVersion(modelPath)
@@ -1038,14 +1085,14 @@ class IndexDeltaSpec extends AnyFunSuite {
     // ~5% past p95 by construction, far below the 150000 ppm default
     val nearArr = Tables.embeddings(spark, sf).filter(col("vec_id") % 13 === 2)
       .select(col("vec_id"), col("embedding"))
-    assert(!IndexDelta.refreshIfStaleHier(spark, sf, root, nearArr),
+    assert(!IndexDelta.refreshIfStale(spark, sf, root, nearArr, unit = IndexBuild.TwoLevelUnit),
       "near arrivals must not trip the hier refresh")
     assert(FpIndex.tableVersion(modelPath) == pinModel,
       "no refresh → no new hier-model commits")
     // drifted arrivals: planted far outside every stored radius
     val farArr = Seq((910L, Array.fill(64)(-0.9f)), (911L, Array.fill(64)(-0.92f)))
       .toDF("vec_id", "embedding")
-    assert(IndexDelta.refreshIfStaleHier(spark, sf, root, farArr),
+    assert(IndexDelta.refreshIfStale(spark, sf, root, farArr, unit = IndexBuild.TwoLevelUnit),
       "drifted arrivals must trip the hier refresh")
     assert(FpIndex.tableVersion(modelPath) > pinModel &&
       FpIndex.tableVersion(radiiPath) > 1,
@@ -1053,7 +1100,8 @@ class IndexDeltaSpec extends AnyFunSuite {
     assert(sortedRows(FpIndex.loadFlat(spark, modelPath, Some(pinModel))) == pinnedRows,
       "a reader pinned before the hier refresh still serves the old model rows")
     // the refreshed unit keeps monitoring (the loop continues)
-    assert(IndexDelta.storedStalenessHier(spark, root, nearArr).count() > 0)
+    assert(IndexDelta.storedStaleness(spark, root, nearArr, IndexBuild.TwoLevelUnit)
+      .count() > 0)
     CacheRegistry.releaseAll()
   }
 

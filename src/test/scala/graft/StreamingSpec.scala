@@ -835,7 +835,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val ctx = spark.sqlContext
     val sf = "/root/testdata/sf0.001"
     val v = Clustering.fixedPoint(spark, sf)
-    val cents = Clustering.trainCentroids(v)
+    val cents = Clustering.CellModel.Flat(Clustering.trainCentroids(v))
     // stored side: persist + reload the pre-assigned corpus and prove
     // the round-trip is row-equal (component order preserved)
     val root = java.nio.file.Files.createTempDirectory("graft-semidx").toString
@@ -874,7 +874,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val ctx = spark.sqlContext
     val sf = "/root/testdata/sf0.001"
     val v = Clustering.fixedPoint(spark, sf)
-    val cents = Clustering.trainCentroids(v)
+    val cents = Clustering.CellModel.Flat(Clustering.trainCentroids(v))
     val assigned = Clustering.assignedCorpus(v, cents)
     val sizes = assigned.groupBy(col("cluster")).count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -932,7 +932,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val ctx = spark.sqlContext
     val sf = "/root/testdata/sf0.001"
     val v = Clustering.fixedPoint(spark, sf)
-    val cents = Clustering.trainCentroids(v)
+    val cents = Clustering.CellModel.Flat(Clustering.trainCentroids(v))
     val base = Clustering.assignedCorpus(v, cents)
       .groupBy(col("cluster")).agg(count(lit(1)).as("n_base")).persist()
     base.count()
@@ -969,8 +969,7 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
     // batch reference: clusterDriftOf on each window's slice
     def batchOf(ids: Seq[Long]): Map[Int, (Long, Long, Long, Long, Long)] = {
-      val fresh = Clustering.assignWith(
-          v.filter(col("vec_id").isin(ids: _*)), cents)
+      val fresh = cents.assign(v.filter(col("vec_id").isin(ids: _*)))
         .groupBy(col("cluster")).agg(count(lit(1)).as("n_new"))
       Clustering.clusterDriftOf(base, fresh).collect()
         .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
@@ -989,7 +988,7 @@ class StreamingSpec extends AnyFunSuite {
     val hm = Clustering.trainHierarchical(v, 16)
     val counts = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Long)]
     val inputH = MemoryStream[(Long, Seq[Float], Timestamp)]
-    val qh = Incremental.clusterDriftCountsStreamHier(
+    val qh = Incremental.clusterDriftCountsStream(
         inputH.toDF().toDF("vec_id", "embedding", "event_ts"), hm,
         windowLen = "1 hour", delay = "1 minute")
       .writeStream
@@ -1007,7 +1006,7 @@ class StreamingSpec extends AnyFunSuite {
       qh.processAllAvailable()
     } finally qh.stop()
     def hierBatchOf(ids: Seq[Long]): Map[Int, Long] =
-      Clustering.assignHierarchical(v.filter(col("vec_id").isin(ids: _*)), hm)
+      hm.assign(v.filter(col("vec_id").isin(ids: _*)))
         .groupBy(col("cluster")).agg(count(lit(1))).collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(counts.filter(_._1 == "2024-06-01 10:00")
@@ -1029,11 +1028,11 @@ class StreamingSpec extends AnyFunSuite {
     // (fine (40,0)); its true near-dup (60,0) lives in cell 2 — the
     // fine argmin of coarse cell 1. Cluster-1 corpus member (21,0) is
     // 529 away, over pruneT=300; the cross-boundary dup is 256 under.
-    val pm = Clustering.HierModel(
+    val pm = Clustering.literalTwoLevel(spark,
       coarse = Seq(Array(0L, 0L), Array(100L, 0L)),
-      fine = Seq(Seq(Array(0L, 0L), Array(40L, 0L)),
-                 Seq(Array(45L, 0L), Array(150L, 0L))),
-      kf = 2)
+      fines = Seq(Seq(Array(0L, 0L), Array(40L, 0L)),
+                  Seq(Array(45L, 0L), Array(150L, 0L))),
+      kf = 2, k = 4)
     val corpus = Seq((10L, Seq(60L, 0L), 2), (11L, Seq(21L, 0L), 1))
       .toDF("corpus_id", "x", "cluster")
     val noCap = Seq.empty[(Int, Long)].toDF("cluster", "cell_n")
@@ -1041,7 +1040,7 @@ class StreamingSpec extends AnyFunSuite {
     val s = Clustering.Scale.toFloat
     val aEmb = Seq(44L / s, 0L / s)
     val input1 = MemoryStream[(Long, Seq[Float])]
-    val q1 = Incremental.semanticNearDupGateHier(
+    val q1 = Incremental.semanticNearDupGate(
         input1.toDF().toDF("vec_id", "embedding"), pm, corpus, noCap, pruneT = 300L)
       .writeStream.format("memory").queryName("mp_gate1_out")
       .outputMode("append").start()
@@ -1051,8 +1050,8 @@ class StreamingSpec extends AnyFunSuite {
         "nprobe=1 misses the cross-boundary near-dup (its greedy cell has none under T)")
     } finally q1.stop()
     val input2 = MemoryStream[(Long, Seq[Float])]
-    val q2 = Incremental.semanticNearDupGateHier2(
-        input2.toDF().toDF("vec_id", "embedding"), pm, corpus, noCap, pruneT = 300L)
+    val q2 = Incremental.semanticNearDupGate(
+        input2.toDF().toDF("vec_id", "embedding"), pm, corpus, noCap, 2, pruneT = 300L)
       .writeStream.format("memory").queryName("mp_gate2_out")
       .outputMode("append").start()
     try {
@@ -1066,8 +1065,8 @@ class StreamingSpec extends AnyFunSuite {
     // probes (and stays silent here — its member is over threshold)
     val capped = Seq((2, 99L)).toDF("cluster", "cell_n")
     val input3 = MemoryStream[(Long, Seq[Float])]
-    val q3 = Incremental.semanticNearDupGateHier2(
-        input3.toDF().toDF("vec_id", "embedding"), pm, corpus, capped, pruneT = 300L)
+    val q3 = Incremental.semanticNearDupGate(
+        input3.toDF().toDF("vec_id", "embedding"), pm, corpus, capped, 2, pruneT = 300L)
       .writeStream.format("memory").queryName("mp_gate3_out")
       .outputMode("append").start()
     try {
@@ -1086,25 +1085,28 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.operators.Clustering
     implicit val ctx = spark.sqlContext
-    val pm = Clustering.HierModel(
+    val pm = Clustering.literalTwoLevel(spark,
       coarse = Seq(Array(0L, 0L), Array(100L, 0L)),
-      fine = Seq(Seq(Array(0L, 0L), Array(40L, 0L)),
-                 Seq(Array(45L, 0L), Array(150L, 0L))),
-      kf = 2)
-    val fm = Clustering.HierModelDf(
-      pm.coarse, Clustering.fineFrameOf(spark, pm), pm.kf, 4)
+      fines = Seq(Seq(Array(0L, 0L), Array(40L, 0L)),
+                  Seq(Array(45L, 0L), Array(150L, 0L))),
+      kf = 2, k = 4)
+    // the same planted model declared past the fine-literal ceiling:
+    // every verb then runs the joined kernel, which a stream cannot
+    val fm = pm.copy(k = (Clustering.FineLiteralMaxEntries / Clustering.Dim + 1).toInt)
+    assert(!fm.literal)
     val corpus = Seq((10L, Seq(60L, 0L), 2), (11L, Seq(21L, 0L), 1))
       .toDF("corpus_id", "x", "cluster")
     val capped = Seq((2, 99L)).toDF("cluster", "cell_n")
     val s = Clustering.Scale.toFloat
     val arrivals = Seq((901L, Seq(44L / s, 0L / s)), (902L, Seq(21L / s, 0L / s)))
-    // the frame-model form runs per micro-batch via foreachBatch,
-    // appending verdicts to a shared manifest table
+    // the frame-model form runs per micro-batch via foreachBatch — the
+    // same call on a static micro-batch — appending verdicts to a
+    // shared manifest table
     val outDir = java.nio.file.Files.createTempDirectory("graft_mp_fb").toString
     val input = MemoryStream[(Long, Seq[Float])]
     val q = input.toDF().toDF("vec_id", "embedding").writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        Incremental.semanticGateHier2Batch(b, fm, corpus, capped, pruneT = 300L)
+        Incremental.semanticNearDupGate(b, fm, corpus, capped, 2, pruneT = 300L)
           .write.format("graft.sources.ManifestSink")
           .option("path", outDir)
           .mode(org.apache.spark.sql.SaveMode.Append).save()
@@ -1121,8 +1123,8 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
     // the literal gate on the same arrivals/model is the reference
     val input2 = MemoryStream[(Long, Seq[Float])]
-    val q2 = Incremental.semanticNearDupGateHier2(
-        input2.toDF().toDF("vec_id", "embedding"), pm, corpus, capped, pruneT = 300L)
+    val q2 = Incremental.semanticNearDupGate(
+        input2.toDF().toDF("vec_id", "embedding"), pm, corpus, capped, 2, pruneT = 300L)
       .writeStream.format("memory").queryName("mp_fb_ref_out")
       .outputMode("append").start()
     val want = try {
@@ -1137,6 +1139,33 @@ class StreamingSpec extends AnyFunSuite {
       "fixture exercises both the capped leg and a probe pair")
   }
 
+  test("a two-level model past the fine-literal ceiling refuses a STREAMING " +
+      "arrivals frame with a require naming the foreachBatch form") {
+    import spark.implicits._
+    import graft.operators.Clustering
+    implicit val ctx = spark.sqlContext
+    val fm = Clustering.literalTwoLevel(spark,
+      coarse = Seq(Array(0L, 0L), Array(100L, 0L)),
+      fines = Seq(Seq(Array(0L, 0L), Array(40L, 0L)),
+                  Seq(Array(45L, 0L), Array(150L, 0L))),
+      kf = 2, k = (Clustering.FineLiteralMaxEntries / Clustering.Dim + 1).toInt)
+    val corpus = Seq((10L, Seq(60L, 0L), 2)).toDF("corpus_id", "x", "cluster")
+    val noCap = Seq.empty[(Int, Long)].toDF("cluster", "cell_n")
+    val arrivals = MemoryStream[(Long, Seq[Float])].toDF().toDF("vec_id", "embedding")
+    val timed = MemoryStream[(Long, Seq[Float], Timestamp)].toDF()
+      .toDF("vec_id", "embedding", "event_ts")
+    // every streaming verb fails while the query is being built, with
+    // the instruction, not when the stream starts
+    Seq(
+      () => Incremental.semanticNearDupGate(arrivals, fm, corpus, noCap),
+      () => Incremental.semanticNearDupGate(arrivals, fm, corpus, noCap, 2),
+      () => Incremental.semanticNearDupStream(arrivals, fm, corpus),
+      () => Incremental.clusterDriftCountsStream(timed, fm)).foreach { call =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("foreachBatch"), e.getMessage)
+    }
+  }
+
   test("multi-probe flat gate on the fixture: pair set is a SUPERSET of the " +
       "single-probe gate's (probe 1 reproduces it exactly; extras are all probe 2)") {
     import spark.implicits._
@@ -1144,7 +1173,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val ctx = spark.sqlContext
     val sf = "/root/testdata/sf0.001"
     val v = Clustering.fixedPoint(spark, sf)
-    val cents = Clustering.trainCentroids(v)
+    val cents = Clustering.CellModel.Flat(Clustering.trainCentroids(v))
     val stored = Clustering.assignedCorpus(v, cents).persist()
     val noCap = Seq.empty[(Int, Long)].toDF("cluster", "cell_n")
     val embs = Tables.embeddings(spark, sf).filter(col("vec_id") < 3L)
@@ -1161,8 +1190,8 @@ class StreamingSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     } finally q1.stop()
     val in2 = MemoryStream[(Long, Seq[Float])]
-    val q2 = Incremental.semanticNearDupGate2(
-        in2.toDF().toDF("vec_id", "embedding"), cents, stored, noCap)
+    val q2 = Incremental.semanticNearDupGate(
+        in2.toDF().toDF("vec_id", "embedding"), cents, stored, noCap, 2)
       .writeStream.format("memory").queryName("mp_two_out")
       .outputMode("append").start()
     try {
@@ -1194,13 +1223,12 @@ class StreamingSpec extends AnyFunSuite {
     val hm = Clustering.trainHierarchical(v, 16)
     // the stored corpus side assigned by the SAME two-level model —
     // cells are cells, the probe half is model-agnostic
-    val stored = Clustering.assignHierarchical(v, hm)
-      .select(col("vec_id").as("corpus_id"), col("x"), col("cluster")).persist()
+    val stored = Clustering.assignedCorpus(v, hm).persist()
     val e0 = Tables.embeddings(spark, sf).filter(col("vec_id") === 0L)
       .select("embedding").collect()(0).getSeq[Float](0)
     val input = MemoryStream[(Long, Seq[Float])]
     val arrivals = input.toDF().toDF("vec_id", "embedding")
-    val q = Incremental.semanticNearDupStreamHier(arrivals, hm, stored)
+    val q = Incremental.semanticNearDupStream(arrivals, hm, stored)
       .writeStream.format("memory").queryName("semdup_hier_out")
       .outputMode("append").start()
     try {
