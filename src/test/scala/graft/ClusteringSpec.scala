@@ -174,30 +174,39 @@ class ClusteringSpec extends AnyFunSuite {
   private def quantized(df: org.apache.spark.sql.DataFrame) =
     df.select(col("vec_id"), Clustering.quantize(col("embedding")).as("x"))
 
+  /** Both model forms share one save, one loader and one serve verb:
+   *  the stored arrays round-trip bit-exact, and a fresh session serves
+   *  assignments equal to the in-session model, touching only the stored
+   *  table + the arrival batch. */
+  private def assertStoredRoundTrip(model: CellModel): Unit = {
+    CacheRegistry.releaseAll()
+    val form = model.productPrefix
+    val root = java.nio.file.Files.createTempDirectory("graft-cent").toString
+    model.save(spark, root)
+    assert(bitsOf(Clustering.loadCentroids(spark, root)) == bitsOf(model), s"$form bits")
+    val serve = spark.newSession()
+    val arrivals = Tables.embeddings(serve, sf01).filter(col("vec_id") % 25 === 0)
+    val served = Clustering.loadCentroids(serve, root).assign(quantized(arrivals))
+      .select("vec_id", "cluster", "dist")
+    val plan = served.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), s"$form serve assignment must be map-only:\n$plan")
+    val want = model.assign(
+        Clustering.fixedPoint(spark, sf01).filter(col("vec_id") % 25 === 0))
+      .select("vec_id", "cluster", "dist").collect().map(_.toSeq).sortBy(_.toString)
+    val got = served.collect().map(_.toSeq).sortBy(_.toString)
+    assert(got.sameElements(want), s"$form served == in-session")
+  }
+
   test("stored centroids: bit-exact round-trip and fresh-session serve equality") {
     CacheRegistry.releaseAll()
-    val v = Clustering.fixedPoint(spark, sf01)
-    // both model forms share one save, one loader and one serve verb
-    for (model <- Seq(CellModel.Flat(Clustering.trainCentroids(v)),
-        Clustering.trainHierarchical(v, 16))) {
-      val form = model.productPrefix
-      val root = java.nio.file.Files.createTempDirectory("graft-cent").toString
-      model.save(spark, root)
-      assert(bitsOf(Clustering.loadCentroids(spark, root)) == bitsOf(model), s"$form bits")
-      // a fresh session serves assignments equal to the in-session model,
-      // touching only the stored table + the arrival batch
-      val serve = spark.newSession()
-      val arrivals = Tables.embeddings(serve, sf01).filter(col("vec_id") % 25 === 0)
-      val served = Clustering.loadCentroids(serve, root).assign(quantized(arrivals))
-        .select("vec_id", "cluster", "dist")
-      val plan = served.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"$form serve assignment must be map-only:\n$plan")
-      val want = model.assign(
-          Clustering.fixedPoint(spark, sf01).filter(col("vec_id") % 25 === 0))
-        .select("vec_id", "cluster", "dist").collect().map(_.toSeq).sortBy(_.toString)
-      val got = served.collect().map(_.toSeq).sortBy(_.toString)
-      assert(got.sameElements(want), s"$form served == in-session")
-    }
+    assertStoredRoundTrip(
+      CellModel.Flat(Clustering.trainCentroids(Clustering.fixedPoint(spark, sf01))))
+  }
+
+  test("stored two-level model: bit-exact round-trip and fresh-session serve equality") {
+    CacheRegistry.releaseAll()
+    assertStoredRoundTrip(
+      Clustering.trainHierarchical(Clustering.fixedPoint(spark, sf01), 16))
   }
 
   test("gram matrix: upper triangle only, Cauchy-Schwarz diag, exact spot cell") {

@@ -997,38 +997,52 @@ class IndexDeltaSpec extends AnyFunSuite {
 
   // --------------------------------------------- staleness + refresh
 
+  /** Build one vector unit into a fresh root, then serve staleness from
+   *  its stored radius table and compare it row-for-row with the q143
+   *  arithmetic recomputed over the full assignment under the same model. */
+  private def assertStoredStaleness(unit: IndexBuild.VectorUnit, residue: Int): Unit = {
+    val fixed = Clustering.fixedPoint(spark, sf)
+    val arrivals = Tables.embeddings(spark, sf)
+      .filter(col("vec_id") % 13 === residue)
+      .select(col("vec_id"), col("embedding"))
+    val root = tmp("radroot")
+    IndexBuild.buildVectorUnit(spark, fixed, root, unit)
+    assert(FpIndex.tableVersion(s"$root/${unit.radii}") > 0,
+      s"the build must persist the ${unit.radii} artifact")
+    val got = sortedRows(IndexDelta.storedStaleness(spark, root, arrivals, unit))
+    val model = Clustering.loadCentroids(spark, s"$root/${unit.model}")
+    val corp = model.assign(fixed).select(col("cluster"), col("vec_id"), col("dist"))
+    val arr = model.assign(quantized(arrivals))
+      .select(col("cluster"), col("vec_id"), col("dist"))
+    val want = sortedRows(Clustering.modelStalenessOf(corp, arr))
+    assert(got == want && got.nonEmpty,
+      s"${unit.radii} staleness must equal the recomputed monitor (${got.size} rows)")
+  }
+
   test("a nightly-built root serves staleness from the stored k-row radius " +
       "table, row-equal to recomputing the q143 arithmetic over the full " +
       "assignment") {
     CacheRegistry.releaseAll()
+    assertStoredStaleness(IndexBuild.FlatUnit, residue = 2)
+    // a root that predates the radius table is refused with the
+    // rebuild instruction, as textStaleness refuses one without text_meta
     val fixed = Clustering.fixedPoint(spark, sf)
     val arrivals = Tables.embeddings(spark, sf)
       .filter(col("vec_id") % 13 === 2)
       .select(col("vec_id"), col("embedding"))
-    // both vector units: one build verb, one monitor verb
-    for (unit <- Seq(IndexBuild.FlatUnit, IndexBuild.TwoLevelUnit)) {
-      val root = tmp("radroot")
-      IndexBuild.buildVectorUnit(spark, fixed, root, unit)
-      assert(FpIndex.tableVersion(s"$root/${unit.radii}") > 0,
-        s"the build must persist the ${unit.radii} artifact")
-      val got = sortedRows(IndexDelta.storedStaleness(spark, root, arrivals, unit))
-      // independent recomputation: full assignment under the same model
-      val model = Clustering.loadCentroids(spark, s"$root/${unit.model}")
-      val corp = model.assign(fixed).select(col("cluster"), col("vec_id"), col("dist"))
-      val arr = model.assign(quantized(arrivals))
-        .select(col("cluster"), col("vec_id"), col("dist"))
-      val want = sortedRows(Clustering.modelStalenessOf(corp, arr))
-      assert(got == want && got.nonEmpty,
-        s"${unit.radii} staleness must equal the recomputed monitor (${got.size} rows)")
-    }
-    // a root that predates the radius table is refused with the
-    // rebuild instruction, as textStaleness refuses one without text_meta
     val bare = tmp("noradii")
     Clustering.CellModel.Flat(Clustering.trainCentroids(fixed))
       .save(spark, s"$bare/${IndexBuild.CentroidsT}")
     val e = intercept[IllegalArgumentException](
       IndexDelta.storedStaleness(spark, bare, arrivals))
     assert(e.getMessage.contains("re-run IndexBuild.buildAll"), e.getMessage)
+    CacheRegistry.releaseAll()
+  }
+
+  test("hier staleness serves from the stored two-level radii, row-equal to " +
+      "recomputing over the hier assignment") {
+    CacheRegistry.releaseAll()
+    assertStoredStaleness(IndexBuild.TwoLevelUnit, residue = 5)
     CacheRegistry.releaseAll()
   }
 
