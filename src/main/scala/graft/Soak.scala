@@ -782,7 +782,7 @@ object Soak {
       FpIndex.saveFlat(s"$root/${IndexBuild.KeysT}", Incremental.corpusKeySet(docs))
       val sh = Dedup.shingleTable(docs)
       FpIndex.saveFlat(s"$root/${IndexBuild.BandsT}", Dedup.bandTable(sh))
-      FpIndex.saveShingles(s"$root/${IndexBuild.ShinglesT}", sh)
+      FpIndex.saveOrRebuildShingles(spark, s"$root/${IndexBuild.ShinglesT}", sh)
       FpIndex.saveFlat(s"$root/${IndexBuild.NoveltyT}", Incremental.corpusShingleSet(docs))
       root
     }

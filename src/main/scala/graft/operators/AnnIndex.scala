@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persistent ANN index artifacts — the lifecycle that turns the
@@ -44,10 +44,11 @@ import org.apache.spark.sql.functions._
   * write, load reassembles per-vector code arrays with one
   * groupBy(vec_id) whose payload is m ints per row.
   *
-  * Writes APPEND a manifest commit (the sink's contract). Retrain-in-
-  * place goes through [[rebuildQuantizer]]/[[rebuildCodebook]]/
-  * [[rebuildCodes]] — [[FpIndex.rebuildFlat]]'s atomic generation-
-  * append, under which a reader pinned to its load-time
+  * Each artifact has ONE writer, [[saveOrRebuildQuantizer]] /
+  * [[saveOrRebuildCodebook]] / [[saveOrRebuildCodes]]: its row encoder
+  * in front of [[FpIndex.saveOrRebuildFlat]]. A fresh path takes the
+  * initial save; a live one takes [[FpIndex.rebuildFlat]]'s atomic
+  * generation-append, under which a reader pinned to its load-time
   * `asOfManifest` version keeps serving the previous index unchanged
   * and a racing rebuild aborts cleanly (the round-10 interleaved-
   * reader ask; the older TRUNCATE+append sequence had an empty-index
@@ -61,21 +62,11 @@ object AnnIndex {
   // ------------------------------------------------------- IVF quantizer
 
   /** Persist an IVF coarse quantizer (the `collectCentroids` /
-    * [[Similarity.trainIvfQuantizer]] shape: id, vector, norm). */
-  def saveQuantizer(spark: SparkSession, path: String,
+    * [[Similarity.trainIvfQuantizer]] shape: id, vector, norm), or
+    * retrain a live one in place. */
+  def saveOrRebuildQuantizer(spark: SparkSession, path: String,
       cents: Seq[(Long, Array[Double], Double)]): Unit =
-    quantizerRows(spark, cents)
-      .write.format(Format).option("path", path).mode(SaveMode.Append).save()
-
-  /** Retrain-in-place for a live quantizer: [[FpIndex.rebuildFlat]]'s
-    * atomic generation-append — pinned readers keep serving the old
-    * quantizer, un-pinned loads serve the new one, a racing rebuild
-    * aborts cleanly. Replaces the TRUNCATE+append sequence (which had
-    * an empty-index window and expired pinned snapshots). */
-  def rebuildQuantizer(spark: SparkSession, path: String,
-      cents: Seq[(Long, Array[Double], Double)],
-      buildId: String = java.util.UUID.randomUUID().toString): Unit =
-    FpIndex.rebuildFlat(spark, path, quantizerRows(spark, cents), buildId)
+    FpIndex.saveOrRebuildFlat(spark, path, quantizerRows(spark, cents))
 
   private[graft] def quantizerRows(spark: SparkSession,
       cents: Seq[(Long, Array[Double], Double)]): DataFrame = {
@@ -96,12 +87,11 @@ object AnnIndex {
     val rows = FpIndex.loadFlat(spark, path, asOf)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
     require(rows.nonEmpty, s"no quantizer stored at $path")
-    // fail fast on a rebuild-in-place: saves are APPEND, so a second
-    // training run against a live path would double every (c_id, idx)
-    // row and the reassembled vectors would interleave silently
+    // fail fast on a raw append over a live path: it would double every
+    // (c_id, idx) row and the reassembled vectors would interleave silently
     require(rows.map(r => (r._1, r._2)).distinct.length == rows.length,
-      s"quantizer $path has duplicate (c_id, idx) rows — a rebuild " +
-        "appended over a live index; TRUNCATE the table before retraining")
+      s"quantizer $path has duplicate (c_id, idx) rows — rows were appended " +
+        "over a live index; rebuild it with AnnIndex.saveOrRebuildQuantizer")
     rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (id, elems) =>
       val nrm = elems.find(_._2 == -1)
         .getOrElse(sys.error(s"quantizer $path: centroid $id missing norm row"))._3
@@ -112,17 +102,11 @@ object AnnIndex {
 
   // --------------------------------------------------------- PQ codebook
 
-  /** Persist a PQ codebook ([[Similarity.trainPq]]'s m×k×dsub shape). */
-  def saveCodebook(spark: SparkSession, path: String,
+  /** Persist a PQ codebook ([[Similarity.trainPq]]'s m×k×dsub shape),
+    * or retrain a live one in place. */
+  def saveOrRebuildCodebook(spark: SparkSession, path: String,
       cb: Array[Array[Array[Double]]]): Unit =
-    codebookRows(spark, cb)
-      .write.format(Format).option("path", path).mode(SaveMode.Append).save()
-
-  /** Retrain-in-place for a live codebook — see [[rebuildQuantizer]]. */
-  def rebuildCodebook(spark: SparkSession, path: String,
-      cb: Array[Array[Array[Double]]],
-      buildId: String = java.util.UUID.randomUUID().toString): Unit =
-    FpIndex.rebuildFlat(spark, path, codebookRows(spark, cb), buildId)
+    FpIndex.saveOrRebuildFlat(spark, path, codebookRows(spark, cb))
 
   private[graft] def codebookRows(spark: SparkSession,
       cb: Array[Array[Array[Double]]]): DataFrame = {
@@ -141,11 +125,11 @@ object AnnIndex {
     val rows = FpIndex.loadFlat(spark, path, asOf)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3)))
     require(rows.nonEmpty, s"no codebook stored at $path")
-    // same rebuild-in-place guard as loadQuantizer: a retrain append
+    // same append-over-live guard as loadQuantizer: a second append
     // would let last-write-wins mix two codebooks undetected
     require(rows.map(r => (r._1, r._2, r._3)).distinct.length == rows.length,
-      s"codebook $path has duplicate (j, c, i) rows — a rebuild appended " +
-        "over a live index; TRUNCATE the table before retraining")
+      s"codebook $path has duplicate (j, c, i) rows — rows were appended " +
+        "over a live index; rebuild it with AnnIndex.saveOrRebuildCodebook")
     val m = rows.map(_._1).max + 1
     val k = rows.map(_._2).max + 1
     val dsub = rows.map(_._3).max + 1
@@ -159,19 +143,12 @@ object AnnIndex {
   // ------------------------------------------------- corpus code table
 
   /** Persist an encoded corpus — `coded` must carry (vec_id: long,
-    * cell: long, codes: array<int>); flat PQ indexes pass cell = -1.
-    * Distributed end to end: one posexplode map stage into the
-    * manifest write, corpus never collected. */
-  def saveCodes(path: String, coded: DataFrame): Unit =
-    codeRows(coded)
-      .write.format(Format).option("path", path).mode(SaveMode.Append).save()
-
-  /** Re-encode-in-place for a live code table — see
-    * [[rebuildQuantizer]]. Still distributed end to end: the new
-    * encoding is one posexplode append commit, never collected. */
-  def rebuildCodes(spark: SparkSession, path: String, coded: DataFrame,
-      buildId: String = java.util.UUID.randomUUID().toString): Unit =
-    FpIndex.rebuildFlat(spark, path, codeRows(coded), buildId)
+    * cell: long, codes: array<int>); flat PQ indexes pass cell = -1 —
+    * or re-encode a live one in place. Distributed end to end: one
+    * posexplode map stage into the manifest commit, corpus never
+    * collected. */
+  def saveOrRebuildCodes(spark: SparkSession, path: String, coded: DataFrame): Unit =
+    FpIndex.saveOrRebuildFlat(spark, path, codeRows(coded))
 
   /** `posexplode_outer`, deliberately: code arrays are fixed-length
     * ≥ 1 by construction (d SQ8 dims / m PQ subspaces), so outer ≡
@@ -185,28 +162,6 @@ object AnnIndex {
   private[graft] def codeRows(coded: DataFrame): DataFrame =
     coded.select(col("vec_id"), col("cell"),
       posexplode_outer(col("codes")).as(Seq("j", "code")))
-
-  // ----------------------------------------- re-runnable build entry
-
-  /** Save-or-rebuild dispatch: a fresh path takes the initial save, a
-    * live table takes the atomic generation-append rebuild — what
-    * makes ONE nightly build job ([[graft.pipeline.IndexBuild]])
-    * re-runnable in place without a TRUNCATE window. */
-  def saveOrRebuildQuantizer(spark: SparkSession, path: String,
-      cents: Seq[(Long, Array[Double], Double)]): Unit =
-    if (FpIndex.tableVersion(path) > 0) rebuildQuantizer(spark, path, cents)
-    else saveQuantizer(spark, path, cents)
-
-  /** See [[saveOrRebuildQuantizer]]. */
-  def saveOrRebuildCodebook(spark: SparkSession, path: String,
-      cb: Array[Array[Array[Double]]]): Unit =
-    if (FpIndex.tableVersion(path) > 0) rebuildCodebook(spark, path, cb)
-    else saveCodebook(spark, path, cb)
-
-  /** See [[saveOrRebuildQuantizer]]. */
-  def saveOrRebuildCodes(spark: SparkSession, path: String, coded: DataFrame): Unit =
-    if (FpIndex.tableVersion(path) > 0) rebuildCodes(spark, path, coded)
-    else saveCodes(path, coded)
 
   // ------------------------------------ exact-pruned stat tables (q155)
 
@@ -236,7 +191,7 @@ object AnnIndex {
     * distance ‖c̃ − g̃‖, static between retrains (a pure function of the
     * quantizer), stored so group-radius admission composes a batch's
     * cell radius to dcg + R_c without the quantizer vectors. Same
-    * rebuild-in-place duplicate guard as [[loadQuantizer]]: a second
+    * append-over-live duplicate guard as [[loadQuantizer]]: a second
     * save appended over a live table would pair cells with two leaders
     * silently. */
   def loadGroups(spark: SparkSession, path: String,
@@ -245,28 +200,35 @@ object AnnIndex {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     require(rows.nonEmpty, s"no group table stored at $path")
     require(rows.map(_._1).distinct.length == rows.length,
-      s"group table $path has duplicate cell rows — a rebuild appended " +
-        "over a live index; TRUNCATE the table before retraining")
+      s"group table $path has duplicate cell rows — rows were appended " +
+        "over a live index; rebuild it with FpIndex.saveOrRebuildFlat")
     rows.toSeq
   }
 
   /** Load a stored code table back to (vec_id, cell, codes) — ONE
-    * groupBy(vec_id) reassembly; `array_sort` on (j, code) structs
-    * restores subspace order (struct ordering is field-by-field, j
-    * first). */
+    * groupBy(vec_id) reassembly ([[reassembleCodes]]). */
   def loadCodes(spark: SparkSession, path: String, asOf: Option[Int] = None): DataFrame =
-    FpIndex.loadFlat(spark, path, asOf)
-      .groupBy(col("vec_id"), col("cell"))
-      .agg(array_sort(collect_list(struct(col("j"), col("code")))).as("jc"))
-      // rebuild-in-place guard, distributed form: duplicate j within a
-      // vector means an append over a live code table — the doubled
-      // array would feed ADC with garbage, so raise instead
-      .select(col("vec_id"), col("cell"),
-        when(size(array_distinct(expr("transform(jc, s -> s.j)"))) === size(col("jc")),
-          expr("transform(jc, s -> s.code)"))
+    reassembleCodes(FpIndex.loadFlat(spark, path, asOf), Seq("vec_id", "cell"), "j",
+      "AnnIndex.saveOrRebuildCodes")
+
+  /** Reassemble first-normal-form code rows (`keys`…, `pos`, code) into
+    * one `codes` array per key, in `pos` order: `array_sort` on
+    * (pos, code) structs (struct ordering is field-by-field, pos
+    * first). Shared by every stored code table (the PQ/IVF code table
+    * here, [[Similarity]]'s SQ8 codes). Append-over-live guard,
+    * distributed form: a duplicate `pos` within one vector means rows
+    * were appended over a live table — the doubled array would feed the
+    * scan garbage, so raise, naming the table's writer `verb`. */
+  private[graft] def reassembleCodes(rows: DataFrame, keys: Seq[String], pos: String,
+      verb: String): DataFrame =
+    rows.groupBy(keys.map(col): _*)
+      .agg(array_sort(collect_list(struct(col(pos), col("code")))).as("pc"))
+      .select(keys.map(col) :+
+        when(size(array_distinct(expr(s"transform(pc, s -> s.$pos)"))) === size(col("pc")),
+          expr("transform(pc, s -> s.code)"))
           .otherwise(raise_error(concat(
-            lit("stored code table has duplicate subspace rows for vec_id "),
+            lit(s"stored code table has duplicate $pos rows for vec_id "),
             col("vec_id"),
-            lit(" — a rebuild appended over a live index; TRUNCATE before rebuilding"))))
-          .as("codes"))
+            lit(s" — rows were appended over a live index; rebuild it with $verb"))))
+          .as("codes"): _*)
 }

@@ -102,6 +102,12 @@ object Clustering {
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), quantize(col("embedding")).as("x"), col("label"))
 
+  /** [[fixedPoint]] materialized once per session scope — the one
+    * shared corpus cache every clustering query and the embedding
+    * pipeline read. */
+  private[graft] def cachedFixedPoint(spark: SparkSession, dir: String): DataFrame =
+    graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(fixedPoint(spark, dir))
+
   /** Map-only nearest-centroid assignment: the k centroid vectors are
     * an array-of-arrays literal, and the argmin is the codegen'd
     * [[graft.functions.NearestOfL2]] kernel — min dist, ties to the
@@ -178,8 +184,7 @@ object Clustering {
     * is no longer a lock-order requirement). */
   def centroidsFor(spark: SparkSession, dir: String,
       k: Int = K, iters: Int = Iters): Seq[Array[Long]] = {
-    val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
-      fixedPoint(spark, dir))
+    val v = cachedFixedPoint(spark, dir)
     graft.ModelRegistry.getOrCompute(spark, s"clustering.cents:$dir:$k:$iters")(
       trainCentroids(v, k, iters))
   }
@@ -188,8 +193,7 @@ object Clustering {
     * [[centroidsFor]] — q130–q141 all train this identical model. */
   def hierModelFor(spark: SparkSession, dir: String,
       k: Int = HierK, iters: Int = Iters): CellModel.TwoLevel = {
-    val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
-      fixedPoint(spark, dir))
+    val v = cachedFixedPoint(spark, dir)
     graft.ModelRegistry.getOrCompute(spark, s"clustering.hier:$dir:$k:$iters")(
       trainHierarchical(v, k, iters))
   }
@@ -313,8 +317,7 @@ object Clustering {
     * the oracled q124 pins k = [[K]]. */
   def kmeansAssignK(spark: SparkSession, dir: String, k: Int,
       iters: Int = Iters): DataFrame = {
-    val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
-      fixedPoint(spark, dir))
+    val v = cachedFixedPoint(spark, dir)
     val cents = centroidsFor(spark, dir, k, iters)
     assignWith(v, cents).select(col("vec_id"), col("cluster"), col("dist"))
   }
@@ -387,8 +390,7 @@ object Clustering {
     * The oracled q125 pins k = [[K]]. */
   def semdedupPruneK(spark: SparkSession, dir: String, k: Int): DataFrame = {
     val asg = kmeansAssignK(spark, dir, k)
-    val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
-      fixedPoint(spark, dir))
+    val v = cachedFixedPoint(spark, dir)
     semdedupPruneOf(asg.join(v.select(col("vec_id"), col("x")), Seq("vec_id")))
   }
 
@@ -460,8 +462,7 @@ object Clustering {
     * between the mean and the top cells, so BOTH branches are
     * exercised and hash-matched. */
   def cappedSemdedup(spark: SparkSession, dir: String): DataFrame = {
-    val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
-      fixedPoint(spark, dir))
+    val v = cachedFixedPoint(spark, dir)
     val asg = assignWith(v, centroidsFor(spark, dir))
       .select(col("vec_id"), col("x"), col("cluster"))
     val n = v.count() // one count over the cached frame — model-sized
@@ -516,8 +517,7 @@ object Clustering {
     * semantics, verdict shape, and the retention-safe capped verdict
     * are exactly q134's ([[semdedupPruneCapped]]). */
   def percentileCappedSemdedup(spark: SparkSession, dir: String): DataFrame = {
-    val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
-      fixedPoint(spark, dir))
+    val v = cachedFixedPoint(spark, dir)
     val asg = assignWith(v, centroidsFor(spark, dir))
       .select(col("vec_id"), col("x"), col("cluster"))
     val w = org.apache.spark.sql.expressions.Window
@@ -601,8 +601,7 @@ object Clustering {
     * exists anywhere in the q126/PCA path). d rows: model-sized. */
   def dimStats(spark: SparkSession, dir: String): DataFrame =
     graft.CacheRegistry.getOrCache(spark, s"clustering.dimstats:$dir") {
-      graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
-          fixedPoint(spark, dir))
+      cachedFixedPoint(spark, dir)
         .select(posexplode(col("x")))
         .groupBy(col("pos"))
         .agg(sum(col("col").cast("decimal(38,0)")).as("s"),
@@ -616,8 +615,7 @@ object Clustering {
     * result surfaces), so the oracled q126 wraps this in a VARCHAR
     * cast ([[gramMatrix]]). */
   def gramMatrixDecimal(spark: SparkSession, dir: String): DataFrame = {
-    val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
-      fixedPoint(spark, dir))
+    val v = cachedFixedPoint(spark, dir)
     // the codegen'd UpperTriProducts kernel replaces the nested
     // transform-of-slices HOF (O(d²) slice copies + interpreted
     // lambdas per ROW — the q43/q52 trap); identical (i, j, p) triples
@@ -733,8 +731,7 @@ object Clustering {
 
   /** k-threaded profile — the oracled q129 pins k = [[K]]. */
   def clusterProfileK(spark: SparkSession, dir: String, k: Int): DataFrame = {
-    val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
-      fixedPoint(spark, dir))
+    val v = cachedFixedPoint(spark, dir)
     val asg = assignWith(v, centroidsFor(spark, dir, k))
     val byLabel = asg.groupBy(col("cluster"), col("label")).count()
     val wd = org.apache.spark.sql.expressions.Window
@@ -1201,8 +1198,7 @@ object Clustering {
     * where both definitions coincide. The fine keep-if-emptied rule
     * IS mirrored (the fcf coalesce). */
   def hierAssign(spark: SparkSession, dir: String): DataFrame = {
-    val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
-      fixedPoint(spark, dir))
+    val v = cachedFixedPoint(spark, dir)
     hierModelFor(spark, dir).assign(v)
       .select(col("vec_id"), col("cluster"), col("dist"))
   }
@@ -1267,8 +1263,7 @@ object Clustering {
     * unchanged — cells are cells. k=16 cells vs q125's 8 also means
     * finer blocking: candidate mass Σ|cell|² roughly halves. */
   def hierSemdedupPrune(spark: SparkSession, dir: String): DataFrame = {
-    val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
-      fixedPoint(spark, dir))
+    val v = cachedFixedPoint(spark, dir)
     semdedupPruneOf(
       hierModelFor(spark, dir).assign(v)
         .select(col("vec_id"), col("x"), col("cluster")))
@@ -1315,8 +1310,7 @@ object Clustering {
     * greedy argmin in ONE aggregate — the q130 joined-path shape at
     * exactly 2× the candidate mass. */
   def hierAssignMultiProbe(spark: SparkSession, dir: String): DataFrame = {
-    val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
-      fixedPoint(spark, dir))
+    val v = cachedFixedPoint(spark, dir)
     hierModelFor(spark, dir).improved(v)
       .select(col("vec_id"), col("cluster"), col("dist"), col("improved"))
   }
@@ -1516,8 +1510,7 @@ object Clustering {
     * boundary-error-rate table a deployment reads to decide whether
     * the second probe pays for its extra √k scan. */
   def hierProbeRecall(spark: SparkSession, dir: String): DataFrame = {
-    val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
-      fixedPoint(spark, dir))
+    val v = cachedFixedPoint(spark, dir)
     val m = hierModelFor(spark, dir)
     val base = v.select(col("vec_id"), col("x"))
     val t = assignWith(base, m.fines.flatten)
@@ -1589,8 +1582,7 @@ object Clustering {
     * the gate does ([[capAssignedCorpus]] at build time); the oracle
     * runs uncapped. */
   def hierBoundaryPairs(spark: SparkSession, dir: String): DataFrame = {
-    val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
-      fixedPoint(spark, dir))
+    val v = cachedFixedPoint(spark, dir)
     val m = hierModelFor(spark, dir)
     val asg = m.assign(v)
       .select(col("vec_id").as("other_id"), col("x").as("ox"), col("cluster"))
@@ -1639,8 +1631,7 @@ object Clustering {
     * rounds, nothing driver-side but convergence counts); the size
     * annotation is one window over `rep`. */
   def semanticDedupGroups(spark: SparkSession, dir: String): DataFrame = {
-    val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
-      fixedPoint(spark, dir))
+    val v = cachedFixedPoint(spark, dir)
     val m = hierModelFor(spark, dir)
     // ONE assignment cache key (with dist) shared with q140 — the
     // survivor pass rides this identical frame, so running q139 then
@@ -1743,8 +1734,7 @@ object Clustering {
     // shared hierAsgD key): after q139 the survivor policy costs one
     // model-sized join + one window, no second corpus pass or CC run
     val groups = semanticDedupGroups(spark, dir)
-    val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
-      fixedPoint(spark, dir))
+    val v = cachedFixedPoint(spark, dir)
     val m = hierModelFor(spark, dir)
     val asg = graft.CacheRegistry.getOrCache(spark, s"clustering.hierAsgD:$dir")(
       m.assign(v).select(col("vec_id"), col("x"), col("cluster"), col("dist")))
@@ -1790,8 +1780,7 @@ object Clustering {
     * the same arithmetic over [[loadAssignedCorpus]] counts + arrivals
     * assigned by the [[loadCentroids]] model — model-sized everything. */
   def clusterDrift(spark: SparkSession, dir: String): DataFrame = {
-    val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
-      fixedPoint(spark, dir))
+    val v = cachedFixedPoint(spark, dir)
     val asg = assignWith(v, centroidsFor(spark, dir)).select(col("vec_id"), col("cluster"))
     clusterDriftOf(
       asg.groupBy(col("cluster")).agg(count(lit(1)).as("n_base")),
@@ -1864,8 +1853,7 @@ object Clustering {
     * so the monitor can never diverge between the flat and two-level
     * deployments. */
   def clusterDriftHier(spark: SparkSession, dir: String): DataFrame = {
-    val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
-      fixedPoint(spark, dir))
+    val v = cachedFixedPoint(spark, dir)
     val asg = hierModelFor(spark, dir).assign(v)
       .select(col("vec_id"), col("cluster"))
     clusterDriftOf(
@@ -1990,8 +1978,7 @@ object Clustering {
     * materialization). Fetches the model before the frame memo (data
     * order; the per-key-latch registries impose no lock order). */
   private def flatAsgD(spark: SparkSession, dir: String): DataFrame = {
-    val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
-      fixedPoint(spark, dir))
+    val v = cachedFixedPoint(spark, dir)
     val cents = centroidsFor(spark, dir)
     graft.CacheRegistry.getOrCache(spark, s"clustering.flatAsgD:$dir")(
       assignWith(v, cents)
@@ -2177,8 +2164,7 @@ object Clustering {
     * every clustering-family consumer runs identically on flat and
     * hier cells). Rides the q139/q140 cached assignment. */
   def hierStaleness(spark: SparkSession, dir: String): DataFrame = {
-    val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
-      fixedPoint(spark, dir))
+    val v = cachedFixedPoint(spark, dir)
     val m = hierModelFor(spark, dir)
     val asg = graft.CacheRegistry.getOrCache(spark, s"clustering.hierAsgD:$dir")(
       m.assign(v).select(col("vec_id"), col("x"), col("cluster"), col("dist")))
@@ -2228,8 +2214,7 @@ object Clustering {
     * semantics — the hash gate now pins the admission decision on
     * BOTH model shapes. */
   def hierDeltaAdmission(spark: SparkSession, dir: String): DataFrame = {
-    val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
-      fixedPoint(spark, dir))
+    val v = cachedFixedPoint(spark, dir)
     val m = hierModelFor(spark, dir)
     val asg = graft.CacheRegistry.getOrCache(spark, s"clustering.hierAsgD:$dir")(
       m.assign(v).select(col("vec_id"), col("x"), col("cluster"), col("dist")))
@@ -2297,8 +2282,7 @@ object Clustering {
     * stage table is 3 rows and the input totals ride a window over
     * it — no scalar cross join, no extra corpus pass. */
   def embedCurationFunnel(spark: SparkSession, dir: String): DataFrame = {
-    val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
-      fixedPoint(spark, dir))
+    val v = cachedFixedPoint(spark, dir)
     // model fetched before the frame memo (data order; no lock order)
     val cents = centroidsFor(spark, dir)
     val asg = graft.CacheRegistry.getOrCache(spark, s"clustering.flatAsgD:$dir")(

@@ -1491,12 +1491,16 @@ object Extended {
     * lifecycle): s2 is DECIMAL(38,0) for overflow headroom, which the
     * flat codec carries as its exact decimal string — the
     * decimal→string→decimal round-trip is lossless, so the stored
-    * baseline serves bit-identically (StoredIndexSpec). */
+    * baseline serves bit-identically (StoredIndexSpec). The save is
+    * [[FpIndex.saveOrRebuildFlat]] (a live table rebuilds in place);
+    * `asOf` pins the load like [[FpIndex.loadFlat]]'s. */
   def saveVolumeStats(path: String, stats: DataFrame): Unit =
-    FpIndex.saveFlat(path, stats.withColumn("s2", col("s2").cast("string")))
+    FpIndex.saveOrRebuildFlat(stats.sparkSession, path,
+      stats.withColumn("s2", col("s2").cast("string")))
 
-  def loadVolumeStats(spark: SparkSession, path: String): DataFrame =
-    FpIndex.loadFlat(spark, path)
+  def loadVolumeStats(spark: SparkSession, path: String,
+      asOf: Option[Int] = None): DataFrame =
+    FpIndex.loadFlat(spark, path, asOf)
       .withColumn("s2", col("s2").cast("decimal(38,0)"))
 
   /** Merge per-window volume baselines by summing sufficient

@@ -126,14 +126,24 @@ object FpIndex {
     * before either appended). Spec-only entry; production goes through
     * [[rebuildFlat]]. */
   private[graft] def rebuildFlatAt(spark: SparkSession, path: String,
-      df: DataFrame, gen: Long, buildId: String): Unit = {
+      df: DataFrame, gen: Long, buildId: String): Unit =
+    stampedAppend(spark, path, df, gen, buildId)(w =>
+      s"index $path changed during the rebuild (winning build is $w, " +
+        s"this rebuild wrote ($gen, $buildId)) — this rebuild lost the " +
+        "race and aborted; the winner's rows serve, this build's rows are inert")
+
+  /** The one stamped append under [[rebuildFlat]] and
+    * [[deltaAppendFlat]]: tag every row with ([[GenCol]] = `gen`,
+    * [[BuildCol]] = `buildId`), append them as ONE commit through
+    * [[saveFlat]], then check that this stamp still wins at the new
+    * version — a stamp that lost raises `ConcurrentModificationException`
+    * with `lost(winner)` as its message, its rows inert. */
+  private def stampedAppend(spark: SparkSession, path: String, df: DataFrame,
+      gen: Long, buildId: String)(lost: Option[(Long, String)] => String): Unit = {
     saveFlat(path, df.withColumn(GenCol, lit(gen)).withColumn(BuildCol, lit(buildId)))
     val w = winningBuildAt(spark, path, tableVersion(path))
     if (!w.contains((gen, buildId)))
-      throw new java.util.ConcurrentModificationException(
-        s"index $path changed during the rebuild (winning build is $w, " +
-          s"this rebuild wrote ($gen, $buildId)) — this rebuild lost the " +
-          "race and aborted; the winner's rows serve, this build's rows are inert")
+      throw new java.util.ConcurrentModificationException(lost(w))
   }
 
   /** Winner memo: commits are append-only, so the winning build at a
@@ -231,10 +241,13 @@ object FpIndex {
     }
   }
 
-  /** Save-or-rebuild dispatch: a fresh path takes the initial save, a
-    * live table takes the atomic [[rebuildFlat]] — what makes one
-    * nightly build job ([[graft.pipeline.IndexBuild]]) re-runnable in
-    * place. */
+  /** Save-or-rebuild dispatch: a fresh path takes the initial
+    * [[saveFlat]], a live table takes the atomic [[rebuildFlat]] — what
+    * makes one nightly build job ([[graft.pipeline.IndexBuild]])
+    * re-runnable in place. Every stored layout writes through here: the
+    * shingle sets ([[saveOrRebuildShingles]]) and [[AnnIndex]]'s
+    * quantizer, codebook and code table are one row encoder each in
+    * front of it. */
   def saveOrRebuildFlat(spark: SparkSession, path: String, df: DataFrame): Unit =
     if (tableVersion(path) > 0) rebuildFlat(spark, path, df) else saveFlat(path, df)
 
@@ -351,16 +364,11 @@ object FpIndex {
     * superseded is exactly the delta-vs-rebuild race. Spec-only entry;
     * production goes through [[deltaAppendFlat]]. */
   private[graft] def deltaAppendFlatAt(spark: SparkSession, path: String,
-      df: DataFrame, gen: Long, buildId: String): Unit = {
-    saveFlat(path,
-      df.withColumn(GenCol, lit(gen)).withColumn(BuildCol, lit(buildId)))
-    val w = winningBuildAt(spark, path, tableVersion(path))
-    if (!w.contains((gen, buildId)))
-      throw new java.util.ConcurrentModificationException(
-        s"index $path was rebuilt during the delta append (winning build " +
-          s"is $w, this delta stamped ($gen, $buildId)) — the delta's rows " +
-          "are inert; re-admit the batch against the new build")
-  }
+      df: DataFrame, gen: Long, buildId: String): Unit =
+    stampedAppend(spark, path, df, gen, buildId)(w =>
+      s"index $path was rebuilt during the delta append (winning build " +
+        s"is $w, this delta stamped ($gen, $buildId)) — the delta's rows " +
+        "are inert; re-admit the batch against the new build")
 
   /** [[deltaAppendFlat]] for the shingle-set table — same first-normal-
     * form encoding. The caller must have replay-rejected `sh` against
@@ -458,30 +466,20 @@ object FpIndex {
   def compactIndex(spark: SparkSession, path: String, nFiles: Int = 1): Unit =
     graft.sources.ManifestOptimize.compactFiles(spark, path, nFiles)
 
-  /** Persist the shingle-set table (doc_id, hh array<long>) in first
-    * normal form. */
-  def saveShingles(path: String, sh: DataFrame): Unit =
-    saveFlat(path, shingleRows(sh))
-
-  /** [[saveOrRebuildFlat]] for the shingle-set table. */
+  /** [[saveOrRebuildFlat]] for the shingle-set table (doc_id,
+    * hh array<long>), stored in first normal form. */
   def saveOrRebuildShingles(spark: SparkSession, path: String, sh: DataFrame): Unit =
-    if (tableVersion(path) > 0) rebuildShingles(spark, path, sh)
-    else saveShingles(path, sh)
+    saveOrRebuildFlat(spark, path, shingleRows(sh))
 
-  /** [[rebuildFlat]] for the shingle-set table — same first-normal-form
-    * encoding, same atomic generation-append contract. */
-  def rebuildShingles(spark: SparkSession, path: String, sh: DataFrame,
-      buildId: String = java.util.UUID.randomUUID().toString): Unit =
-    rebuildFlat(spark, path, shingleRows(sh), buildId)
-
-  private def shingleRows(sh: DataFrame): DataFrame =
+  private[graft] def shingleRows(sh: DataFrame): DataFrame =
     sh.select(col("doc_id"), explode(col("hh")).as("h"))
 
   /** Reassemble a stored shingle-set table — one groupBy(doc_id),
     * sets rebuilt sorted (order-invariant downstream). Stored sets
     * are distinct by construction, so a duplicate hash here means an
-    * APPEND over a live index (saves never overwrite) — the doubled
-    * sets would silently shrink every Jaccard, so raise instead. */
+    * APPEND over a live index ([[saveFlat]] never overwrites) — the
+    * doubled sets would silently shrink every Jaccard, so raise
+    * instead. */
   def loadShingles(spark: SparkSession, path: String, asOf: Option[Int] = None): DataFrame =
     loadFlat(spark, path, asOf).groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("h"))).as("hh"))
@@ -490,6 +488,7 @@ object FpIndex {
           .otherwise(raise_error(concat(
             lit("stored shingle set has duplicate hashes for doc_id "),
             col("doc_id"),
-            lit(" — a rebuild appended over a live index; TRUNCATE before rebuilding"))))
+            lit(" — rows were appended over a live index; rebuild it with " +
+              "FpIndex.saveOrRebuildShingles"))))
           .as("hh"))
 }

@@ -329,7 +329,7 @@ object Similarity {
       coalesce(VectorOps.nearestCell(col("e"), col("nrm"), cents), lit(-1L)))
 
   /** Public train entry for the IVF quantizer — what
-    * [[graft.operators.AnnIndex.saveQuantizer]] persists. The sampled
+    * [[graft.operators.AnnIndex.saveOrRebuildQuantizer]] persists. The sampled
     * rule (q44's oracle contract) as-is; compose [[refineCentroids]]
     * on the result for Lloyd-trained production quantizers. */
   def trainIvfQuantizer(
@@ -705,32 +705,62 @@ object Similarity {
     else (floor((element_at(col("e"), i + 1) - lit(mn)) / lit(mx - mn) * lit(255.0) + lit(0.5))
       .cast("int") - lit(128))
 
+  /** q61's per-dim reconstruction of an int8 `code` (shared with q145
+    * and the stored-code decode). */
+  private def sq8Dec(code: Column, mn: Double, mx: Double): Column =
+    if (mx == mn) lit(mn)
+    else lit(mn) + (code + lit(128)).cast("double") / lit(255.0) * lit(mx - mn)
+
   /** q61's per-dim reconstruction expression (shared with q145). */
   private def sq8Rec(i: Int, mn: Double, mx: Double): Column =
-    if (mx == mn) lit(mn)
-    else lit(mn) + (sq8Code(i, mn, mx) + lit(128)).cast("double") / lit(255.0) * lit(mx - mn)
+    sq8Dec(sq8Code(i, mn, mx), mn, mx)
+
+  // ------------------------------------------------ stored SQ8 codec
+  //
+  // One codec for every stored SQ8 table: the per-dim affine codebook
+  // `sq8_stats` (i, mn, mx), the code array a corpus or arrival batch
+  // encodes to, and the decode of a stored `codes` array back to the
+  // reconstruction — [[sq8Dec]], as in [[sq8Rec]], so served rows are
+  // bit-equal to in-session ones.
+
+  private def saveSq8Stats(spark: SparkSession, indexPath: String,
+      stats: Seq[(Int, Double, Double)]): Unit = {
+    import spark.implicits._
+    FpIndex.saveOrRebuildFlat(spark, s"$indexPath/sq8_stats",
+      stats.toDF("i", "mn", "mx").repartition(1))
+  }
+
+  private def loadSq8Stats(spark: SparkSession,
+      indexPath: String): Seq[(Int, Double, Double)] = {
+    val stats = FpIndex.loadFlat(spark, s"$indexPath/sq8_stats")
+      .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
+      .sortBy(_._1).toSeq
+    require(stats.nonEmpty, s"no SQ8 stats stored at $indexPath")
+    stats
+  }
+
+  /** The d int8 codes of column `e` under `stats`. */
+  private def sq8CodeArray(stats: Seq[(Int, Double, Double)]): Column =
+    array(stats.map { case (i, mn, mx) => sq8Code(i, mn, mx) }.toIndexedSeq: _*)
+
+  /** The reconstruction of a stored `codes` array under `stats`. */
+  private def sq8Decode(stats: Seq[(Int, Double, Double)]): Column =
+    array(stats.map { case (i, mn, mx) =>
+      sq8Dec(element_at(col("codes"), i + 1), mn, mx) }.toIndexedSeq: _*)
 
   def quantize(spark: SparkSession, dir: String): DataFrame = {
     val v = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val stats = sq8Stats(v)
-
-    def qv(i: Int, mn: Double, mx: Double) = sq8Code(i, mn, mx)
-
     val errCols = stats.map { case (i, mn, mx) =>
-      val rec =
-        if (mx == mn) lit(mn)
-        else lit(mn) + (qv(i, mn, mx) + lit(128)).cast("double") / lit(255.0) * lit(mx - mn)
-      floor(lit(1000000.0) * abs(element_at(col("e"), i + 1) - rec)).cast("long")
+      floor(lit(1000000.0) * abs(element_at(col("e"), i + 1) - sq8Rec(i, mn, mx))).cast("long")
     }
     // comma-joined string, not array<int>: the q01 exclude_ids
     // convention — oracled outputs serialize arrays so both engines
     // (and the driver compare) order and hash them as scalars
     v.select(
       col("vec_id"),
-      concat_ws(",",
-        array(stats.map { case (i, mn, mx) => qv(i, mn, mx) }.toIndexedSeq: _*)
-          .cast("array<string>")).as("qvec"),
+      concat_ws(",", sq8CodeArray(stats).cast("array<string>")).as("qvec"),
       (if (errCols.length == 1) errCols.head else greatest(errCols.toIndexedSeq: _*)).as("err_ppm"))
   }
 
@@ -1095,7 +1125,8 @@ object Similarity {
     * existed — exactly the staleness [[graft.pipeline.IndexDelta
     * .refreshIfStale]]-style monitoring bounds; the rebuild re-encodes
     * everything. Returns the admitted count. Per batch: one stored-id
-    * scan (the anti-probe), one delta-sized encode + append. */
+    * scan (the anti-probe), one delta-sized encode + append
+    * ([[FpIndex.deltaAppendFlat]]'s one-pass count and write). */
   def admitPqCodes(spark: SparkSession, indexPath: String,
       arrivals: DataFrame): Long = {
     val cb = AnnIndex.loadCodebook(spark, s"$indexPath/codebook")
@@ -1103,18 +1134,13 @@ object Similarity {
     val eInt = array((0 until d).map(i =>
       floor(element_at(col("embedding").cast("array<double>"), i + 1)
         * lit(1024.0)).cast("double")): _*)
-    val storedIds = graft.operators.FpIndex
-      .loadFlat(spark, s"$indexPath/codes").select(col("vec_id")).distinct()
+    val storedIds = FpIndex.loadFlat(spark, s"$indexPath/codes")
+      .select(col("vec_id")).distinct()
     val coded = arrivals.join(storedIds, Seq("vec_id"), "left_anti")
       .select(col("vec_id"), lit(-1L).as("cell"),
         VectorOps.pqEncode(eInt, cb).as("codes"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = coded.count()
-      graft.operators.FpIndex.deltaAppendFlat(spark, s"$indexPath/codes",
-        AnnIndex.codeRows(coded))
-      n
-    } finally coded.unpersist(blocking = false)
+    // one code row per subspace: m rows per admitted vector
+    FpIndex.deltaAppendFlat(spark, s"$indexPath/codes", AnnIndex.codeRows(coded)) / cb.length
   }
 
   /** Serve-only half of the q82 lifecycle: the ADC scan against the
@@ -1526,16 +1552,12 @@ object Similarity {
     * (the code write is one projection → posexplode; the stats
     * collect is 2·d doubles). Re-runs cut over atomically. */
   def buildSq8Index(spark: SparkSession, dir: String, indexPath: String): Unit = {
-    import spark.implicits._
     val v = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val stats = sq8Stats(v)
-    FpIndex.saveOrRebuildFlat(spark, s"$indexPath/sq8_stats",
-      stats.toDF("i", "mn", "mx").repartition(1))
-    val codeArr = array(stats.map { case (i, mn, mx) => sq8Code(i, mn, mx) }
-      .toIndexedSeq: _*)
+    saveSq8Stats(spark, indexPath, stats)
     FpIndex.saveOrRebuildFlat(spark, s"$indexPath/sq8_codes",
-      v.select(col("vec_id"), posexplode(codeArr).as(Seq("i", "code"))))
+      v.select(col("vec_id"), posexplode(sq8CodeArray(stats)).as(Seq("i", "code"))))
   }
 
   /** Serve-only half: reconstruct the corpus FROM THE STORED CODES
@@ -1546,33 +1568,15 @@ object Similarity {
     * [[sq8TopK]] (IndexDeltaSpec pins it); only the declared-small
     * query rows are re-derived from the corpus table. */
   def sq8TopKServe(spark: SparkSession, dir: String, indexPath: String): DataFrame = {
-    val stats = FpIndex.loadFlat(spark, s"$indexPath/sq8_stats")
-      .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
-      .sortBy(_._1)
-    require(stats.nonEmpty, s"no SQ8 stats stored at $indexPath")
-    val codes = FpIndex.loadFlat(spark, s"$indexPath/sq8_codes")
-      .groupBy(col("vec_id"))
-      .agg(array_sort(collect_list(struct(col("i"), col("code")))).as("ic"))
-      .select(col("vec_id"),
-        when(size(array_distinct(expr("transform(ic, s -> s.i)"))) === size(col("ic")),
-          expr("transform(ic, s -> s.code)"))
-          .otherwise(raise_error(concat(
-            lit("stored SQ8 code table has duplicate dim rows for vec_id "),
-            col("vec_id"),
-            lit(" — an append raced a live index"))))
-          .as("codes"))
-    // decode: d literal-constant expressions over the stored code array
-    val rec = array(stats.map { case (i, mn, mx) =>
-      if (mx == mn) lit(mn)
-      else lit(mn) + (element_at(col("codes"), i + 1) + lit(128)).cast("double") /
-        lit(255.0) * lit(mx - mn)
-    }.toIndexedSeq: _*)
+    val stats = loadSq8Stats(spark, indexPath)
+    val codes = AnnIndex.reassembleCodes(FpIndex.loadFlat(spark, s"$indexPath/sq8_codes"),
+      Seq("vec_id"), "i", "Similarity.buildSq8Index")
     // same materialization point as the in-session form: decode once,
     // not per pair (keyed on the index path — a delta append between
     // calls lands in a released registry scope, never a stale cache)
     val corp = graft.CacheRegistry.getOrCache(spark,
       s"similarity.sq8serve:$indexPath:${FpIndex.tableVersion(s"$indexPath/sq8_codes")}")(
-      codes.select(col("vec_id"), rec.as("re"))
+      codes.select(col("vec_id"), sq8Decode(stats).as("re"))
         .withColumn("rr", VectorOps.dot(col("re"), col("re"))))
     val v = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
@@ -1586,24 +1590,15 @@ object Similarity {
     * rebuild. Returns the admitted count. */
   def admitSq8Codes(spark: SparkSession, indexPath: String,
       arrivals: DataFrame): Long = {
-    val stats = FpIndex.loadFlat(spark, s"$indexPath/sq8_stats")
-      .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
-      .sortBy(_._1)
-    require(stats.nonEmpty, s"no SQ8 stats stored at $indexPath")
+    val stats = loadSq8Stats(spark, indexPath)
     val storedIds = FpIndex.loadFlat(spark, s"$indexPath/sq8_codes")
       .select(col("vec_id")).distinct()
-    val codeArr = array(stats.map { case (i, mn, mx) => sq8Code(i, mn, mx) }
-      .toIndexedSeq: _*)
     val fresh = arrivals
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
       .join(storedIds, Seq("vec_id"), "left_anti")
-      .select(col("vec_id"), posexplode(codeArr).as(Seq("i", "code")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = fresh.select(col("vec_id")).distinct().count()
-      FpIndex.deltaAppendFlat(spark, s"$indexPath/sq8_codes", fresh)
-      n
-    } finally fresh.unpersist(blocking = false)
+      .select(col("vec_id"), posexplode(sq8CodeArray(stats)).as(Seq("i", "code")))
+    // one code row per dimension: d rows per admitted vector
+    FpIndex.deltaAppendFlat(spark, s"$indexPath/sq8_codes", fresh) / stats.length
   }
 
   // --------------------------------------------------------------- q148
@@ -1832,21 +1827,17 @@ object Similarity {
     * stored index. The code write is distributed; training collects
     * only model-sized artifacts (quantizer + 2·d codebook doubles). */
   def buildIvfSq8Index(spark: SparkSession, dir: String, indexPath: String): Unit = {
-    import spark.implicits._
     val v = vectors(spark, dir)
     val cents = collectCentroids(v, expr(IvfCentroidFilter))
     AnnIndex.saveOrRebuildQuantizer(spark, s"$indexPath/quantizer", cents)
     val stats = sq8Stats(v)
-    FpIndex.saveOrRebuildFlat(spark, s"$indexPath/sq8_stats",
-      stats.toDF("i", "mn", "mx").repartition(1))
-    val codeArr = array(stats.map { case (i, mn, mx) => sq8Code(i, mn, mx) }
-      .toIndexedSeq: _*)
+    saveSq8Stats(spark, indexPath, stats)
     // assignment isolated from the 64-expression encode (the ivfSq8TopK
     // huge-method lesson — one fused projection runs interpreted)
     val assigned = graft.CacheRegistry.getOrCache(spark, s"similarity.ivfCells:$dir")(
       assignCells(v, cents).select(col("vec_id"), col("e"), col("nrm"), col("cell")))
     AnnIndex.saveOrRebuildCodes(spark, s"$indexPath/codes",
-      assigned.select(col("vec_id"), col("cell"), codeArr.as("codes")))
+      assigned.select(col("vec_id"), col("cell"), sq8CodeArray(stats).as("codes")))
   }
 
   /** Serve-only half: reload quantizer + codebook + cell-stamped codes
@@ -1859,19 +1850,11 @@ object Similarity {
       nprobe: Int = IvfNprobe, shortlist: Int = Sq8Shortlist,
       topK: Int = 5): DataFrame = {
     val cents = AnnIndex.loadQuantizer(spark, s"$indexPath/quantizer")
-    val stats = FpIndex.loadFlat(spark, s"$indexPath/sq8_stats")
-      .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
-      .sortBy(_._1).toSeq
-    require(stats.nonEmpty, s"no SQ8 stats stored at $indexPath")
-    val rec = array(stats.map { case (i, mn, mx) =>
-      if (mx == mn) lit(mn)
-      else lit(mn) + (element_at(col("codes"), i + 1) + lit(128)).cast("double") /
-        lit(255.0) * lit(mx - mn)
-    }.toIndexedSeq: _*)
+    val stats = loadSq8Stats(spark, indexPath)
     val corp = graft.CacheRegistry.getOrCache(spark,
       s"similarity.ivfSq8serve:$indexPath:${FpIndex.tableVersion(s"$indexPath/codes")}")(
       AnnIndex.loadCodes(spark, s"$indexPath/codes")
-        .select(col("vec_id"), col("cell"), rec.as("re"))
+        .select(col("vec_id"), col("cell"), sq8Decode(stats).as("re"))
         .withColumn("rr", VectorOps.dot(col("re"), col("re"))))
     ivfSq8Scan(vectors(spark, dir), corp, cents, expr(QueryFilter),
       nprobe, shortlist, topK)
@@ -1884,27 +1867,12 @@ object Similarity {
     * N admits, batch N+1 sees" contract) while the current batch's
     * cache never goes stale mid-plan. */
   private def ivfSq8StoredCorp(spark: SparkSession, indexPath: String,
-      stats: Seq[(Int, Double, Double)]): DataFrame = {
-    val rec = array(stats.map { case (i, mn, mx) =>
-      if (mx == mn) lit(mn)
-      else lit(mn) + (element_at(col("codes"), i + 1) + lit(128)).cast("double") /
-        lit(255.0) * lit(mx - mn)
-    }.toIndexedSeq: _*)
+      stats: Seq[(Int, Double, Double)]): DataFrame =
     graft.CacheRegistry.getOrCache(spark,
       s"similarity.ivfSq8gateCorp:$indexPath:${FpIndex.tableVersion(s"$indexPath/codes")}")(
       AnnIndex.loadCodes(spark, s"$indexPath/codes")
-        .select(col("vec_id").as("corpus_id"), col("cell"), rec.as("re"))
+        .select(col("vec_id").as("corpus_id"), col("cell"), sq8Decode(stats).as("re"))
         .withColumn("rr", VectorOps.dot(col("re"), col("re"))))
-  }
-
-  private def loadSq8Stats(spark: SparkSession,
-      indexPath: String): Seq[(Int, Double, Double)] = {
-    val stats = FpIndex.loadFlat(spark, s"$indexPath/sq8_stats")
-      .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
-      .sortBy(_._1).toSeq
-    require(stats.nonEmpty, s"no SQ8 stats stored at $indexPath")
-    stats
-  }
 
   /** q149-TIER ADMISSION GATE (round-15 verdict ask #6): the
     * near-dup/replay verdict for an arriving vector batch, probing the
@@ -1994,8 +1962,6 @@ object Similarity {
       arrivals: DataFrame): Long = {
     val cents = AnnIndex.loadQuantizer(spark, s"$indexPath/quantizer")
     val stats = loadSq8Stats(spark, indexPath)
-    val codeArr = array(stats.map { case (i, mn, mx) => sq8Code(i, mn, mx) }
-      .toIndexedSeq: _*)
     val storedIds = FpIndex.loadFlat(spark, s"$indexPath/codes")
       .select(col("vec_id")).distinct()
     val v = arrivals
@@ -2003,14 +1969,9 @@ object Similarity {
       .withColumn("nrm", sqrt(VectorOps.dot(col("e"), col("e"))))
       .join(storedIds, Seq("vec_id"), "left_anti")
     val coded = assignCells(v, cents)
-      .select(col("vec_id"), col("cell"), codeArr.as("codes"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = coded.count()
-      FpIndex.deltaAppendFlat(spark, s"$indexPath/codes",
-        AnnIndex.codeRows(coded))
-      n
-    } finally coded.unpersist(blocking = false)
+      .select(col("vec_id"), col("cell"), sq8CodeArray(stats).as("codes"))
+    // one code row per dimension: d rows per admitted vector
+    FpIndex.deltaAppendFlat(spark, s"$indexPath/codes", AnnIndex.codeRows(coded)) / stats.length
   }
 
   val ivfSq8TopKSql: String = {

@@ -70,8 +70,7 @@ object EmbedPipeline {
         v => Clustering.CellModel.Flat(Clustering.trainCentroids(v)),
       m: Int = Clustering.SampleM,
       pruneT: Long = Clustering.PruneT): Seq[VecStage] = {
-    val v = graft.CacheRegistry.getOrCache(spark, s"clustering.fixed:$dir")(
-      Clustering.fixedPoint(spark, dir))
+    val v = Clustering.cachedFixedPoint(spark, dir)
     val model = train(v)
     // shared materialization point: the observed input branch AND the
     // prune's self-join both read this one in-memory assignment

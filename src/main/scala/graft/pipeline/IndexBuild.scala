@@ -137,8 +137,7 @@ object IndexBuild {
         // volume baseline — sufficient statistics, model-sized, mergeable
         val typed = Tables.events(spark, dir)
           .selectExpr("event_type", s"${Tables.epochSecSql} div 86400 AS day_no")
-        FpIndex.saveOrRebuildFlat(spark, s"$root/$VolStatsT",
-          Extended.volumeStatsOf(typed).withColumn("s2", col("s2").cast("string")))
+        Extended.saveVolumeStats(s"$root/$VolStatsT", Extended.volumeStatsOf(typed))
       },
       () => {
         // ANN artifacts: IVF quantizer + flat-PQ codebook/codes + the SQ8
@@ -275,7 +274,7 @@ object IndexBuild {
       // when delta-free; see TextAnalysis.cmsLoadMerged)
       cms = TextAnalysis.cmsLoadMerged(spark, path(CmsT), pins.get(CmsT)),
       novelty = flat(NoveltyT),
-      volumeStats = flat(VolStatsT).withColumn("s2", col("s2").cast("decimal(38,0)")),
+      volumeStats = Extended.loadVolumeStats(spark, path(VolStatsT), pins.get(VolStatsT)),
       annPath = path(AnnT),
       centroidsPath = path(CentroidsT),
       pcaPath = path(PcaT),

@@ -509,6 +509,86 @@ object ManifestSink {
     }
   }
 
+  /** The one commit publish under the batch and streaming writes
+    * (driver-side, after every task succeeded): move exactly the files
+    * the committed task attempts reported from `tempDir` into `root`,
+    * then append one manifest tagged `tag` naming them. Readers list
+    * manifests, so a crash before this point publishes nothing and a
+    * crash after it publishes everything — no torn state. */
+  private[sources] def publishCommit(root: File, tempDir: File, tag: String,
+      schema: StructType, messages: Array[WriterCommitMessage]): Unit = {
+    root.mkdirs()
+    val files = messages.collect {
+      case m: ManifestCommitMessage if m.rows > 0 =>
+        val target = new File(root, m.file)
+        Files.move(new File(tempDir, m.file).toPath,
+          target.toPath, StandardCopyOption.ATOMIC_MOVE)
+        // vacuum's grace window is keyed on PUBLISH time; ATOMIC_MOVE
+        // preserves the task-write mtime, which for a straggler task
+        // may predate the grace period and let a concurrent vacuum
+        // reclaim the file in the pre-manifest window
+        target.setLastModified(System.currentTimeMillis())
+        statsEntry(m.file, m.rows, m.stats)
+    }
+    ensureSchema(root, schema)
+    writeManifest(root, tag, files.toSeq)
+  }
+
+  /** Remove one write's `_temp/<write id>` subdirectory — zero-row task
+    * files and a replayed epoch's duplicates included. Scoped to that
+    * write: the shared `_temp` root may hold another write's in-flight
+    * files, so `_temp` itself goes only when empty. */
+  private[sources] def cleanupTemp(tempDir: File): Unit = {
+    Option(tempDir.listFiles()).foreach(_.foreach(_.delete()))
+    tempDir.delete()
+    tempDir.getParentFile.delete() // only succeeds when _temp is empty
+  }
+
+  /** The one copy-on-write rewrite under DELETE, OPTIMIZE and upsert.
+    * `plan` gets the table as of the snapshot `before` lists — so the
+    * rows it rewrites are exactly the history the swap validates — and
+    * returns the rows to write plus the committed entries that survive
+    * untouched (a partial DELETE's unhit files), or None when there is
+    * nothing to rewrite. The rows go to a scratch manifest table, whose
+    * files are adopted into the table under `prefix`, and
+    * `kept ++ adopted` publishes as one checkpoint over `before`
+    * ([[publishCowSwap]]'s optimistic swap; on conflict only the
+    * adopted files are rolled back). The scratch table is removed
+    * either way.
+    *
+    * A concurrent swap that absorbs part of `before` into its own
+    * checkpoint leaves the pinned read unable to address that history
+    * ([[manifestSlice]] refuses to split a checkpoint): that is the lost
+    * race the swap's validation reports, so it raises the same
+    * retryable ConcurrentModificationException. */
+  private[sources] def rewrite(spark: org.apache.spark.sql.SparkSession, path: String,
+      before: Seq[File], prefix: String)(plan: org.apache.spark.sql.DataFrame =>
+        Option[(org.apache.spark.sql.DataFrame, Seq[String])]): Unit = {
+    val root = new File(path)
+    def pinned[T](body: => T): T = try body catch {
+      case e: IllegalArgumentException
+          if sortedManifests(root).map(_.getName) != before.map(_.getName) =>
+        val cme = new java.util.ConcurrentModificationException(
+          s"table $root changed while the copy-on-write rewrite read it — retry the operation")
+        cme.initCause(e)
+        throw cme
+    }
+    val snapshot = spark.read.format("graft.sources.ManifestSink")
+      .option("path", path)
+      .option("asOfManifest", before.map(weightOf).sum)
+      .load()
+    pinned(plan(snapshot)).foreach { case (rows, kept) =>
+      val tmpDir = Files.createTempDirectory(s"graft_$prefix").toFile
+      def rm(f: File): Unit = { Option(f.listFiles()).foreach(_.foreach(rm)); f.delete() }
+      try {
+        pinned(rows.write.format("graft.sources.ManifestSink")
+          .option("path", tmpDir.getAbsolutePath).mode("append").save())
+        val fresh = adoptInto(root, tmpDir, prefix)
+        publishCowSwap(root, before, kept ++ fresh, freshOnAbort = Some(fresh))
+      } finally rm(tmpDir)
+    }
+  }
+
   def decodeField(s: String, dt: DataType): Any =
     if (s == "\\N") null
     else {
@@ -629,42 +709,17 @@ class ManifestStreamingWrite(path: String, queryId: String, schema: StructType)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val root = new File(path)
-    root.mkdirs()
     val tempDir = new File(root, s"_temp/${writeId(epochId)}")
     val replayed = ManifestSink.sortedManifests(root)
       .exists(_.getName.endsWith(s"-${epochTag(epochId)}"))
-    if (!replayed) {
-      val files = messages.collect {
-        case m: ManifestCommitMessage if m.rows > 0 =>
-          val target = new File(root, m.file)
-          Files.move(new File(tempDir, m.file).toPath,
-            target.toPath, StandardCopyOption.ATOMIC_MOVE)
-          // vacuum's grace window is keyed on PUBLISH time; ATOMIC_MOVE
-          // preserves the task-write mtime, which for a straggler task
-          // may predate the grace period and let a concurrent vacuum
-          // reclaim the file in the pre-manifest window
-          target.setLastModified(System.currentTimeMillis())
-          ManifestSink.statsEntry(m.file, m.rows, m.stats)
-      }
-      ManifestSink.ensureSchema(root, schema)
-      ManifestSink.writeManifest(root, epochTag(epochId), files.toSeq)
-    }
     // replayed epoch: publish nothing, drop the duplicate temp files.
-    // Either way the epoch's temp dir goes away — zero-row task files
-    // included (these used to accumulate for the life of the query).
-    cleanupEpochTemp(tempDir)
+    // Either way the epoch's temp dir goes away.
+    if (!replayed) ManifestSink.publishCommit(root, tempDir, epochTag(epochId), schema, messages)
+    ManifestSink.cleanupTemp(tempDir)
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    cleanupEpochTemp(new File(path, s"_temp/${writeId(epochId)}"))
-
-  /** Remove this epoch's temp subdirectory only — the shared `_temp`
-    * root may hold another write's in-flight files. */
-  private def cleanupEpochTemp(tempDir: File): Unit = {
-    Option(tempDir.listFiles()).foreach(_.foreach(_.delete()))
-    tempDir.delete()
-    tempDir.getParentFile.delete() // only succeeds when _temp is empty
-  }
+    ManifestSink.cleanupTemp(new File(path, s"_temp/${writeId(epochId)}"))
 }
 
 class ManifestStreamingWriterFactory(path: String, queryId: String, schema: StructType)
@@ -681,41 +736,16 @@ class ManifestBatchWrite(path: String, queryId: String, schema: StructType)
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new ManifestWriterFactory(path, queryId, schema)
 
-  /** The atomic publication point (driver-side, after every task
-    * succeeded): move exactly the files the committed task attempts
-    * reported, then append one manifest naming them. Readers list
-    * manifests, so a crash before this point publishes nothing and a
-    * crash after it publishes everything — no torn state. */
+  private def tempDir = new File(path, s"_temp/$queryId")
+
+  /** The atomic publication point ([[ManifestSink.publishCommit]]). */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val root = new File(path)
-    root.mkdirs()
-    val tempDir = new File(root, s"_temp/$queryId")
-    val files = messages.collect {
-      case m: ManifestCommitMessage if m.rows > 0 =>
-        val target = new File(root, m.file)
-        Files.move(new File(tempDir, m.file).toPath,
-          target.toPath, StandardCopyOption.ATOMIC_MOVE)
-        // re-key retention on publish time (see streaming commit note)
-        target.setLastModified(System.currentTimeMillis())
-        ManifestSink.statsEntry(m.file, m.rows, m.stats)
-    }
-    ManifestSink.ensureSchema(root, schema)
-    ManifestSink.writeManifest(root, queryId, files.toSeq)
-    cleanupTemp(root)
+    ManifestSink.publishCommit(new File(path), tempDir, queryId, schema, messages)
+    ManifestSink.cleanupTemp(tempDir)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    cleanupTemp(new File(path))
-
-  /** Scoped to THIS write's `_temp/<queryId>` subdirectory — the old
-    * whole-`_temp` sweep could delete a concurrent batch write's
-    * in-flight task files out from under it. */
-  private def cleanupTemp(root: File): Unit = {
-    val tmp = new File(root, s"_temp/$queryId")
-    Option(tmp.listFiles()).foreach(_.foreach(_.delete()))
-    tmp.delete()
-    tmp.getParentFile.delete() // removes _temp itself only when empty
-  }
+    ManifestSink.cleanupTemp(tempDir)
 }
 
 case class ManifestCommitMessage(file: String, rows: Long,
@@ -1352,52 +1382,36 @@ object ManifestDelete {
     // evolution null-padding) must SURVIVE, so the survivor filter is
     // NOT(coalesce(p, false)), not NOT(p).
     val hit = F.coalesce(toDelete, F.lit(false))
-    // both scans pinned to the `before` snapshot (asOfManifest) — a
-    // commit racing the delete is then caught exactly once, by the
-    // swap's optimistic validation, not by the scans drifting apart
-    val table = spark.read.format("graft.sources.ManifestSink")
-      .option("path", path)
-      .option("asOfManifest", before.map(ManifestSink.weightOf).sum)
-      .load()
-    val fileCol = table.metadataColumn(ManifestSink.FileCol)
-    // FILE-GRANULAR rewrite (the Delta/Iceberg COW-delete shape): only
-    // files that HOLD a matching row are rewritten; every other
-    // committed file is adopted into the checkpoint UNDER ITS OWN NAME
-    // with its bytes untouched. A targeted delete on a big table stops
-    // paying a full-table rewrite — it pays one distributed scan (no
-    // per-file column stats in the manifest to skip it) plus a rewrite
-    // of the hit files only. The hit-file collect is bounded by the
-    // committed FILE count, the same driver-resident list every
-    // manifest operation already holds.
-    // the hit scan filters on the RAW predicate, not the coalesce
-    // wrapper: rows where p is TRUE are identical (null -> filtered
-    // either way), and the raw conjunction translates to v1 filters,
-    // so the scan FILE-SKIPS on the manifest stats — an id-targeted
-    // takedown reads only the files whose [min, max] admit the ids
-    val hits = table.filter(toDelete).select(fileCol.as("f")).distinct()
-      .collect().map(_.getString(0)).toSet
-    if (hits.isEmpty) return // DELETE matched nothing: no rewrite, no commit
-    // untouched files are adopted as their FULL entries — their
-    // stats survive the swap verbatim; the rewritten files' stats
-    // come from the scratch write and ride through adoptInto
-    val untouched = ManifestSink.entriesOf(before)
-      .filterNot(e => hits(ManifestSink.nameOf(e)))
-    // distributed survivor rewrite of the hit files into a scratch
-    // manifest table
-    val tmpDir = Files.createTempDirectory("graft_delete_cow").toFile
-    table.filter(fileCol.isin(hits.toSeq: _*) && !hit)
-      .write.format("graft.sources.ManifestSink")
-      .option("path", tmpDir.getAbsolutePath).mode("append").save()
-    val fresh = ManifestSink.adoptInto(root, tmpDir, "cow")
-    // one checkpoint absorbs the entire pre-delete history PLUS this
-    // delete as a logical commit; publication is the optimistic swap.
-    // Only the FRESH files may be rolled back on conflict — the
-    // untouched ones belong to the surviving history.
-    try ManifestSink.publishCowSwap(root, before, untouched ++ fresh,
-      freshOnAbort = Some(fresh))
-    finally {
-      Option(tmpDir.listFiles()).foreach(_.foreach(_.delete()))
-      tmpDir.delete()
+    // both scans read the `before` snapshot — a commit racing the
+    // delete is then caught exactly once, by the swap's optimistic
+    // validation, not by the scans drifting apart
+    ManifestSink.rewrite(spark, path, before, "cow") { table =>
+      val fileCol = table.metadataColumn(ManifestSink.FileCol)
+      // FILE-GRANULAR rewrite (the Delta/Iceberg COW-delete shape): only
+      // files that HOLD a matching row are rewritten; every other
+      // committed file is adopted into the checkpoint UNDER ITS OWN NAME
+      // with its bytes untouched. A targeted delete on a big table stops
+      // paying a full-table rewrite — it pays one distributed scan (no
+      // per-file column stats in the manifest to skip it) plus a rewrite
+      // of the hit files only. The hit-file collect is bounded by the
+      // committed FILE count, the same driver-resident list every
+      // manifest operation already holds.
+      // the hit scan filters on the RAW predicate, not the coalesce
+      // wrapper: rows where p is TRUE are identical (null -> filtered
+      // either way), and the raw conjunction translates to v1 filters,
+      // so the scan FILE-SKIPS on the manifest stats — an id-targeted
+      // takedown reads only the files whose [min, max] admit the ids
+      val hits = table.filter(toDelete).select(fileCol.as("f")).distinct()
+        .collect().map(_.getString(0)).toSet
+      // DELETE matched nothing: no rewrite, no commit. Otherwise the hit
+      // files' survivors are rewritten and one checkpoint absorbs the
+      // entire pre-delete history PLUS this delete as a logical commit;
+      // untouched files are adopted as their FULL entries — their stats
+      // survive the swap verbatim — and are never rolled back on
+      // conflict: they belong to the surviving history.
+      if (hits.isEmpty) None
+      else Some((table.filter(fileCol.isin(hits.toSeq: _*) && !hit),
+        ManifestSink.entriesOf(before).filterNot(e => hits(ManifestSink.nameOf(e)))))
     }
   }
 }
@@ -1435,34 +1449,25 @@ object ManifestOptimize {
     val root = new File(path)
     val before = ManifestSink.sortedManifests(root)
     if (before.isEmpty) return
-    val tmpDir = Files.createTempDirectory("graft_optimize").toFile
-    val df = spark.read.format("graft.sources.ManifestSink")
-      .option("path", path).load()
     import org.apache.spark.sql.{functions => F}
-    val rewritten = zorderBy match {
-      case None => df.coalesce(nFiles)
-      case Some((xc, yc)) =>
-        val s = df.agg(
-          F.min(F.col(xc).cast("double")), F.max(F.col(xc).cast("double")),
-          F.min(F.col(yc).cast("double")), F.max(F.col(yc).cast("double"))).head()
-        def bucket(c: String, i: Int): org.apache.spark.sql.Column =
-          if (s.isNullAt(i) || s.getDouble(i + 1) <= s.getDouble(i))
-            F.lit(0L) // empty/constant dimension: degenerate but legal
-          else ((F.col(c).cast("double") - s.getDouble(i))
-            / (s.getDouble(i + 1) - s.getDouble(i))
-            * ((1L << ZBits) - 1)).cast("long")
-        graft.functions.ZOrder
-          .layoutByZ(df, bucket(xc, 0), bucket(yc, 2), ZBits, nFiles)
-          .drop("zv")
-    }
-    rewritten
-      .write.format("graft.sources.ManifestSink")
-      .option("path", tmpDir.getAbsolutePath).mode("append").save()
-    val adopted = ManifestSink.adoptInto(root, tmpDir, "opt")
-    try ManifestSink.publishCowSwap(root, before, adopted)
-    finally {
-      Option(tmpDir.listFiles()).foreach(_.foreach(_.delete()))
-      tmpDir.delete()
+    ManifestSink.rewrite(spark, path, before, "opt") { df =>
+      val rewritten = zorderBy match {
+        case None => df.coalesce(nFiles)
+        case Some((xc, yc)) =>
+          val s = df.agg(
+            F.min(F.col(xc).cast("double")), F.max(F.col(xc).cast("double")),
+            F.min(F.col(yc).cast("double")), F.max(F.col(yc).cast("double"))).head()
+          def bucket(c: String, i: Int): org.apache.spark.sql.Column =
+            if (s.isNullAt(i) || s.getDouble(i + 1) <= s.getDouble(i))
+              F.lit(0L) // empty/constant dimension: degenerate but legal
+            else ((F.col(c).cast("double") - s.getDouble(i))
+              / (s.getDouble(i + 1) - s.getDouble(i))
+              * ((1L << ZBits) - 1)).cast("long")
+          graft.functions.ZOrder
+            .layoutByZ(df, bucket(xc, 0), bucket(yc, 2), ZBits, nFiles)
+            .drop("zv")
+      }
+      Some((rewritten, Nil))
     }
   }
 
@@ -1521,22 +1526,14 @@ object ManifestUpsert {
         .option("path", path).mode("append").save()
       return
     }
-    val current = spark.read.format("graft.sources.ManifestSink")
-      .option("path", path).load()
-    val survivors =
-      current.join(F.broadcast(batch.select(keyCols.map(F.col): _*).distinct()),
-        keyCols, "left_anti")
-    val tmpDir = Files.createTempDirectory("graft_upsert_cow").toFile
-    survivors.unionByName(batch.select(current.columns.map(F.col).toIndexedSeq: _*))
-      .write.format("graft.sources.ManifestSink")
-      .option("path", tmpDir.getAbsolutePath).mode("append").save()
-    val adopted = ManifestSink.adoptInto(root, tmpDir, "ups")
     // optimistic swap: a commit that landed since `before` aborts the
     // merge (its rows are not in our survivor set) — caller retries
-    try ManifestSink.publishCowSwap(root, before, adopted)
-    finally {
-      Option(tmpDir.listFiles()).foreach(_.foreach(_.delete()))
-      tmpDir.delete()
+    ManifestSink.rewrite(spark, path, before, "ups") { current =>
+      val survivors =
+        current.join(F.broadcast(batch.select(keyCols.map(F.col): _*).distinct()),
+          keyCols, "left_anti")
+      Some((survivors.unionByName(batch.select(current.columns.map(F.col).toIndexedSeq: _*)),
+        Nil))
     }
   }
 }

@@ -27,7 +27,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val cents = Similarity.trainIvfQuantizer(v, expr("vec_id % 31 = 7"))
     assert(cents.nonEmpty)
     val path = tmpIndex("quant")
-    AnnIndex.saveQuantizer(spark, s"$path/quantizer", cents)
+    AnnIndex.saveOrRebuildQuantizer(spark, s"$path/quantizer", cents)
     val back = AnnIndex.loadQuantizer(spark, s"$path/quantizer")
     assert(back.map(_._1) == cents.map(_._1), "centroid ids / order")
     cents.zip(back).foreach { case ((_, v0, n0), (_, v1, n1)) =>
@@ -40,7 +40,7 @@ class AnnIndexSpec extends AnyFunSuite {
   test("PQ codebook round-trips EXACTLY through the manifest table") {
     val cents = AnnIndexSpecFixtures.codebook
     val path = tmpIndex("cb")
-    AnnIndex.saveCodebook(spark, s"$path/codebook", cents)
+    AnnIndex.saveOrRebuildCodebook(spark, s"$path/codebook", cents)
     val back = AnnIndex.loadCodebook(spark, s"$path/codebook")
     assert(back.length == cents.length && back(0).length == cents(0).length)
     for (j <- cents.indices; c <- cents(j).indices)
@@ -352,14 +352,14 @@ class AnnIndexSpec extends AnyFunSuite {
   test("rebuild lifecycle: TRUNCATE + re-append swaps the index atomically at the manifest level") {
     val path = tmpIndex("swap")
     val cb0 = AnnIndexSpecFixtures.codebook
-    AnnIndex.saveCodebook(spark, s"$path/codebook", cb0)
+    AnnIndex.saveOrRebuildCodebook(spark, s"$path/codebook", cb0)
     // retrain-in-place: truncate (one logical commit — the SQL
     // `TRUNCATE TABLE` path, invoked through the same DSv2 method),
     // then append the new artifact — readers see old or new, never a mix
     new graft.sources.ManifestTable(s"$path/codebook",
       org.apache.spark.sql.types.StructType(Nil)).truncateTable()
     val cb1 = cb0.map(_.map(_.map(_ * 2.0)))
-    AnnIndex.saveCodebook(spark, s"$path/codebook", cb1)
+    AnnIndex.saveOrRebuildCodebook(spark, s"$path/codebook", cb1)
     val back = AnnIndex.loadCodebook(spark, s"$path/codebook")
     for (j <- cb1.indices; c <- cb1(j).indices)
       assert(java.util.Arrays.equals(cb1(j)(c), back(j)(c)), s"post-swap codeword ($j,$c)")
@@ -369,18 +369,22 @@ class AnnIndexSpec extends AnyFunSuite {
       "duplicates are detected, never served as interleaved garbage") {
     val path = tmpIndex("dupe")
     val cb = AnnIndexSpecFixtures.codebook
-    AnnIndex.saveCodebook(spark, s"$path/codebook", cb)
-    AnnIndex.saveCodebook(spark, s"$path/codebook", cb) // forgot TRUNCATE
+    // a raw append of the encoded rows over the live table, twice
+    import graft.operators.FpIndex
+    FpIndex.saveFlat(s"$path/codebook", AnnIndex.codebookRows(spark, cb))
+    FpIndex.saveFlat(s"$path/codebook", AnnIndex.codebookRows(spark, cb))
     val e = intercept[IllegalArgumentException](
       AnnIndex.loadCodebook(spark, s"$path/codebook"))
-    assert(e.getMessage.contains("TRUNCATE"), e.getMessage)
+    assert(e.getMessage.contains("saveOrRebuildCodebook") &&
+      !e.getMessage.contains("TRUNCATE"), e.getMessage)
     val v = Similarity.vectorsForSpec(spark, sf)
     val cents = Similarity.trainIvfQuantizer(v, expr("vec_id % 31 = 7"))
-    AnnIndex.saveQuantizer(spark, s"$path/quantizer", cents)
-    AnnIndex.saveQuantizer(spark, s"$path/quantizer", cents)
+    FpIndex.saveFlat(s"$path/quantizer", AnnIndex.quantizerRows(spark, cents))
+    FpIndex.saveFlat(s"$path/quantizer", AnnIndex.quantizerRows(spark, cents))
     val e2 = intercept[IllegalArgumentException](
       AnnIndex.loadQuantizer(spark, s"$path/quantizer"))
-    assert(e2.getMessage.contains("TRUNCATE"), e2.getMessage)
+    assert(e2.getMessage.contains("saveOrRebuildQuantizer") &&
+      !e2.getMessage.contains("TRUNCATE"), e2.getMessage)
   }
 
   test("generation rebuild: a serve session pinned via asOfManifest keeps " +
@@ -390,14 +394,14 @@ class AnnIndexSpec extends AnyFunSuite {
     val v = Similarity.vectorsForSpec(spark, sf)
     val cents0 = Similarity.trainIvfQuantizer(v, expr("vec_id % 31 = 7"))
     val path = s"${tmpIndex("genq")}/quantizer"
-    AnnIndex.saveQuantizer(spark, path, cents0)
+    AnnIndex.saveOrRebuildQuantizer(spark, path, cents0)
     // the serving session pins the version it opened against
     val pin = Some(FpIndex.tableVersion(path))
     assert(AnnIndex.loadQuantizer(spark, path, pin).map(_._1) == cents0.map(_._1))
     // nightly retrain lands mid-session (different centroid sample)
     val cents1 = Similarity.trainIvfQuantizer(v, expr("vec_id % 29 = 3"))
     assert(cents1.map(_._1) != cents0.map(_._1), "retrain must actually differ")
-    AnnIndex.rebuildQuantizer(spark, path, cents1)
+    AnnIndex.saveOrRebuildQuantizer(spark, path, cents1)
     // pinned session: bit-identical to what it loaded at open
     val pinnedBack = AnnIndex.loadQuantizer(spark, path, pin)
     assert(pinnedBack.map(_._1) == cents0.map(_._1), "pinned centroid ids")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Clustering, Dedup, FpIndex}
+import graft.operators.{AnnIndex, Clustering, Dedup, FpIndex}
 import graft.pipeline.{IndexBuild, IndexDelta}
 import graft.streaming.Incremental
 
@@ -298,6 +298,33 @@ class IndexDeltaSpec extends AnyFunSuite {
     assert(sortedRows(FpIndex.loadFlat(spark, path)) ==
       Seq(Seq[Any](7L, 71L), Seq[Any](8L, 81L)),
       "the recreated table must serve its own winner, not the stale memo's")
+    // the ANN layouts through their one writer each: save, rebuild,
+    // delete, save, rebuild — the re-created table's first save must
+    // drop the memo too, or its rebuild meets the old table's winner
+    val layouts: Seq[(String, (String, Double) => Unit, String => Any)] = Seq(
+      ("quantizer",
+        (p, x) => AnnIndex.saveOrRebuildQuantizer(spark, p, Seq((1L, Array(x, 1.0), x + 1.0))),
+        p => AnnIndex.loadQuantizer(spark, p).map { case (id, v, n) => (id, v.toSeq, n) }),
+      ("codebook",
+        (p, x) => AnnIndex.saveOrRebuildCodebook(spark, p, Array(Array(Array(x, 1.0)))),
+        p => AnnIndex.loadCodebook(spark, p).map(_.map(_.toSeq).toSeq).toSeq),
+      ("codes",
+        (p, x) => AnnIndex.saveOrRebuildCodes(spark, p,
+          Seq((1L, -1L, Seq(x.toInt, 1))).toDF("vec_id", "cell", "codes")),
+        p => sortedRows(AnnIndex.loadCodes(spark, p))))
+    layouts.foreach { case (name, write, served) =>
+      val p = tmp(s"recreate-$name")
+      write(p, 1.0)
+      write(p, 2.0)
+      val old = served(p) // warms the winner memo for (p, version 2)
+      rmrf(new java.io.File(p))
+      write(p, 3.0)
+      write(p, 4.0) // version 2 again
+      val ref = tmp(s"recreate-$name-ref")
+      write(ref, 4.0)
+      assert(served(p) == served(ref) && served(p) != old,
+        s"the recreated $name table must serve its own rebuild")
+    }
   }
 
   // ------------------------------------------------------- admitDocs
@@ -313,7 +340,7 @@ class IndexDeltaSpec extends AnyFunSuite {
     FpIndex.saveFlat(s"$root/${IndexBuild.KeysT}", Incremental.corpusKeySet(corpus))
     val sh = Dedup.shingleTable(corpus)
     FpIndex.saveFlat(s"$root/${IndexBuild.BandsT}", Dedup.bandTable(sh))
-    FpIndex.saveShingles(s"$root/${IndexBuild.ShinglesT}", sh)
+    FpIndex.saveOrRebuildShingles(spark, s"$root/${IndexBuild.ShinglesT}", sh)
     FpIndex.saveFlat(s"$root/${IndexBuild.NoveltyT}", Incremental.corpusShingleSet(corpus))
     root
   }
@@ -843,6 +870,46 @@ class IndexDeltaSpec extends AnyFunSuite {
       "replay must admit nothing")
     CacheRegistry.releaseAll()
   }
+
+  test("the ANN code admissions fire at most their job budget: PQ, SQ8 and " +
+      "IVF+SQ8 each hand their code rows to deltaAppendFlat's one pass") {
+    import spark.implicits._
+    import graft.operators.Similarity
+    CacheRegistry.releaseAll()
+    val pqPath = tmp("pqbudget")
+    Similarity.buildPqIndex(spark, sf, pqPath)
+    val sq8Path = tmp("sq8budget")
+    Similarity.buildSq8Index(spark, sf, sq8Path)
+    val ivfPath = tmp("ivfsq8budget")
+    Similarity.buildIvfSq8Index(spark, sf, ivfPath)
+    CacheRegistry.releaseAll()
+    val e0 = Tables.embeddings(spark, sf).orderBy(col("vec_id")).limit(1)
+      .select(col("embedding")).collect()(0).getSeq[Float](0).toArray
+    val arrival = Seq((900101L, e0)).toDF("vec_id", "embedding")
+    var admitted = -1L
+    val pq = jobsOf { admitted = Similarity.admitPqCodes(spark, pqPath, arrival) }
+    assert(admitted == 1L)
+    assert(pq <= PqAdmitJobs, s"admitPqCodes fired $pq jobs")
+    val sq8 = jobsOf { admitted = Similarity.admitSq8Codes(spark, sq8Path, arrival) }
+    assert(admitted == 1L)
+    assert(sq8 <= Sq8AdmitJobs, s"admitSq8Codes fired $sq8 jobs")
+    val ivf = jobsOf { admitted = Similarity.admitIvfSq8Codes(spark, ivfPath, arrival) }
+    assert(admitted == 1L)
+    assert(ivf <= IvfSq8AdmitJobs, s"admitIvfSq8Codes fired $ivf jobs")
+    assert(Similarity.admitPqCodes(spark, pqPath, arrival) == 0L)
+    assert(Similarity.admitSq8Codes(spark, sq8Path, arrival) == 0L)
+    assert(Similarity.admitIvfSq8Codes(spark, ivfPath, arrival) == 0L)
+    CacheRegistry.releaseAll()
+  }
+
+  /** The ANN admissions' jobs on the indexes above: 10, 10 and 11 when
+    * each admission persisted and counted its own delta before
+    * [[FpIndex.deltaAppendFlat]] persisted and counted it again; 7, 7
+    * and 8 with the unpersisted code rows handed over, their count
+    * derived from the appended rows. */
+  private val PqAdmitJobs = 7
+  private val Sq8AdmitJobs = 7
+  private val IvfSq8AdmitJobs = 8
 
   test("IVF+SQ8 streaming gate (round-15 ask #6): foreachBatch arrivals " +
       "probe the STORED composed tier — batch 1's admission gates batch 2's " +

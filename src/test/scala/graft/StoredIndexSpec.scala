@@ -30,7 +30,7 @@ class StoredIndexSpec extends AnyFunSuite {
     assert(want.nonEmpty, "fixture delta must find near-dups or the parity claim is vacuous")
     val path = tmp("bands")
     FpIndex.saveFlat(s"$path/bands", Dedup.bandIndexOf(spark, sf))
-    FpIndex.saveShingles(s"$path/shingles", Dedup.shingleIndexOf(spark, sf))
+    FpIndex.saveOrRebuildShingles(spark, s"$path/shingles", Dedup.shingleIndexOf(spark, sf))
     CacheRegistry.releaseAll()
     val serve = spark.newSession() // nothing shingled or banded here
     val got = sortedRows(Dedup.deltaNearDupServe(
@@ -194,7 +194,7 @@ class StoredIndexSpec extends AnyFunSuite {
     val path = tmp("gate")
     FpIndex.saveFlat(s"$path/keys", keys)
     FpIndex.saveFlat(s"$path/bands", bands)
-    FpIndex.saveShingles(s"$path/shingles", sh)
+    FpIndex.saveOrRebuildShingles(spark, s"$path/shingles", sh)
     val serve = spark.newSession() // nothing keyed, shingled, or banded here
     val got = sortedRows(Incremental.curationGateStream(
       arrivalsOf(serve),
@@ -212,17 +212,18 @@ class StoredIndexSpec extends AnyFunSuite {
         .exists(t => Option(t.getMessage).exists(_.contains(s)))
     val sh = Seq((1L, Seq(10L, 20L, 30L))).toDF("doc_id", "hh")
     val shPath = tmp("dupsh")
-    FpIndex.saveShingles(s"$shPath/sh", sh)
-    FpIndex.saveShingles(s"$shPath/sh", sh) // forgot TRUNCATE
+    // a raw append of the encoded rows over the live table, twice
+    FpIndex.saveFlat(s"$shPath/sh", FpIndex.shingleRows(sh))
+    FpIndex.saveFlat(s"$shPath/sh", FpIndex.shingleRows(sh))
     val e1 = intercept[Exception](FpIndex.loadShingles(spark, s"$shPath/sh").collect())
-    assert(chainHas(e1, "TRUNCATE"), e1.toString)
+    assert(chainHas(e1, "saveOrRebuildShingles") && !chainHas(e1, "TRUNCATE"), e1.toString)
     import graft.operators.AnnIndex
     val coded = Seq((7L, 0L, Seq(1, 2))).toDF("vec_id", "cell", "codes")
     val cdPath = tmp("dupcodes")
-    AnnIndex.saveCodes(s"$cdPath/codes", coded)
-    AnnIndex.saveCodes(s"$cdPath/codes", coded)
+    FpIndex.saveFlat(s"$cdPath/codes", AnnIndex.codeRows(coded))
+    FpIndex.saveFlat(s"$cdPath/codes", AnnIndex.codeRows(coded))
     val e2 = intercept[Exception](AnnIndex.loadCodes(spark, s"$cdPath/codes").collect())
-    assert(chainHas(e2, "TRUNCATE"), e2.toString)
+    assert(chainHas(e2, "saveOrRebuildCodes") && !chainHas(e2, "TRUNCATE"), e2.toString)
   }
 
   test("generation rebuild: a reader pinned via asOfManifest serves identical " +

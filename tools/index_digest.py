@@ -2,6 +2,12 @@
 """Print one order-independent SHA-256 per stored table under an index root.
 
     python3 tools/index_digest.py <root>
+    python3 tools/index_digest.py <rootA> <rootB>
+
+With two roots the script compares them instead: it prints each table
+whose row count or digest differs (`<table> <rowsA> <rowsB> differs`),
+or that exists under one root only (`<table> only in A|B`), and exits 1
+if any table differs, 0 when none does.
 
 A table is any directory under <root> (nested ones included, e.g. the
 ANN tables under `ann/`) that holds ManifestSink manifests. For each
@@ -135,15 +141,37 @@ def tables_under(root):
             yield dirpath
 
 
+def digests(root):
+    """{table path relative to root: (rows, sha256)}."""
+    if not os.path.isdir(root):
+        sys.exit(f"index_digest: {root} is not a directory")
+    return {os.path.relpath(t, root): digest(t) for t in tables_under(root)}
+
+
+def compare(a, b):
+    """Print every table that differs between digest maps a and b; the
+    number of such tables."""
+    diffs = 0
+    for name in sorted(set(a) | set(b)):
+        if name not in b or name not in a:
+            print(f"{name} only in {'A' if name in a else 'B'}")
+        elif a[name] != b[name]:
+            print(f"{name} {a[name][0]} {b[name][0]} differs")
+        else:
+            continue
+        diffs += 1
+    return diffs
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("root")
+    ap.add_argument("other", nargs="?")
     a = ap.parse_args()
-    if not os.path.isdir(a.root):
-        sys.exit(f"index_digest: {a.root} is not a directory")
-    for table in sorted(tables_under(a.root)):
-        n, h = digest(table)
-        print(f"{os.path.relpath(table, a.root)} {n} {h}")
+    if a.other is not None:
+        sys.exit(1 if compare(digests(a.root), digests(a.other)) else 0)
+    for name, (n, h) in sorted(digests(a.root).items()):
+        print(f"{name} {n} {h}")
 
 
 if __name__ == "__main__":
