@@ -1587,7 +1587,9 @@ object Similarity {
     * [[admitPqCodes]] contract for this tier: encode with the FROZEN
     * stored codebook, replay-reject on vec_id, one delta commit;
     * fresh vectors become findable by [[sq8TopKServe]] without a
-    * rebuild. Returns the admitted count. */
+    * rebuild. Returns the admitted count, derived from the appended
+    * code rows (d per vector) as [[admitPqCodes]] does: a batch that
+    * repeats a vec_id counts each copy. */
   def admitSq8Codes(spark: SparkSession, indexPath: String,
       arrivals: DataFrame): Long = {
     val stats = loadSq8Stats(spark, indexPath)

@@ -169,6 +169,11 @@ object ManifestSink {
   /** Total logical commit count (the streaming `latestOffset`). */
   def logicalCount(root: File): Int = sortedManifests(root).map(weightOf).sum
 
+  /** Raised by [[manifestSlice]] for a range that splits a compacted
+    * checkpoint — the one failure [[rewrite]] may report as a lost race. */
+  private[sources] final class SplitCheckpointException(msg: String)
+      extends IllegalArgumentException(msg)
+
   /** Manifests covering logical commit range [s, e). Compaction may
     * only be crossed at checkpoint boundaries: an offset strictly
     * inside a checkpoint's absorbed range is no longer individually
@@ -180,7 +185,7 @@ object ManifestSink {
       val lo = acc
       acc += weightOf(m)
       if (lo < e && acc > s) {
-        require(lo >= s && acc <= e,
+        if (lo < s || acc > e) throw new SplitCheckpointException(
           s"offset range [$s,$e) splits compacted checkpoint ${m.getName} " +
             s"covering logical commits [$lo,$acc) — compact only below the " +
             "slowest reader's committed offset")
@@ -560,13 +565,14 @@ object ManifestSink {
     * checkpoint leaves the pinned read unable to address that history
     * ([[manifestSlice]] refuses to split a checkpoint): that is the lost
     * race the swap's validation reports, so it raises the same
-    * retryable ConcurrentModificationException. */
+    * retryable ConcurrentModificationException. Any other failure of
+    * `plan` or of the scratch write propagates unchanged. */
   private[sources] def rewrite(spark: org.apache.spark.sql.SparkSession, path: String,
       before: Seq[File], prefix: String)(plan: org.apache.spark.sql.DataFrame =>
         Option[(org.apache.spark.sql.DataFrame, Seq[String])]): Unit = {
     val root = new File(path)
     def pinned[T](body: => T): T = try body catch {
-      case e: IllegalArgumentException
+      case e: SplitCheckpointException
           if sortedManifests(root).map(_.getName) != before.map(_.getName) =>
         val cme = new java.util.ConcurrentModificationException(
           s"table $root changed while the copy-on-write rewrite read it — retry the operation")
