@@ -1,47 +1,68 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.{PixelOps, Raster}
 import graft.sinks.Sink
 
 /** The reference's end-to-end dataflow (SURVEY §0 diagram;
-  * main.py:460-505) recomposed as one declarative Spark plan over
-  * reference-shaped tables — the driver-loop/thread-pool orchestration
-  * (main.py:432-457, 492-498) is replaced by partition parallelism.
+  * main.py:460-505) recomposed as Spark plans over reference-shaped
+  * tables — the driver-loop/thread-pool orchestration (main.py:432-457,
+  * 492-498) is replaced by partition parallelism.
   *
   * Stage map (SURVEY §2 operator ids):
-  *  - discovery: Q1-Q8 + P7 z-drop + P8 bbox/centroid
+  *  - discovery: Q6-Q7 top-K + P8 bbox fields, over `water_bodies` alone
   *  - candidates: P2 config cross, S2 catalog scan, F1 containment,
-  *    F2 date window, F3 cloud property, F4 anti-join, P3 ts
-  *  - process: F5 band rename, R1 stack, R2 clip, R3/R4 stats,
-  *    R5 thumbnail, R6 tiff re-encode, P4 filenames, P5 to_json,
-  *    P6 sink-record assembly
-  *  - run: S5 artifact sink + S6 idempotent upsert
+  *    F2 date window, F3 cloud property, F4 anti-join (the reference's
+  *    Q1-Q3 exclude list), P3 ts, P5 to_json
+  *  - process: Q4 geometry join + P7 z-drop, F5 band rename, R1 stack,
+  *    R2 clip, R3/R4 stats, R5 thumbnail, R6 tiff re-encode,
+  *    P4 filenames, P6 sink-record assembly
+  *  - run: the two phases below, S5 artifact sink + S6 idempotent upsert
+  *
+  * Scale posture: a run has the reference's shape. It lists the images
+  * of each body, drops the excluded ones (main.py:393-429, 415) and
+  * downloads only the rest (main.py:161-204).
+  *  1. Metadata phase: discovery → candidates is one query over
+  *     `water_bodies`, `configs`, the catalog and the sink keys. The
+  *     top-K bodies × configs are broadcast-size dims; the catalog is
+  *     scanned once and probes them in a BroadcastHashJoin on the
+  *     dataset with the F1-F3 residuals; the F4 anti-join broadcasts the
+  *     sink keys. It projects candidate metadata only (keys, capture
+  *     time, JSON properties, footprint) and is collected to the driver
+  *     once. No row back — every replay — ends the run there, before any
+  *     geometry or raster is read.
+  *  2. Payload phase (`process`): the collected rows become a frame of
+  *     `defaultParallelism` slices; the geometries of the candidates'
+  *     bodies and the rasters of their images are read through `isin`
+  *     filters on the keys (pushed to the scans) and broadcast, so no
+  *     join shuffles and neither whole table is read. The per-image
+  *     kernels then run once per candidate, in `defaultParallelism`
+  *     tasks, on primitive planes: one O(H·W) conversion, the
+  *     O(H·E + H·W) scanline clip for E polygon edges, then the three
+  *     encodes.
+  *
+  * Collect bound: the metadata rows of one run are at most
+  * `WaterbodyLimit` × configs × the images per (body, dataset) in the
+  * 30-day window — for a ~5-day revisit, 1100 × configs × 6 rows of a
+  * few hundred bytes; only a run into a sink missing the whole window
+  * comes near it. A denser catalog grows the collect, the `isin` lists
+  * and the broadcast payload linearly with the candidate count. Past
+  * `spark.driver.maxResultSize` the collect fails the run before any
+  * artifact or sink row is written, so the date can be re-run as it is
+  * once the limit is raised.
   *
   * S3 (HTTP fetch of band images, main.py:161-186) exists as a real
   * executor-side transport — `sources/HttpFetch.fetchColumn`
   * (mapPartitions, pooled client per partition, bounded retries,
   * per-row status; HttpFetchSpec drives it over live sockets against
-  * an in-process server and chains fetch → decode → stats). THIS
-  * pipeline still reads pre-staged band planes from the `rasters`
-  * table because the sandbox has no imagery endpoint; a live
-  * deployment swaps the `rasters` join for
-  * `HttpFetch.fetchColumn(cands, "band_url", "raw")` +
-  * `Raster.decodeImageUdf` at the marked point below.
-  *
-  * Scale posture: water bodies and configs are broadcast-size dims.
-  * Neither big side is shuffled: the catalog is scanned once and probes
-  * the broadcast (body × config) rows in a BroadcastHashJoin on the
-  * dataset, with the F1-F3 residuals; the F4 anti-join broadcasts the
-  * sink keys. The rasters join is a BroadcastHashJoin too, and it
-  * broadcasts the WHOLE `rasters` table, every plane of every image, on
-  * each run: fine for pre-staged bench tables, not for production-size
-  * rasters (ROADMAP). The one shuffle is the round-robin spread of the
-  * candidates over `defaultParallelism` partitions, after which
-  * `Raster.products` runs once per joined row on primitive planes: one
-  * O(H·W) conversion, the O(H·E + H·W) scanline clip for E polygon
-  * edges, then the three encodes.
+  * an in-process server and chains fetch → decode → stats). The
+  * payload phase is its swap point: this pipeline reads pre-staged band
+  * planes from the `rasters` table because its tests and benchmark run
+  * without an imagery endpoint; a live deployment replaces the filtered `rasters` join in
+  * `process` with `HttpFetch.fetchColumn(cands, "band_url", "raw")` +
+  * `Raster.decodeImageUdf`.
   */
 object SatellitePipeline {
 
@@ -52,48 +73,46 @@ object SatellitePipeline {
   val NoData = 0
   val ThumbnailFactor = 7 // main.py:40
 
-  /** Q1-Q8 (main.py:467-488) + geometry prep (P7/P8, main.py:374-384).
-    * `runDate` replaces the reference's nondeterministic
-    * `date.today()` (main.py:45-46). */
-  def discovery(
-      waterBodies: DataFrame,
-      geometries: DataFrame,
-      sink: DataFrame,
-      runDate: String): DataFrame = {
-    val lookback = date_sub(lit(runDate).cast("date"), LookbackDays)
-    // Q1-Q3: exclude set from the sink, 30-day lookback
-    val already = sink
-      .filter(col("captured_ts") >= lookback)
-      .groupBy(col("waterbody_id"))
-      .agg(collect_set(col("ee_id")).as("exclude_ee_ids"))
+  /** F2's half-open window of `runDate` (main.py:34, 45-46, 398), on the
+    * `captured_ts` column. `runDate` replaces the reference's
+    * nondeterministic `date.today()`. */
+  private def inWindow(runDate: String): Column = {
+    val end = lit(runDate).cast("date")
+    col("captured_ts") >= date_sub(end, LookbackDays) && col("captured_ts") < end
+  }
+
+  /** Q6-Q7 top-K + P8 (main.py:467-488, 379-384): the bodies a run
+    * considers, from the `water_bodies` columns alone. */
+  def discovery(waterBodies: DataFrame): DataFrame =
     waterBodies
-      .join(broadcast(geometries), waterBodies("id") === geometries("id"), "left")
-      .drop(geometries("id"))
-      .join(already, waterBodies("id") === already("waterbody_id"), "left")
-      .drop("waterbody_id")
       .filter(col("areasqkm") < AreaLimit) // Q6 (main.py:482)
       .orderBy(col("areasqkm").desc, col("id")) // Q7 top-K (main.py:483-484)
       .limit(WaterbodyLimit)
       .select(col("*"),
-        // P7: drop z from every [lon, lat, z] vertex (main.py:374-377)
-        expr("transform(geometry, ring -> transform(ring, p -> slice(p, 1, 2)))")
-          .as("geometry2d"),
-        // P8: bbox-derived fields (main.py:379-384)
         abs(col("max_longitude") - col("min_longitude")).as("width_degrees"),
         abs(col("max_latitude") - col("min_latitude")).as("height_degrees"))
-  }
 
-  /** P2 + S2 + F1-F4 + P3 (main.py:393-440). The catalog probes the
-    * broadcast (body × config) rows on the dataset, with the
-    * containment/window/cloud residuals. */
+  /** `discovery(waterBodies)` called with the inputs of the reference's
+    * discovery query (Q1-Q8 read the geometries and the sink as well):
+    * the geometries are joined in `process`, for the candidates' bodies
+    * only, and the sink is read by F4 in `candidates`, so neither
+    * changes the discovered rows. */
+  def discovery(
+      waterBodies: DataFrame,
+      geometries: DataFrame,
+      sink: DataFrame,
+      runDate: String): DataFrame = discovery(waterBodies)
+
+  /** P2 + S2 + F1-F4 + P3 + P5 (main.py:393-440, 335): the candidate
+    * metadata of a run. The catalog probes the broadcast (body × config)
+    * rows on the dataset, with the containment/window/cloud residuals;
+    * the rows carry what the payload phase needs and no payload. */
   def candidates(
       discovered: DataFrame,
       catalog: DataFrame,
       configs: DataFrame,
       sink: DataFrame,
       runDate: String): DataFrame = {
-    val start = date_sub(lit(runDate).cast("date"), LookbackDays)
-    val end = lit(runDate).cast("date")
     val withConfig = discovered.crossJoin(broadcast(configs)) // P2 (main.py:433-440)
     val cand = catalog
       .withColumn("captured_ts", timestamp_millis(col("captured_ts_millis"))) // P3, UTC
@@ -102,8 +121,7 @@ object SatellitePipeline {
           // F1: footprint ∋ water-body centerpoint (main.py:384, 397)
           col("longitude").between(col("footprint_min_lon"), col("footprint_max_lon")) &&
           col("latitude").between(col("footprint_min_lat"), col("footprint_max_lat")) &&
-          // F2: half-open date window (main.py:398)
-          col("captured_ts") >= start && col("captured_ts") < end &&
+          inWindow(runDate) && // F2: half-open date window (main.py:398)
           // F3: cloud filter only when the config has one (main.py:403-404)
           (col("cloud_max").isNull ||
             element_at(col("properties"), "CLOUDY_PIXEL_PERCENTAGE").cast("double") < col("cloud_max")))
@@ -113,17 +131,36 @@ object SatellitePipeline {
     // equivalence proven in RelationalSpec)
     cand.join(sink.select(col("waterbody_id").as("dl_wb"), col("ee_id").as("dl_ee")),
         cand("id") === col("dl_wb") && cand("ee_id") === col("dl_ee"), "left_anti")
+      .select(col("id"), col("captured_ts"), col("ee_id"), col("dataset_name"),
+        // P5 (main.py:335) before the collect: a collected map can come
+        // back with its keys reordered, and these are the sink's bytes
+        to_json(col("properties")).as("properties"),
+        col("footprint_min_lon"), col("footprint_max_lon"),
+        col("footprint_min_lat"), col("footprint_max_lat"))
   }
 
-  /** F5 + R1-R6 + P4-P6 (main.py:141-342). `rasters` carries
-    * pre-decoded band planes keyed by ee_id (S3/S4 stub point: a live
-    * system fetches + decodes here inside mapPartitions). */
-  def process(cands: DataFrame, rasters: DataFrame): DataFrame = {
-    // one round-robin partition per core, so the per-image kernels
-    // below run in defaultParallelism tasks instead of the single
-    // partition the candidate joins leave (an explicit partition count
-    // is not coalesced by AQE)
-    val spread = cands.repartition(cands.sparkSession.sparkContext.defaultParallelism)
+  /** Q4 + P7 (main.py:374-377, 476-478): the geometries of `bodyIds`,
+    * with z dropped from every [lon, lat, z] vertex. */
+  def bodyGeometries(geometries: DataFrame, bodyIds: Seq[Any]): DataFrame =
+    geometries.filter(col("id").isin(bodyIds: _*)).select(col("id"),
+      expr("transform(geometry, ring -> transform(ring, p -> slice(p, 1, 2)))").as("geometry2d"))
+
+  /** The payload phase: F5 + R1-R6 + P4 + P6 (main.py:141-342) over the
+    * collected candidate rows `cands` (schema `schema`, as `candidates`
+    * returns them). Reads the geometries of the candidates' bodies and
+    * the rasters of their images only; `rasters` carries pre-decoded
+    * band planes keyed by ee_id (S3/S4 swap point: a live system fetches
+    * and decodes here, see the object doc). */
+  def process(cands: Seq[Row], schema: StructType, geometries: DataFrame,
+      rasters: DataFrame): DataFrame = {
+    val spark = rasters.sparkSession
+    val sc = spark.sparkContext
+    // one slice per core, so the per-image kernels below run in
+    // defaultParallelism tasks
+    val spread = spark.createDataFrame(sc.parallelize(cands, sc.defaultParallelism), schema)
+    def keys(name: String) = { val i = schema.fieldIndex(name); cands.map(_.get(i)).distinct }
+    val geo = bodyGeometries(geometries, keys("id"))
+    val planes = rasters.filter(col("ee_id").isin(keys("ee_id"): _*))
     // F5 band select (main.py:86-90, 399): TCI_R/G/B are red/green/blue
     val cube = Raster.stackBands(col("TCI_R"), col("TCI_G"), col("TCI_B")) // R1
     // R2 clip (main.py:240-243, nodata=0), R5 thumbnail (main.py:288-308)
@@ -139,7 +176,9 @@ object SatellitePipeline {
     val ts = date_format(col("captured_ts"), "yyyyMMddHHmmss")
     def artifactName(suffix: String): Column =
       concat(col("ee_id"), lit("/"), col("id").cast("string"), lit("_"), ts, lit(suffix))
-    spread.join(rasters, "ee_id") // S3/S4 stub: pre-staged planes
+    spread
+      .join(broadcast(geo), Seq("id"), "left")
+      .join(broadcast(planes), "ee_id") // S3/S4 stub: pre-staged planes
       .select(col("id"), col("captured_ts"), col("ee_id"), col("dataset_name"),
         col("properties"), products.as("k"),
         artifactName(".tif").as("filename"),
@@ -147,13 +186,13 @@ object SatellitePipeline {
         artifactName("_clipped.tif").as("clipped_filename"))
       // R3+R4 single pass over the clipped cube
       .select(col("*"), PixelOps.imageStats(col("k.clipped")).as("s"))
-      // P6 sink-record assembly (main.py:328-342) + P5 to_json (main.py:335)
+      // P6 sink-record assembly (main.py:328-342)
       .select(
         col("id").as("waterbody_id"),
         col("captured_ts"),
         col("ee_id"),
         col("dataset_name").as("satellite_dataset"),
-        to_json(col("properties")).as("properties"),
+        col("properties"),
         col("filename"),
         col("thumbnail_filename"),
         col("clipped_filename"),
@@ -165,12 +204,12 @@ object SatellitePipeline {
         col("k.thumbnailPng").as("thumbnail_png"))
   }
 
-  /** Full run: S5 artifacts + S6 idempotent upsert. Reads the sink
-    * once, with its known schema, and hands that frame to discovery,
-    * the F4 anti-join and the upsert; one artifact pass over the
-    * processed rows, then one observed append, skipped when no row was
-    * processed. Returns rows actually appended (0 on replay —
-    * idempotence). */
+  /** Full run: the metadata phase, then the payload phase, S5 artifacts
+    * and the S6 idempotent upsert. Reads the sink once, with its known
+    * schema, and hands that frame to F4 and, bounded to the run's
+    * window, to the upsert; one artifact pass over the processed rows,
+    * then one observed append, skipped when no row was processed.
+    * Returns rows actually appended (0 on replay — idempotence). */
   def run(
       waterBodies: DataFrame, geometries: DataFrame, catalog: DataFrame,
       configs: DataFrame, rasters: DataFrame,
@@ -181,21 +220,26 @@ object SatellitePipeline {
         spark.read.schema(SinkSchema.schema).parquet(sinkPath)
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], SinkSchema.schema)
-    val disc = discovery(waterBodies, geometries, sink0, runDate)
-    val cand = candidates(disc, catalog, configs, sink0, runDate)
-    val processed = process(cand, rasters).cache()
-    try {
-      // S5: 3 artifacts per image (main.py:313-317), executor-side
-      val seen = Sink.writeArtifacts(processed.select(
-        col("filename"), col("full_tif"),
-        col("clipped_filename"), col("clipped_tif"),
-        col("thumbnail_filename"), col("thumbnail_png")), artifactDir)
-      // S6: upsert on the composite PK (main.py:106-107)
-      if (seen == 0) 0L
-      else Sink.upsertAppend(
-        processed.drop("full_tif", "clipped_tif", "thumbnail_png", "clipped_filename"),
-        sink0, sinkPath, Seq("waterbody_id", "captured_ts"))
-    } finally processed.unpersist()
+    val meta = candidates(discovery(waterBodies), catalog, configs, sink0, runDate)
+    val cands = meta.collect()
+    if (cands.isEmpty) 0L
+    else {
+      val processed = process(cands.toSeq, meta.schema, geometries, rasters).cache()
+      try {
+        // S5: 3 artifacts per image (main.py:313-317), executor-side
+        val seen = Sink.writeArtifacts(processed.select(
+          col("filename"), col("full_tif"),
+          col("clipped_filename"), col("clipped_tif"),
+          col("thumbnail_filename"), col("thumbnail_png")), artifactDir)
+        // S6: upsert on the composite PK (main.py:106-107). Every batch
+        // row lies in the run's window and captured_ts is part of the
+        // key, so no sink row outside the window can conflict
+        if (seen == 0) 0L
+        else Sink.upsertAppend(
+          processed.drop("full_tif", "clipped_tif", "thumbnail_png", "clipped_filename"),
+          sink0.filter(inWindow(runDate)), sinkPath, Seq("waterbody_id", "captured_ts"))
+      } finally processed.unpersist()
+    }
   }
 }
 

@@ -76,30 +76,43 @@ class PipelineSpec extends AnyFunSuite {
   ).toDF("ee_id", "TCI_R", "TCI_G", "TCI_B")
 
   test("discovery: area limit + geometry join + z-drop + derived bbox fields") {
-    val d = SatellitePipeline.discovery(waterBodies, geometries, existingSink, runDate)
-    val rows = d.collect()
+    val rows = SatellitePipeline.discovery(waterBodies).collect()
     assert(rows.map(_.getAs[Long]("id")).toSet == Set(1L, 2L), "body 3 over area limit")
     val b1 = rows.find(_.getAs[Long]("id") == 1L).get
-    val g2d = b1.getSeq[scala.collection.Seq[scala.collection.Seq[Double]]](b1.fieldIndex("geometry2d"))
-    assert(g2d.head.forall(_.length == 2), "z dropped from every vertex")
     assert(b1.getAs[Double]("width_degrees") == 2.0)
-    val b2 = rows.find(_.getAs[Long]("id") == 2L).get
-    assert(b2.getSeq[String](b2.fieldIndex("exclude_ee_ids")).toList == List("imgE"))
+    // Q4 + P7 run in the payload phase, for the candidates' bodies only
+    val g = SatellitePipeline.bodyGeometries(geometries, Seq(1L, 2L)).collect()
+    assert(g.map(_.getAs[Long]("id")).toSet == Set(1L, 2L))
+    for (r <- g) {
+      val g2d = r.getSeq[scala.collection.Seq[scala.collection.Seq[Double]]](r.fieldIndex("geometry2d"))
+      assert(g2d.forall(_.forall(_.length == 2)), "z dropped from every vertex")
+    }
+    val b2 = g.find(_.getAs[Long]("id") == 2L).get
+    assert(b2.getSeq[AnyRef](b2.fieldIndex("geometry2d")).length == 2, "both rings of body 2")
   }
 
+  /** The metadata phase's candidates of `cat` against `sink`. */
+  def candidatesOf(cat: DataFrame, sink: DataFrame = existingSink): DataFrame =
+    SatellitePipeline.candidates(SatellitePipeline.discovery(waterBodies), cat, configs, sink, runDate)
+
+  /** The payload phase over the collected candidates `c`. */
+  def payload(c: DataFrame, geo: DataFrame, ras: DataFrame): DataFrame =
+    SatellitePipeline.process(c.collect().toSeq, c.schema, geo, ras)
+
   test("candidates: each filter rejects its dedicated image; A and F survive") {
-    val d = SatellitePipeline.discovery(waterBodies, geometries, existingSink, runDate)
-    val c = SatellitePipeline.candidates(d, catalog, configs, existingSink, runDate)
-    val got = c.select(col("id"), col("ee_id")).collect()
+    def cands(sink: DataFrame) = candidatesOf(catalog, sink)
+      .select(col("id"), col("ee_id")).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
+    val got = cands(existingSink)
     assert(got == Set((1L, "imgA"), (2L, "imgF")),
       s"F1 (imgB), F2 (imgC), F3 (imgD), F4 (imgE) must all reject; got $got")
+    // imgE passes F1-F3: the sink's (2, imgE) alone excludes it (the
+    // reference's exclude list, main.py:415)
+    assert(cands(existingSink.limit(0)) == got + ((2L, "imgE")))
   }
 
   test("process: stats, filenames, json properties on the clipped cubes") {
-    val d = SatellitePipeline.discovery(waterBodies, geometries, existingSink, runDate)
-    val c = SatellitePipeline.candidates(d, catalog, configs, existingSink, runDate)
-    val p = SatellitePipeline.process(c, rasters).collect()
+    val p = payload(candidatesOf(catalog), geometries, rasters).collect()
     assert(p.length == 2)
     val a = p.find(_.getAs[String]("ee_id") == "imgA").get
     // body-1 polygon covers the whole footprint → nothing masked
@@ -219,9 +232,12 @@ class PipelineSpec extends AnyFunSuite {
     val runJobs = jobs.get("budget-run").toArray.map(_.toString)
     val replayJobs = jobs.get("budget-replay").toArray.map(_.toString)
     // three artifact passes, a schema-inferring sink re-read and a
-    // cache → count → write upsert fired 18 jobs here, 15 on the replay
+    // cache → count → write upsert fired 18 jobs here, 15 on the replay;
+    // one plan over metadata and payloads then fired 11 and 8. Deciding
+    // the candidates first keeps 11 and ends a replay after its
+    // metadata query's jobs
     assert(runJobs.length <= 11, s"${runJobs.length} jobs for one run")
-    assert(replayJobs.length <= 8, s"${replayJobs.length} jobs for its replay")
+    assert(replayJobs.length <= 4, s"${replayJobs.length} jobs for its replay")
     // the artifact pass and the append are Dataset actions, so their
     // jobs name the sink's methods as call site
     assert(runJobs.exists(_.contains("graft.sinks.Sink$.writeArtifacts")))
@@ -248,8 +264,7 @@ class PipelineSpec extends AnyFunSuite {
       "properties").coalesce(1)
     val ras = ids.zipWithIndex.map { case (ee, k) => (ee, gray(10 + k), gray(20 + k), gray(30 + k)) }
       .toDF("ee_id", "TCI_R", "TCI_G", "TCI_B")
-    val d = SatellitePipeline.discovery(waterBodies, geometries, existingSink, runDate)
-    val c = SatellitePipeline.candidates(d, cat, configs, existingSink, runDate)
+    val c = candidatesOf(cat)
     assert(c.count() == 8)
 
     // per job group, the result-stage task count of the last job
@@ -263,7 +278,7 @@ class PipelineSpec extends AnyFunSuite {
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
-    val p = SatellitePipeline.process(c, ras)
+    val p = payload(c, geometries, ras)
     try {
       sc.setJobGroup("pipeline-spread", "process")
       assert(p.collect().length == 8)
@@ -294,5 +309,101 @@ class PipelineSpec extends AnyFunSuite {
     assert(resultTasks.get("pipeline-spread") == sc.defaultParallelism,
       s"kernel stage ran in ${resultTasks.get("pipeline-spread")} tasks, " +
         s"expected defaultParallelism = ${sc.defaultParallelism}")
+  }
+
+  /** `geometries` and `rasters` written as parquet under a fresh
+    * directory, read back over those files: (dir, geometries, rasters). */
+  def payloadFiles(): (String, DataFrame, DataFrame) = {
+    val tmp = Files.createTempDirectory("graft_payload").toString
+    geometries.write.parquet(s"$tmp/geometries")
+    rasters.write.parquet(s"$tmp/rasters")
+    (tmp, spark.read.parquet(s"$tmp/geometries"), spark.read.parquet(s"$tmp/rasters"))
+  }
+
+  test("run: a replay reads no geometry and no raster") {
+    val (sinkPath, artDir) = sinkAt(existingSink)
+    val (tmp, geo, ras) = payloadFiles()
+    assert(SatellitePipeline.run(waterBodies, geo, catalog, configs, ras,
+      sinkPath, artDir, runDate) == 2)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+    // the payload files are gone: any read of them now fails
+    intercept[Exception](geo.count())
+    intercept[Exception](ras.count())
+    assert(SatellitePipeline.run(waterBodies, geo, catalog, configs, ras,
+      sinkPath, artDir, runDate) == 0, "the replay ends after the metadata phase")
+    assert(spark.read.parquet(sinkPath).count() == 3)
+  }
+
+  test("process reads only the candidates' geometries and rasters: key-filtered " +
+    "scans, no broadcast over a whole table") {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, In, InSet}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val (_, geo, ras) = payloadFiles()
+    val p = payload(candidatesOf(catalog), geo, ras)
+    assert(p.collect().length == 2)
+    object plans extends AdaptiveSparkPlanHelper
+    val plan = p.queryExecution.executedPlan
+    def scansOf(table: String, in: org.apache.spark.sql.execution.SparkPlan) = plans.collect(in) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.getName == table) => s
+    }
+    def keyFiltered(s: FileSourceScanExec, key: String): Boolean = s.dataFilters.exists {
+      case In(a: Attribute, _) => a.name == key
+      case InSet(a: Attribute, _) => a.name == key
+      case _ => false
+    }
+    val broadcasts = plans.collect(plan) { case b: BroadcastExchangeExec => b }
+    for ((table, key) <- Seq("geometries" -> "id", "rasters" -> "ee_id")) {
+      val scans = scansOf(table, plan)
+      assert(scans.nonEmpty, s"no scan of $table:\n$plan")
+      assert(scans.forall(keyFiltered(_, key)), s"a $table scan without the $key filter:\n$plan")
+      // so no broadcast sits over an unfiltered scan of the table
+      assert(broadcasts.exists(b => scansOf(table, b).nonEmpty), s"$table is not broadcast:\n$plan")
+    }
+  }
+
+  test("run: the upsert reads the sink's keys in the run's window only; rows " +
+    "outside it stay") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // body 1 already holds an image from before the window
+    val (sinkPath, artDir) = sinkAt(existingSink.union(Seq(
+      (1L, new Timestamp(ts("2024-05-01 10:00:00")), "imgOld", "S2", "{}", "f", "t", 1.0, 1.0, 1.0, 0.0)
+    ).toDF(existingSink.columns.toIndexedSeq: _*)))
+    object plans extends AdaptiveSparkPlanHelper
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (plans.find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+          writes.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val n =
+      try {
+        val n = SatellitePipeline.run(waterBodies, geometries, catalog, configs, rasters,
+          sinkPath, artDir, runDate)
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+        n
+      } finally spark.listenerManager.unregister(listener)
+    assert(n == 2)
+    val sink = spark.read.parquet(sinkPath)
+    assert(sink.count() == 4)
+    assert(sink.filter(col("ee_id") === "imgOld").count() == 1)
+    // the write's scan of the sink carries the window's captured_ts bound
+    assert(writes.size == 1, s"${writes.size} writes seen")
+    val plan = writes.peek().executedPlan
+    val sinkScans = plans.collect(plan) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.getName == "sink") => s
+    }
+    assert(sinkScans.nonEmpty, s"the upsert reads no sink keys:\n$plan")
+    assert(sinkScans.forall(_.dataFilters.exists(_.references.exists(_.name == "captured_ts"))),
+      s"an existing-key read without the window bound:\n$plan")
   }
 }
