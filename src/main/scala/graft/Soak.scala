@@ -21,7 +21,7 @@ import graft.streaming.Incremental
   * | `etl`        | `SoakEtl`           | `[N=10]`, writes /tmp/graft_soak_etl              |
   * | `docs`       | `SoakDocs`          | `[N=10]`, writes /tmp/graft_soak_docs, /tmp/graft_soak_delta_* |
   * | `ann`        | `SoakAnn`           | none                                              |
-  * | `graph`      | `SoakGraph`         | none (fixed 100k/1M-node graphs)                  |
+  * | `graph`      | `SoakGraph`         | `[small=100000] [large=1000000]` nodes (and q105 videos) |
   * | `cluster`    | `SoakCluster`       | `[N=10]`, writes /tmp/graft_soak_cluster          |
   * | `delta`      | `SoakDelta`         | `[N=10]`                                          |
   * | `shard`      | `SoakShard`         | `[waves=8]`                                       |
@@ -507,13 +507,15 @@ object Soak {
         ExactIndex.load(serve, s"$idx/trained157"), 4, 5))
   }
 
-  /** Graph operators on synthetic hash-derived graphs at 100k and 1M
-    * nodes — honest scaling evidence for the iterative-join family,
+  /** Graph operators on synthetic hash-derived graphs at `small` and
+    * `large` nodes (default 100k and 1M; the q105 frame vote takes the
+    * same counts as videos) — honest scaling evidence for the iterative-join family,
     * since replicating the FIXTURE near-dup graph would only clone
     * disjoint components (embarrassing parallelism by construction).
     * The synthetic graph keeps avg degree fixed while nodes×10, the
     * shape a growing corpus' near-dup graph actually takes. */
   private def graph(args: Seq[String]): Unit = session { spark =>
+    val sizes = Seq(intArg(args, 0, 100000).toLong, intArg(args, 1, 1000000).toLong)
     def graphOf(nodes: Long, avgDeg: Int): DataFrame =
       spark.range(nodes * avgDeg)
         .select((col("id") % nodes).as("s"),
@@ -522,7 +524,7 @@ object Soak {
         .filter(col("s") =!= col("t"))
     println("## Graph soak: synthetic Knuth-hash graph, avg degree 8")
     val names = Seq("q95_link_rank", "q99_triangle_audit", "q102_hits", "q94_leakage_split")
-    val Seq((n1, t1), (n2, t2)) = Seq(100000L, 1000000L).map { nodes =>
+    val Seq((n1, t1), (n2, t2)) = sizes.map { nodes =>
       val edges = graphOf(nodes, 8).persist(StorageLevel.MEMORY_AND_DISK)
       edges.count() // materialize the input outside the timings
       // q102 HITS: same iteration algebra as q95, directed form; q94
@@ -549,7 +551,7 @@ object Soak {
     // + df-count + capped equi-join pipeline over disjoint corpora,
     // where pair output is empty by construction and the cost is the
     // aggregate/join shape, not pair volume.
-    val Seq((v1, f1), (v2, f2)) = Seq(100000L, 1000000L).map { nVids =>
+    val Seq((v1, f1), (v2, f2)) = sizes.map { nVids =>
       def frames = spark.range(nVids * 60)
         .select((col("id") % nVids).as("doc_id"), expr("xxhash64(id)").as("fh"))
       (nVids, warmThenTime(noop(Dedup.videoNearDupFrames(frames)), release = true)._2)

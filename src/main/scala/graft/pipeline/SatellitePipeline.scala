@@ -13,26 +13,34 @@ import graft.sinks.Sink
   *
   * Stage map (SURVEY §2 operator ids):
   *  - discovery: Q6-Q7 top-K + P8 bbox fields, over `water_bodies` alone
-  *  - candidates: P2 config cross, S2 catalog scan, F1 containment,
+  *  - candidates: P2 config join, S2 catalog scan, F1 containment,
   *    F2 date window, F3 cloud property, F4 anti-join (the reference's
-  *    Q1-Q3 exclude list), P3 ts, P5 to_json
+  *    Q1-Q3 exclude list) merged with S6's primary-key conflict check,
+  *    P3 ts, P5 to_json
   *  - process: Q4 geometry join + P7 z-drop, F5 band rename, R1 stack,
   *    R2 clip, R3/R4 stats, R5 thumbnail, R6 tiff re-encode,
   *    P4 filenames, P6 sink-record assembly
-  *  - run: the two phases below, S5 artifact sink + S6 idempotent upsert
+  *  - run: the two phases below, S6's in-batch key rule, S5 artifact
+  *    sink + the S6 append
   *
   * Scale posture: a run has the reference's shape. It lists the images
   * of each body, drops the excluded ones (main.py:393-429, 415) and
   * downloads only the rest (main.py:161-204).
   *  1. Metadata phase: discovery → candidates is one query over
-  *     `water_bodies`, `configs`, the catalog and the sink keys. The
-  *     top-K bodies × configs are broadcast-size dims; the catalog is
-  *     scanned once and probes them in a BroadcastHashJoin on the
-  *     dataset with the F1-F3 residuals; the F4 anti-join broadcasts the
-  *     sink keys. It projects candidate metadata only (keys, capture
-  *     time, JSON properties, footprint) and is collected to the driver
-  *     once. No row back — every replay — ends the run there, before any
-  *     geometry or raster is read.
+  *     `water_bodies`, `configs`, the catalog and the sink keys of the
+  *     run's 30-day window. The configs and the top-K bodies are
+  *     broadcast-size dims; the catalog is scanned once, probes the
+  *     configs in a BroadcastHashJoin on the dataset (F2, F3 residuals)
+  *     and the bodies in a broadcast nested-loop join (F1); one
+  *     anti-join over the broadcast sink keys drops both an image
+  *     already stored for its body (F4) and a capture time its body
+  *     already holds (the S6 key conflict). It projects candidate
+  *     metadata only (keys, capture time, JSON properties, footprint)
+  *     and is collected to the driver once; there `run` keeps one row
+  *     per key by the in-batch rule (smallest `ee_id`). No row back —
+  *     every replay — ends the run there, before any geometry or raster
+  *     is read. 4 jobs: the three broadcasts, side by side, then the
+  *     catalog scan.
   *  2. Payload phase (`process`): the collected rows become a frame of
   *     `defaultParallelism` slices; the geometries of the candidates'
   *     bodies and the rasters of their images are read through `isin`
@@ -41,17 +49,31 @@ import graft.sinks.Sink
   *     kernels then run once per candidate, in `defaultParallelism`
   *     tasks, on primitive planes: one O(H·W) conversion, the
   *     O(H·E + H·W) scanline clip for E polygon edges, then the three
-  *     encodes.
+  *     encodes. The same tasks write each row's three artifacts and
+  *     return only its sink columns: one artifact pass, whose rows the
+  *     driver appends as ONE sink file. An ingest day is 8 jobs: the
+  *     metadata query's 4, the two key-filtered broadcasts, the
+  *     artifact pass and the append.
   *
   * Collect bound: the metadata rows of one run are at most
   * `WaterbodyLimit` × configs × the images per (body, dataset) in the
   * 30-day window — for a ~5-day revisit, 1100 × configs × 6 rows of a
   * few hundred bytes; only a run into a sink missing the whole window
-  * comes near it. A denser catalog grows the collect, the `isin` lists
-  * and the broadcast payload linearly with the candidate count. Past
-  * `spark.driver.maxResultSize` the collect fails the run before any
-  * artifact or sink row is written, so the date can be re-run as it is
-  * once the limit is raised.
+  * comes near it. The sink rows the artifact pass returns are one per
+  * kept candidate and no wider than its metadata row plus four
+  * statistics and two file names, so the same bound holds for them. A
+  * denser catalog grows the collects, the `isin` lists and the
+  * broadcast payload linearly with the candidate count. Past
+  * `spark.driver.maxResultSize` the metadata collect fails the run
+  * before any artifact or sink row is written, so the date can be
+  * re-run as it is once the limit is raised. Should the returned rows
+  * alone pass it, the artifacts are written but no sink row is; the
+  * re-run rewrites the same artifact bytes and appends the rows.
+  *
+  * One behaviour differs from the reference (SURVEY §7.3): an image
+  * whose key the sink already holds under another `ee_id`, or that
+  * loses the in-batch rule, gets no artifacts; the reference uploads
+  * them before its no-op insert (main.py:311-325, 453-457).
   *
   * S3 (HTTP fetch of band images, main.py:161-186) exists as a real
   * executor-side transport — `sources/HttpFetch.fetchColumn`
@@ -104,33 +126,46 @@ object SatellitePipeline {
       runDate: String): DataFrame = discovery(waterBodies)
 
   /** P2 + S2 + F1-F4 + P3 + P5 (main.py:393-440, 335): the candidate
-    * metadata of a run. The catalog probes the broadcast (body × config)
-    * rows on the dataset, with the containment/window/cloud residuals;
-    * the rows carry what the payload phase needs and no payload. */
+    * metadata of a run, less every row whose primary key the sink
+    * already holds (S6). The catalog probes the broadcast configs on the
+    * dataset (window and cloud residuals), then the broadcast bodies
+    * (containment); only the sink rows in the run's window are read; the
+    * rows carry what the payload phase needs and no payload. */
   def candidates(
       discovered: DataFrame,
       catalog: DataFrame,
       configs: DataFrame,
       sink: DataFrame,
       runDate: String): DataFrame = {
-    val withConfig = discovered.crossJoin(broadcast(configs)) // P2 (main.py:433-440)
+    // P2 (main.py:433-440) as two joins: each catalog row meets the
+    // configs of its dataset, then the bodies whose centre it contains.
+    // The configs, the bodies and the sink keys below are independent
+    // broadcasts, so their jobs run side by side
     val cand = catalog
       .withColumn("captured_ts", timestamp_millis(col("captured_ts_millis"))) // P3, UTC
-      .join(broadcast(withConfig),
-        catalog("dataset") === withConfig("dataset_name") &&
-          // F1: footprint ∋ water-body centerpoint (main.py:384, 397)
-          col("longitude").between(col("footprint_min_lon"), col("footprint_max_lon")) &&
-          col("latitude").between(col("footprint_min_lat"), col("footprint_max_lat")) &&
+      .join(broadcast(configs),
+        catalog("dataset") === configs("dataset_name") &&
           inWindow(runDate) && // F2: half-open date window (main.py:398)
           // F3: cloud filter only when the config has one (main.py:403-404)
           (col("cloud_max").isNull ||
             element_at(col("properties"), "CLOUDY_PIXEL_PERCENTAGE").cast("double") < col("cloud_max")))
-    // F4: honest anti-join vs the sink on the composite identity
-    // (reference tests membership in the aggregated exclude list,
-    // main.py:415; left_anti is the equivalent relational form —
-    // equivalence proven in RelationalSpec)
-    cand.join(sink.select(col("waterbody_id").as("dl_wb"), col("ee_id").as("dl_ee")),
-        cand("id") === col("dl_wb") && cand("ee_id") === col("dl_ee"), "left_anti")
+      .join(broadcast(discovered),
+        // F1: footprint ∋ water-body centerpoint (main.py:384, 397)
+        col("longitude").between(col("footprint_min_lon"), col("footprint_max_lon")) &&
+          col("latitude").between(col("footprint_min_lat"), col("footprint_max_lat")))
+    // F4 + S6 in one anti-join vs the sink's keys: the image is already
+    // stored for the body (the reference tests membership in the
+    // aggregated exclude list, main.py:415; left_anti is the equivalent
+    // relational form — equivalence proven in RelationalSpec), or the
+    // body holds its capture time under another image (the PK conflict
+    // ON CONFLICT DO NOTHING skips, main.py:106-107, 453-457). Every
+    // candidate lies in the window, so reading the in-window sink rows
+    // only is exact while each sink row keeps its image's catalog
+    // capture time (PipelineSpec asserts that)
+    val stored = sink.filter(inWindow(runDate)).select(col("waterbody_id").as("dl_wb"),
+      col("ee_id").as("dl_ee"), col("captured_ts").as("dl_ts"))
+    cand.join(stored, cand("id") === col("dl_wb") &&
+        (cand("ee_id") === col("dl_ee") || cand("captured_ts") === col("dl_ts")), "left_anti")
       .select(col("id"), col("captured_ts"), col("ee_id"), col("dataset_name"),
         // P5 (main.py:335) before the collect: a collected map can come
         // back with its keys reordered, and these are the sink's bytes
@@ -204,12 +239,13 @@ object SatellitePipeline {
         col("k.thumbnailPng").as("thumbnail_png"))
   }
 
-  /** Full run: the metadata phase, then the payload phase, S5 artifacts
-    * and the S6 idempotent upsert. Reads the sink once, with its known
-    * schema, and hands that frame to F4 and, bounded to the run's
-    * window, to the upsert; one artifact pass over the processed rows,
-    * then one observed append, skipped when no row was processed.
-    * Returns rows actually appended (0 on replay — idempotence). */
+  /** Full run: the metadata phase, S6's in-batch rule on the driver,
+    * then the payload phase with S5 and the S6 append. Reads the sink
+    * once, with its known schema, in the metadata query. The kept
+    * candidates go through one artifact pass that returns their sink
+    * rows (bounded like the metadata collect, see the object doc), and
+    * the driver appends those as one file, after every artifact is
+    * written. Returns rows appended (0 on replay — idempotence). */
   def run(
       waterBodies: DataFrame, geometries: DataFrame, catalog: DataFrame,
       configs: DataFrame, rasters: DataFrame,
@@ -221,24 +257,20 @@ object SatellitePipeline {
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], SinkSchema.schema)
     val meta = candidates(discovery(waterBodies), catalog, configs, sink0, runDate)
-    val cands = meta.collect()
+    // S6 within the batch: one row per key (waterbody_id, captured_ts),
+    // the smallest ee_id wins (the reference keeps whichever insert
+    // lands first)
+    val Seq(id, ts, ee) = Seq("id", "captured_ts", "ee_id").map(meta.schema.fieldIndex)
+    val cands = meta.collect().groupBy(r => (r.get(id), r.get(ts)))
+      .values.map(_.minBy(_.getString(ee))).toSeq
     if (cands.isEmpty) 0L
     else {
-      val processed = process(cands.toSeq, meta.schema, geometries, rasters).cache()
-      try {
-        // S5: 3 artifacts per image (main.py:313-317), executor-side
-        val seen = Sink.writeArtifacts(processed.select(
-          col("filename"), col("full_tif"),
-          col("clipped_filename"), col("clipped_tif"),
-          col("thumbnail_filename"), col("thumbnail_png")), artifactDir)
-        // S6: upsert on the composite PK (main.py:106-107). Every batch
-        // row lies in the run's window and captured_ts is part of the
-        // key, so no sink row outside the window can conflict
-        if (seen == 0) 0L
-        else Sink.upsertAppend(
-          processed.drop("full_tif", "clipped_tif", "thumbnail_png", "clipped_filename"),
-          sink0.filter(inWindow(runDate)), sinkPath, Seq("waterbody_id", "captured_ts"))
-      } finally processed.unpersist()
+      // S5: 3 artifacts per image (main.py:313-317), executor-side
+      val rows = Sink.writeArtifacts(process(cands, meta.schema, geometries, rasters),
+        Seq("filename" -> "full_tif", "clipped_filename" -> "clipped_tif",
+          "thumbnail_filename" -> "thumbnail_png"),
+        SinkSchema.schema.fieldNames.toSeq, artifactDir)
+      if (rows.isEmpty) 0L else Sink.appendRows(rows.toSeq, SinkSchema.schema, sinkPath)
     }
   }
 }

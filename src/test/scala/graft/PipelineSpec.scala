@@ -64,6 +64,12 @@ class PipelineSpec extends AnyFunSuite {
   ).toDF("waterbody_id", "captured_ts", "ee_id", "satellite_dataset", "properties",
     "filename", "thumbnail_filename", "red_average", "green_average", "blue_average", "white_fraction")
 
+  /** `existingSink` plus a stored row (waterbody_id, captured_ts, ee_id)
+    * for each of `keys`. */
+  def sinkWith(keys: (Long, String, String)*): DataFrame = existingSink.union(keys.map {
+    case (wb, at, ee) => (wb, new Timestamp(ts(at)), ee, "S2", "{}", "f", "t", 1.0, 1.0, 1.0, 0.0)
+  }.toDF(existingSink.columns.toIndexedSeq: _*))
+
   def gray(v: Int, h: Int = 8, w: Int = 8): Seq[Seq[Int]] = Seq.fill(h)(Seq.fill(w)(v))
 
   def rasters: DataFrame = Seq(
@@ -163,18 +169,16 @@ class PipelineSpec extends AnyFunSuite {
     new java.io.File(path).listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet
 
   test("run: a row whose key is already in the sink under another ee_id is not " +
-    "appended, but its three artifacts are written") {
-    // body 1 already holds imgA's capture time under another image: the
-    // reference uploads before its ON CONFLICT DO NOTHING (main.py:311-325)
-    val (sinkPath, artDir) = sinkAt(existingSink.union(Seq(
-      (1L, new Timestamp(ts("2024-06-20 10:00:00")), "imgOld", "S2", "{}", "f", "t", 1.0, 1.0, 1.0, 0.0)
-    ).toDF(existingSink.columns.toIndexedSeq: _*)))
+    "appended, and its artifacts are not written") {
+    // body 1 already holds imgA's capture time under another image. The
+    // reference uploads before its ON CONFLICT DO NOTHING (main.py:311-325);
+    // here the key is decided before the payload, so imgA gets no artifacts
+    val (sinkPath, artDir) = sinkAt(sinkWith((1L, "2024-06-20 10:00:00", "imgOld")))
     val n = SatellitePipeline.run(waterBodies, geometries, catalog, configs, rasters,
       sinkPath, artDir, runDate)
     assert(n == 1, "only imgF is new")
-    for (f <- Seq("1_20240620100000.tif", "1_20240620100000_clipped.tif",
-        "1_20240620100000_thumbnail.png"))
-      assert(Files.exists(Paths.get(artDir, "imgA", f)), f)
+    assert(!Files.exists(Paths.get(artDir, "imgA")), "no artifact of the conflicting image")
+    assert(Files.exists(Paths.get(artDir, "imgF", "2_20240622100000.tif")))
     val sink = spark.read.parquet(sinkPath)
     assert(sink.count() == 3, "the returned count equals the rows appended")
     assert(sink.filter(col("ee_id") === "imgA").count() == 0)
@@ -234,18 +238,34 @@ class PipelineSpec extends AnyFunSuite {
     // three artifact passes, a schema-inferring sink re-read and a
     // cache → count → write upsert fired 18 jobs here, 15 on the replay;
     // one plan over metadata and payloads then fired 11 and 8. Deciding
-    // the candidates first keeps 11 and ends a replay after its
-    // metadata query's jobs
-    assert(runJobs.length <= 11, s"${runJobs.length} jobs for one run")
+    // the candidates first kept 11 and ended a replay after its
+    // metadata query's jobs. Deciding the sink keys there too, one
+    // artifact pass that returns the sink rows and one driver-side
+    // append (no cached frame, no dedup shuffle, no second sink read)
+    // take an ingest day from 11 jobs to 8
+    assert(runJobs.length <= 8, s"${runJobs.length} jobs for one run")
     assert(replayJobs.length <= 4, s"${replayJobs.length} jobs for its replay")
     // the artifact pass and the append are Dataset actions, so their
     // jobs name the sink's methods as call site
     assert(runJobs.exists(_.contains("graft.sinks.Sink$.writeArtifacts")))
-    assert(runJobs.exists(_.contains("graft.sinks.Sink$.upsertAppend")))
-    assert(!replayJobs.exists(_.contains("graft.sinks.Sink$.upsertAppend")),
-      "a replay processes no row and skips the upsert")
+    assert(runJobs.exists(_.contains("graft.sinks.Sink$.appendRows")))
+    assert(!replayJobs.exists(_.contains("graft.sinks.Sink$")),
+      "a replay processes no row: no artifact pass, no append")
     assert(spark.read.parquet(sinkPath).schema == SinkSchema.schema,
       "the pinned reader schema is the schema the pipeline writes")
+  }
+
+  /** Eight clear in-window images of body 1, read from one partition as
+    * from a single catalog file, and their rasters: (catalog, rasters). */
+  def eightImages: (DataFrame, DataFrame) = {
+    val ids = (1 to 8).map(k => s"imgS$k")
+    val cat = ids.zipWithIndex.map { case (ee, k) =>
+      (ee, "S2", ts(s"2024-06-${10 + k} 10:00:00"), 9.0, 11.0, 9.0, 11.0,
+        Map("CLOUDY_PIXEL_PERCENTAGE" -> "5"))
+    }.toDF(catalog.columns.toIndexedSeq: _*).coalesce(1)
+    val ras = ids.zipWithIndex.map { case (ee, k) => (ee, gray(10 + k), gray(20 + k), gray(30 + k)) }
+      .toDF(rasters.columns.toIndexedSeq: _*)
+    (cat, ras)
   }
 
   test("process spreads the per-image kernels over defaultParallelism tasks") {
@@ -253,17 +273,7 @@ class PipelineSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.expressions.ScalaUDF
     import org.apache.spark.sql.execution.ProjectExec
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, ResultQueryStageExec}
-    // eight clear in-window images of body 1: eight candidates, read
-    // from one partition as from a single catalog file
-    val ids = (1 to 8).map(k => s"imgS$k")
-    val cat = ids.zipWithIndex.map { case (ee, k) =>
-      (ee, "S2", ts(s"2024-06-${10 + k} 10:00:00"), 9.0, 11.0, 9.0, 11.0,
-        Map("CLOUDY_PIXEL_PERCENTAGE" -> "5"))
-    }.toDF("ee_id", "dataset", "captured_ts_millis",
-      "footprint_min_lon", "footprint_max_lon", "footprint_min_lat", "footprint_max_lat",
-      "properties").coalesce(1)
-    val ras = ids.zipWithIndex.map { case (ee, k) => (ee, gray(10 + k), gray(20 + k), gray(30 + k)) }
-      .toDF("ee_id", "TCI_R", "TCI_G", "TCI_B")
+    val (cat, ras) = eightImages
     val c = candidatesOf(cat)
     assert(c.count() == 8)
 
@@ -366,44 +376,132 @@ class PipelineSpec extends AnyFunSuite {
 
   test("run: the upsert reads the sink's keys in the run's window only; rows " +
     "outside it stay") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
     import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
     // body 1 already holds an image from before the window
-    val (sinkPath, artDir) = sinkAt(existingSink.union(Seq(
-      (1L, new Timestamp(ts("2024-05-01 10:00:00")), "imgOld", "S2", "{}", "f", "t", 1.0, 1.0, 1.0, 0.0)
-    ).toDF(existingSink.columns.toIndexedSeq: _*)))
+    val (sinkPath, artDir) = sinkAt(sinkWith((1L, "2024-05-01 10:00:00", "imgOld")))
     object plans extends AdaptiveSparkPlanHelper
-    val writes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    // every query of the run, in order; the append is the last
+    val queries = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (plans.find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
-          writes.add(qe)
+        queries.add(qe)
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
+    def isWrite(qe: QueryExecution) =
+      plans.find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).isDefined
     spark.listenerManager.register(listener)
     val n =
       try {
         val n = SatellitePipeline.run(waterBodies, geometries, catalog, configs, rasters,
           sinkPath, artDir, runDate)
         val deadline = System.nanoTime() + 30L * 1000000000L
-        while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+        while (!queries.asScala.exists(isWrite) && System.nanoTime() < deadline)
+          Thread.sleep(20)
         n
       } finally spark.listenerManager.unregister(listener)
     assert(n == 2)
     val sink = spark.read.parquet(sinkPath)
     assert(sink.count() == 4)
     assert(sink.filter(col("ee_id") === "imgOld").count() == 1)
-    // the write's scan of the sink carries the window's captured_ts bound
-    assert(writes.size == 1, s"${writes.size} writes seen")
-    val plan = writes.peek().executedPlan
-    val sinkScans = plans.collect(plan) {
+    // one query of the run reads the sink, the metadata query, and its
+    // scan carries the window's captured_ts bound
+    def sinkScans(plan: SparkPlan) = plans.collect(plan) {
       case s: FileSourceScanExec
           if s.relation.location.rootPaths.exists(_.getName == "sink") => s
     }
-    assert(sinkScans.nonEmpty, s"the upsert reads no sink keys:\n$plan")
-    assert(sinkScans.forall(_.dataFilters.exists(_.references.exists(_.name == "captured_ts"))),
+    val readers = queries.asScala.toSeq.map(_.executedPlan).filter(sinkScans(_).nonEmpty)
+    assert(readers.length == 1, s"${readers.length} queries of the run read the sink")
+    val plan = readers.head
+    assert(sinkScans(plan).forall(_.dataFilters.exists(_.references.exists(_.name == "captured_ts"))),
       s"an existing-key read without the window bound:\n$plan")
+  }
+
+  /** The catalog led by imgA2, a second image of body 1 captured at
+    * imgA's time (one primary key, two ee_ids), and the rasters with its
+    * planes. */
+  def oneKeyTwoImages: (DataFrame, DataFrame) = (
+    Seq(("imgA2", "S2", ts("2024-06-20 10:00:00"), 9.0, 11.0, 9.0, 11.0,
+      Map("CLOUDY_PIXEL_PERCENTAGE" -> "5"))).toDF(catalog.columns.toIndexedSeq: _*).union(catalog),
+    Seq(("imgA2", gray(100), gray(100), gray(100))).toDF(rasters.columns.toIndexedSeq: _*)
+      .union(rasters))
+
+  test("run: two rows with one primary key in a batch give one sink row, the " +
+    "smallest ee_id's; only its artifacts are written") {
+    val (cat, ras) = oneKeyTwoImages
+    val (sinkPath, artDir) = sinkAt(existingSink)
+    assert(SatellitePipeline.run(waterBodies, geometries, cat, configs, ras,
+      sinkPath, artDir, runDate) == 2, "one of imgA/imgA2 for body 1, imgF for body 2")
+    val body1 = spark.read.parquet(sinkPath).filter(col("waterbody_id") === 1L).collect()
+    assert(body1.map(_.getAs[String]("ee_id")).toSeq == Seq("imgA"),
+      "imgA < imgA2 wins, though imgA2 comes first")
+    assert(body1.head.getAs[Double]("red_average") == 255.0, "the winner's statistics")
+    for (f <- Seq("1_20240620100000.tif", "1_20240620100000_clipped.tif",
+        "1_20240620100000_thumbnail.png"))
+      assert(Files.exists(Paths.get(artDir, "imgA", f)), f)
+    assert(!Files.exists(Paths.get(artDir, "imgA2")), "no artifact of the losing image")
+  }
+
+  test("candidates: a key the sink holds under another ee_id is dropped; the same " +
+    "capture time on another body is not") {
+    def cands(sink: DataFrame) = candidatesOf(catalog, sink)
+      .select(col("ee_id")).collect().map(_.getString(0)).toSet
+    assert(cands(sinkWith((1L, "2024-06-20 10:00:00", "imgOld"))) == Set("imgF"),
+      "body 1 holds imgA's capture time: ON CONFLICT DO NOTHING")
+    assert(cands(sinkWith((9L, "2024-06-20 10:00:00", "imgOld"))) == Set("imgA", "imgF"),
+      "the key is (waterbody_id, captured_ts)")
+  }
+
+  test("run: a batch whose every row conflicts returns 0 and commits no file") {
+    val (sinkPath, artDir) = sinkAt(sinkWith(
+      (1L, "2024-06-20 10:00:00", "imgOld"), (2L, "2024-06-22 10:00:00", "imgOld2")))
+    val before = parquetFiles(sinkPath)
+    assert(SatellitePipeline.run(waterBodies, geometries, catalog, configs, rasters,
+      sinkPath, artDir, runDate) == 0)
+    assert(parquetFiles(sinkPath) == before, "no file committed")
+    assert(spark.read.parquet(sinkPath).count() == 3)
+    assert(!Files.exists(Paths.get(artDir)), "no artifact written")
+  }
+
+  test("run: the first write creates the sink as one file") {
+    val (cat, ras) = eightImages
+    val tmp = Files.createTempDirectory("graft_pipe").toString
+    assert(SatellitePipeline.run(waterBodies, geometries, cat, configs, ras,
+      s"$tmp/sink", s"$tmp/artifacts", runDate) == 8)
+    assert(spark.read.parquet(s"$tmp/sink").count() == 8)
+    assert(parquetFiles(s"$tmp/sink").size == 1,
+      s"the artifact pass ran in ${spark.sparkContext.defaultParallelism} tasks, " +
+        s"the append in one: ${parquetFiles(s"$tmp/sink")}")
+  }
+
+  test("run: every sink row keeps its image's catalog capture time, the invariant " +
+    "that makes the window-bounded key read exact") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import graft.pipeline.SinkSchema
+    val (sinkPath, artDir) = sinkAt(existingSink)
+    assert(SatellitePipeline.run(waterBodies, geometries, catalog, configs, rasters,
+      sinkPath, artDir, runDate) == 2)
+    val sink = spark.read.schema(SinkSchema.schema).parquet(sinkPath)
+    val pairs = sink.join(catalog, "ee_id")
+      .select(col("captured_ts"), timestamp_millis(col("captured_ts_millis")).as("cat_ts"))
+      .collect()
+    assert(pairs.length == sink.count(), "every sink row names a catalog image")
+    assert(pairs.forall(r => r.get(0) == r.get(1)), pairs.mkString(", "))
+    // so the metadata query may read the window's sink rows only
+    val meta = candidatesOf(catalog, sink)
+    assert(meta.collect().isEmpty, "a replay has no candidate")
+    object plans extends AdaptiveSparkPlanHelper
+    val plan = meta.queryExecution.executedPlan
+    val scans = plans.collect(plan) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.getName == "sink") => s
+    }
+    assert(scans.nonEmpty, s"no sink scan:\n$plan")
+    assert(scans.forall(_.dataFilters.exists(_.references.exists(_.name == "captured_ts"))),
+      s"a sink scan without the captured_ts bound:\n$plan")
   }
 }

@@ -2,11 +2,18 @@
 """Print order-independent digests of a satellite sink and its artifacts.
 
     python3 tools/sink_digest.py <sink>
+    python3 tools/sink_digest.py <sink> <artifacts>
     python3 tools/sink_digest.py <sinkA> <sinkB> <artifactsA> <artifactsB>
 
 With one argument the script prints `sink <rows> <sha256>` for the
 parquet sink table at <sink> (the directory `SatellitePipeline.run`
 appends to).
+
+With two it also checks that every artifact under <artifacts> belongs to
+a sink row: it prints the sink line, `orphans <n>` and then each orphan's
+relative path, and exits 1 if n > 0. A row names three files:
+`filename`, `thumbnail_filename`, and `filename` with `.tif` replaced by
+`_clipped.tif`.
 
 With four it compares two runs instead: it prints the sink line of each
 side and, for each artifact directory, `artifacts <files> <sha256>`, one
@@ -75,15 +82,11 @@ def sink_digest(sink):
 
 def artifact_digest(root):
     """(files, sha256) over each file's relative path and content SHA-256."""
-    if not os.path.isdir(root):
-        sys.exit(f"sink_digest: {root} is not a directory")
     lines = []
-    for dirpath, _, files in os.walk(root):
-        for name in files:
-            path = os.path.join(dirpath, name)
-            with open(path, "rb") as f:
-                content = hashlib.sha256(f.read()).hexdigest()
-            lines.append(f"{os.path.relpath(path, root)}\t{content}")
+    for rel in artifact_files(root):
+        with open(os.path.join(root, rel), "rb") as f:
+            content = hashlib.sha256(f.read()).hexdigest()
+        lines.append(f"{rel}\t{content}")
     lines.sort()
     h = hashlib.sha256()
     for line in lines:
@@ -92,12 +95,38 @@ def artifact_digest(root):
     return len(lines), h.hexdigest()
 
 
+def artifact_files(root):
+    """Relative path of every file under `root`."""
+    if not os.path.isdir(root):
+        sys.exit(f"sink_digest: {root} is not a directory")
+    return [os.path.relpath(os.path.join(d, n), root)
+            for d, _, files in os.walk(root) for n in files]
+
+
+def orphans(sink, root):
+    """Sorted artifact paths under `root` that no sink row names."""
+    named = set()
+    for f in parquet_files(sink):
+        t = pq.read_table(f, columns=["filename", "thumbnail_filename"])
+        for full, thumb in zip(*(t.column(n).to_pylist() for n in t.column_names)):
+            named.update((full, thumb, full[:-len(".tif")] + "_clipped.tif"))
+    return sorted(set(artifact_files(root)) - named)
+
+
 def main():
     args = sys.argv[1:]
     if len(args) == 1:
         n, h = sink_digest(args[0])
         print(f"sink {n} {h}")
         return
+    if len(args) == 2:
+        n, h = sink_digest(args[0])
+        print(f"sink {n} {h}")
+        lost = orphans(*args)
+        print(f"orphans {len(lost)}")
+        for path in lost:
+            print(path)
+        sys.exit(1 if lost else 0)
     if len(args) != 4:
         sys.exit(__doc__.split("\n\n")[1])
     sink_a, sink_b, art_a, art_b = args
